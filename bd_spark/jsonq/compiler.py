@@ -1,6 +1,13 @@
 """AST -> Spark compiler for the bd/jq language.
 
-Compilation strategy (three tiers):
+Every program runs on exactly one evaluator, picked by compile_query
+from the program alone: the staged Catalyst compilation below, or the
+whole-query Arrow-batched interp tier (`_interp_tier`, one
+mapInPandas over bd_spark.jsonq.interp). Higher-order builtins
+(HOF_BUILTINS: map/any/all and the sort family) have no staged lane;
+programs applying one always take the interp tier.
+
+Staged compilation strategy (three tiers):
 
 1. **Staged projections** (default): every operator stage materializes
    its result as a temp column via `withColumn` over *leaf* column
@@ -11,9 +18,9 @@ Compilation strategy (three tiers):
    keeps non-cheap duplicated refs in separate projects, so the plan
    stays linear while whole-stage codegen still fuses the stages.
 
-2. **Pure column expressions**: used inside lambda bodies
-   (`map(f)`, `any(f)`, `all(f)` — transform/exists/forall) where only
-   a single expression is possible, and for leaf ops.
+2. **Pure column expressions**: used inside lambda bodies (the
+   `reduce`/`foreach` F.aggregate folds, list splices) where only a
+   single expression is possible, and for leaf ops.
 
 3. **Stream transforms**: the jq sequence monad — `.[]`, `.[a,b]`,
    `..`, `[...]`/`{...}` with multi-valued parts, zip-paired binary
@@ -70,11 +77,20 @@ ARG2_VALUE_BUILTINS = ("sub", "gsub", "pow")
 # handled separately: only int-segment paths emit the UDF.)
 UDF_EMITTING_BUILTINS = ("setpath", "delpaths", "strftime", "strptime")
 
-# arity-1 builtins whose argument is a lambda BODY applied per element
-HOF_BUILTINS = (
-    "map", "any", "all",
-    "sort_by", "min_by", "max_by", "unique_by", "group_by",
-)
+# higher-order builtins: a lambda body or a variant comparator applied
+# per element. They have no staged lane: compile_query runs every
+# program containing one on the interp tier, whatever the tier pin.
+HOF_BUILTINS = frozenset((
+    "map", "any", "all", "sort", "unique",
+    "sort_by", "unique_by", "group_by", "min_by", "max_by",
+))
+
+
+def _no_staged_lane(name: str) -> RuntimeError:
+    return RuntimeError(
+        f"{name}: higher-order builtins have no staged lane "
+        "(compile_query runs such programs on the interp tier)"
+    )
 
 _ids = itertools.count()
 
@@ -221,21 +237,6 @@ def compile_col(node: ast.Node) -> ColFn | None:
         lf = compile_col(node.left)
         if lf is None:
             return None
-        if (
-            isinstance(node.right, ast.Builtin)
-            and node.right.name in _SORT_FAMILY
-            and len(node.right.args) == 1
-        ):
-            # feed the sort family its source AST so the typed lane
-            # can prove the element kind (r7)
-            try:
-                rhof = _col_hof(
-                    node.right.name, node.right.args[0], src_node=node.left
-                )
-            except NotImplementedError:
-                rhof = None
-            if rhof is not None:
-                return lambda v: _chain(lf(v), rhof)
         rf = compile_col(node.right)
         if rf is None:
             return None
@@ -283,16 +284,13 @@ def compile_col(node: ast.Node) -> ColFn | None:
 
         return run_if
     if isinstance(node, ast.Builtin):
+        if node.name in HOF_BUILTINS:
+            raise _no_staged_lane(node.name)
         if node.name == "select":
             argfn = compile_col(node.args[0])
             if argfn is None:
                 return None
             return lambda v: _select_cv(v, argfn(v))
-        if node.name in HOF_BUILTINS:
-            try:
-                return _col_hof(node.name, node.args[0])
-            except NotImplementedError:
-                return None
         if node.name == "del":
             from bd_spark.jsonq.parser import static_path
 
@@ -1176,149 +1174,6 @@ def _flatten_value(v: Column) -> Column:
 
         _FLATTEN_UDF = F.pandas_udf(flat, "string", F.PandasUDFType.SCALAR)
     return _FLATTEN_UDF(F.to_json(v))
-
-
-def _run_flags(sorted_arr: Column, kf) -> Column:
-    """``array<struct<s, new:boolean>>`` over a key-sorted array,
-    marking each position that starts a new equal-key run.
-
-    Built from zip_with over two SHIFTED SLICES so ``sorted_arr`` is
-    referenced a constant number of times as a top-level operand
-    (evaluated once each).  NEVER ``element_at(sorted_arr, i)`` inside
-    an element lambda: a lambda-captured expression re-evaluates per
-    element — an O(n²) re-sort per row (measured: 60 s vs 1.6 s on
-    50 docs; the same trap word_shingles documents)."""
-    n = F.size(sorted_arr)
-    n1 = F.greatest(n - 1, F.lit(0))
-    rest = F.zip_with(
-        F.slice(sorted_arr, 1, n1),
-        F.slice(sorted_arr, 2, n1),
-        lambda p, c: F.struct(
-            c.alias("s"),
-            V.compare_lt(kf(p), kf(c), V.vtype(kf(p)), V.vtype(kf(c))).alias(
-                "new"
-            ),
-        ),
-    )
-    head = F.array(
-        F.struct(
-            F.element_at(sorted_arr, 1).alias("s"), F.lit(True).alias("new")
-        )
-    )
-    return F.when(n == 0, F.slice(rest, 1, 0)).otherwise(F.concat(head, rest))
-
-
-_SORT_FAMILY = ("sort_by", "min_by", "max_by", "unique_by", "group_by")
-
-
-def _run_flags_scalar(sorted_arr: Column, kf) -> Column:
-    """_run_flags over NATIVE scalar keys (typed sort lane): the
-    array is key-sorted, so adjacent key INEQUALITY marks run starts
-    — same shifted-slice shape (never element_at-in-lambda). The
-    compare is null-SAFE (r7 ADVICE #2): a NULL key (DECIMAL(38,0)
-    overflow in an int key body — the documented _int_arith parity)
-    must start/extend the null run like any other key, where a bare
-    ``<`` yields NULL 'new' flags that silently drop elements from
-    unique_by/group_by."""
-    n = F.size(sorted_arr)
-    n1 = F.greatest(n - 1, F.lit(0))
-    rest = F.zip_with(
-        F.slice(sorted_arr, 1, n1),
-        F.slice(sorted_arr, 2, n1),
-        lambda p, c: F.struct(
-            c.alias("s"), (~kf(p).eqNullSafe(kf(c))).alias("new")
-        ),
-    )
-    head = F.array(
-        F.struct(
-            F.element_at(sorted_arr, 1).alias("s"), F.lit(True).alias("new")
-        )
-    )
-    return F.when(n == 0, F.slice(rest, 1, 0)).otherwise(F.concat(head, rest))
-
-
-def _typed_sort_cv(name: str, kk: str, kb, v: Column) -> CV:
-    """sort_by family over a statically-proven ``array<string>``
-    input with a typed total key body (r6 VERDICT next #1): native
-    elements, native scalar sort keys, ONE re-tag at the end via
-    to_variant_object — no per-element variant key boxing
-    (vlong = parse_json per element) and no vjson/parse_json text
-    assembly for group_by. Key-compare parity with the generic lane:
-    number keys compare as DOUBLE (vexpr.compare_lt), string keys
-    natively."""
-    t = V.vtype(v)
-    native = F.transform(V.as_array(v), V.as_string)
-
-    def keyed_elem(x: Column, i: Column) -> Column:
-        k = kb({".": x})
-        if kk in ("int", "float"):
-            k = k.cast("double")
-        return F.struct(k.alias("kd"), x.alias("x"), i.alias("i"))
-
-    keyed = F.transform(native, keyed_elem)
-
-    def cmp(a: Column, b: Column) -> Column:
-        # NULL keys (DECIMAL(38,0) overflow in an int key body — the
-        # _int_arith parity) rank FIRST, matching the generic lane's
-        # compare_lt/type_rank where jq null sorts lowest; a bare `<`
-        # would make NULL tie with EVERY key (non-transitive
-        # comparator -> undefined array_sort order). r7 ADVICE #2.
-        an, bn = a["kd"].isNull(), b["kd"].isNull()
-        return (
-            F.when(an & ~bn, F.lit(-1))
-            .when(bn & ~an, F.lit(1))
-            .when(a["kd"] < b["kd"], F.lit(-1))
-            .when(b["kd"] < a["kd"], F.lit(1))
-            # stable: original position breaks key ties
-            .otherwise((a["i"] - b["i"]).cast("int"))
-        )
-
-    skeyed = F.array_sort(keyed, cmp)
-    if name == "sort_by":
-        out = F.to_variant_object(F.transform(skeyed, lambda s: s["x"]))
-    elif name in ("min_by", "max_by"):
-        pick = F.element_at(skeyed, 1 if name == "min_by" else -1)["x"]
-        out = F.when(F.size(native) == 0, V.vnull()).otherwise(
-            V.vstring(pick)
-        )
-    elif name == "unique_by":
-        flags = _run_flags_scalar(skeyed, lambda s: s["kd"])
-        out = F.to_variant_object(
-            F.transform(
-                F.filter(flags, lambda s: s["new"]), lambda s: s["s"]["x"]
-            )
-        )
-    else:  # group_by: adjacent equal-key runs -> native sub-arrays
-        flags = _run_flags_scalar(skeyed, lambda s: s["kd"])
-        starts = F.filter(
-            F.transform(flags, lambda s, i: F.when(s["new"], i)),
-            lambda x: x.isNotNull(),
-        )
-        bound = F.struct(skeyed.alias("sk"), starts.alias("st"))
-
-        def build_groups(bnd: Column) -> Column:
-            sk, st = bnd["sk"], bnd["st"]
-            return F.transform(
-                st,
-                lambda s0, gi: F.transform(
-                    F.slice(
-                        sk,
-                        s0 + 1,
-                        F.coalesce(
-                            F.try_element_at(st, gi + F.lit(2)), F.size(sk)
-                        )
-                        - s0,
-                    ),
-                    lambda e: e["x"],
-                ),
-            )
-
-        out = F.to_variant_object(
-            F.transform(F.array(bound), build_groups)[0]
-        )
-    return _guarded(
-        t == "array", out, F.concat(F.lit(name + " on "), t), False
-    )
 
 
 def _col_getpath_static(v: Column, segs: tuple[str, ...]) -> CV:
@@ -2277,7 +2132,7 @@ def _col_builtin(name: str, v: Column, args: list[CV]) -> CV:
             F.concat(F.lit("reverse on "), t), False,
         )
 
-    if name in ("sort", "unique", "min", "max"):
+    if name in ("min", "max"):
         t = V.vtype(v)
         arr = V.as_array(v)
 
@@ -2290,24 +2145,9 @@ def _col_builtin(name: str, v: Column, args: list[CV]) -> CV:
             )
 
         sorted_arr = F.array_sort(arr, cmp)
-        if name == "unique":
-            picked = F.transform(
-                F.filter(
-                    _run_flags(sorted_arr, lambda s: s), lambda s: s["new"]
-                ),
-                lambda s: s["s"],
-            )
-            out = V.varray(picked)
-        elif name == "sort":
-            out = V.varray(sorted_arr)
-        elif name == "min":
-            out = F.when(F.size(arr) == 0, V.vnull()).otherwise(
-                F.element_at(sorted_arr, 1)
-            )
-        else:
-            out = F.when(F.size(arr) == 0, V.vnull()).otherwise(
-                F.element_at(sorted_arr, -1)
-            )
+        out = F.when(F.size(arr) == 0, V.vnull()).otherwise(
+            F.element_at(sorted_arr, 1 if name == "min" else -1)
+        )
         return _guarded(t == "array", out, F.concat(F.lit(name + " on "), t), False)
 
     if name in ("ltrimstr", "rtrimstr"):
@@ -2680,299 +2520,6 @@ def _col_builtin(name: str, v: Column, args: list[CV]) -> CV:
         )
 
     raise ValueError(f"unknown builtin {name}")
-
-
-def _hof_body_colfn(f: ast.Node) -> ColFn | None:
-    """Lambda-body compile: packed (ANF) tier first — expression size
-    linear in body size — falling back to pure substitution for nodes
-    the packed tier doesn't cover."""
-    pf = compile_packed(f)
-    if pf is not None:
-
-        def fn(x: Column) -> CV:
-            out = pf(_pk(x))
-            return CV(out["v"], F.when(out["e"].isNotNull(), out["e"]), out["d"])
-
-        return fn
-    return compile_col(f)
-
-
-def _col_hof(name: str, f: ast.Node, src_node: ast.Node | None = None) -> ColFn:
-    """map/any/all — higher-order builtins whose argument is a lambda
-    body (ops.rs:1631-1713). The body must be pure-expression.
-
-    ``src_node`` (r7): the AST of the expression whose output feeds
-    this HOF, when the caller knows it (Pipe sites). When its element
-    kind proves statically to be string and the key body compiles in
-    the typed domain, the sort_by family runs the all-native
-    _typed_sort_cv lane (checked at plan-BUILD time — element kinds
-    of variables live in _ENV metadata).
-
-    The body result is LET-BOUND (packed tier + _let_p) before the
-    per-element finisher reads it: the finisher references v/err/drop
-    ~6× (vjson alone re-reads its input several times), and without
-    the binding each reference duplicates the whole body tree —
-    `map(.value = (.value * 2))` on ONE row measured >5 min of
-    Catalyst analysis under substitution vs ~1 s bound."""
-    pf = compile_packed(f)
-    if pf is not None:
-
-        def with_cv(x: Column, fin) -> Column:
-            return _let_p(
-                pf(_pk(x)),
-                lambda o: fin(
-                    CV(o["v"], F.when(o["e"].isNotNull(), o["e"]), o["d"])
-                ),
-            )
-
-    else:
-        cf = compile_col(f)
-        if cf is None:
-            raise NotImplementedError(
-                f"{name}(...) body must be a scalar expression "
-                "(no .[], .., .[a,b])"
-            )
-
-        def with_cv(x: Column, fin) -> Column:
-            return fin(cf(x))
-
-    if name == "map":
-
-        def fn(v: Column) -> CV:
-            t = V.vtype(v)
-
-            def apply_elem(x: Column) -> Column:
-                def fin(cv: CV) -> Column:
-                    # native variant result (r6): no vjson text
-                    r = cv.v
-                    e = (
-                        cv.err
-                        if cv.err is not None
-                        else F.lit(None).cast("string")
-                    )
-                    if cv.err is not None:
-                        r = F.when(
-                            cv.err.isNotNull(), V.vnull()
-                        ).otherwise(r)
-                    # `map(select(f))` drops elements whose body `?`/
-                    # select suppressed (jq: empty body output
-                    # contributes nothing)
-                    d = (
-                        F.coalesce(cv.drop, F.lit(False))
-                        if cv.drop is not None
-                        else F.lit(False)
-                    )
-                    return F.struct(
-                        r.alias("r"), d.alias("d"), e.alias("e")
-                    )
-
-                return with_cv(x, fin)
-
-            # body errors PROPAGATE as the op's error (reference map is
-            # `thunk(value)?` — ops.rs:1640/1648; r7 ADVICE fix: the
-            # silent null-on-error lane let walk() truncate data past
-            # the recursion cap without surfacing the injected error)
-            mapped_arr = F.transform(V.as_array(v), apply_elem)
-            kept_arr = F.filter(mapped_arr, lambda s: ~s["d"])
-            arr_out = V.varray(F.transform(kept_arr, lambda s: s["r"]))
-            arr_err = F.get(
-                F.filter(
-                    F.transform(mapped_arr, lambda s: s["e"]),
-                    lambda e: e.isNotNull(),
-                ),
-                0,
-            )
-            mapped_obj = F.transform(
-                F.map_entries(V.as_map(v)),
-                lambda e: F.struct(
-                    e["key"].alias("k"), apply_elem(e["value"]).alias("r")
-                ),
-            )
-            kept_obj = F.filter(mapped_obj, lambda s: ~s["r"]["d"])
-            obj_err = F.get(
-                F.filter(
-                    F.transform(mapped_obj, lambda s: s["r"]["e"]),
-                    lambda e: e.isNotNull(),
-                ),
-                0,
-            )
-            obj_out = F.to_variant_object(F.map_from_entries(F.filter(
-                F.transform(
-                    kept_obj,
-                    lambda s: F.struct(
-                        s["k"].alias("k"), s["r"]["r"].alias("v")
-                    ),
-                ),
-                lambda e: e["v"].isNotNull(),
-            )))
-            out = F.when(t == "array", arr_out).otherwise(obj_out)
-            body_err = F.when(t == "array", arr_err).otherwise(obj_err)
-            ok = t.isin("array", "object")
-            base = _guarded(ok, out, F.concat(F.lit("map on "), t), False)
-            return CV(
-                F.when(ok & body_err.isNotNull(), V.vnull()).otherwise(
-                    base.v
-                ),
-                F.coalesce(base.err, body_err),
-                None,
-            )
-
-        return fn
-
-    if name in _SORT_FAMILY:
-        # statically-typed key fast path: when the key body is
-        # provably one kind, precompute ONE scalar sort key per
-        # ELEMENT and compare scalars — the generic comparator
-        # re-evaluates type_rank/vtype/as_double on BOTH keys at
-        # every comparison (interpreted HOF lambda, no codegen), and
-        # n·log n comparisons × that expression dominated
-        # jq_sort_ops (56.9 s at sf0.1; this path cuts the per-
-        # comparison tree ~10×). Number keys already compare as
-        # double in compare_lt, so semantics are unchanged.
-        key_kind = _static_kind(f)
-
-        def fn(v: Column) -> CV:
-            t = V.vtype(v)
-            arr = V.as_array(v)
-
-            def keyed_elem(x: Column, i: Column) -> Column:
-                def fin(cv: CV) -> Column:
-                    k = cv.v
-                    e = (
-                        cv.err
-                        if cv.err is not None
-                        else F.lit(None).cast("string")
-                    )
-                    if cv.err is not None:
-                        k = F.when(
-                            cv.err.isNotNull(), V.vnull()
-                        ).otherwise(k)
-                    fields = [
-                        k.alias("k"), e.alias("e"), x.alias("x"),
-                        i.alias("i"),
-                    ]
-                    if key_kind == "number":
-                        fields.append(V.as_double(k).alias("kd"))
-                    elif key_kind == "string":
-                        fields.append(V.as_string(k).alias("kd"))
-                    return F.struct(*fields)
-
-                return with_cv(x, fin)
-
-            keyed = F.transform(arr, keyed_elem)
-            body_err = F.exists(keyed, lambda s: s["e"].isNotNull())
-
-            if key_kind in ("number", "string"):
-
-                def cmp(a: Column, b: Column) -> Column:
-                    return (
-                        F.when(a["kd"] < b["kd"], F.lit(-1))
-                        .when(b["kd"] < a["kd"], F.lit(1))
-                        # stable: original position breaks ties (and
-                        # null keys — possible only on error entries,
-                        # where the whole op errors anyway)
-                        .otherwise((a["i"] - b["i"]).cast("int"))
-                    )
-
-            else:
-
-                def cmp(a: Column, b: Column) -> Column:
-                    ka, kb = a["k"], b["k"]
-                    ta, tb = V.vtype(ka), V.vtype(kb)
-                    return (
-                        F.when(V.compare_lt(ka, kb, ta, tb), F.lit(-1))
-                        .when(V.compare_lt(kb, ka, tb, ta), F.lit(1))
-                        # stable: original position breaks key ties
-                        .otherwise((a["i"] - b["i"]).cast("int"))
-                    )
-
-            skeyed = F.array_sort(keyed, cmp)
-
-            if name == "sort_by":
-                out = V.varray(F.transform(skeyed, lambda s: s["x"]))
-            elif name == "min_by":
-                out = F.when(F.size(arr) == 0, V.vnull()).otherwise(
-                    F.element_at(skeyed, 1)["x"]
-                )
-            elif name == "max_by":
-                out = F.when(F.size(arr) == 0, V.vnull()).otherwise(
-                    F.element_at(skeyed, -1)["x"]
-                )
-            else:  # unique_by / group_by need run boundaries
-                flags = _run_flags(skeyed, lambda s: s["k"])
-                if name == "unique_by":
-                    out = V.varray(
-                        F.transform(
-                            F.filter(flags, lambda s: s["new"]),
-                            lambda s: s["s"]["x"],
-                        )
-                    )
-                else:  # group_by: adjacent equal-key runs -> sub-arrays
-                    pieces = F.transform(
-                        flags,
-                        lambda s, i: F.concat(
-                            F.when(i == 0, F.lit("["))
-                            .when(s["new"], F.lit("],["))
-                            .otherwise(F.lit(",")),
-                            V.vjson(s["s"]["x"]),
-                        ),
-                    )
-                    out = F.parse_json(
-                        F.when(F.size(arr) == 0, F.lit("[]")).otherwise(
-                            F.concat(
-                                F.lit("["),
-                                F.concat_ws("", pieces),
-                                F.lit("]]"),
-                            )
-                        )
-                    )
-            ok = (t == "array") & ~body_err
-            return _guarded(
-                ok, out,
-                F.when(t != "array", F.concat(F.lit(name + " on "), t))
-                .otherwise(F.lit(name + " body error")),
-                False,
-            )
-
-        tkey = _typed_expr(f, {".": "string"})
-        if (
-            src_node is not None
-            and tkey is not None
-            and tkey[0] in ("int", "float", "string")
-        ):
-            kk, kb = tkey
-
-            def fn_dispatch(v: Column) -> CV:
-                # build-time check: element kind of the feeding
-                # expression (variables resolve via live _ENV meta)
-                if _static_elem_kind(src_node) == "string":
-                    return _typed_sort_cv(name, kk, kb, v)
-                return fn(v)
-
-            return fn_dispatch
-
-        return fn
-
-    want_all = name == "all"
-
-    def fn(v: Column) -> CV:
-        t = V.vtype(v)
-        elems = F.when(t == "array", V.as_array(v)).otherwise(F.map_values(V.as_map(v)))
-
-        def pred(x: Column) -> Column:
-            def fin(cv: CV) -> Column:
-                p = V.truthy(cv.v)
-                if cv.err is not None:
-                    p = F.when(cv.err.isNotNull(), F.lit(False)).otherwise(p)
-                return p
-
-            return with_cv(x, fin)
-
-        agg = F.forall(elems, pred) if want_all else F.exists(elems, pred)
-        ok = t.isin("array", "object")
-        return _guarded(ok, V.vbool(agg), F.concat(F.lit(name + " on "), t), False)
-
-    return fn
 
 
 def _col_list(node: ast.ListCons) -> ColFn | None:
@@ -4003,11 +3550,7 @@ def compile_packed(node: ast.Node) -> PFn | None:  # noqa: PLR0911, PLR0912
 
             return run_select
         if name in HOF_BUILTINS:
-            try:
-                cf = _col_hof(name, node.args[0])
-            except NotImplementedError:
-                return None
-            return lambda p: _pk_chain(p, cf)
+            raise _no_staged_lane(name)
         if name == "del":
             from bd_spark.jsonq.parser import static_path
 
@@ -5105,21 +4648,6 @@ def _plan_direct_raw(
         if left is None:
             return None
         mid, mid_depth, _ = left
-        if (
-            isinstance(node.right, ast.Builtin)
-            and node.right.name in _SORT_FAMILY
-            and len(node.right.args) == 1
-        ):
-            # feed the sort family its source AST for the typed lane
-            # (r7) — mirrors the generic HOF branch's err handling
-            try:
-                hof = _col_hof(
-                    node.right.name, node.right.args[0], src_node=node.left
-                )
-            except NotImplementedError:
-                hof = None
-            if hof is not None:
-                return _pemit(plan, hof(mid.v), mid.err, name, mid_depth)
         return _plan_direct(plan, node.right, name, mid, mid_depth, cse)
     if isinstance(node, ast.Unary):
         inner = _plan_direct(plan, node.expr, None, inp, in_depth, cse)
@@ -5173,11 +4701,7 @@ def _plan_direct_raw(
         return _pemit(plan, cur, inp.err, name, d)
     if isinstance(node, ast.Builtin):
         if node.name in HOF_BUILTINS:
-            body = compile_col(node.args[0])
-            if body is None:
-                return None
-            cv = _col_hof(node.name, node.args[0])(inp.v)
-            return _pemit(plan, cv, inp.err, name, in_depth)
+            raise _no_staged_lane(node.name)
         if node.name == "select":
             arg = _plan_direct(plan, node.args[0], None, inp, in_depth, cse)
             if arg is None:
@@ -5415,7 +4939,7 @@ def compile_stream(node: ast.Node) -> StreamFn:
         return run_ifstream
     if isinstance(node, ast.Builtin):
         if node.name in HOF_BUILTINS:
-            return lift(_col_hof(node.name, node.args[0]))
+            raise _no_staged_lane(node.name)
         if node.name == "select":
             sarg = node.args[0]
 
@@ -6612,18 +6136,10 @@ _INTERP_TIER_NODES = 300
 # Tier override for tests that pin ONE tier's machinery (the fused
 # native paths lane's differential tests would otherwise compare the
 # interp against itself after cost routing): "staged" | "interp" |
-# None (cost model decides).
+# None (cost model decides). The staged pin cannot override a
+# capability fact: InterpOnly, oversized and HOF-bearing programs
+# still run on the interp tier.
 TIER_OVERRIDE: str | None = None
-
-
-# array ops whose staged emission evaluates a lambda (or a variant
-# comparator) per ELEMENT as CodegenFallback — the per-element
-# interpreted-variant tax the r11 tier probe measured (see
-# _walk_heavy_score and the routing comment in compile_query)
-_HOF_SIGNAL_BUILTINS = frozenset((
-    "map", "any", "all", "sort", "unique",
-    "sort_by", "unique_by", "group_by", "min_by", "max_by",
-))
 
 
 # Builtins whose staged emission runs the variant type-dispatch tower
@@ -6633,15 +6149,15 @@ _HOF_SIGNAL_BUILTINS = frozenset((
 # JVM expression evaluations per row per op (measured: physical-plan
 # SchemaOfVariant sites — jq_formats 92, jq_bitwise 95, jq_defs 104
 # vs jq_value_arith 14, jq_fold 24). Binary/Unary/Slice nodes pay the
-# same tower; HOF names are kept OUT of this set (they are their own
-# routing signal above). The scalar-dispatch count drives the 5th
+# same tower; HOF names are kept OUT of this set (a HOF program has
+# no staged lane at all). The scalar-dispatch count drives the 5th
 # router signal in compile_query.
 _SCALAR_DISPATCH_BUILTINS = (
     frozenset(_KIND_NUM_BUILTINS)
     | frozenset(_KIND_STR_BUILTINS)
     | frozenset(_KIND_ARR_BUILTINS)
     | frozenset(("index", "rindex", "ltrimstr", "rtrimstr", "fromjson"))
-) - _HOF_SIGNAL_BUILTINS
+) - HOF_BUILTINS
 
 
 # Route to the interp tier when a program accumulates at least this
@@ -6669,8 +6185,8 @@ def _walk_heavy_score(node: object) -> tuple[int, int, int, int, int]:
       enumerations — `paths`/`leaf_paths` whole-document walks;
       rebuilds     — setpath/delpaths builtins and `del`/`|=`/`=`
                      assignment nodes (whole-document rewrites);
-      hofs         — _HOF_SIGNAL_BUILTINS applications (per-element
-                     lambda/comparator trees, CodegenFallback);
+      hofs         — HOF_BUILTINS applications (no staged lane: any
+                     hof is a capability fact, not a cost);
       collects     — list/dict constructions collecting a MULTIVALUED
                      burst (stream fan-out + reassembly);
       scalars      — Binary/Unary/Slice nodes and
@@ -6685,7 +6201,7 @@ def _walk_heavy_score(node: object) -> tuple[int, int, int, int, int]:
             enums += 1
         elif node.name in ("setpath", "delpaths", "del"):
             rebuilds += 1
-        elif node.name in _HOF_SIGNAL_BUILTINS:
+        elif node.name in HOF_BUILTINS:
             hofs += 1
         elif node.name in _SCALAR_DISPATCH_BUILTINS:
             scalars += 1
@@ -6723,14 +6239,14 @@ def _interp_tier(node: ast.Node) -> StreamFn:
     """Whole-query Arrow-batched interp evaluation: ship the AST into
     one mapInPandas; each input's output burst fans out with
     `.[]`-style ord bookkeeping; upstream error rows pass through.
+    Non-core (carried) columns ride along: every output row, error
+    rows included, takes one copy of its input row's carries.
     100 TB shape: row-local (no shuffle), Arrow both ways; floats
     survive the parse_json boundary via interp.dumps_tagged."""
+    from pyspark.sql.types import StructType
 
     def run(df: DataFrame) -> DataFrame:
-        if _carries(df):
-            raise NotImplementedError(
-                "interp tier supports core-column streams only"
-            )
+        carries = _carries(df)
 
         def batches(it):
             import json as _j
@@ -6741,15 +6257,17 @@ def _interp_tier(node: ast.Node) -> StreamFn:
 
             for pdf in it:
                 rows = {"seq": [], "ord": [], "j": [], "err": []}
-                for seq, ordv, vj, err in zip(
+                src = []  # input position of each output row
+                for i, (seq, ordv, vj, err) in enumerate(zip(
                     pdf["seq"], pdf["ord"], pdf["vj"], pdf["err"]
-                ):
+                )):
                     base = list(ordv)
                     if err is not None:
                         rows["seq"].append(seq)
                         rows["ord"].append(base)
                         rows["j"].append("null")
                         rows["err"].append(err)
+                        src.append(i)
                         continue
                     outs = interp.run(node, _j.loads(vj))
                     for pos, (ov, oe) in enumerate(outs):
@@ -6760,22 +6278,33 @@ def _interp_tier(node: ast.Node) -> StreamFn:
                             else interp.dumps_tagged(ov)
                         )
                         rows["err"].append(oe)
+                    src.extend([i] * len(outs))
                 if not rows["seq"]:
                     # every input row produced ZERO outputs (empty
                     # generators): pd.DataFrame of empty lists would
                     # default the ord column to float64, which Arrow
                     # cannot convert to array<bigint> — yield nothing
                     continue
-                yield pd.DataFrame(rows)
+                out = pd.DataFrame(rows)
+                if carries:
+                    out = pd.concat(
+                        [out, pdf[carries].iloc[src].reset_index(drop=True)],
+                        axis=1,
+                    )
+                yield out
 
         src = df.select(
-            "seq", "ord", V.vjson(F.col("v")).alias("vj"), "err"
+            "seq", "ord", V.vjson(F.col("v")).alias("vj"), "err", *carries
         )
-        out = src.mapInPandas(
-            batches, "seq long, ord array<bigint>, j string, err string"
+        schema = StructType(
+            StructType.fromDDL(
+                "seq long, ord array<bigint>, j string, err string"
+            ).fields
+            + [df.schema[c] for c in carries]
         )
+        out = src.mapInPandas(batches, schema)
         return out.select(
-            "seq", "ord", F.parse_json("j").alias("v"), "err"
+            "seq", "ord", F.parse_json("j").alias("v"), "err", *carries
         )
 
     return run
@@ -6806,10 +6335,16 @@ def last_tier() -> str | None:
 
 
 def compile_query(node: ast.Node) -> StreamFn:
-    """Top-level compile entry point: staged Catalyst compilation,
-    except for programs marked InterpOnly (bounded-recursion def
-    expansion — may nest stream ops exponentially) and very large
-    trees, which evaluate through the Arrow-batched interp tier.
+    """Top-level compile entry point. Each program gets exactly one
+    evaluator, picked from the program alone:
+      - the Arrow-batched interp tier when the staged compiler cannot
+        run it: InterpOnly programs (bounded-recursion def expansion
+        may nest stream ops exponentially), trees over
+        _INTERP_TIER_NODES, and programs applying a HOF_BUILTINS
+        builtin (no staged lane) — whatever TIER_OVERRIDE says;
+      - else the interp tier when the cost signals say it is faster
+        (or TIER_OVERRIDE pins it);
+      - else the staged Catalyst compilation.
     The chosen tier is recorded (last_tier) and logged."""
     if isinstance(node, ast.InterpOnly):
         _TIER.last = "interp"
@@ -6817,75 +6352,45 @@ def compile_query(node: ast.Node) -> StreamFn:
             "compile_query tier=interp (InterpOnly: bounded-recursion defs)"
         )
         return _interp_tier(node.expr)
-    if TIER_OVERRIDE == "interp":
-        _TIER.last = "interp"
-        return _interp_tier(node)
     n = _node_count(node)
-    if n > _INTERP_TIER_NODES:
+    enums, rebuilds, hofs, collects, scalars = _walk_heavy_score(node)
+    if TIER_OVERRIDE == "interp" or n > _INTERP_TIER_NODES or hofs >= 1:
         _TIER.last = "interp"
         _LOG.info(
-            "compile_query tier=interp (nodes=%d > %d)",
-            n, _INTERP_TIER_NODES,
+            "compile_query tier=interp (override=%s, nodes=%d, hofs=%d)",
+            TIER_OVERRIDE, n, hofs,
         )
         return _interp_tier(node)
     # Cost-based routing (r11): a program doing MULTIPLE whole-document
     # walks per row — path enumerations plus object rebuilds — is
     # measurably faster on the Arrow interp tier than on the staged
-    # Catalyst lane, because the variant HOF trees those ops compile to
+    # Catalyst lane, because the variant trees those ops compile to
     # evaluate as CodegenFallback (interpreted per row, JVM-side) while
     # the interp walks plain Python dicts on Arrow batches ONCE per
     # row for the whole program (jq_paths at sf0.1: 6.9 s staged vs
-    # 1.4 s interp warm — SCALE.md r11). Single-walk programs stay
-    # staged: one cheap enumeration doesn't amortize the whole-doc
-    # Python parse/serialize round-trip, and scalar navigations are
-    # 5-10x faster native. Both tiers are row-local and shuffle-free,
-    # so the 100 TB story is unchanged — this picks the faster
-    # per-byte constant.
-    if TIER_OVERRIDE != "staged":
-        enums, rebuilds, hofs, collects, scalars = _walk_heavy_score(node)
-        # r11 tier probe (SCALE.md): ANY per-element HOF/comparator op
-        # (sort/map/group_by families — CodegenFallback per element on
-        # the staged lane) or >=2 whole-doc rebuilds or >=2 multivalued
-        # burst collects measured 1.8-5.7x faster through the interp's
-        # single Python walk per row; pure scalar navigation (no such
-        # signal) measured 1.3-2.6x faster staged and stays there.
-        # The scalar-dispatch signal (r11 close): a program stacking
-        # MANY scalar ops pays the variant dispatch tower per op per
-        # row — each an interpreted transform()/comparator HOF — so
-        # past _SCALAR_DISPATCH_THRESHOLD ops one Arrow interp walk
-        # is cheaper (tierprobe: jq_formats 6.02→2.41, jq_defs
-        # 0.81→0.42, jq_datetime 2.30→1.68 warm; plan build collapses
-        # from O(ops) staged projections to one mapInPandas).
-        if (
-            (enums >= 1 and enums + rebuilds >= 2)
-            or hofs >= 1
-            or rebuilds >= 2
-            or collects >= 2
-            or scalars >= _SCALAR_DISPATCH_THRESHOLD
-        ):
-            _TIER.last = "interp"
-            _LOG.info(
-                "compile_query tier=interp (walk-heavy: %d enum + %d "
-                "rebuild + %d hof + %d collect + %d scalar-dispatch)",
-                enums, rebuilds, hofs, collects, scalars,
-            )
-            # Cost-routed programs (unlike InterpOnly / node-count
-            # programs) always HAVE a working staged compilation — the
-            # routing is a speed choice. The interp tier only supports
-            # core-column streams, so a stream carrying extra columns
-            # falls back to the staged lane at run time instead of
-            # raising (r11 ADVICE #4); the staged fn is compiled
-            # lazily, once, only if such a stream ever arrives.
-            interp_fn = _interp_tier(node)
-            staged_fn: list[StreamFn | None] = [None]
-
-            def run_routed(df: DataFrame) -> DataFrame:
-                if _carries(df):
-                    if staged_fn[0] is None:
-                        staged_fn[0] = compile_stream(node)
-                    return staged_fn[0](df)
-                return interp_fn(df)
-
-            return run_routed
+    # 1.4 s interp warm — SCALE.md r11). >=2 whole-doc rebuilds or >=2
+    # multivalued burst collects measured 1.8-5.7x faster interp too.
+    # Pure scalar navigation measured 1.3-2.6x faster staged and stays
+    # there. The scalar-dispatch signal (r11 close): a program stacking
+    # MANY scalar ops pays the variant dispatch tower per op per row —
+    # each an interpreted transform()/comparator HOF — so past
+    # _SCALAR_DISPATCH_THRESHOLD ops one Arrow interp walk is cheaper
+    # (tierprobe: jq_formats 6.02→2.41, jq_defs 0.81→0.42, jq_datetime
+    # 2.30→1.68 warm). Both tiers are row-local, shuffle-free and
+    # carry non-core columns, so the 100 TB story is unchanged — this
+    # picks the faster per-byte constant.
+    if TIER_OVERRIDE != "staged" and (
+        (enums >= 1 and enums + rebuilds >= 2)
+        or rebuilds >= 2
+        or collects >= 2
+        or scalars >= _SCALAR_DISPATCH_THRESHOLD
+    ):
+        _TIER.last = "interp"
+        _LOG.info(
+            "compile_query tier=interp (walk-heavy: %d enum + %d "
+            "rebuild + %d collect + %d scalar-dispatch)",
+            enums, rebuilds, collects, scalars,
+        )
+        return _interp_tier(node)
     _TIER.last = "staged"
     return compile_stream(node)

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bd_spark.jsonq import compiler, parser
+from bd_spark.jsonq import parser
 from bd_spark.jsonq.compiler import compile_query
 
 
@@ -117,20 +117,6 @@ class JsonQ:
 
     # -- running -------------------------------------------------------
 
-    # Compiled-plan cache (the jq engine's "prepared statement" cache).
-    # Building a compiled jq plan costs thousands of Py4J round-trips
-    # (~0.3 ms each — measured 4.9 s of a 5.4 s jq_builtins run, with
-    # execution itself at 0.5 s), so re-running the same query text on
-    # a semantically identical input stream should not pay it twice.
-    # Keyed by (session, query, ordered, input schema, input plan
-    # semanticHash) — semanticHash is Catalyst's own canonical plan
-    # hash, one Py4J call to compute.  Bounded FIFO, 64 entries.
-    # The session component is catalog.session_token (weakref-keyed),
-    # not id(): a reused CPython id could resurrect a dead session's
-    # cached DataFrame (ADVICE r4).
-    _PLAN_CACHE: dict[tuple, DataFrame] = {}
-    _PLAN_CACHE_MAX = 64
-
     def run(self, query: str, stream: DataFrame, ordered: bool = True) -> DataFrame:
         """Run a query on a document stream.
 
@@ -141,32 +127,13 @@ class JsonQ:
         global sort is a pure waste (a full range-shuffle of every
         result row) and Catalyst cannot always prove it removable.
 
-        Results are DataFrames (immutable, lazily executed), so a
-        cache hit returns the previously compiled plan verbatim.
+        Every call parses and compiles afresh, so ``last_tier()`` is
+        always set. No compiled plan is reused: a file source's plan
+        stays the same when files land in or leave its path, so a
+        reused plan would answer from the old files.
         """
-        try:
-            from bd_spark.catalog import session_token
-
-            plan_key = (
-                session_token(stream.sparkSession),
-                query,
-                ordered,
-                compiler.TIER_OVERRIDE,  # tier-pinning tests
-                stream.schema.simpleString(),
-                stream._jdf.queryExecution().logical().semanticHash(),
-            )
-        except Exception:  # noqa: BLE001 — cache is best-effort only
-            plan_key = None
-        if plan_key is not None and plan_key in self._PLAN_CACHE:
-            return self._PLAN_CACHE[plan_key]
-        fn = compile_query(parser.parse(query))
-        out = fn(stream)
-        out = out.orderBy("seq", "ord") if ordered else out
-        if plan_key is not None:
-            if len(self._PLAN_CACHE) >= self._PLAN_CACHE_MAX:
-                self._PLAN_CACHE.pop(next(iter(self._PLAN_CACHE)))
-            self._PLAN_CACHE[plan_key] = out
-        return out
+        out = compile_query(parser.parse(query))(stream)
+        return out.orderBy("seq", "ord") if ordered else out
 
     def run_texts(self, query: str, texts: list[str]) -> list[tuple[object, str | None]]:
         """Convenience for tests: returns [(python_value, err), ...]

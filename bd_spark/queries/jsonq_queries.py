@@ -682,10 +682,11 @@ def jq_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     exposes only `test`): gsub and first-match sub (literal and
     data-driven pattern), scan / splits generators collected into
     lists, capture with a named group, explode/implode round-trip,
-    utf8bytelength, and with_entries over a built object. Everything
-    compiles to native Java-regex Catalyst expressions (regexp_replace
-    / regexp_extract_all / split / regexp_extract) — one row-local
-    projection, zero shuffle, no Python UDFs."""
+    utf8bytelength, and with_entries over a built object. with_entries
+    desugars to map, a HOF, so the program runs on the interp tier;
+    without it the regex builtins compile to native Java-regex Catalyst
+    expressions (regexp_replace / regexp_extract_all / split /
+    regexp_extract), which test_plans pins."""
     docs = table(spark, "documents", sf_dir)
     jq = JsonQ(spark)
     stream = jq.stream_from_table(docs)

@@ -13,6 +13,38 @@ import os
 from pyspark.sql import SparkSession
 
 
+# The driver heap is half the memory this process may use, capped at
+# the 24g the 32-core calibration host runs with. Local mode runs every
+# task in the driver JVM, whose RSS (code cache, metaspace, Arrow and
+# shuffle buffers) grows well past the heap, and the Python workers
+# need room beside it: a 24g heap on a 15 GB host was OOM-killed.
+_DRIVER_MEM_CAP_MB = 24 * 1024
+
+
+def default_driver_memory(
+    meminfo: str = "/proc/meminfo",
+    cgroup_max: str = "/sys/fs/cgroup/memory.max",
+) -> str:
+    """Default ``spark.driver.memory``: half of MemTotal, or of the
+    cgroup memory limit when that is lower, capped at 24g."""
+    limits = []
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)
+    except OSError:
+        pass
+    try:
+        with open(cgroup_max) as f:
+            limits.append(int(f.read().strip()))
+    except (OSError, ValueError):  # absent, or "max" (no limit)
+        pass
+    if not limits:
+        return f"{_DRIVER_MEM_CAP_MB}m"
+    return f"{min(min(limits) // 2 // 2**20, _DRIVER_MEM_CAP_MB)}m"
+
+
 def get_spark(app_name: str = "bd_spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
 
@@ -55,7 +87,10 @@ def get_spark(app_name: str = "bd_spark", master: str | None = None) -> SparkSes
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.driver.maxResultSize", "4g")
         # Whole-stage codegen emits thousands of large JIT-compiled
         # methods across a many-query workload; the JVM's default

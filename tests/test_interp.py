@@ -106,33 +106,75 @@ def test_scalar_dispatch_routing():
     assert "sort_by" not in compiler._SCALAR_DISPATCH_BUILTINS
 
 
-def test_cost_routed_program_falls_back_on_carrying_stream(spark):
-    """r11 ADVICE #4: a cost-routed (interp-tier) program applied to a
-    stream CARRYING non-core columns must fall back to the staged
-    lane at run time — not raise NotImplementedError — and produce
-    the same values (the two tiers are differential twins)."""
+def test_hof_programs_have_no_staged_lane():
+    """A HOF builtin is a capability fact, not a cost: its program
+    runs on the interp tier even under the staged pin, and a HOF node
+    handed to the staged compiler directly raises instead of falling
+    through to some other lane."""
+    from bd_spark.jsonq import compiler
+
+    for q in ("map(. + 1)", ".xs | sort", "{a: (.xs | unique_by(.k))}"):
+        compiler.TIER_OVERRIDE = "staged"
+        try:
+            compiler.compile_query(parser.parse(q))
+        finally:
+            compiler.TIER_OVERRIDE = None
+        assert compiler.last_tier() == "interp", q
+    for q in ("map(. + 1)", ".xs | sort_by(.a)", "[.[] | select(any(. > 1))]",
+              "reduce .[] as $x (0; . + ([$x] | max_by(.)))"):
+        with pytest.raises(RuntimeError, match="no staged lane"):
+            compiler.compile_stream(parser.parse(q))
+
+
+def test_interp_tier_carries_columns(spark):
+    """The interp tier passes non-core columns through its
+    mapInPandas: every output row takes one copy of its input row's
+    carries (upstream error rows too, zero-output rows none), for int,
+    string, struct and VARIANT carries — and answers like the staged
+    tier on the same carrying stream."""
+    from collections import Counter
+
     from pyspark.sql import functions as F
 
     from bd_spark.jsonq import compiler
     from bd_spark.jsonq.runtime import JsonQ
 
     jq = JsonQ(spark)
-    prog = ".a + .b - .c * .d / .e % 2 + .f + .g + .h + .i + .j"
-    fn = compiler.compile_query(parser.parse(prog))
-    assert compiler.last_tier() == "interp"
-    stream = jq.stream_from_texts(
-        ['{"a":1,"b":2,"c":3,"d":4,"e":5,"f":6,"g":7,"h":8,"i":9,"j":10}']
-    )
-    core_vals = [
-        r.j for r in fn(stream).select(F.to_json("v").alias("j")).collect()
-    ]
-    carrying = stream.withColumn("extra", F.lit(42))
-    out = fn(carrying)  # staged fallback — previously raised
-    rows = out.select(
-        F.to_json("v").alias("j"), F.col("extra")
-    ).collect()
-    assert [r.j for r in rows] == core_vals
-    assert all(r.extra == 42 for r in rows)  # carry survives
+    texts = ['{"xs": [1, 2, 3]}', '{"xs": []}', "not json", '{"xs": [4]}']
+    stream = jq.stream_from_texts(texts).withColumns({
+        "c_int": F.col("seq") * 10,
+        "c_str": F.concat(F.lit("s"), F.col("seq").cast("string")),
+        "c_struct": F.struct(F.col("seq").alias("k"), F.lit("t").alias("t")),
+        "c_var": F.parse_json(F.to_json(F.struct(F.col("seq").alias("id")))),
+    })
+    carries = ["c_int", "c_str", "c_struct", "c_var"]
+
+    def rows(prog: str, tier: str) -> list:
+        compiler.TIER_OVERRIDE = tier
+        try:
+            out = jq.run(prog, stream)
+            assert compiler.last_tier() == tier, (prog, tier)
+        finally:
+            compiler.TIER_OVERRIDE = None
+        assert out.columns == ["seq", "ord", "v", "err", *carries]
+        # no `ord`: the tiers number an upstream error row's ord
+        # differently (both sort it in place)
+        return out.select(
+            "seq", F.to_json("v").alias("v"), "err", "c_int", "c_str",
+            "c_struct", F.to_json("c_var").alias("c_var"),
+        ).collect()
+
+    # outputs per input seq: 2 is the upstream parse-error row
+    for prog, want in ((".xs[]", {0: 3, 2: 1, 3: 1}), ("empty", {2: 1})):
+        got = rows(prog, "interp")
+        assert Counter(r.seq for r in got) == want, prog
+        for r in got:
+            s = r.seq
+            assert (r.err is not None) == (s == 2), (prog, r)
+            assert r.c_int == s * 10 and r.c_str == f"s{s}", (prog, r)
+            assert (r.c_struct.k, r.c_struct.t) == (s, "t"), (prog, r)
+            assert json.loads(r.c_var) == {"id": s}, (prog, r)
+        assert got == rows(prog, "staged"), prog
 
 
 def test_interp_map_error_propagation_and_empty_drop():

@@ -646,10 +646,13 @@ def corpus_results(jq):
 
     TIER_OVERRIDE pins the STAGED engine (r11): this corpus is the
     staged machinery's conformance gate — without the pin the cost
-    router would send every HOF/collect-bearing case to the interp
+    router would send every collect/rebuild-heavy case to the interp
     tier, silently shrinking staged coverage. test_interp.py runs the
-    same corpus through the interp engine; InterpOnly programs
-    (walk/tostream) still route to interp regardless of the pin."""
+    same corpus through the interp engine. Programs the staged
+    compiler cannot run (InterpOnly: walk/tostream; any HOF builtin)
+    take the interp tier regardless of the pin; each case records the
+    tier it took (last_tier is per thread, so it is read in the
+    worker) and test_corpus checks it against _pinned_tier."""
     from concurrent.futures import ThreadPoolExecutor
 
     from bd_spark.jsonq import compiler
@@ -657,9 +660,10 @@ def corpus_results(jq):
     def run(case):
         query, doc, _ = case
         try:
-            return jq.run_values(query, [doc])
+            got = jq.run_values(query, [doc])
         except Exception as e:  # noqa: BLE001 — asserted per-case
-            return ("__raised__", f"{type(e).__name__}: {e}")
+            got = ("__raised__", f"{type(e).__name__}: {e}")
+        return got, compiler.last_tier()
 
     compiler.TIER_OVERRIDE = "staged"
     try:
@@ -669,13 +673,87 @@ def corpus_results(jq):
         compiler.TIER_OVERRIDE = None
 
 
+def _pinned_tier(query: str) -> str:
+    """The tier a case must take under the staged pin: interp only
+    for programs the staged compiler cannot run."""
+    from bd_spark.jsonq import ast, compiler, parser
+
+    node = parser.parse(query)
+    if (
+        isinstance(node, ast.InterpOnly)
+        or compiler._node_count(node) > compiler._INTERP_TIER_NODES
+        or compiler._walk_heavy_score(node)[2]  # applies a HOF builtin
+    ):
+        return "interp"
+    return "staged"
+
+
 @pytest.mark.parametrize(
     "idx", range(len(CORPUS)), ids=[c[0][:40] for c in CORPUS]
 )
 def test_corpus(corpus_results, idx):
     query, doc, expected = CORPUS[idx]
-    got = corpus_results[idx]
+    got, tier = corpus_results[idx]
     assert got == expected, f"{query} on {doc}: {got} != {expected}"
+    assert tier == _pinned_tier(query), query
+
+
+@pytest.mark.parametrize("fmt", ["jsonl", "parquet"])
+def test_rerun_answers_from_current_files(jq, tmp_path, fmt):
+    """Re-running a program over a fresh read of a path answers from
+    the files there now: after an append and after an overwrite, in
+    one session, on both tiers, with last_tier() set by every run."""
+    import json as _json
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from bd_spark.jsonq import compiler
+    from bd_spark.sources.jsons import read_jsonl
+
+    spark = jq.spark
+    path = str(tmp_path / "src")
+    programs = {".a": "staged", "[.a] | map(. * 10) | .[0]": "interp"}
+
+    def write(vals: list[int], batch: int, mode: str) -> None:
+        if fmt == "parquet":
+            spark.createDataFrame([(a,) for a in vals], "a long").write.mode(
+                mode
+            ).parquet(path)
+            return
+        if mode == "overwrite":
+            shutil.rmtree(path, ignore_errors=True)
+        (tmp_path / "src").mkdir(exist_ok=True)
+        (tmp_path / "src" / f"part-{batch}.jsonl").write_text(
+            "".join(_json.dumps({"a": a}) + "\n" for a in vals)
+        )
+
+    def answers() -> dict[str, list[int]]:
+        out = {}
+        for prog, tier in programs.items():
+            stream = (
+                read_jsonl(spark, path) if fmt == "jsonl"
+                else jq.stream_from_table(spark.read.parquet(path))
+            )
+            compiler._TIER.last = None
+            df = jq.run(prog, stream, ordered=False)
+            assert compiler.last_tier() == tier, prog
+            out[prog] = sorted(
+                r[0] for r in df.select(
+                    F.try_variant_get("v", "$", "long")
+                ).collect()
+            )
+        return out
+
+    write([1, 2, 3], 0, "overwrite")
+    assert answers() == {".a": [1, 2, 3], "[.a] | map(. * 10) | .[0]": [10, 20, 30]}
+    write([4, 5], 1, "append")
+    assert answers() == {
+        ".a": [1, 2, 3, 4, 5],
+        "[.a] | map(. * 10) | .[0]": [10, 20, 30, 40, 50],
+    }
+    write([7], 2, "overwrite")
+    assert answers() == {".a": [7], "[.a] | map(. * 10) | .[0]": [70]}
 
 
 def test_reduce_error_paths(jq):
@@ -765,7 +843,7 @@ def test_byte_slice_parity_mode(jq):
 
 
 def test_typed_lanes_match_generic(spark):
-    """r7 typed fold/sort lanes must be value-identical to the
+    """r7 typed fold lanes must be value-identical to the
     generic variant lanes on randomized inputs (empty words, empty
     docs, non-ASCII byte lengths, duplicate lengths, ties)."""
     import json as _json
@@ -796,40 +874,23 @@ def test_typed_lanes_match_generic(spark):
         " (0; ($w | length) as $l | if $l > . then $l else . end)",
         # `.[]?` — non-array source is an EMPTY generator -> init
         '(.t / " ") as $ws | reduce $ws.[]? as $w (0; . + ($w | length))',
-        '(.t / " ") | sort_by(length)',
-        '(.t / " ") | unique_by(length)',
-        '(.t / " ") | group_by(length) | map(length)',
-        '(.t / " ") | min_by(length)',
-        '(.t / " ") | max_by(length)',
-        # DECIMAL(38,0) overflow -> NULL native sort keys (r7 ADVICE
-        # #2): length>=1 keys overflow to NULL, length==0 keys stay 0;
-        # NULLs must rank first (total comparator) and unique_by/
-        # group_by must keep the null run, not drop it
-        '(.t / " ") | sort_by(length * 99999999999999999999'
-        " * 99999999999999999999)",
-        '(.t / " ") | unique_by(length * 99999999999999999999'
-        " * 99999999999999999999)",
-        '(.t / " ") | group_by(length * 99999999999999999999'
-        " * 99999999999999999999) | map(length)",
-        '(.t / " ") | min_by(length * 99999999999999999999'
-        " * 99999999999999999999)",
     ]
     jq = JsonQ(spark)
     # pin staged: the differential is typed-vs-generic STAGED lanes;
-    # the r11 router would send these sort_by/group_by programs to
-    # the interp tier on both sides, comparing it against itself
+    # the cost router could otherwise send a program to the interp
+    # tier on both sides, comparing it against itself
     compiler.TIER_OVERRIDE = "staged"
     try:
         for q in queries:
             typed = jq.run_texts(q, docs)
+            assert compiler.last_tier() == "staged", q
             orig = compiler._static_elem_kind
             compiler._static_elem_kind = lambda n: None  # force generic
             try:
-                JsonQ._PLAN_CACHE.clear()
                 generic = jq.run_texts(q, docs)
+                assert compiler.last_tier() == "staged", q
             finally:
                 compiler._static_elem_kind = orig
-                JsonQ._PLAN_CACHE.clear()
             assert typed == generic, q
     finally:
         compiler.TIER_OVERRIDE = None
@@ -974,8 +1035,7 @@ def test_generator_pipe_paths_right_side(spark):
 
 def test_udf_builtin_in_hof_body_routes(spark):
     """UDF-emitting builtins (delpaths/strftime — pandas UDFs) inside
-    a map body are NOT staged-compilable (a Python UDF cannot live in
-    a Catalyst lambda; _col_hof raises), but the r11 cost router sends
+    a map body have no staged lane (no HOF does): compile_query sends
     map-bearing programs to the interp tier, where they evaluate
     correctly. Values must equal the direct interp run. Literal-path
     setpath stays corpus-tested on the staged tier (Assign desugar)."""

@@ -165,20 +165,36 @@ def test_rowlocal_text_ops_no_exchange(spark, sf_dir):
 
 def test_jq_regex_rowlocal_native(spark, sf_dir):
     """The regex/string builtin batch (sub/gsub/scan/splits/capture/
-    explode/implode/with_entries) compiles to native Java-regex
-    Catalyst expressions: no shuffle, no Python UDF anywhere in the
-    plan."""
+    explode/implode) compiles to native Java-regex Catalyst
+    expressions: no shuffle, no Python UDF anywhere in the plan."""
+    from bd_spark.catalog import table
     from bd_spark.jsonq import compiler
-    from bd_spark.queries.jsonq_queries import jq_regex
+    from bd_spark.jsonq.runtime import JsonQ
 
-    # pin the staged tier: this test asserts the STAGED emission is
-    # native (the r11 cost router sends jq_regex to the interp tier,
-    # whose mapInPandas would trip the ArrowEvalPython assertion)
+    # jq_regex's program without its `dbl` pair: with_entries
+    # desugars to map, which has no staged lane, so the full program
+    # runs on the interp tier; this copy pins the STAGED emission
+    jq = JsonQ(spark)
+    stream = jq.stream_from_table(table(spark, "documents", sf_dir))
     compiler.TIER_OVERRIDE = "staged"
     try:
-        plan = _plan(jq_regex(spark, sf_dir))
+        out = jq.run(
+            '{id: .doc_id,'
+            ' starred: (.text | gsub("[aeiou]"; "*") | utf8bytelength),'
+            ' n_words: ([.text | scan("[a-z]+")] | length),'
+            ' n_segs: ([.text | splits(" ")] | length),'
+            ' first5: (.text | capture("^(?<h>.{0,5})") | .h),'
+            ' sub1: (.text | sub(" "; "_")),'
+            ' dyn: (. as $d | $d.text | sub($d.lang; "@")),'
+            ' lang_sum: (.lang | explode | add),'
+            ' lang_rt: (.lang | explode | implode)}',
+            stream,
+            ordered=False,
+        )
+        assert compiler.last_tier() == "staged"
     finally:
         compiler.TIER_OVERRIDE = None
+    plan = _plan(out)
     # the only allowed exchange is the deliberate round-robin input
     # rebalance (spreads the 1-file parquet scan across cores); any
     # hash/range exchange / join / generate means a list collect fell
@@ -380,6 +396,7 @@ def test_literal_path_program_all_native(spark, sf_dir):
             stream,
             ordered=False,
         )
+        assert compiler.last_tier() == "staged"
         plan = _plan(out)
     finally:
         compiler.TIER_OVERRIDE = None

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import io
 import json
+import os
 
 import pytest
 
@@ -36,18 +37,45 @@ def _load_rust_vec(path: str) -> list[str]:
 
 # ---------------------------------------------------------- golden corpus
 
-CORPUS = list(zip(_load_rust_vec(f"{REF}/test_simple.jsons"),
-                  _load_rust_vec(f"{REF}/test_simple.jsons.ref.jsons")))
+GOLDEN = f"{REF}/test_simple.jsons"
+CORPUS = (
+    list(zip(_load_rust_vec(GOLDEN), _load_rust_vec(f"{GOLDEN}.ref.jsons")))
+    if os.path.exists(GOLDEN)
+    else []
+)
+
+# The representative rows FIXTURES.md §1 quotes from the golden corpus
+# (seq 0, 4, 6, 11, 36, 37, 42, 52), kept here so the parity check
+# runs on hosts without the corpus.
+GOLDEN_SUBSET = [
+    ("null", "null"),
+    ("10.2", "1.02e1"),
+    ("00", "0"),
+    (".2", "2e-1"),
+    ('"hello\\" \\\\ \\/ \\b \\f\\n\\r\\t"',
+     '"hello\\" \\\\ / \\b \\f\\n\\r\\t"'),
+    ('"hello\\u0234\\\\ \\uD834\\uDD1E"', '"hello\u0234\\\\ \U0001d11e"'),
+    (' [null,true,false,10,"tru\\"e"]', '[null,true,false,10,"tru\\"e"]'),
+    ('{"z":1,"a":1,"c":1,"d":1,"f":1,"e":1,"b":1,"x":1}',
+     '{"a":1,"b":1,"c":1,"d":1,"e":1,"f":1,"x":1,"z":1}'),
+]
 
 
+@pytest.mark.skipif(not CORPUS, reason=f"{GOLDEN} not present")
 def test_corpus_loaded():
     assert len(CORPUS) == 52  # 54 lines minus the two bracket lines
 
 
+@pytest.mark.skipif(not CORPUS, reason=f"{GOLDEN} not present")
 @pytest.mark.parametrize("src,expect", CORPUS, ids=[s[:25] for s, _ in CORPUS])
 def test_golden_parse_serialize(src: str, expect: str):
     """Parse the lenient input, canonical-serialize, match the golden
     output byte-for-byte (json.rs:1130-1187 test_simple_jsons)."""
+    assert canonicalize(parse_one(src)) == expect
+
+
+@pytest.mark.parametrize("src,expect", GOLDEN_SUBSET)
+def test_golden_subset_parse_serialize(src: str, expect: str):
     assert canonicalize(parse_one(src)) == expect
 
 

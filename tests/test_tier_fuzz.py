@@ -8,6 +8,12 @@ reproduce; not hypothesis-driven because each example costs a Spark
 job, so programs are generated once and each runs ALL docs in one
 batched run_texts call (8 in flight, the corpus fixture pattern).
 
+Programs applying a HOF builtin (map/any/all, sort/unique, the
+sort_by family) have no staged lane: the routed run takes the interp
+tier, so for them this checks the mapInPandas wrapper (ord
+bookkeeping, error rows, the tagged-float round trip) against the
+direct interp.
+
 Comparison contract (corpus convention): same output count, same
 error PRESENCE per entry, equal values on non-error entries. Error
 TEXTS may differ between tiers by design.

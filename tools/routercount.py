@@ -52,9 +52,10 @@ def tier_for(node: jast.Node) -> str:
     if compiler._node_count(node) > compiler._INTERP_TIER_NODES:
         return "interp(nodes)"
     e, r, h, c, s = compiler._walk_heavy_score(node)
+    if h >= 1:
+        return "interp (no staged lane)"
     if (
         (e >= 1 and e + r >= 2)
-        or h >= 1
         or r >= 2
         or c >= 2
         or s >= compiler._SCALAR_DISPATCH_THRESHOLD

@@ -7,6 +7,8 @@ For each query name (or raw jq PROGRAM run over the standard
 documents stream), times min-warm exec (fresh DataFrame per rep,
 clearCache per rep, build excluded) under two tier overrides and
 compares row counts. TIER is staged|interp|auto (auto = cost model).
+A program with no staged lane (a HOF builtin, InterpOnly) is refused
+under the staged tier with a one-line message.
 Flags may appear in any order and are validated (r11 ADVICE #2: the
 old positional parse silently treated '-t' as a query name and blew
 up on a single tier). Diagnostic only — feeds the compile_query
@@ -120,15 +122,23 @@ def main() -> None:
                     t0 = time.perf_counter()
                     df = fn(spark, sf_dir)
                     t1 = time.perf_counter()
+                    if tier and compiler.last_tier() != tier:
+                        break
                     _force(df)
                     times.append(time.perf_counter() - t1)
                     build = t1 - t0
+                if not times:
+                    print(f"{label}: no {tier} lane (HOF builtin or "
+                          "InterpOnly), skipped")
+                    break
                 rows = fn(spark, sf_dir).count()
                 row[tier or "auto"] = (
                     build, times[0], min(times[1:] or times), rows
                 )
             finally:
                 compiler.TIER_OVERRIDE = None
+        if len(row) < len(tiers):
+            continue
         la, lb = (t or "auto" for t in tiers)
         a, b = row[la], row[lb]
         flag = "" if a[3] == b[3] else "  ROWS-MISMATCH"
