@@ -369,7 +369,7 @@ BUILTIN_ARITY = {
     "@tsv": 0,
     "@base64": 0,
     "@base64d": 0,
-    # iteration (interp-backed Arrow UDFs engine-side; capped)
+    # iteration (interp tier only; capped)
     "until": 2,
     "while": 2,
     "repeat": 1,

@@ -1,11 +1,20 @@
 """AST -> Spark compiler for the bd/jq language.
 
-Every program runs on exactly one evaluator, picked by compile_query
+Every program runs on exactly one evaluator, picked by choose_tier
 from the program alone: the staged Catalyst compilation below, or the
 whole-query Arrow-batched interp tier (`_interp_tier`, one
-mapInPandas over bd_spark.jsonq.interp). Higher-order builtins
-(HOF_BUILTINS: map/any/all and the sort family) have no staged lane;
-programs applying one always take the interp tier.
+mapInPandas over bd_spark.jsonq.interp).
+
+The staged tier is pure JVM: its plans contain no Python UDF. A
+construct whose only staged form would call Python has no staged lane
+(`_unstaged_construct`): the higher-order builtins (HOF_BUILTINS),
+the unbounded-recursion and Python-library builtins (PY_BUILTINS),
+`..`, `del` on a path with an int segment, `*` unless one operand is
+provably not an object (the deep merge), and a `reduce` or `foreach`
+the staged fold cannot render (a source that is not a row-local
+generator, or a multi-valued init/update). A program containing one
+runs whole on the interp tier, whatever the tier pin, and such a node
+handed to the staged compiler raises instead of emitting Python.
 
 Staged compilation strategy (three tiers):
 
@@ -23,7 +32,7 @@ Staged compilation strategy (three tiers):
    single expression is possible, and for leaf ops.
 
 3. **Stream transforms**: the jq sequence monad — `.[]`, `.[a,b]`,
-   `..`, `[...]`/`{...}` with multi-valued parts, zip-paired binary
+   `[...]`/`{...}` with multi-valued parts, zip-paired binary
    operands — as DataFrame ops over
    ``(seq BIGINT, ord ARRAY<BIGINT>, v VARIANT, err STRING)``.
    ``ord`` is the lexicographic burst-position path (replaces the
@@ -58,7 +67,6 @@ ARG1_VALUE_BUILTINS = (
     "has", "in", "ltrimstr", "rtrimstr", "startswith", "endswith",
     "contains", "test", "join", "split", "getpath",
     "error", "index", "rindex", "indices",
-    "delpaths", "strftime", "strptime",
 )
 
 # generator builtins: multi-valued output, stream fan-out only
@@ -68,15 +76,6 @@ GENERATOR_BUILTINS = ("range", "paths", "leaf_paths", "scan", "splits",
 # arity-2 builtins whose arguments are both VALUE expressions
 ARG2_VALUE_BUILTINS = ("sub", "gsub", "pow")
 
-# builtins whose _col_builtin emission contains a pandas UDF: they
-# must never compile through the pure-column/packed lanes, whose
-# results can be spliced inside higher-order-function lambdas (Spark
-# rejects a Python UDF under transform/zip_with at analysis:
-# UNSUPPORTED_FEATURE.LAMBDA_FUNCTION_WITH_PYTHON_UDF). Stream/direct
-# staging keeps their emission at projection top level. (`del` is
-# handled separately: only int-segment paths emit the UDF.)
-UDF_EMITTING_BUILTINS = ("setpath", "delpaths", "strftime", "strptime")
-
 # higher-order builtins: a lambda body or a variant comparator applied
 # per element. They have no staged lane: compile_query runs every
 # program containing one on the interp tier, whatever the tier pin.
@@ -85,12 +84,89 @@ HOF_BUILTINS = frozenset((
     "sort_by", "unique_by", "group_by", "min_by", "max_by",
 ))
 
+# builtins that need unbounded recursion or iteration (flatten,
+# dynamic setpath/delpaths, until/while/repeat, paths/leaf_paths) or
+# Python's regex/time libraries (match, strftime/strptime): no
+# Catalyst expression computes them, so they have no staged lane
+# either. (A literal all-string setpath path is parsed to a native
+# Assign and never reaches this set.)
+PY_BUILTINS = frozenset((
+    "flatten", "setpath", "delpaths", "strftime", "strptime", "match",
+    "until", "while", "repeat", "paths", "leaf_paths",
+))
 
-def _no_staged_lane(name: str) -> RuntimeError:
-    return RuntimeError(
-        f"{name}: higher-order builtins have no staged lane "
-        "(compile_query runs such programs on the interp tier)"
-    )
+
+def _unstaged_here(node: ast.Node) -> str | None:
+    """The construct at THIS node that has no staged lane, if any."""
+    if isinstance(node, ast.Recurse):
+        return ".."
+    if isinstance(node, ast.Builtin):
+        if node.name in HOF_BUILTINS or node.name in PY_BUILTINS:
+            return node.name
+        if node.name == "del":
+            from bd_spark.jsonq.parser import static_path
+
+            segs = static_path(node.args[0])
+            if segs and any(not isinstance(s, str) for s in segs):
+                return "del"
+    if isinstance(node, ast.Binary) and node.op == "*" and not (
+        _never_object(node.left) or _never_object(node.right)
+    ):
+        return "*"
+    # the staged folds render row-local generator sources with
+    # single-valued init/update only
+    if isinstance(node, ast.Reduce) and _col_reduce(node) is None:
+        return "reduce"
+    if isinstance(node, ast.Foreach) and _foreach_entries_col(node) is None:
+        return "foreach"
+    return None
+
+
+def _never_object(node: ast.Node) -> bool:
+    """True when `node` provably never yields an object on the staged
+    tier: its static kind is not object (_static_kind), or it is an
+    operator other than `+` and `//` (arithmetic, bitwise and
+    comparison results are numbers, strings, arrays, booleans or null;
+    a `*` that could deep-merge objects has no staged lane)."""
+    if isinstance(node, ast.Pipe):
+        return _never_object(node.right)
+    if isinstance(node, ast.Try):
+        return _never_object(node.expr)
+    if isinstance(node, ast.Binary):
+        return node.op not in ("+", "//")
+    return _kind_not_object(_static_kind(node))
+
+
+def _unstaged_construct(node: object) -> str | None:
+    """The first construct in the program with no staged lane (see
+    the module docstring), or None when the staged tier can run it.
+    Children are checked before their parent, so _unstaged_here never
+    asks the staged compiler about a subtree it would refuse."""
+    import dataclasses
+
+    if dataclasses.is_dataclass(node):
+        children = (getattr(node, f.name) for f in dataclasses.fields(node))
+    elif isinstance(node, tuple):
+        children = iter(node)
+    else:
+        return None
+    for child in children:
+        found = _unstaged_construct(child)
+        if found is not None:
+            return found
+    return _unstaged_here(node) if isinstance(node, ast.Node) else None
+
+
+def _refuse_unstaged(node: ast.Node) -> None:
+    """Raise when a node with no staged lane reaches the staged
+    compiler (compile_query never sends one)."""
+    name = _unstaged_here(node)
+    if name is not None:
+        raise RuntimeError(
+            f"{name}: no staged lane (compile_query runs such programs "
+            "on the interp tier)"
+        )
+
 
 _ids = itertools.count()
 
@@ -222,6 +298,7 @@ def is_multivalued(node: ast.Node) -> bool:
 def compile_col(node: ast.Node) -> ColFn | None:
     """Pure-expression compile; None when stream machinery is needed.
     Used for leaf ops and inside higher-order-function lambdas."""
+    _refuse_unstaged(node)
     if isinstance(node, ast.Identity):
         return lambda v: CV(v)
     if isinstance(node, ast.Literal):
@@ -284,19 +361,12 @@ def compile_col(node: ast.Node) -> ColFn | None:
 
         return run_if
     if isinstance(node, ast.Builtin):
-        if node.name in HOF_BUILTINS:
-            raise _no_staged_lane(node.name)
         if node.name == "select":
             argfn = compile_col(node.args[0])
             if argfn is None:
                 return None
             return lambda v: _select_cv(v, argfn(v))
         if node.name == "del":
-            from bd_spark.jsonq.parser import static_path
-
-            segs = static_path(node.args[0])
-            if segs and any(not isinstance(s, str) for s in segs):
-                return None  # int segments emit the del-path pandas UDF
             return _compile_del(node)
         if node.name == "getpath" and len(node.args) == 1:
             # static-path fast lane (r6 VERDICT wrong #1): a literal
@@ -311,12 +381,8 @@ def compile_col(node: ast.Node) -> ColFn | None:
                 return lambda v: _col_getpath_static(v, segs)
         if node.name in GENERATOR_BUILTINS:
             return None  # generators need stream fan-out
-        if node.name in UDF_EMITTING_BUILTINS:
-            return None  # pandas UDF — illegal inside HOF lambdas
         if node.name == "capture":
             return _compile_capture(node)
-        if node.name == "until":
-            return _compile_until(node)
         argfns = [compile_col(a) for a in node.args]
         if any(f is None for f in argfns):
             return None
@@ -585,108 +651,6 @@ def _compile_assign(node: ast.Assign) -> ColFn | None:
     return fn
 
 
-_DELPATH_UDF = None
-_MATCH_UDF = None
-
-
-def _iterate_udf(kind: str, a0: ast.Node, a1: ast.Node | None):
-    """until/while/repeat: per-row interp iteration, Arrow-batched —
-    an unbounded data-dependent loop has no Catalyst expression form,
-    so the sub-ASTs ship into the UDF and interp.run_* evaluates them
-    per row (capped; see interp._ITER_CAP).  until returns one value;
-    while/repeat return a JSON array of the output burst (repeat is
-    bounded by the pushed-down limit count column)."""
-
-    def it(docs, extra=None):
-        import json as js
-
-        import pandas as pd
-
-        from bd_spark.jsonq import interp
-
-        outs_j: list[str] = []
-        outs_e: list[str | None] = []
-        rows = zip(docs, extra) if extra is not None else ((d, None) for d in docs)
-        for d, n in rows:
-            x = js.loads(d)
-            if kind == "until":
-                val, err = interp.run_until(a0, a1, x)
-            elif kind == "while":
-                val, err = interp.run_while(a0, a1, x)
-            else:  # repeat, bounded by n
-                val, err = interp.run_repeat(a0, x, int(n or 0))
-            outs_j.append(
-                js.dumps(val, separators=(",", ":"), sort_keys=True)
-            )
-            outs_e.append(err)
-        return pd.DataFrame({"j": outs_j, "e": outs_e})
-
-    if kind == "repeat":
-        return F.pandas_udf(
-            lambda docs, ns: it(docs, ns),
-            "j string, e string",
-            F.PandasUDFType.SCALAR,
-        )
-    return F.pandas_udf(
-        lambda docs: it(docs), "j string, e string", F.PandasUDFType.SCALAR
-    )
-
-
-def _compile_until(node: ast.Builtin) -> ColFn:
-    udf = _iterate_udf("until", node.args[0], node.args[1])
-
-    def fn(v: Column) -> CV:
-        out = udf(V.vjson(v))
-        return CV(
-            F.parse_json(out["j"]),
-            F.when(out["e"].isNotNull(), out["e"]),
-        )
-
-    return fn
-
-
-def _match_udf():
-    """jq `match` via the shared interp.regex_match_objects (Arrow-
-    batched; offsets/captures of an arbitrary dynamic regex are not
-    expressible as Catalyst expressions)."""
-    global _MATCH_UDF
-    if _MATCH_UDF is None:
-
-        def mt(ss, ps, gs):
-            import json as js
-            import re
-
-            import pandas as pd
-
-            from bd_spark.jsonq.interp import regex_match_objects
-
-            outs_j: list[str] = []
-            outs_e: list[str | None] = []
-            for s, p, g in zip(ss, ps, gs):
-                if s is None or p is None:
-                    outs_j.append("[]")
-                    outs_e.append(None)
-                    continue
-                try:
-                    outs_j.append(
-                        js.dumps(
-                            regex_match_objects(s, p, bool(g)),
-                            separators=(",", ":"),
-                            sort_keys=True,
-                        )
-                    )
-                    outs_e.append(None)
-                except re.error as ex:
-                    outs_j.append("[]")
-                    outs_e.append(f"match: {ex}")
-            return pd.DataFrame({"j": outs_j, "e": outs_e})
-
-        _MATCH_UDF = F.pandas_udf(
-            mt, "j string, e string", F.PandasUDFType.SCALAR
-        )
-    return _MATCH_UDF
-
-
 def _compile_del(node: ast.Builtin) -> ColFn:
     from bd_spark.jsonq.parser import static_path
 
@@ -695,53 +659,7 @@ def _compile_del(node: ast.Builtin) -> ColFn:
         raise NotImplementedError(
             "del requires a static path (del(.a.b), del(.a[1]))"
         )
-    if any(not isinstance(s, str) for s in segs):
-        # int segments: per-row surgery via the shared interp
-        # del_path walker (Arrow-batched, like setpath) — Catalyst
-        # can't splice arrays at arbitrary static depth without the
-        # whole _set_json machinery growing an array dialect
-        global _DELPATH_UDF
-        if _DELPATH_UDF is None:
-
-            def delp(docs, paths):
-                import json as js
-
-                import pandas as pd
-
-                from bd_spark.jsonq.interp import del_path
-
-                outs_j: list[str] = []
-                outs_e: list[str | None] = []
-                for d, pth in zip(docs, paths):
-                    try:
-                        res = del_path(js.loads(d), js.loads(pth))
-                        outs_j.append(
-                            js.dumps(
-                                res, separators=(",", ":"), sort_keys=True
-                            )
-                        )
-                        outs_e.append(None)
-                    except ValueError as ex:
-                        outs_j.append("null")
-                        outs_e.append(str(ex))
-                return pd.DataFrame({"j": outs_j, "e": outs_e})
-
-            _DELPATH_UDF = F.pandas_udf(
-                delp, "j string, e string", F.PandasUDFType.SCALAR
-            )
-
-        import json as _js
-
-        plit = F.lit(_js.dumps(list(segs)))
-
-        def fn_int(v: Column) -> CV:
-            out = _DELPATH_UDF(V.vjson(v), plit)
-            return CV(
-                F.parse_json(out["j"]),
-                F.when(out["e"].isNotNull(), out["e"]),
-            )
-
-        return fn_int
+    # all-string: an int segment has no staged lane (_unstaged_here)
 
     def fn(v: Column) -> CV:
         return _guarded(
@@ -811,11 +729,10 @@ _KIND_BOOL_BUILTINS = (
 
 def _static_kind(node: ast.Node) -> str | None:
     """Value kind of `node` when statically knowable, else None.
-    Lets _binary_value prune overload branches — pruning the `*`
-    deep-merge branch matters doubly, because that branch carries a
-    Python UDF which Catalyst rejects inside lambda functions (so
-    `map(.x * 2)` only compiles natively when the literal `2` proves
-    the object/object branch dead)."""
+    Lets _binary_value prune overload branches, and (through
+    _never_object) decides whether a `*` has a staged lane: only when
+    one operand is provably not an object is the object/object deep
+    merge dead."""
     if isinstance(node, ast.Literal):
         t = node.text.lstrip()
         if not t:
@@ -890,8 +807,8 @@ def _kind_not_object(k: str | None) -> bool:
 # cached JVM lambda over a struct<a,b> binding (vexpr._cached_transform
 # — r10, extending the r9 vtype/vjson technique to the binop dispatch
 # trees per the r9 VERDICT ask). Excluded:
-# - "*": its object/object branch is a Python UDF (deep merge), which
-#   Catalyst rejects inside lambda functions;
+# - "*": not probed as a cached lambda (its deep-merge branch was a
+#   Python UDF when this set was measured);
 # - "-": its array-diff filter lambdas reference the OUTER binding in
 #   conditionals — the exact shape that silently defeats
 #   ExtractPythonUDFs when the result later feeds a Python UDF arg
@@ -1013,8 +930,9 @@ def _binary_value_inline(
             .otherwise(V.vnull())
         )
     if op == "*":
-        # str*int repeat, *<=0 -> null (json.rs:906-907); obj*obj deep
-        # merge (json.rs:1103-1122) via pandas UDF (unbounded recursion)
+        # str*int repeat, *<=0 -> null (json.rs:906-907); the obj*obj
+        # deep merge (json.rs:1103-1122) is unbounded recursion, so a
+        # staged `*` has one operand proven not an object (_never_object)
         return (
             F.when(
                 bothint, _int_arith(F.try_multiply(la, lb), F.try_multiply(deca, decb))
@@ -1027,16 +945,6 @@ def _binary_value_inline(
             .when(
                 (ta == "int") & (tb == "string") & (la > 0),
                 V.vstring(F.repeat(V.as_string(b), la.cast("int"))),
-            )
-            .when(
-                (ta == "object") & (tb == "object"),
-                # statically-dead object/object branch is PRUNED, not
-                # just unreachable: the deep-merge Python UDF would
-                # otherwise make the whole expression illegal inside
-                # lambda functions (map/transform bodies)
-                V.vnull()
-                if _kind_not_object(lk) or _kind_not_object(rk)
-                else _obj_deep_merge(a, b),
             )
             .otherwise(V.vnull())
         )
@@ -1096,84 +1004,6 @@ def _obj_union(a: Column, b: Column) -> Column:
     """Shallow union, rhs wins — map_concat under LAST_WIN policy,
     assembled natively (r6: no per-entry to_json/parse_json)."""
     return F.to_variant_object(F.map_concat(V.as_map(a), V.as_map(b)))
-
-
-_DEEP_MERGE_UDF = None
-
-
-def _obj_deep_merge(a: Column, b: Column) -> Column:
-    """Recursive object mixin (json.rs:1103-1122): depth-unbounded
-    recursion is inexpressible in Catalyst -> Arrow-batched pandas UDF
-    over canonical JSON text."""
-    global _DEEP_MERGE_UDF
-    if _DEEP_MERGE_UDF is None:
-
-        def deep_merge(xs, ys):
-            import json
-
-            import pandas as pd
-
-            def merge(x, y):
-                if isinstance(x, dict) and isinstance(y, dict):
-                    out = dict(x)
-                    for k, yv in y.items():
-                        out[k] = merge(out.get(k), yv) if k in out else yv
-                    return out
-                return y
-
-            return pd.Series(
-                [
-                    json.dumps(merge(json.loads(x), json.loads(y)), ensure_ascii=False)
-                    if x is not None and y is not None
-                    else None
-                    for x, y in zip(xs, ys)
-                ]
-            )
-
-        _DEEP_MERGE_UDF = F.pandas_udf(deep_merge, "string", F.PandasUDFType.SCALAR)
-    return F.parse_json(_DEEP_MERGE_UDF(F.to_json(a), F.to_json(b)))
-
-
-_FLATTEN_UDF = None
-
-
-def _flatten_value(v: Column) -> Column:
-    """jq ``flatten``: recursively splice nested arrays (objects are
-    left intact).  Depth-unbounded recursion is inexpressible in
-    Catalyst -> Arrow-batched pandas UDF over canonical JSON text,
-    the same pattern as _obj_deep_merge.  Returns NULL (caller maps
-    to a type error) for non-array input."""
-    global _FLATTEN_UDF
-    if _FLATTEN_UDF is None:
-
-        def flat(xs):
-            import json
-
-            import pandas as pd
-
-            def go(x, out):
-                for e in x:
-                    if isinstance(e, list):
-                        go(e, out)
-                    else:
-                        out.append(e)
-                return out
-
-            res = []
-            for x in xs:
-                if x is None:
-                    res.append(None)
-                    continue
-                val = json.loads(x)
-                res.append(
-                    json.dumps(go(val, []), ensure_ascii=False)
-                    if isinstance(val, list)
-                    else None
-                )
-            return pd.Series(res, dtype="object")
-
-        _FLATTEN_UDF = F.pandas_udf(flat, "string", F.PandasUDFType.SCALAR)
-    return _FLATTEN_UDF(F.to_json(v))
 
 
 def _col_getpath_static(v: Column, segs: tuple[str, ...]) -> CV:
@@ -1269,405 +1099,6 @@ def _col_getpath(v: Column, p: CV) -> CV:
     return CV(F.when(err.isNotNull(), V.vnull()).otherwise(res["a"]), err)
 
 
-_SETPATH_UDF = None
-
-
-def _col_setpath(v: Column, p: CV, nv: CV) -> CV:
-    """`setpath(p; val)` — per-row document surgery via the shared
-    interp.set_path (Arrow-batched, like patch / deep-merge): the
-    rebuild walks an arbitrary dynamic path, which Catalyst
-    expressions cannot express for unbounded depth."""
-    global _SETPATH_UDF
-    if _SETPATH_UDF is None:
-
-        def setp(docs, paths, vals):
-            import json as js
-
-            import pandas as pd
-
-            from bd_spark.jsonq.interp import _tname, set_path
-
-            outs_j: list[str] = []
-            outs_e: list[str | None] = []
-            for d, pth, val in zip(docs, paths, vals):
-                try:
-                    pv = js.loads(pth)
-                    if not isinstance(pv, list):
-                        raise ValueError(
-                            f"setpath arg must be array, got {_tname(pv)}"
-                        )
-                    res = set_path(js.loads(d), pv, js.loads(val))
-                    outs_j.append(
-                        js.dumps(res, separators=(",", ":"), sort_keys=True)
-                    )
-                    outs_e.append(None)
-                except ValueError as ex:
-                    outs_j.append("null")
-                    outs_e.append(str(ex))
-            return pd.DataFrame({"j": outs_j, "e": outs_e})
-
-        _SETPATH_UDF = F.pandas_udf(
-            setp, "j string, e string", F.PandasUDFType.SCALAR
-        )
-    r = _SETPATH_UDF(V.vjson(v), V.vjson(p.v), V.vjson(nv.v))
-    err = _merge_err(
-        _merge_err(p.err, nv.err), F.when(r["e"].isNotNull(), r["e"])
-    )
-    return CV(
-        F.when(err.isNotNull(), V.vnull()).otherwise(F.parse_json(r["j"])), err
-    )
-
-
-_DELPATHS_UDF = None
-
-
-def _col_delpaths(v: Column, ps: CV) -> CV:
-    """`delpaths(ps)` — multi-path delete via the shared
-    interp.del_path walker (Arrow-batched, like setpath): paths are
-    deleted in reverse canonical order so earlier deletions cannot
-    shift later targets. Same emission pattern as _col_setpath."""
-    global _DELPATHS_UDF
-    if _DELPATHS_UDF is None:
-
-        def delps(docs, pss):
-            import json as js
-
-            import pandas as pd
-
-            from bd_spark.jsonq.interp import (
-                _order_key, _tname, del_path,
-            )
-
-            outs_j: list[str] = []
-            outs_e: list[str | None] = []
-            for d, pvj in zip(docs, pss):
-                try:
-                    pv = js.loads(pvj)
-                    if not isinstance(pv, list) or any(
-                        not isinstance(p, list) for p in pv
-                    ):
-                        raise ValueError(
-                            "delpaths arg must be array of paths,"
-                            f" got {_tname(pv)}"
-                        )
-                    cur = js.loads(d)
-                    for p in sorted(
-                        pv,
-                        key=lambda p: [_order_key(x) for x in p],
-                        reverse=True,
-                    ):
-                        cur = None if not p else del_path(cur, p)
-                    outs_j.append(
-                        js.dumps(
-                            cur, separators=(",", ":"), sort_keys=True
-                        )
-                    )
-                    outs_e.append(None)
-                except ValueError as ex:
-                    outs_j.append("null")
-                    outs_e.append(str(ex))
-            return pd.DataFrame({"j": outs_j, "e": outs_e})
-
-        _DELPATHS_UDF = F.pandas_udf(
-            delps, "j string, e string", F.PandasUDFType.SCALAR
-        )
-    r = _DELPATHS_UDF(V.vjson(v), V.vjson(ps.v))
-    err = _merge_err(ps.err, F.when(r["e"].isNotNull(), r["e"]))
-    return CV(
-        F.when(err.isNotNull(), V.vnull()).otherwise(F.parse_json(r["j"])),
-        err,
-    )
-
-
-_STRFTIME_UDF = None
-_STRPTIME_UDF = None
-
-
-def _col_strf(name: str, v: Column, fmt: CV) -> CV:
-    """`strftime(fmt)` / `strptime(fmt)` — CPython's C-dialect
-    strftime/strptime on Arrow batches (interp.strftime_jq /
-    strptime_jq are the single shared implementations, so both
-    engine tiers format identically). Arbitrary format strings rule
-    out a static Catalyst translation; the per-row payload is one
-    scalar, so the Arrow round-trip is cheap."""
-    global _STRFTIME_UDF, _STRPTIME_UDF
-    if _STRFTIME_UDF is None:
-
-        def _mk(fn_name):
-            def run(vals, fmts):
-                import json as js
-
-                import pandas as pd
-
-                from bd_spark.jsonq import interp as it
-
-                fn = (
-                    it.strftime_jq if fn_name == "strftime"
-                    else it.strptime_jq
-                )
-                outs_j: list[str] = []
-                outs_e: list[str | None] = []
-                for val, fm in zip(vals, fmts):
-                    try:
-                        fv = js.loads(fm)
-                        if not isinstance(fv, str):
-                            raise ValueError(
-                                f"{fn_name} format must be string,"
-                                f" got {it._tname(fv)}"
-                            )
-                        res = fn(js.loads(val), fv)
-                        outs_j.append(
-                            js.dumps(
-                                res,
-                                separators=(",", ":"),
-                                sort_keys=True,
-                            )
-                        )
-                        outs_e.append(None)
-                    except ValueError as ex:
-                        outs_j.append("null")
-                        outs_e.append(str(ex))
-                return pd.DataFrame({"j": outs_j, "e": outs_e})
-
-            return F.pandas_udf(
-                run, "j string, e string", F.PandasUDFType.SCALAR
-            )
-
-        _STRFTIME_UDF = _mk("strftime")
-        _STRPTIME_UDF = _mk("strptime")
-    udf = _STRFTIME_UDF if name == "strftime" else _STRPTIME_UDF
-    r = udf(V.vjson(v), V.vjson(fmt.v))
-    err = _merge_err(fmt.err, F.when(r["e"].isNotNull(), r["e"]))
-    return CV(
-        F.when(err.isNotNull(), V.vnull()).otherwise(F.parse_json(r["j"])),
-        err,
-    )
-
-
-_PATHS_UDF = {}
-
-
-_PATHS_UDF_FLAGGED = None
-
-
-def _paths_udf_flagged():
-    """Arrow UDF yielding (path-JSON, is_container) structs for every
-    path below the root (interp.all_paths_flagged): ONE walk serves
-    BOTH `paths` and `leaf_paths` in the fused deep-row branch."""
-    global _PATHS_UDF_FLAGGED
-    if _PATHS_UDF_FLAGGED is None:
-
-        def pf(col):
-            import json as js
-
-            import pandas as pd
-
-            from bd_spark.jsonq.interp import all_paths_flagged
-
-            return pd.Series(
-                [
-                    []
-                    if txt is None
-                    else [
-                        (js.dumps(p, separators=(",", ":")), c)
-                        for p, c in all_paths_flagged(js.loads(txt))
-                    ]
-                    for txt in col
-                ]
-            )
-
-        _PATHS_UDF_FLAGGED = F.pandas_udf(
-            pf,
-            "array<struct<j: string, c: boolean>>",
-            F.PandasUDFType.SCALAR,
-        )
-    return _PATHS_UDF_FLAGGED
-
-
-def _paths_udf(leaf_only: bool):
-    """Arrow UDF yielding every path (as JSON-array text) below the
-    root via the shared interp.all_paths — sorted-object-key document
-    order, matching `.[]` / `..`."""
-    if leaf_only not in _PATHS_UDF:
-
-        def pl(col):
-            import json as js
-
-            import pandas as pd
-
-            from bd_spark.jsonq.interp import all_paths
-
-            # NULL input marks a row the caller proved shallow (the
-            # null-gated row-local lane): return an empty burst
-            # without parsing — the Arrow transfer for such rows is
-            # one null, not the document
-            return pd.Series(
-                [
-                    []
-                    if txt is None
-                    else [
-                        js.dumps(p, separators=(",", ":"))
-                        for p in all_paths(js.loads(txt), leaf_only)
-                    ]
-                    for txt in col
-                ]
-            )
-
-        _PATHS_UDF[leaf_only] = F.pandas_udf(
-            pl, "array<string>", F.PandasUDFType.SCALAR
-        )
-    return _PATHS_UDF[leaf_only]
-
-
-def _paths_entries(v: Column, depth: int) -> Column:
-    """Pre-order path entries of ``v`` unrolled to ``depth`` levels:
-    ``array<struct<p: array<variant>, c: boolean, dp: boolean>>`` —
-    `c` marks container values (excluded from leaf_paths), `dp` marks
-    a container AT the depth cap (the row may nest deeper and needs
-    the Arrow fallback; an EMPTY cap-level container over-triggers it,
-    which is correct, just slower). ONE enumeration feeds paths +
-    leaf_paths + the needs flag.
-
-    Dispatch is CAST-based: as_map/as_array try-casts are O(1) header
-    checks, where the r7 lane's vtype() per node paid
-    schema_of_variant — which serializes the SUBTREE's schema — plus
-    a 7-way CASE with an RLIKE, per node per reference (the dominant
-    interpreted-mode cost; HOF trees never enter codegen)."""
-
-    def kids(p: Column, x: Column) -> Column:
-        """array<struct<p, x>> — children with extended paths, doc
-        order (as_map is key-sorted). Path elements box via vstring/
-        vlong (to_variant_object rejects scalars); paths are <= depth
-        elements, so the per-element parse_json is bounded."""
-        obj_kids = F.transform(
-            F.map_entries(V.as_map(x)),
-            lambda e: F.struct(
-                F.concat(p, F.array(V.vstring(e["key"]))).alias("p"),
-                e["value"].alias("x"),
-            ),
-        )
-        arr_kids = F.transform(
-            V.as_array(x),
-            lambda c, i: F.struct(
-                F.concat(p, F.array(V.vlong(i.cast("long")))).alias("p"),
-                c.alias("x"),
-            ),
-        )
-        # scalars: BOTH casts are SQL NULL -> coalesce to the empty
-        # literal of the right struct type (never filter over a NULL)
-        none = F.filter(
-            F.array(
-                F.struct(_empty_varr().alias("p"), V.vnull().alias("x"))
-            ),
-            lambda _k: F.lit(False),
-        )
-        return F.coalesce(obj_kids, arr_kids, none)
-
-    def is_c(x: Column) -> Column:
-        return V.as_map(x).isNotNull() | V.as_array(x).isNotNull()
-
-    none_e = F.filter(
-        F.array(
-            F.struct(
-                _empty_varr().alias("p"),
-                F.lit(False).alias("c"),
-                F.lit(False).alias("dp"),
-            )
-        ),
-        lambda _e: F.lit(False),
-    )
-
-    def emit(p: Column, x: Column, d: int) -> Column:
-        if d == 0:
-            return none_e
-        return F.flatten(
-            F.transform(
-                kids(p, x),
-                lambda kid: F.concat(
-                    F.array(
-                        F.struct(
-                            kid["p"].alias("p"),
-                            is_c(kid["x"]).alias("c"),
-                            (
-                                is_c(kid["x"]) if d == 1 else F.lit(False)
-                            ).alias("dp"),
-                        )
-                    ),
-                    emit(kid["p"], kid["x"], d - 1),
-                ),
-            )
-        )
-
-    return emit(_empty_varr(), v, depth)
-
-
-def _paths_native_from(ents: Column, leaf_only: bool) -> tuple[Column, Column]:
-    """(paths as ARRAY<VARIANT>, needs_py flag) derived from ONE
-    _paths_entries enumeration — pass a staged COLUMN REFERENCE so
-    the enumeration tree appears once in the plan (r10: the old shape
-    re-built the whole depth-unrolled tree for `needs`, doubling
-    plan-build round-trips, analysis, and codegen)."""
-    sel = F.filter(ents, lambda s: ~s["c"]) if leaf_only else ents
-    paths_arr = F.transform(sel, lambda s: F.to_variant_object(s["p"]))
-    needs = F.exists(ents, lambda s: s["dp"])
-    return paths_arr, needs
-
-
-def _stream_paths(leaf_only: bool) -> StreamFn:
-    """`paths` / `leaf_paths` as a stream generator. r7: docs nested
-    <= _RECURSE_NATIVE_DEPTH enumerate paths ALL-JVM; only provably
-    deeper rows take the Arrow UDF (persist + count probe — the
-    canonical-sink pattern, shared cache slot with `..`)."""
-    udf = _paths_udf(leaf_only)
-
-    def run(df: DataFrame) -> DataFrame:
-        # DataFrame-level let: stage the enumeration ONCE as a real
-        # column, derive nat + needs from the reference (CollapseProject
-        # keeps non-cheap multiply-referenced aliases separate, so the
-        # big tree is analyzed/codegen'd once, not per consumer)
-        ec = _fresh("pse")
-
-        def mk_flagged() -> DataFrame:
-            staged = df.withColumn(
-                ec, _paths_entries(F.col("v"), _RECURSE_NATIVE_DEPTH)
-            )
-            nat, needs = _paths_native_from(F.col(ec), leaf_only)
-            return staged.withColumns({
-                "__pnat": F.when(
-                    F.col("err").isNotNull(), _empty_varr()
-                ).otherwise(nat),
-                "__ppy": (F.col("err").isNull() & needs)
-                | (F.monotonically_increasing_id() < F.lit(0)),
-            })
-
-        flagged = _probe_persist(mk_flagged())
-        n_deep = flagged.where("__ppy").count()
-
-        def emit(src: DataFrame, burst: Column) -> DataFrame:
-            # _fanout passes err rows through and drops empty bursts;
-            # the probe columns ride its carries — dropped after
-            entries = F.transform(burst, lambda x: _entry(x, _null_str()))
-            return _fanout(src, entries).drop("__pnat", "__ppy", ec)
-
-        fast = emit(flagged.where(~F.col("__ppy")), F.col("__pnat"))
-        if n_deep == 0:
-            # single consumer: drop the probe cache now so later
-            # executions plan WITHOUT the InMemoryRelation (cache
-            # lookup happens at action planning time, so the already-
-            # built `fast` re-plans cache-free — see _probe_release)
-            _probe_release(flagged)
-            return fast
-        slow = emit(
-            flagged.where(F.col("__ppy")),
-            F.transform(
-                udf(V.vjson(F.col("v"))), lambda s: F.parse_json(s)
-            ),
-        )
-        return fast.unionByName(slow)
-
-    return run
-
-
 def _named_groups(pat: str) -> list[tuple[str, int]]:
     """(name, java-group-number) pairs for named groups in a Java
     regex, in source order. All capturing groups — plain `(` and
@@ -1752,12 +1183,6 @@ def _col_builtin(name: str, v: Column, args: list[CV]) -> CV:
     (ops.rs:1418-1713)."""
     if name == "getpath":
         return _col_getpath(v, args[0])
-    if name == "setpath":
-        return _col_setpath(v, args[0], args[1])
-    if name == "delpaths":
-        return _col_delpaths(v, args[0])
-    if name in ("strftime", "strptime"):
-        return _col_strf(name, v, args[0])
     if name == "length":
         t = V.vtype(v)
         out = (
@@ -2452,13 +1877,6 @@ def _col_builtin(name: str, v: Column, args: list[CV]) -> CV:
             ok, parsed, F.concat(F.lit("fromjson on "), t), False
         )
 
-    if name == "flatten":
-        t = V.vtype(v)
-        return _guarded(
-            t == "array", F.parse_json(_flatten_value(v)),
-            F.concat(F.lit("flatten on "), t), False,
-        )
-
     if name == "to_entries":
         t = V.vtype(v)
         arr_json = F.concat(
@@ -2798,19 +2216,15 @@ def _entries_colfn(node: ast.Node):
 
 def _has_heavy_gen(node: ast.Node) -> bool:
     """True when the subtree contains a generator whose burst
-    expression is HEAVY — a paths/leaf_paths enumeration (depth
-    unroll + Arrow fallback UDF) or a foreach fold. Splicing those
-    inline duplicates the heavy tree once per reference (HOF trees
-    never enter codegen, so every copy re-evaluates interpreted, and
-    every UDF copy is its own ArrowEvalPython stage); stream-level
+    expression is HEAVY — a foreach fold. Splicing it inline
+    duplicates the fold once per reference (HOF trees never enter
+    codegen, so every copy re-evaluates interpreted); stream-level
     staging binds the burst to a real column first — CollapseProject
     keeps non-cheap multi-referenced producers materialized."""
     stack: list[ast.Node] = [node]
     while stack:
         n = stack.pop()
         if isinstance(n, ast.Foreach):
-            return True
-        if isinstance(n, ast.Builtin) and n.name in ("paths", "leaf_paths"):
             return True
         for f in getattr(n, "__dataclass_fields__", {}):
             v = getattr(n, f)
@@ -2828,8 +2242,9 @@ def _has_heavy_gen(node: ast.Node) -> bool:
 def _elems_colfn(node: ast.Node) -> ColFn | None:
     """Compile a generator expression to its output burst as ONE
     ARRAY<VARIANT> column (for folds). Supported: `.path.[]`,
-    `.[a,b]`, `range(n)`, `paths`/`leaf_paths`, `foreach`, scalar
+    `.[a,b]`, `range(n)`, `scan`/`splits`, `limit`, `foreach`, scalar
     pipes into those, and generator|scalar pipes (the r8 splice)."""
+    _refuse_unstaged(node)
     if isinstance(node, ast.IterValues):
         opt = node.opt
 
@@ -2878,22 +2293,10 @@ def _elems_colfn(node: ast.Node) -> ColFn | None:
     if isinstance(node, ast.Pipe):
         if is_multivalued(node.left):
             # GENERATOR | scalar-op splices row-locally: map the
-            # burst through the packed right side in ONE projection.
-            # r7 tried and reverted this because the leaf_paths
-            # generator ran its Arrow stage once per duplicated
-            # reference (10 s -> 16-26 s); r8 re-lands it now that
-            # the paths burst is native with a null-gated UDF
-            # fallback (a duplicated Arrow stage transfers nulls for
-            # shallow rows) and the burst is let-bound so the
-            # generator tree appears at most twice in the output CV.
+            # burst through the packed right side in ONE projection;
+            # the burst is let-bound so the generator tree appears at
+            # most twice in the output CV.
             if is_multivalued(node.right):
-                return None
-            if _contains_paths(node.right):
-                # mirrors the scalar-left guard below: a paths-bearing
-                # right side embeds the Arrow UDF inside fn_genpipe's
-                # F.transform lambda (UNSUPPORTED_FEATURE.
-                # LAMBDA_FUNCTION_WITH_PYTHON_UDF) — route back
-                # through the stream tier
                 return None
             lef = _elems_colfn(node.left)
             rpf = compile_packed(node.right) if lef is not None else None
@@ -2944,12 +2347,6 @@ def _elems_colfn(node: ast.Node) -> ColFn | None:
                 )
 
             return fn_genpipe
-        if _contains_paths(node.right):
-            # scalar | paths would place the paths UDF inside the
-            # let-binding lambda (UNSUPPORTED_FEATURE.LAMBDA_FUNCTION
-            # _WITH_PYTHON_UDF) — route through the stream tier,
-            # whose _stream_paths keeps the UDF in a plain projection
-            return None
         lpf = compile_packed(node.left)
         inner = _elems_colfn(node.right)
         if lpf is None or inner is None:
@@ -2979,23 +2376,6 @@ def _elems_colfn(node: ast.Node) -> ColFn | None:
             return CV(out["xs"], F.when(out["e"].isNotNull(), out["e"]))
 
         return fn_pipe
-    if isinstance(node, ast.Builtin) and node.name in ("paths", "leaf_paths"):
-        udf = _paths_udf(node.name == "leaf_paths")
-
-        def fn_paths(v: Column) -> CV:
-            # Pure-UDF burst (r7 form). The native bounded-depth lane
-            # is DataFrame-level only (_stage_burst's filter-union):
-            # row-local code would have to gate the UDF behind
-            # F.when(needs, ...), and ExtractPythonUDFs cannot pull a
-            # Python UDF out of a conditional branch — the plan keeps
-            # the raw PythonUDF and crashes with INTERNAL_ERROR
-            # "Cannot evaluate expression: pl(...)" at eval (r8,
-            # reproduced; first build in a session sometimes extracts
-            # eagerly, later builds don't). UDF as aggregate INPUT is
-            # fine — only lambdas may not contain Python UDFs.
-            return CV(F.transform(udf(V.vjson(v)), F.parse_json))
-
-        return fn_paths
     if isinstance(node, ast.Foreach):
         # row-local foreach burst (r8): the ENTRIES array collapses to
         # the burst-CV contract — a mid-burst error voids the whole
@@ -3056,86 +2436,12 @@ def _elems_colfn(node: ast.Node) -> ColFn | None:
             return CV(arrout, err)
 
         return fn_regex_gen
-    if isinstance(node, ast.Builtin) and node.name == "match":
-        if is_multivalued(node.args[0]):
-            return None
-        patf = compile_col(node.args[0])
-        if patf is None:
-            return None
-        is_global = node.args[1].text == "true"
-        udf = _match_udf()
-
-        def fn_match(v: Column) -> CV:
-            pcv = patf(v)
-            t, tp = V.vtype(v), V.vtype(pcv.v)
-            out = udf(V.as_string(v), V.as_string(pcv.v), F.lit(is_global))
-            ok = (t == "string") & (tp == "string")
-            dropped = (
-                F.coalesce(pcv.drop, F.lit(False))
-                if pcv.drop is not None
-                else F.lit(False)
-            )
-            arr = F.when(
-                ok & ~dropped & out["e"].isNull(),
-                V.as_array(F.parse_json(out["j"])),
-            ).otherwise(_empty_varr())
-            err = _merge_err(
-                _merge_err(pcv.err, F.when(ok, out["e"])),
-                F.when(
-                    ~ok & ~dropped,
-                    F.concat(F.lit("match on "), t, F.lit("/"), tp),
-                ),
-            )
-            return CV(arr, err)
-
-        return fn_match
-    if isinstance(node, ast.Builtin) and node.name == "while":
-        udf = _iterate_udf("while", node.args[0], node.args[1])
-
-        def fn_while(v: Column) -> CV:
-            out = udf(V.vjson(v))
-            arr = F.when(
-                out["e"].isNull(), V.as_array(F.parse_json(out["j"]))
-            ).otherwise(_empty_varr())
-            return CV(arr, F.when(out["e"].isNotNull(), out["e"]))
-
-        return fn_while
     if isinstance(node, ast.Builtin) and node.name == "limit":
         if is_multivalued(node.args[0]):
             return None
         nf = compile_col(node.args[0])
         if nf is None:
             return None
-        if (
-            isinstance(node.args[1], ast.Builtin)
-            and node.args[1].name == "repeat"
-        ):
-            # push the limit count INTO the bounded repeat UDF — a
-            # bare repeat is unbounded and rejected
-            udf = _iterate_udf("repeat", node.args[1].args[0], None)
-
-            def fn_limrep(v: Column) -> CV:
-                ncv = nf(v)
-                tn = V.vtype(ncv.v)
-                ok = tn == "int"
-                out = udf(
-                    V.vjson(v),
-                    F.when(ok, V.as_long(ncv.v)).otherwise(F.lit(0)),
-                )
-                arr = F.when(
-                    ok & out["e"].isNull(),
-                    V.as_array(F.parse_json(out["j"])),
-                ).otherwise(_empty_varr())
-                err = _merge_err(
-                    _merge_err(
-                        ncv.err,
-                        F.when(~ok, F.concat(F.lit("limit count on "), tn)),
-                    ),
-                    F.when(ok, out["e"]),
-                )
-                return CV(arr, err)
-
-            return fn_limrep
         inner = _elems_colfn(node.args[1])
         if inner is None:
             return None
@@ -3306,6 +2612,7 @@ def compile_packed(node: ast.Node) -> PFn | None:  # noqa: PLR0911, PLR0912
     needs stream machinery (multi-valued) or an unported feature.
     Invariant: the returned fn may assume its input is LEAF-cheap and
     must hand leaf-cheap inputs to its children (via _let_p)."""
+    _refuse_unstaged(node)
     if isinstance(node, ast.Identity):
         return lambda p: p
     if isinstance(node, ast.Literal):
@@ -3549,14 +2856,7 @@ def compile_packed(node: ast.Node) -> PFn | None:  # noqa: PLR0911, PLR0912
                 return F.zip_with(F.array(p), F.array(af(p)), inner)[0]
 
             return run_select
-        if name in HOF_BUILTINS:
-            raise _no_staged_lane(name)
         if name == "del":
-            from bd_spark.jsonq.parser import static_path
-
-            segs = static_path(node.args[0])
-            if segs and any(not isinstance(s, str) for s in segs):
-                return None  # int segments emit the del-path pandas UDF
             cf = _compile_del(node)
             return lambda p: _pk_chain(p, cf)
         if name == "getpath" and len(node.args) == 1:
@@ -3571,23 +2871,18 @@ def compile_packed(node: ast.Node) -> PFn | None:  # noqa: PLR0911, PLR0912
                 )
         if name in GENERATOR_BUILTINS:
             return None  # generators
-        if name in UDF_EMITTING_BUILTINS:
-            return None  # pandas UDF — illegal inside HOF lambdas
         if name == "capture":
             try:
                 cf = _compile_capture(node)
             except NotImplementedError:
                 return None
             return lambda p: _pk_chain(p, cf)
-        if name == "until":
-            cf = _compile_until(node)
-            return lambda p: _pk_chain(p, cf)
         if not node.args:
             return lambda p: _pk_chain(
                 p, lambda v: _col_builtin(name, v, [])
             )
         if len(node.args) != 1:
-            return None  # arity-2 (setpath): substitution fallback
+            return None  # arity-2 (sub/gsub/pow): substitution fallback
         if any(is_multivalued(a) for a in node.args):
             return None
         afns = [compile_packed(a) for a in node.args]
@@ -4069,100 +3364,10 @@ def _col_reduce(node: ast.Reduce) -> ColFn | None:
     return fn
 
 
-def _free_vars(node: ast.Node, bound: frozenset = frozenset()) -> set[str]:
-    """Variable names used under `node` that are not bound within it."""
-    if isinstance(node, ast.Var):
-        return set() if node.name in bound else {node.name}
-    if isinstance(node, ast.BindAs):
-        return _free_vars(node.source, bound) | _free_vars(
-            node.body, bound | {node.name}
-        )
-    if isinstance(node, (ast.Reduce, ast.Foreach)):
-        inner = bound | {node.name}
-        return (
-            _free_vars(node.source, bound)
-            | _free_vars(node.init, bound)
-            | _free_vars(node.update, inner)
-        )
-    out: set[str] = set()
-    for f in getattr(node, "__dataclass_fields__", {}):
-        v = getattr(node, f)
-        items = v if isinstance(v, tuple) else (v,)
-        for it in items:
-            if isinstance(it, ast.Node):
-                out |= _free_vars(it, bound)
-            elif isinstance(it, ast.DictPair):
-                out |= _free_vars(it.key, bound) | _free_vars(it.value, bound)
-            elif isinstance(it, tuple):
-                for sub in it:
-                    if isinstance(sub, ast.Node):
-                        out |= _free_vars(sub, bound)
-    return out
-
-
-def _reduce_udf_colfn(node: ast.Reduce) -> ColFn:
-    """Interp-backed fallback for `reduce` whose update expression
-    cannot live inside an F.aggregate lambda (Catalyst rejects any
-    lambda whose type-dispatch tree references a Python UDF — e.g.
-    `*` carries the object-deep-merge branch even for numeric
-    operands). Arrow-batched; the whole fold runs row-locally in the
-    reference interpreter, so semantics match by construction.
-    Caveat (same as the interp CLI path): integral doubles re-enter
-    the int tower through the JSON round-trip."""
-    def red(col):
-        import json as js
-
-        import pandas as pd
-
-        from bd_spark.jsonq import interp as _interp
-
-        outs_j: list[str | None] = []
-        outs_e: list[str | None] = []
-        for txt in col:
-            try:
-                ents = _interp.run(node, js.loads(txt))
-                val, err = ents[0] if ents else (None, "empty reduce")
-                outs_j.append(
-                    js.dumps(val, separators=(",", ":"), sort_keys=True)
-                )
-                outs_e.append(err)
-            except Exception as ex:  # noqa: BLE001 — in-band per row
-                outs_j.append("null")
-                outs_e.append(f"{type(ex).__name__}: {ex}")
-        return pd.DataFrame({"j": outs_j, "e": outs_e})
-
-    udf = F.pandas_udf(red, "j string, e string", F.PandasUDFType.SCALAR)
-
-    def fn(v: Column) -> CV:
-        r = udf(V.vjson(v))
-        return CV(F.parse_json(r["j"]), F.when(r["e"].isNotNull(), r["e"]))
-
-    return fn
-
-
 def _stream_reduce(node: ast.Reduce) -> StreamFn:
-    """Reduce stage: try the native F.aggregate compile (fully
-    codegen-able for scalar folds); when Catalyst rejects the lambda
-    (Python-UDF branch in the update's dispatch tree), fall back to
-    the interp-backed Arrow UDF — only valid when the reduce is
-    self-contained (no free outer $vars, which are Columns the UDF
-    cannot see)."""
-    cf = _col_reduce(node)
-    if cf is None:
-        raise NotImplementedError(
-            "reduce: source must be an iterator (.path.[], .[a,b], "
-            "range(n)) and init/update single-valued scalar expressions"
-        )
-
-    def run(df: DataFrame) -> DataFrame:
-        try:
-            return lift(cf)(df)
-        except Exception:  # noqa: BLE001 — AnalysisException at plan build
-            if _free_vars(node):
-                raise
-            return lift(_reduce_udf_colfn(node))(df)
-
-    return run
+    """Reduce stage: the native F.aggregate compile (fully
+    codegen-able for scalar folds)."""
+    return lift(_col_reduce(node))  # not None: _refuse_unstaged
 
 
 def _entry(x: Column, er: Column) -> Column:
@@ -4207,7 +3412,7 @@ def _fanout(df: DataFrame, entries: Column) -> DataFrame:
     )
 
 
-def _foreach_entries_col(node: ast.Foreach, src_cv: CV | None = None):
+def _foreach_entries_col(node: ast.Foreach):
     """Row-local `foreach` burst builder: value-column -> ENTRIES
     array (the _fanout input shape — emitted states, then one error
     entry if E/I/U errored, matching the interp). None when source/
@@ -4215,20 +3420,13 @@ def _foreach_entries_col(node: ast.Foreach, src_cv: CV | None = None):
     tier (_stream_foreach posexplodes it) and the single-burst dict
     fast path / `[foreach ...]` collects (r8: jq_paths previously
     paid a fan-out + burst-position window for a burst that is a
-    plain projection). ``src_cv`` overrides the source burst with a
-    pre-staged column (DataFrame-level callers stage heavy sources —
-    a paths enumeration — via _stage_burst so the Arrow fallback UDF
-    never sits inside the fold's aggregate input)."""
-    elems = (
-        (lambda _v: src_cv) if src_cv is not None
-        else _elems_colfn(node.source)
-    )
+    plain projection)."""
+    elems = _elems_colfn(node.source)
     inf = None if is_multivalued(node.init) else compile_col(node.init)
     upf = None if is_multivalued(node.update) else compile_packed(node.update)
     if upf is None and not is_multivalued(node.update):
         # fall back to substitution for nodes the packed tier lacks
-        # (e.g. computed dict keys); the interp UDF remains the last
-        # resort via run_guarded
+        # (e.g. computed dict keys)
         cf = compile_col(node.update)
         if cf is not None:
             upf = lambda p: _pk_cv(_chain(_unpk(p), cf))  # noqa: E731
@@ -4303,87 +3501,8 @@ def _stream_foreach(node: ast.Foreach) -> StreamFn:
     posexplode fan-out with `.[]`-style ord bookkeeping emits them as
     a burst. An error in E/I/U yields the states already emitted
     followed by one error entry, matching the interp."""
-    heavy_src = _has_heavy_gen(node.source)
-    entries_fn = _foreach_entries_col(node)
-    if entries_fn is None and _free_vars(node):
-        raise NotImplementedError(
-            "foreach: source must be an iterator (.path.[], .[a,b], "
-            "range(n)) and init/update single-valued scalar expressions"
-        )
-
-    def run(df: DataFrame) -> DataFrame:
-        if heavy_src:
-            # stage a heavy source burst (paths enumeration) via the
-            # filter-union so its Arrow fallback UDF never sits
-            # inside the fold's aggregate input
-            sb = _stage_burst(df, node.source)
-            if sb is not None:
-                df, n, en, owned = sb
-                fe = _foreach_entries_col(
-                    node,
-                    src_cv=CV(
-                        F.col(n), F.col(en) if en else None
-                    ),
-                )
-                if fe is None:
-                    raise NotImplementedError("foreach staging failed")
-                out = _fanout(df, fe(F.col("v")))
-                if owned:
-                    out = out.drop(n, *([en] if en else []))
-                return out
-        return _fanout(df, entries_fn(F.col("v")))
-
-    def _udf_entries() -> Column:
-        """Interp-backed fallback (same contract as the reduce one):
-        the whole foreach runs row-locally in the reference
-        interpreter when the update's dispatch tree carries a
-        Python-UDF branch that F.aggregate lambdas reject."""
-
-        def fe(col):
-            import json as js
-
-            import pandas as pd
-
-            from bd_spark.jsonq import interp as _interp
-
-            outs = []
-            for txt in col:
-                try:
-                    ents = _interp.run(node, js.loads(txt))
-                    outs.append(
-                        [
-                            (
-                                js.dumps(
-                                    x, separators=(",", ":"), sort_keys=True
-                                ),
-                                er,
-                            )
-                            for x, er in ents
-                        ]
-                    )
-                except Exception as ex:  # noqa: BLE001 — in-band per row
-                    outs.append([("null", f"{type(ex).__name__}: {ex}")])
-            return pd.Series(outs)
-
-        udf = F.pandas_udf(
-            fe, "array<struct<j: string, er: string>>", F.PandasUDFType.SCALAR
-        )
-        return F.transform(
-            udf(V.vjson(F.col("v"))),
-            lambda s: _entry(F.parse_json(s["j"]), s["er"]),
-        )
-
-    def run_guarded(df: DataFrame) -> DataFrame:
-        if entries_fn is None:
-            return _fanout(df, _udf_entries())
-        try:
-            return run(df)
-        except Exception:  # noqa: BLE001 — AnalysisException at build
-            if _free_vars(node):
-                raise
-            return _fanout(df, _udf_entries())
-
-    return run_guarded
+    entries_fn = _foreach_entries_col(node)  # not None: _refuse_unstaged
+    return lambda df: _fanout(df, entries_fn(F.col("v")))
 
 
 def _stream_bind(node: ast.BindAs) -> StreamFn:
@@ -4488,11 +3607,6 @@ class _Plan:
         self.layers: list[dict[str, Column]] = []
         self.filters: list[str] = []
         self.temps: list[str] = []
-        # set when a layer carries a Python/pandas UDF emission
-        # (setpath): lateral-alias substitution would inline the UDF's
-        # staged-arg trees back into the UDF call, so such plans keep
-        # real column boundaries (per-layer withColumns)
-        self.no_lateral = False
 
     def emit(self, depth: int, cols: dict[str, Column]) -> None:
         while len(self.layers) <= depth:
@@ -4506,7 +3620,6 @@ class _Plan:
             self.emit(depth, layer)
         self.filters += other.filters
         self.temps += other.temps
-        self.no_lateral = self.no_lateral or other.no_lateral
 
     # Below this many total emissions, all layers fold into ONE select
     # via lateral column aliases (Spark 3.4+: an expression may
@@ -4536,7 +3649,6 @@ class _Plan:
             flat
             and len(flat) <= self.LATERAL_FOLD_MAX
             and not self.filters
-            and not self.no_lateral
         ):
             df = df.select("*", *[c.alias(n) for n, c in flat])
         else:
@@ -4636,6 +3748,7 @@ def _plan_direct_raw(
     in_depth: int,
     cse: _CSE | None,
 ) -> tuple[CV, int, str | None] | None:
+    _refuse_unstaged(node)
     if isinstance(node, ast.Identity):
         return inp, in_depth, None
     if isinstance(node, ast.Literal):
@@ -4700,8 +3813,6 @@ def _plan_direct_raw(
             cur = _col_if(ccv, bcv, cur)
         return _pemit(plan, cur, inp.err, name, d)
     if isinstance(node, ast.Builtin):
-        if node.name in HOF_BUILTINS:
-            raise _no_staged_lane(node.name)
         if node.name == "select":
             arg = _plan_direct(plan, node.args[0], None, inp, in_depth, cse)
             if arg is None:
@@ -4724,8 +3835,6 @@ def _plan_direct_raw(
                 return None
             acv, ad, _ = arg
             cv = _col_builtin(node.name, inp.v, [acv])
-            if node.name in ("delpaths", "strftime", "strptime"):
-                plan.no_lateral = True  # pandas-UDF emission (setpath rule)
             return _pemit(plan, cv, inp.err, name, max(ad, in_depth))
         if node.name in ARG2_VALUE_BUILTINS:
             a0 = _plan_direct(plan, node.args[0], None, inp, in_depth, cse)
@@ -4742,22 +3851,6 @@ def _plan_direct_raw(
             return _pemit(plan, cf(inp.v), inp.err, name, in_depth)
         if node.name in GENERATOR_BUILTINS:
             return None  # generators need stream fan-out
-        if node.name == "setpath" and len(node.args) == 2:
-            # same emission as the stream tier's run_setpath, shared
-            # into the layered plan (jq_paths' `upd` pair previously
-            # paid a full _stage round: save + setpath-stage + finish
-            # + tojson lift + restore = ~5 extra plan analyses)
-            a0 = _plan_direct(plan, node.args[0], None, inp, in_depth, cse)
-            if a0 is None:
-                return None
-            a1 = _plan_direct(plan, node.args[1], None, inp, in_depth, cse)
-            if a1 is None:
-                return None
-            cv = _col_builtin("setpath", inp.v, [a0[0], a1[0]])
-            plan.no_lateral = True  # pandas-UDF emission
-            return _pemit(
-                plan, cv, inp.err, name, max(a0[1], a1[1], in_depth)
-            )
         if node.args:
             return None  # other multi-arg builtins stage fully
         cv = _col_builtin(node.name, inp.v, [])
@@ -4765,7 +3858,7 @@ def _plan_direct_raw(
     if isinstance(node, ast.ListCons):
         # row-local collect — including LIGHT generator payloads
         # _col_list can splice ([scan(re)], [.xs.[]], [range(n)]);
-        # heavy payloads (paths/foreach) and payloads _elems_colfn
+        # heavy payloads (foreach) and payloads _elems_colfn
         # can't render stage through the stream tier, which binds the
         # burst to a real column (one evaluation per row)
         if _has_heavy_gen(node):
@@ -4858,6 +3951,7 @@ def _stage(df: DataFrame, node: ast.Node, name: str) -> DataFrame:
 
 def compile_stream(node: ast.Node) -> StreamFn:
     """Compile any node to a stream transform (staged by default)."""
+    _refuse_unstaged(node)
     if isinstance(node, (ast.Identity,)):
         return lambda df: df
     if isinstance(node, (ast.Literal, ast.Index, ast.Identifier, ast.Slice)):
@@ -4938,8 +4032,6 @@ def compile_stream(node: ast.Node) -> StreamFn:
 
         return run_ifstream
     if isinstance(node, ast.Builtin):
-        if node.name in HOF_BUILTINS:
-            raise _no_staged_lane(node.name)
         if node.name == "select":
             sarg = node.args[0]
 
@@ -4964,8 +4056,6 @@ def compile_stream(node: ast.Node) -> StreamFn:
             return lift(_compile_del(node))
         if node.name == "capture":
             return lift(_compile_capture(node))
-        if node.name == "until":
-            return lift(_compile_until(node))
         if node.name in ARG2_VALUE_BUILTINS:
             b0, b1 = node.args
             bname = node.name
@@ -4980,14 +4070,9 @@ def compile_stream(node: ast.Node) -> StreamFn:
                 )
 
             return run_arg2
-        if node.name in ("scan", "splits", "limit", "match", "while",
-                         "repeat") or (
+        if node.name in ("scan", "splits", "limit") or (
             node.name == "range" and len(node.args) == 3
         ):
-            if node.name == "repeat":
-                raise NotImplementedError(
-                    "repeat is unbounded — wrap in limit(n; repeat(f))"
-                )
             ef = _elems_colfn(node)
             if ef is None:
                 if node.name == "limit":
@@ -5018,21 +4103,6 @@ def compile_stream(node: ast.Node) -> StreamFn:
                 return _fanout(base, F.col("__gent")).drop("__gent")
 
             return run_regex_gen
-        if node.name in ("paths", "leaf_paths"):
-            return _stream_paths(node.name == "leaf_paths")
-        if node.name == "setpath":
-            a0, a1 = node.args
-
-            def run_setpath(df: DataFrame) -> DataFrame:
-                n0, n1 = _fresh("sp"), _fresh("sq")
-                df, (c0, c1) = _stage_cv_many(df, [(a0, n0), (a1, n1)])
-                cv = _col_builtin("setpath", F.col("v"), [c0, c1])
-                return _finish(
-                    df, cv,
-                    drop_cols=[f"{n0}_v", f"{n0}_e", f"{n1}_v", f"{n1}_e"],
-                )
-
-            return run_setpath
         if node.name == "range":
             rarg = node.args[0]
 
@@ -5128,8 +4198,6 @@ def compile_stream(node: ast.Node) -> StreamFn:
         return _stream_itervalues(node.opt)
     if isinstance(node, ast.Iter):
         return _stream_iter(node.items)
-    if isinstance(node, ast.Recurse):
-        return _stream_recurse()
     if isinstance(node, ast.ListCons):
         # heavy generator payloads stage their burst as a column
         # (one evaluation per row); light payloads splice row-locally
@@ -5325,162 +4393,12 @@ def _stream_binary_zip(node: ast.Binary) -> StreamFn:
     return run
 
 
-# Fused paths-burst hint (r8, VERDICT r7 "fuse the two path-generator
-# bursts into ONE fan-out"): the dict single-burst fast path arms this
-# when EVERY paths/leaf_paths in its pairs is head-positioned
-# (evaluated against the dict's own input v). The first paths
-# _stage_burst then stages BOTH variants from one enumeration/union
-# and records the column names; later paths stagings reuse the
-# columns with ZERO extra work — one union, one Arrow stage, two
-# enumerations total instead of stacked unions whose branches
-# re-execute each other multiplicatively.  Thread-LOCAL (plans are
-# built concurrently — compiler._ENV is thread-local for the same
-# reason): a module global would let one thread's armed dict leak
-# staged column names into another thread's plan.
-_PATHS_HINT_TLS = _threading.local()
-
-
-def _paths_hint() -> dict | None:
-    return getattr(_PATHS_HINT_TLS, "hint", None)
-
-
-def _set_paths_hint(h: dict | None) -> None:
-    _PATHS_HINT_TLS.hint = h
-
-
-def _contains_paths(node: ast.Node) -> bool:
-    stack: list[ast.Node] = [node]
-    while stack:
-        n = stack.pop()
-        if isinstance(n, ast.Builtin) and n.name in ("paths", "leaf_paths"):
-            return True
-        for f in getattr(n, "__dataclass_fields__", {}):
-            v = getattr(n, f)
-            items = v if isinstance(v, tuple) else (v,)
-            for it in items:
-                if isinstance(it, ast.Node):
-                    stack.append(it)
-                elif isinstance(it, ast.DictPair):
-                    stack += [it.key, it.value]
-                elif isinstance(it, tuple):
-                    stack += [s for s in it if isinstance(s, ast.Node)]
-    return False
-
-
-def _paths_head_only(node: ast.Node, at_head: bool = True) -> bool:
-    """True when every paths/leaf_paths occurrence under ``node``
-    evaluates against the node's OWN input value (head position along
-    pipe lefts / list items / foreach sources) — the soundness
-    condition for reusing one staged enumeration across them."""
-    if isinstance(node, ast.Builtin) and node.name in ("paths", "leaf_paths"):
-        return at_head
-    if isinstance(node, ast.Pipe):
-        return _paths_head_only(node.left, at_head) and not _contains_paths(
-            node.right
-        )
-    if isinstance(node, ast.Try):
-        return _paths_head_only(node.expr, at_head)
-    if isinstance(node, ast.ListCons):
-        if node.expr is None:
-            return True
-        items = (
-            list(node.expr.items)
-            if isinstance(node.expr, ast.Iter)
-            else [node.expr]
-        )
-        return all(_paths_head_only(i, at_head) for i in items)
-    if isinstance(node, ast.Iter):
-        return all(_paths_head_only(i, at_head) for i in node.items)
-    if isinstance(node, ast.Foreach):
-        return (
-            _paths_head_only(node.source, at_head)
-            and not _contains_paths(node.init)
-            and not _contains_paths(node.update)
-        )
-    return not _contains_paths(node)
-
-
 def _stage_burst(
     df: DataFrame, node: ast.Node
-) -> tuple[DataFrame, str, str | None, bool] | None:
+) -> tuple[DataFrame, str, str | None] | None:
     """Stage a row-local generator's burst as a FLAT array column;
-    returns (df, value_col, err_col_or_None, owned) — ``owned`` False
-    when the column was REUSED from an armed _PATHS_HINT (the caller
-    must not drop it). paths/leaf_paths get the bounded-depth native
-    lane via a FILTER-UNION: one staged entries column per branch
-    (path + container + deeper-than-cap flags) feeds the route flag
-    AND the derived burst(s), so each branch runs ONE enumeration;
-    only provably-deep rows pass through the Arrow UDF, which sits
-    UNCONDITIONALLY in its own filtered branch — ExtractPythonUDFs
-    cannot pull a Python UDF out of a conditional branch (F.when-
-    gating it crashes with INTERNAL_ERROR at eval, r8 reproduced),
-    but a plain projection over a Filter extracts reliably (the r7
-    _stream_paths shape, minus its persist+count probe action). The
-    union reorders rows; seq/ord carry the semantics. Known cost:
-    per-branch column pruning canonicalizes the branches' scans
-    differently, so ReuseExchange does NOT kick in (measured: 2
-    scans) — each branch re-reads the source, a bounded linear cost
-    that callers keep small by staging heavy bursts FIRST (nothing
-    expensive below the union); the armed-hint fusion keeps it to
-    ONE union per dict however many pairs use paths."""
-    if isinstance(node, ast.Builtin) and node.name in ("paths", "leaf_paths"):
-        leaf = node.name == "leaf_paths"
-        hint = _paths_hint()
-        key = "leaf" if leaf else "all"
-        if hint is not None and hint.get(key) in df.columns:
-            return df, hint[key], None, False
-        both = hint is not None
-        ents = _paths_entries(F.col("v"), _RECURSE_NATIVE_DEPTH)
-        ec, nd = _fresh("pec"), _fresh("pnd")
-        flagged = df.withColumn(ec, ents).withColumn(
-            nd,
-            F.coalesce(
-                F.exists(F.col(ec), lambda s: s["dp"]), F.lit(False)
-            ),
-        )
-
-        def derive_nat(lo: bool) -> Column:
-            src = (
-                F.filter(F.col(ec), lambda s: ~s["c"])
-                if lo
-                else F.col(ec)
-            )
-            return F.transform(src, lambda s: F.to_variant_object(s["p"]))
-
-        names = {key: _fresh("pb")}
-        if both:
-            other = "all" if leaf else "leaf"
-            names[other] = _fresh("pb")
-        fast = flagged.where(~F.col(nd)).withColumns(
-            {names[k]: derive_nat(k == "leaf") for k in names}
-        )
-        if both:
-            raw = _fresh("praw")
-            slow = flagged.where(F.col(nd)).withColumn(
-                raw, _paths_udf_flagged()(V.vjson(F.col("v")))
-            )
-            slow = slow.withColumns({
-                names[k]: F.transform(
-                    (
-                        F.filter(F.col(raw), lambda s: ~s["c"])
-                        if k == "leaf"
-                        else F.col(raw)
-                    ),
-                    lambda s: F.parse_json(s["j"]),
-                )
-                for k in names
-            }).drop(raw)
-        else:
-            slow = flagged.where(F.col(nd)).withColumn(
-                names[key],
-                F.transform(
-                    _paths_udf(leaf)(V.vjson(F.col("v"))), F.parse_json
-                ),
-            )
-        out = fast.unionByName(slow).drop(ec, nd)
-        if both:
-            hint.update(names)
-        return out, names[key], None, True
+    returns (df, value_col, err_col_or_None), or None when
+    _elems_colfn cannot render the generator."""
     ef = _elems_colfn(node)
     if ef is None:
         return None
@@ -5491,17 +4409,16 @@ def _stage_burst(
     if cv.err is not None:
         en = f"{n}e"
         cols[en] = cv.err
-    return df.withColumns(cols), n, en, True
+    return df.withColumns(cols), n, en
 
 
 def _stream_list_spliced(node: ast.ListCons) -> StreamFn | None:
     """`[...]` whose payload contains a HEAVY row-local generator
-    (paths/leaf_paths/foreach — see _has_heavy_gen): stage each
-    generator burst as ONE struct column, then assemble the collect
-    from column references. The row-local _col_list splice would
-    inline the heavy tree once per reference (2-4 interpreted
-    re-evaluations per row + one ArrowEvalPython stage per UDF copy);
-    a staged column is evaluated once per row, and CollapseProject
+    (foreach — see _has_heavy_gen): stage each generator burst as ONE
+    flat column, then assemble the collect from column references.
+    The row-local _col_list splice would inline the heavy tree once
+    per reference (2-4 interpreted re-evaluations per row); a staged
+    column is evaluated once per row, and CollapseProject
     keeps it materialized because the producer is non-cheap and
     multi-referenced. Still zero joins, zero fan-out."""
     if node.expr is None:
@@ -5513,11 +4430,9 @@ def _stream_list_spliced(node: ast.ListCons) -> StreamFn | None:
     )
     if not any(_has_heavy_gen(i) for i in items):
         return None
+
     def stageable(n: ast.Node) -> bool:
-        return (
-            isinstance(n, ast.Builtin)
-            and n.name in ("paths", "leaf_paths")
-        ) or _elems_colfn(n) is not None
+        return _elems_colfn(n) is not None
 
     plans: list[tuple] = []
     for i in items:
@@ -5532,14 +4447,8 @@ def _stream_list_spliced(node: ast.ListCons) -> StreamFn | None:
         ):
             # stage the LEFT burst; map the scalar right side over
             # the staged column (cheap refs) instead of the genpipe
-            # splice's inlined tree.  A paths-bearing right side
-            # would put the Arrow UDF inside the transform lambda
-            # (unsupported) — let it fall through to the stream tier.
-            rpf = (
-                compile_packed(i.right)
-                if not _contains_paths(i.right)
-                else None
-            )
+            # splice's inlined tree
+            rpf = compile_packed(i.right)
             if stageable(i.left) and rpf is not None:
                 plans.append(("genpipe", i.left, rpf))
                 continue
@@ -5563,10 +4472,9 @@ def _stream_list_spliced(node: ast.ListCons) -> StreamFn | None:
             sb = _stage_burst(df, pl[1])
             if sb is None:  # defensive: stageable() said yes
                 raise NotImplementedError("burst staging failed")
-            df, n, en, owned = sb
+            df, n, en = sb
             staged[idx] = (n, en)
-            if owned:
-                drops += [n] + ([en] if en else [])
+            drops += [n] + ([en] if en else [])
         err = None
         drop = None
         segs: list[Column] = []
@@ -5721,69 +4629,19 @@ def _stream_dict(pairs: tuple[ast.DictPair, ...]) -> StreamFn:
         if gen_entries is not None:
 
             def run_single_burst(df: DataFrame) -> DataFrame:
-                work = df
-                # heavy-source staging FIRST: _stage_burst's
-                # filter-union re-evaluates everything between the
-                # last exchange and the union once per branch, so
-                # it must run before the (expensive) scalar pairs
-                # stage — those then evaluate once, after the union.
-                # When every paths use across the pairs is HEAD-
-                # positioned, arm the fused-burst hint so the whole
-                # dict shares ONE paths union (jq_paths: flat's
-                # leaf_paths reuses nkeys' enumeration for free).
-                prev_hint = _paths_hint()
-                arm = any(
-                    _contains_paths(p.value) for p in pairs
-                ) and all(_paths_head_only(p.value) for p in pairs)
-                armed_hint: dict = {}
-                if arm:
-                    _set_paths_hint(armed_hint)
-                try:
-                    ents_fn = gen_entries
-                    extra_drops: list[str] = []
-                    val_node = pairs[mi].value
-                    if isinstance(
-                        val_node, ast.Foreach
-                    ) and _has_heavy_gen(val_node.source):
-                        sb = _stage_burst(work, val_node.source)
-                        if sb is not None:
-                            work, sn, sen, owned = sb
-                            fe = _foreach_entries_col(
-                                val_node,
-                                src_cv=CV(
-                                    F.col(sn),
-                                    F.col(sen) if sen else None,
-                                ),
-                            )
-                            if fe is not None:
-                                ents_fn = fe
-                                if owned:
-                                    extra_drops = [sn] + (
-                                        [sen] if sen else []
-                                    )
-                    # ONE shared layered plan for every scalar pair
-                    # (force_land: the assembly below reads the
-                    # {n}_v/{n}_e columns AFTER the fan-out replaced
-                    # v/err); non-direct pairs fall back to _stage
-                    # inside the same call. jq_paths: k2 (static
-                    # getpath) + upd (setpath|tojson) share ~3
-                    # withColumns instead of ~8 full-stage analyses.
-                    staged: dict[int, str] = {}
-                    sitems: list[tuple[ast.Node, str]] = []
-                    for pi, pair in enumerate(pairs):
-                        if pi == mi:
-                            continue
-                        staged[pi] = _fresh("dsc")
-                        sitems.append((pair.value, staged[pi]))
-                    work, _ = _stage_cv_many(work, sitems, force_land=True)
-                    if arm and armed_hint:
-                        # fused columns created during this dict's
-                        # staging — drop them with everything else
-                        extra_drops = list(
-                            set(extra_drops) | set(armed_hint.values())
-                        )
-                finally:
-                    _set_paths_hint(prev_hint)
+                # ONE shared layered plan for every scalar pair
+                # (force_land: the assembly below reads the
+                # {n}_v/{n}_e columns AFTER the fan-out replaced
+                # v/err); non-direct pairs fall back to _stage inside
+                # the same call
+                staged: dict[int, str] = {}
+                sitems: list[tuple[ast.Node, str]] = []
+                for pi, pair in enumerate(pairs):
+                    if pi == mi:
+                        continue
+                    staged[pi] = _fresh("dsc")
+                    sitems.append((pair.value, staged[pi]))
+                work, _ = _stage_cv_many(df, sitems, force_land=True)
                 # stage the generator's ENTRIES burst as a real
                 # column and assemble the dict AFTER the fan-out: the
                 # Generate is a CollapseProject barrier, so the heavy
@@ -5795,7 +4653,7 @@ def _stream_dict(pairs: tuple[ast.DictPair, ...]) -> StreamFn:
                 # duplicated subtrees (measured)
                 gb, pre = _fresh("gb"), _fresh("pre")
                 work = work.withColumns({
-                    gb: ents_fn(F.col("v")),
+                    gb: gen_entries(F.col("v")),
                     pre: F.col("err").isNotNull(),
                 })
                 ex = _fanout(work, F.col(gb))
@@ -5830,7 +4688,7 @@ def _stream_dict(pairs: tuple[ast.DictPair, ...]) -> StreamFn:
                 newerr = F.when(F.col(pre), F.col("err")).otherwise(err)
                 return ex.withColumns(
                     {"v": newv, "err": newerr}
-                ).drop(gb, pre, *extra_drops, *[
+                ).drop(gb, pre, *[
                     c for n in staged.values()
                     for c in (f"{n}_v", f"{n}_e")
                 ])
@@ -5924,189 +4782,6 @@ def _stream_dict(pairs: tuple[ast.DictPair, ...]) -> StreamFn:
     return run
 
 
-_RECURSE_UDF = None
-
-
-def _child_values(x: Column) -> Column:
-    """Container children in document order (array elements / object
-    values in key order — as_map is key-sorted), else empty."""
-    t = V.vtype(x)
-    return (
-        F.when(t == "array", V.as_array(x))
-        .when(t == "object", F.map_values(V.as_map(x)))
-        .otherwise(_empty_varr())
-    )
-
-
-# Native `..` enumeration depth: documents nested at most this deep
-# take the all-JVM lane; deeper rows fall back to the Arrow UDF
-# (count-gated, so the Python worker never launches on shallow data).
-_RECURSE_NATIVE_DEPTH = 3
-
-
-def _recurse_entries(v: Column, depth: int) -> Column:
-    """Pre-order descendants of ``v`` unrolled to ``depth`` levels as
-    ``array<struct<x: variant, dp: boolean>>`` — ``dp`` marks a node
-    AT the depth cap that still has children (the row nests deeper
-    and needs the Arrow fallback). ONE unrolled tree serves both the
-    descendant burst and the needs flag (r10: the old shape built a
-    second full-depth ``deep_vals`` expansion just for the flag,
-    doubling plan-build round-trips, analysis, and codegen). The
-    depth expansion unrolls the recursion into D nested transforms —
-    row-local, no Python (r7: jq_recurse_props ran the Arrow walk UDF
-    on every row; gate/testdata docs are depth-1)."""
-
-    def walk(x: Column, d: int) -> Column:
-        if d == 0:
-            return F.array(
-                F.struct(
-                    x.alias("x"),
-                    (F.size(_child_values(x)) > 0).alias("dp"),
-                )
-            )
-        return F.concat(
-            F.array(F.struct(x.alias("x"), F.lit(False).alias("dp"))),
-            F.flatten(
-                F.transform(_child_values(x), lambda c: walk(c, d - 1))
-            ),
-        )
-
-    return walk(v, depth)
-
-
-# Bounded probe-cache pool for the `..`/paths depth probes. A single
-# query can hold SEVERAL probes at once (jq_paths has three paths
-# generators), and each persist backs the FINAL plan's fast/slow
-# branches — evicting a sibling mid-build forces its consumers to
-# recompute their whole upstream. Cap at 4 (vs the canonical sink's
-# 1): enough for every registered query, still leak-bounded.
-_recurse_cache: list[DataFrame] = []
-_RECURSE_CACHE_MAX = 4
-
-
-def _probe_persist(df: DataFrame) -> DataFrame:
-    while len(_recurse_cache) >= _RECURSE_CACHE_MAX:
-        _recurse_cache.pop(0).unpersist(False)
-    _recurse_cache.append(df.persist())
-    return df
-
-
-def _probe_release(df: DataFrame) -> None:
-    """Drop a probe DataFrame's cache immediately: when the count
-    probe finds ZERO deep rows the output plan has a single consumer,
-    so keeping the InMemoryRelation in it makes every execution
-    re-populate a cache nothing reads again (measured as the
-    jq_recurse_props 1.5 -> 2.4 s step once bench cleared caches
-    per rep — r10 VERDICT wrong #3)."""
-    try:
-        _recurse_cache.remove(df)
-    except ValueError:
-        pass
-    df.unpersist(False)
-
-
-def _stream_recurse() -> StreamFn:
-    """`..` — pre-order doc + every descendant (ops.rs:36-92,
-    json.rs:694-718). r7: documents nested <= _RECURSE_NATIVE_DEPTH
-    enumerate descendants ALL-JVM (unrolled transforms); only rows
-    provably deeper take the Arrow UDF — gated by a persist + count
-    probe (the canonical-sink pattern) so the common shallow case
-    never launches a Python worker. Unbounded recursion itself has no
-    Catalyst expression form, hence the depth-bounded unroll +
-    fallback."""
-    global _RECURSE_UDF
-    if _RECURSE_UDF is None:
-
-        def descendants(js):
-            import json
-
-            import pandas as pd
-
-            def walk(x, out):
-                out.append(json.dumps(x, ensure_ascii=False))
-                if isinstance(x, list):
-                    for e in x:
-                        walk(e, out)
-                elif isinstance(x, dict):
-                    for k in x:  # to_json already sorted the keys
-                        walk(x[k], out)
-
-            res = []
-            for t in js:
-                if t is None:
-                    res.append(None)
-                    continue
-                acc: list[str] = []
-                walk(json.loads(t), acc)
-                res.append(acc)
-            return pd.Series(res)
-
-        _RECURSE_UDF = F.pandas_udf(descendants, "array<string>", F.PandasUDFType.SCALAR)
-
-    def run(df: DataFrame) -> DataFrame:
-        carries = _carries(df)
-        # DataFrame-level let (r10): stage the unrolled enumeration
-        # ONCE, derive burst + needs from the column reference
-        ec = _fresh("rse")
-
-        def mk_flagged() -> DataFrame:
-            staged = df.withColumn(
-                ec, _recurse_entries(F.col("v"), _RECURSE_NATIVE_DEPTH)
-            )
-            outs = F.transform(F.col(ec), lambda s: s["x"])
-            needs = F.exists(F.col(ec), lambda s: s["dp"])
-            return staged.withColumns({
-                # err rows: one passthrough entry (the UDF path used a
-                # single "null" desc + kept v — same result)
-                "__rnat": F.when(
-                    F.col("err").isNotNull(), F.array(F.col("v"))
-                ).otherwise(outs),
-                # nondeterministic disjunct pins the branch filters here
-                # (same trap as _drop_flag / the canonical sink)
-                "__rpy": (F.col("err").isNull() & needs)
-                | (F.monotonically_increasing_id() < F.lit(0)),
-            })
-
-        flagged = _probe_persist(mk_flagged())
-        n_deep = flagged.where("__rpy").count()
-
-        def emit(src: DataFrame, descs: Column) -> DataFrame:
-            ex = src.select(
-                "seq", "ord", "v", "err", *carries,
-                F.posexplode(descs).alias("__pos", "__dv"),
-            )
-            newv = F.when(
-                F.col("err").isNotNull(), F.col("v")
-            ).otherwise(F.col("__dv"))
-            return ex.select(
-                "seq",
-                F.concat(
-                    "ord", F.array(F.col("__pos").cast("long"))
-                ).alias("ord"),
-                newv.alias("v"),
-                "err",
-                *carries,
-            )
-
-        fast = emit(flagged.where(~F.col("__rpy")), F.col("__rnat"))
-        if n_deep == 0:
-            # single consumer: drop the probe cache now so later
-            # executions plan WITHOUT the InMemoryRelation (see
-            # _probe_release)
-            _probe_release(flagged)
-            return fast
-        deep = flagged.where(F.col("__rpy"))
-        slow = emit(
-            deep,
-            F.transform(
-                _RECURSE_UDF(F.to_json("v")), lambda s: F.parse_json(s)
-            ),
-        )
-        return fast.unionByName(slow)
-
-    return run
-
-
 def _node_count(node: object) -> int:
     """AST size (dataclass nodes, nested tuples included)."""
     import dataclasses
@@ -6133,12 +4808,11 @@ def _node_count(node: object) -> int:
 _INTERP_TIER_NODES = 300
 
 
-# Tier override for tests that pin ONE tier's machinery (the fused
-# native paths lane's differential tests would otherwise compare the
-# interp against itself after cost routing): "staged" | "interp" |
-# None (cost model decides). The staged pin cannot override a
-# capability fact: InterpOnly, oversized and HOF-bearing programs
-# still run on the interp tier.
+# Tier override for tests that pin ONE tier's machinery (a staged-tier
+# differential would otherwise compare the interp against itself after
+# cost routing): "staged" | "interp" | None (cost model decides). The
+# staged pin cannot override a capability fact: InterpOnly, oversized
+# and no-staged-lane programs still run on the interp tier.
 TIER_OVERRIDE: str | None = None
 
 
@@ -6150,8 +4824,8 @@ TIER_OVERRIDE: str | None = None
 # SchemaOfVariant sites — jq_formats 92, jq_bitwise 95, jq_defs 104
 # vs jq_value_arith 14, jq_fold 24). Binary/Unary/Slice nodes pay the
 # same tower; HOF names are kept OUT of this set (a HOF program has
-# no staged lane at all). The scalar-dispatch count drives the 5th
-# router signal in compile_query.
+# no staged lane at all). The scalar-dispatch count drives the
+# scalar-dispatch signal in choose_tier.
 _SCALAR_DISPATCH_BUILTINS = (
     frozenset(_KIND_NUM_BUILTINS)
     | frozenset(_KIND_STR_BUILTINS)
@@ -6178,31 +4852,23 @@ _SCALAR_DISPATCH_BUILTINS = (
 _SCALAR_DISPATCH_THRESHOLD = 8
 
 
-def _walk_heavy_score(node: object) -> tuple[int, int, int, int, int]:
-    """(enumerations, rebuilds, hofs, collects, scalars) — the cost
-    signals of per-row interpreted work that drives the tier choice
-    in compile_query:
-      enumerations — `paths`/`leaf_paths` whole-document walks;
-      rebuilds     — setpath/delpaths builtins and `del`/`|=`/`=`
-                     assignment nodes (whole-document rewrites);
-      hofs         — HOF_BUILTINS applications (no staged lane: any
-                     hof is a capability fact, not a cost);
-      collects     — list/dict constructions collecting a MULTIVALUED
-                     burst (stream fan-out + reassembly);
-      scalars      — Binary/Unary/Slice nodes and
-                     _SCALAR_DISPATCH_BUILTINS applications, each an
-                     interpreted variant type-dispatch tower per row
-                     on the staged lane."""
+def _walk_heavy_score(node: object) -> tuple[int, int, int]:
+    """(rebuilds, collects, scalars) — the cost signals of per-row
+    interpreted work that drive choose_tier's cost routing:
+      rebuilds — `del` builtins and `|=`/`=` assignment nodes
+                 (whole-document rewrites);
+      collects — list/dict constructions collecting a MULTIVALUED
+                 burst (stream fan-out + reassembly);
+      scalars  — Binary/Unary/Slice nodes and
+                 _SCALAR_DISPATCH_BUILTINS applications, each an
+                 interpreted variant type-dispatch tower per row on
+                 the staged lane."""
     import dataclasses
 
-    enums = rebuilds = hofs = collects = scalars = 0
+    rebuilds = collects = scalars = 0
     if isinstance(node, ast.Builtin):
-        if node.name in ("paths", "leaf_paths"):
-            enums += 1
-        elif node.name in ("setpath", "delpaths", "del"):
+        if node.name == "del":
             rebuilds += 1
-        elif node.name in HOF_BUILTINS:
-            hofs += 1
         elif node.name in _SCALAR_DISPATCH_BUILTINS:
             scalars += 1
     elif isinstance(node, ast.Assign):
@@ -6217,22 +4883,17 @@ def _walk_heavy_score(node: object) -> tuple[int, int, int, int, int]:
             1 for p in node.pairs if is_multivalued(p.value)
         )
     if dataclasses.is_dataclass(node):
-        for f in dataclasses.fields(node):
-            e, r, h, c, s = _walk_heavy_score(getattr(node, f.name))
-            enums += e
-            rebuilds += r
-            hofs += h
-            collects += c
-            scalars += s
+        children = [getattr(node, f.name) for f in dataclasses.fields(node)]
     elif isinstance(node, tuple):
-        for x in node:
-            e, r, h, c, s = _walk_heavy_score(x)
-            enums += e
-            rebuilds += r
-            hofs += h
-            collects += c
-            scalars += s
-    return enums, rebuilds, hofs, collects, scalars
+        children = list(node)
+    else:
+        children = []
+    for child in children:
+        r, c, s = _walk_heavy_score(child)
+        rebuilds += r
+        collects += c
+        scalars += s
+    return rebuilds, collects, scalars
 
 
 def _interp_tier(node: ast.Node) -> StreamFn:
@@ -6334,63 +4995,72 @@ def last_tier() -> str | None:
     return _TIER.last
 
 
-def compile_query(node: ast.Node) -> StreamFn:
-    """Top-level compile entry point. Each program gets exactly one
-    evaluator, picked from the program alone:
+def choose_tier(
+    node: ast.Node, override: str | None = None
+) -> tuple[str, str]:
+    """(tier, reason) for a parsed program: the one evaluator
+    compile_query gives it, decided from the program and the tier pin
+    (`override`, see TIER_OVERRIDE) alone:
       - the Arrow-batched interp tier when the staged compiler cannot
         run it: InterpOnly programs (bounded-recursion def expansion
         may nest stream ops exponentially), trees over
-        _INTERP_TIER_NODES, and programs applying a HOF_BUILTINS
-        builtin (no staged lane) — whatever TIER_OVERRIDE says;
-      - else the interp tier when the cost signals say it is faster
-        (or TIER_OVERRIDE pins it);
-      - else the staged Catalyst compilation.
-    The chosen tier is recorded (last_tier) and logged."""
+        _INTERP_TIER_NODES, and programs with a construct that has no
+        staged lane (_unstaged_construct) — whatever the pin says;
+      - else the interp tier when pinned there, or when the cost
+        signals say it is faster and the staged tier is not pinned;
+      - else the staged Catalyst compilation."""
     if isinstance(node, ast.InterpOnly):
-        _TIER.last = "interp"
-        _LOG.info(
-            "compile_query tier=interp (InterpOnly: bounded-recursion defs)"
-        )
-        return _interp_tier(node.expr)
+        return "interp", "InterpOnly: bounded-recursion defs"
     n = _node_count(node)
-    enums, rebuilds, hofs, collects, scalars = _walk_heavy_score(node)
-    if TIER_OVERRIDE == "interp" or n > _INTERP_TIER_NODES or hofs >= 1:
-        _TIER.last = "interp"
-        _LOG.info(
-            "compile_query tier=interp (override=%s, nodes=%d, hofs=%d)",
-            TIER_OVERRIDE, n, hofs,
-        )
-        return _interp_tier(node)
+    if n > _INTERP_TIER_NODES:
+        return "interp", f"nodes={n}"
+    construct = _unstaged_construct(node)
+    if construct is not None:
+        return "interp", f"no staged lane: {construct}"
+    if override == "interp":
+        return "interp", "override"
+    if override == "staged":
+        return "staged", "override"
     # Cost-based routing (r11): a program doing MULTIPLE whole-document
-    # walks per row — path enumerations plus object rebuilds — is
-    # measurably faster on the Arrow interp tier than on the staged
-    # Catalyst lane, because the variant trees those ops compile to
-    # evaluate as CodegenFallback (interpreted per row, JVM-side) while
-    # the interp walks plain Python dicts on Arrow batches ONCE per
-    # row for the whole program (jq_paths at sf0.1: 6.9 s staged vs
-    # 1.4 s interp warm — SCALE.md r11). >=2 whole-doc rebuilds or >=2
-    # multivalued burst collects measured 1.8-5.7x faster interp too.
-    # Pure scalar navigation measured 1.3-2.6x faster staged and stays
-    # there. The scalar-dispatch signal (r11 close): a program stacking
-    # MANY scalar ops pays the variant dispatch tower per op per row —
-    # each an interpreted transform()/comparator HOF — so past
-    # _SCALAR_DISPATCH_THRESHOLD ops one Arrow interp walk is cheaper
-    # (tierprobe: jq_formats 6.02→2.41, jq_defs 0.81→0.42, jq_datetime
-    # 2.30→1.68 warm). Both tiers are row-local, shuffle-free and
-    # carry non-core columns, so the 100 TB story is unchanged — this
-    # picks the faster per-byte constant.
-    if TIER_OVERRIDE != "staged" and (
-        (enums >= 1 and enums + rebuilds >= 2)
-        or rebuilds >= 2
+    # rewrites per row is measurably faster on the Arrow interp tier
+    # than on the staged Catalyst lane, because the variant trees those
+    # ops compile to evaluate as CodegenFallback (interpreted per row,
+    # JVM-side) while the interp walks plain Python dicts on Arrow
+    # batches ONCE per row for the whole program (SCALE.md r11): >=2
+    # whole-doc rebuilds or >=2 multivalued burst collects measured
+    # 1.8-5.7x faster interp. Pure scalar navigation measured 1.3-2.6x
+    # faster staged and stays there. The scalar-dispatch signal (r11
+    # close): a program stacking MANY scalar ops pays the variant
+    # dispatch tower per op per row — each an interpreted
+    # transform()/comparator HOF — so past _SCALAR_DISPATCH_THRESHOLD
+    # ops one Arrow interp walk is cheaper (tierprobe: jq_formats
+    # 6.02→2.41, jq_defs 0.81→0.42, jq_datetime 2.30→1.68 warm). Both
+    # tiers are row-local, shuffle-free and carry non-core columns, so
+    # the 100 TB story is unchanged — this picks the faster per-byte
+    # constant. (Path enumerations, the r11 signal that joined these,
+    # now have no staged lane at all.)
+    rebuilds, collects, scalars = _walk_heavy_score(node)
+    if (
+        rebuilds >= 2
         or collects >= 2
         or scalars >= _SCALAR_DISPATCH_THRESHOLD
     ):
-        _TIER.last = "interp"
-        _LOG.info(
-            "compile_query tier=interp (walk-heavy: %d enum + %d "
-            "rebuild + %d collect + %d scalar-dispatch)",
-            enums, rebuilds, collects, scalars,
+        return "interp", (
+            f"cost: {rebuilds} rebuild + {collects} collect + "
+            f"{scalars} scalar-dispatch"
         )
-        return _interp_tier(node)
-    _TIER.last = "staged"
-    return compile_stream(node)
+    return "staged", "cost"
+
+
+def compile_query(node: ast.Node) -> StreamFn:
+    """Top-level compile entry point: runs the program on the tier
+    choose_tier picks (under TIER_OVERRIDE), and records (last_tier)
+    and logs that choice."""
+    tier, reason = choose_tier(node, TIER_OVERRIDE)
+    _TIER.last = tier
+    _LOG.info("compile_query tier=%s (%s)", tier, reason)
+    if tier == "staged":
+        return compile_stream(node)
+    if isinstance(node, ast.InterpOnly):
+        node = node.expr
+    return _interp_tier(node)

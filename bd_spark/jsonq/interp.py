@@ -622,8 +622,7 @@ def _deep_merge(a: dict, b: dict) -> dict:
 
 def get_path(v: object, keys: list) -> object:
     """jq getpath: missing levels yield null; indexing a scalar or a
-    wrong key type is an error (raised as ValueError). Shared by the
-    interpreter and the Spark setpath/paths UDFs so messages match."""
+    wrong key type is an error (raised as ValueError)."""
     cur = v
     for k in keys:
         if cur is None:
@@ -686,8 +685,7 @@ _ITER_CAP = 100_000
 def run_until(cond: "ast.Node", update: "ast.Node", v: object):
     """jq until(cond; update) -> (value, err). Dialect: cond/update
     contribute their FIRST output (jq fans out multi-valued updates
-    combinatorially); iteration is capped — shared by the interp and
-    the engine's Arrow UDF."""
+    combinatorially); iteration is capped (_ITER_CAP)."""
     x = v
     for _ in range(_ITER_CAP):
         cs = _eval(cond, x)
@@ -709,8 +707,8 @@ def run_until(cond: "ast.Node", update: "ast.Node", v: object):
 
 def run_while(cond: "ast.Node", update: "ast.Node", v: object):
     """jq while(cond; update) -> (outputs, err). Same dialect notes
-    as run_until; an error wipes the burst (the engine's elems model
-    carries one err per row, not per element)."""
+    as run_until; an error wipes the burst (the dialect carries one
+    err per input row, not per element)."""
     outs: list = []
     x = v
     for _ in range(_ITER_CAP):
@@ -748,9 +746,8 @@ def run_repeat(f: "ast.Node", v: object, n: int):
 
 
 def regex_match_objects(s: str, pat: str, global_: bool) -> list[dict]:
-    """jq `match` objects (shared by the interp and the engine's
-    Arrow UDF): {offset, length, string, captures:[{offset, length,
-    string, name}]}; unmatched optional groups carry offset -1 /
+    """jq `match` objects: {offset, length, string,
+    captures:[{offset, length, string, name}]}; unmatched optional groups carry offset -1 /
     string null, exactly like jq.  Offsets are codepoint offsets
     (Python string indices)."""
     import re as _re
@@ -780,10 +777,10 @@ def regex_match_objects(s: str, pat: str, global_: bool) -> list[dict]:
 
 
 def del_path(cur: object, keys: list) -> object:
-    """Single-path delete with jq semantics (shared by the interp and
-    the engine's Arrow UDF): deleting a missing key / out-of-range
-    index is a no-op, null traverses to null, deleting through a
-    scalar or with a bad key type is an error (ValueError)."""
+    """Single-path delete with jq semantics: deleting a missing key /
+    out-of-range index is a no-op, null traverses to null, deleting
+    through a scalar or with a bad key type is an error
+    (ValueError)."""
     k = keys[0]
     if isinstance(k, str):
         if cur is None:
@@ -932,29 +929,6 @@ def all_paths(v: object, leaf_only: bool = False) -> list[list]:
                 p = prefix + [i]
                 if not leaf_only or not isinstance(e, (dict, list)):
                     out.append(p)
-                walk(e, p)
-
-    walk(v, [])
-    return out
-
-
-def all_paths_flagged(v: object) -> list[tuple[list, bool]]:
-    """(path, is_container) for every path below the root — the
-    Arrow fallback's fused form: ONE walk serves both `paths`
-    (every entry) and `leaf_paths` (entries with is_container
-    False). Order/convention identical to all_paths."""
-    out: list[tuple[list, bool]] = []
-
-    def walk(x: object, prefix: list) -> None:
-        if isinstance(x, dict):
-            for k in sorted(x):
-                p = prefix + [k]
-                out.append((p, isinstance(x[k], (dict, list))))
-                walk(x[k], p)
-        elif isinstance(x, list):
-            for i, e in enumerate(x):
-                p = prefix + [i]
-                out.append((p, isinstance(e, (dict, list))))
                 walk(e, p)
 
     walk(v, [])

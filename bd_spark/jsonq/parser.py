@@ -1093,9 +1093,9 @@ class Parser:
             # all-string path is exactly the native `.a.b = E` Assign
             # (same create-missing-objects / scalar-intermediate-error
             # / rhs-against-root semantics) — compiled as native
-            # variant navigation + dict assembly instead of the
-            # per-row Arrow setpath UDF. Int segments / dynamic paths
-            # keep the UDF lane.
+            # variant navigation + dict assembly. Int segments /
+            # dynamic paths stay the setpath builtin, which has no
+            # staged lane (the program runs on the interp tier).
             segs = _literal_str_path(args[0])
             if segs:
                 return ast.Assign(path=segs, value=args[1], update=False)

@@ -5,6 +5,13 @@ The document-stream schema is
 `seq` is the input document index (jq output order is semantic; Spark
 rows are unordered, so order is data), `ord` the burst-position path,
 `err` the in-band error channel (entry.rs:30-32).
+
+`ord` is an order key within one `seq`, not a value to compare across
+tiers: sorting by `(seq, ord)` gives jq output order on either tier,
+but its depth differs by tier. The interp tier appends one position
+per program run, the staged tier one per fan-out stage, and an
+upstream error row keeps the depth its tier gave it (under `.[]` the
+staged tier appends a 0, the interp tier appends nothing).
 """
 
 from __future__ import annotations

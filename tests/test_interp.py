@@ -82,15 +82,15 @@ def test_scalar_dispatch_routing():
         ".a + .b - .c * .d / .e % 2 + .f + .g + .h + .i + .j"
     )
     scores = compiler._walk_heavy_score(heavy)
-    assert scores[:4] == (0, 0, 0, 0)
-    assert scores[4] >= compiler._SCALAR_DISPATCH_THRESHOLD
+    assert scores[:2] == (0, 0)
+    assert scores[2] >= compiler._SCALAR_DISPATCH_THRESHOLD
     compiler.compile_query(heavy)
     assert compiler.last_tier() == "interp"
 
     # 2 scalar ops -> stays staged
     light = parser.parse(".a + .b | length")
     assert (
-        compiler._walk_heavy_score(light)[4]
+        compiler._walk_heavy_score(light)[2]
         < compiler._SCALAR_DISPATCH_THRESHOLD
     )
     compiler.compile_query(light)
@@ -101,7 +101,7 @@ def test_scalar_dispatch_routing():
     fmt = parser.parse(
         "{a: (.x | todate), b: (.y | round), c: (.z | @base64)}"
     )
-    assert compiler._walk_heavy_score(fmt)[4] == 3
+    assert compiler._walk_heavy_score(fmt)[2] == 3
     assert "map" not in compiler._SCALAR_DISPATCH_BUILTINS
     assert "sort_by" not in compiler._SCALAR_DISPATCH_BUILTINS
 
@@ -110,7 +110,8 @@ def test_hof_programs_have_no_staged_lane():
     """A HOF builtin is a capability fact, not a cost: its program
     runs on the interp tier even under the staged pin, and a HOF node
     handed to the staged compiler directly raises instead of falling
-    through to some other lane."""
+    through to some other lane. So does any other construct with no
+    staged lane: the staged compiler never emits Python for it."""
     from bd_spark.jsonq import compiler
 
     for q in ("map(. + 1)", ".xs | sort", "{a: (.xs | unique_by(.k))}"):
@@ -121,7 +122,9 @@ def test_hof_programs_have_no_staged_lane():
             compiler.TIER_OVERRIDE = None
         assert compiler.last_tier() == "interp", q
     for q in ("map(. + 1)", ".xs | sort_by(.a)", "[.[] | select(any(. > 1))]",
-              "reduce .[] as $x (0; . + ([$x] | max_by(.)))"):
+              "reduce .[] as $x (0; . + ([$x] | max_by(.)))",
+              "flatten", "[paths]", "..|.a?", "del(.a[0])", ".a * .b",
+              'match("a")', "reduce .a as $x (0; . + $x)"):
         with pytest.raises(RuntimeError, match="no staged lane"):
             compiler.compile_stream(parser.parse(q))
 

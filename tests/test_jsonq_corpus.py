@@ -637,7 +637,7 @@ def jq(spark):
 
 
 @pytest.fixture(scope="module")
-def corpus_results(jq):
+def corpus_results(jq, python_eval_nodes):
     """Evaluate every corpus case ONCE, 8 plan-builds in flight
     (plan assembly is Py4J + driver-JVM work that releases the GIL;
     compiler._ENV is thread-local). The parametrized tests below
@@ -649,21 +649,35 @@ def corpus_results(jq):
     router would send every collect/rebuild-heavy case to the interp
     tier, silently shrinking staged coverage. test_interp.py runs the
     same corpus through the interp engine. Programs the staged
-    compiler cannot run (InterpOnly: walk/tostream; any HOF builtin)
-    take the interp tier regardless of the pin; each case records the
-    tier it took (last_tier is per thread, so it is read in the
-    worker) and test_corpus checks it against _pinned_tier."""
+    compiler cannot run (InterpOnly: walk/tostream; a construct with
+    no staged lane) take the interp tier regardless of the pin; each
+    case records the tier it took (last_tier is per thread, so it is
+    read in the worker) and, when staged, the Python eval nodes in
+    its optimized plan; test_corpus checks both."""
+    import json
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import functions as F
 
     from bd_spark.jsonq import compiler
 
     def run(case):
         query, doc, _ = case
+        py: list[str] = []
         try:
-            got = jq.run_values(query, [doc])
+            df = jq.run(query, jq.stream_from_texts([doc]))
+            tier = compiler.last_tier()
+            if tier == "staged":
+                py = python_eval_nodes(df)
+            rows = df.select(F.to_json("v").alias("j"), "err").collect()
+            got = [
+                json.loads(r.j) if r.j is not None else None
+                for r in rows if r.err is None
+            ]
         except Exception as e:  # noqa: BLE001 — asserted per-case
             got = ("__raised__", f"{type(e).__name__}: {e}")
-        return got, compiler.last_tier()
+            tier = compiler.last_tier()
+        return got, tier, py
 
     compiler.TIER_OVERRIDE = "staged"
     try:
@@ -671,6 +685,97 @@ def corpus_results(jq):
             return list(ex.map(run, CORPUS))
     finally:
         compiler.TIER_OVERRIDE = None
+
+
+# The construct rule, written out here apart from the compiler's own
+# (compiler._unstaged_construct) so the two check each other: these
+# constructs have no staged lane, because the only staged form would
+# call Python.
+_NO_STAGED_BUILTINS = frozenset((
+    # higher-order builtins
+    "map", "any", "all", "sort", "unique",
+    "sort_by", "unique_by", "group_by", "min_by", "max_by",
+    # unbounded recursion/iteration, Python regex/time libraries
+    "flatten", "setpath", "delpaths", "strftime", "strptime", "match",
+    "until", "while", "repeat", "paths", "leaf_paths",
+))
+# builtins whose result is never an object: a `*` operand of one of
+# these kinds (or a non-object literal, string, list, negation, or an
+# operator other than `+` and `//`) rules out the object deep merge
+_NOT_OBJECT_BUILTINS = frozenset((
+    "length", "utf8bytelength", "tonumber", "floor", "ceil", "sqrt",
+    "fabs", "abs", "round", "pow", "log", "log2", "log10", "exp",
+    "exp2", "exp10", "fromdate", "mktime", "tostring", "ascii_downcase",
+    "ascii_upcase", "sub", "gsub", "implode", "join", "tojson", "todate",
+    "trim", "ltrim", "rtrim", "@html", "@uri", "@csv", "@tsv", "@base64",
+    "@base64d", "keys", "chars", "explode", "to_entries",
+    "indices", "transpose", "gmtime", "test", "startswith", "endswith",
+    "contains", "has", "in", "not",
+))
+
+
+def _not_object(node) -> bool:
+    from bd_spark.jsonq import ast
+
+    if isinstance(node, ast.Literal):
+        return not node.text.lstrip().startswith("{")
+    if isinstance(node, (ast.StrInterp, ast.ListCons, ast.Unary)):
+        return True
+    if isinstance(node, ast.Binary):
+        return node.op not in ("+", "//")
+    if isinstance(node, ast.Builtin):
+        return node.name in _NOT_OBJECT_BUILTINS
+    if isinstance(node, (ast.Try, ast.Pipe)):
+        return _not_object(node.expr if isinstance(node, ast.Try) else node.right)
+    return False
+
+
+def _yields_many(node) -> bool:
+    from bd_spark.jsonq import ast
+
+    if isinstance(node, (ast.IterValues, ast.Iter, ast.Recurse, ast.Foreach)):
+        return True
+    if isinstance(node, ast.Builtin):
+        return node.name in ("range", "scan", "splits", "limit")
+    if isinstance(node, ast.Pipe):
+        return _yields_many(node.left) or _yields_many(node.right)
+    return False
+
+
+def _has_unstaged(node) -> bool:
+    import dataclasses
+
+    from bd_spark.jsonq import ast, parser
+
+    if isinstance(node, ast.Recurse):
+        return True
+    if isinstance(node, (ast.Reduce, ast.Foreach)) and (
+        # the staged folds take a generator source and single-valued
+        # init/update (approximated: the corpus has no edge case)
+        not _yields_many(node.source)
+        or _yields_many(node.init)
+        or _yields_many(node.update)
+    ):
+        return True
+    if isinstance(node, ast.Builtin):
+        if node.name in _NO_STAGED_BUILTINS:
+            return True
+        if node.name == "del" and any(
+            isinstance(s, int) for s in parser.static_path(node.args[0]) or ()
+        ):
+            return True
+    if isinstance(node, ast.Binary) and node.op == "*" and not (
+        _not_object(node.left) or _not_object(node.right)
+    ):
+        return True
+    if dataclasses.is_dataclass(node):
+        return any(
+            _has_unstaged(getattr(node, f.name))
+            for f in dataclasses.fields(node)
+        )
+    if isinstance(node, tuple):
+        return any(_has_unstaged(x) for x in node)
+    return False
 
 
 def _pinned_tier(query: str) -> str:
@@ -682,7 +787,7 @@ def _pinned_tier(query: str) -> str:
     if (
         isinstance(node, ast.InterpOnly)
         or compiler._node_count(node) > compiler._INTERP_TIER_NODES
-        or compiler._walk_heavy_score(node)[2]  # applies a HOF builtin
+        or _has_unstaged(node)
     ):
         return "interp"
     return "staged"
@@ -693,9 +798,10 @@ def _pinned_tier(query: str) -> str:
 )
 def test_corpus(corpus_results, idx):
     query, doc, expected = CORPUS[idx]
-    got, tier = corpus_results[idx]
+    got, tier, py = corpus_results[idx]
     assert got == expected, f"{query} on {doc}: {got} != {expected}"
     assert tier == _pinned_tier(query), query
+    assert py == [], f"{query}: Python eval nodes in the staged plan: {py}"
 
 
 @pytest.mark.parametrize("fmt", ["jsonl", "parquet"])
@@ -898,8 +1004,10 @@ def test_typed_lanes_match_generic(spark):
 
 def test_setpath_static_lane_matches_dynamic(spark):
     """The literal-path setpath fast lane (parser desugar -> native
-    Assign) must agree with the dynamic Arrow setpath UDF on values
-    and error PRESENCE (texts differ by design) across doc shapes."""
+    Assign, staged) must agree with the dynamic setpath (no staged
+    lane: interp) on values and error PRESENCE (texts differ by
+    design) across doc shapes."""
+    from bd_spark.jsonq import compiler
     from bd_spark.jsonq.runtime import JsonQ
 
     jq = JsonQ(spark)
@@ -907,138 +1015,26 @@ def test_setpath_static_lane_matches_dynamic(spark):
         '{"a": {"c": 1}}', "{}", "null", "[1, 2]", '{"a": 5}',
         '"s"', '{"a": {"b": {"d": 1}}}', '{"b": 7}',
     ]
-    # the [0:2] slice makes the path non-literal -> UDF lane
-    lit = jq.run_texts('setpath(["a","b"]; .b // 9)', docs)
-    dyn = jq.run_texts('setpath(["a","b"][0:2]; .b // 9)', docs)
+    compiler.TIER_OVERRIDE = "staged"
+    try:
+        lit = jq.run_texts('setpath(["a","b"]; .b // 9)', docs)
+        assert compiler.last_tier() == "staged"
+        # the [0:2] slice makes the path non-literal -> setpath builtin
+        dyn = jq.run_texts('setpath(["a","b"][0:2]; .b // 9)', docs)
+        assert compiler.last_tier() == "interp"
+    finally:
+        compiler.TIER_OVERRIDE = None
     for (lv, le), (dv, de) in zip(lit, dyn):
         assert (le is None) == (de is None), docs
         if le is None:
             assert lv == dv
 
 
-def test_recurse_paths_depth_fallback_union(spark):
-    """r7 native bounded-depth `..`/paths lanes: a frame MIXING
-    shallow rows (all-JVM lane) and deeper-than-cap rows (Arrow UDF
-    lane) must produce exactly the interp's results for every row —
-    the count-gated union path, not just either lane alone."""
-    import json as _json
-
-    from bd_spark.jsonq import interp, parser
-    from bd_spark.jsonq.runtime import JsonQ
-
-    docs = [
-        '{"a": {"b": [1, {"c": 2}]}, "d": 3}',   # depth 3: native
-        "[]", "{}", "5", "null",                  # trivial: native
-        '[[[["deep", {"x": [7]}]]]]',             # depth >3: UDF
-        '{"k": 1}',                               # depth 1: native
-    ]
-    jq = JsonQ(spark)
-    for q in ("[..]", "[paths]", "[leaf_paths]",
-              '[.. | .x?] | length', "[paths | length] | length"):
-        sp = jq.run_texts(q, docs)
-        it = [
-            e
-            for d in docs
-            for e in interp.run(parser.parse(q), _json.loads(d))
-        ]
-        assert sp == list(it), q
-
-
-def test_fused_paths_dict_matches_interp(spark):
-    """r8 fused-burst dict lane (_PATHS_HINT): a dict whose pairs use
-    paths/leaf_paths/foreach-over-paths in HEAD position shares ONE
-    staged enumeration union — values must equal the interp on
-    mixed-depth docs (shallow native lane, deep Arrow lane, scalars,
-    empties), and a NON-head paths (piped after a transform) must
-    not be fused (still correct). TIER_OVERRIDE pins the staged
-    tier: the r11 cost router would otherwise send these walk-heavy
-    programs to the interp, comparing the interp against itself."""
-    import json as _json
-
-    from bd_spark.jsonq import compiler, interp, parser
-    from bd_spark.jsonq.runtime import JsonQ
-
-    docs = [
-        '{"a": {"b": [1, {"c": 2}]}, "d": 3}',
-        "[]", "{}", "5", "null",
-        '[[[["deep", {"x": [7]}]]]]',
-        '{"k": 1}',
-        '{"z": [[], {}], "y": {"w": []}}',
-    ]
-    jq = JsonQ(spark)
-    queries = [
-        # fused: every paths head-positioned
-        '{p: [paths], l: [leaf_paths], n: (foreach paths as $x (0; . + 1))}',
-        '{flat: ([leaf_paths | join("-")] | length),'
-        " nk: (foreach paths as $p (0; . + 1))}",
-        # NOT fused (paths after a pipe stage) — correctness only
-        '{q: ([{w: .} | paths] | length), n: (foreach paths as $x (0; . + 1))}',
-    ]
-    compiler.TIER_OVERRIDE = "staged"
-    try:
-        for q in queries:
-            sp = jq.run_texts(q, docs)
-            assert compiler.last_tier() == "staged", q
-            it = [
-                e
-                for d in docs
-                for e in interp.run(parser.parse(q), _json.loads(d))
-            ]
-            assert len(sp) == len(it), q
-            for (sv, se), (iv, ie) in zip(sp, it):
-                assert (se is None) == (ie is None), (q, se, ie)
-                if se is None:
-                    assert sv == iv, (q, sv, iv)
-    finally:
-        compiler.TIER_OVERRIDE = None
-
-
-def test_generator_pipe_paths_right_side(spark):
-    """Regression (r9, ADVICE r8 high): GENERATOR | scalar-op splice
-    must NOT embed a paths Arrow UDF inside its transform lambda —
-    `[.xs[] | [paths]]` and `{p: (.xs[] | [leaf_paths])}` raised
-    AnalysisException UNSUPPORTED_FEATURE.LAMBDA_FUNCTION_WITH_
-    PYTHON_UDF at r8 HEAD. The splice (and _stream_list_spliced's
-    genpipe plan) now route paths-bearing right sides back through
-    the stream tier; values must equal the interp."""
-    import json as _json
-
-    from bd_spark.jsonq import interp, parser
-    from bd_spark.jsonq.runtime import JsonQ
-
-    docs = [
-        '{"xs": [{"a": 1}, {"b": {"c": 2}}]}',
-        '{"xs": []}',
-        '{"xs": [5, null, []]}',
-        '{"xs": [[[["deep", {"x": [7]}]]]]}',
-    ]
-    jq = JsonQ(spark)
-    queries = [
-        "[.xs[] | [paths]]",
-        "{p: (.xs[] | [leaf_paths])}",
-        ".xs[] | [paths]",
-        "[.xs[] | [paths] | length]",
-    ]
-    for q in queries:
-        sp = jq.run_texts(q, docs)
-        it = [
-            e
-            for d in docs
-            for e in interp.run(parser.parse(q), _json.loads(d))
-        ]
-        assert len(sp) == len(it), q
-        for (sv, se), (iv, ie) in zip(sp, it):
-            assert (se is None) == (ie is None), (q, se, ie)
-            if se is None:
-                assert sv == iv, (q, sv, iv)
-
-
 def test_udf_builtin_in_hof_body_routes(spark):
-    """UDF-emitting builtins (delpaths/strftime — pandas UDFs) inside
-    a map body have no staged lane (no HOF does): compile_query sends
-    map-bearing programs to the interp tier, where they evaluate
-    correctly. Values must equal the direct interp run. Literal-path
-    setpath stays corpus-tested on the staged tier (Assign desugar)."""
+    """Constructs with no staged lane — one corpus program per family,
+    UDF-needing builtins inside a map body, and a reduce and a foreach
+    over a non-generator source — run on the interp tier even under
+    the staged pin, with the direct interp's values and errors."""
     import json as _json
 
     from bd_spark.jsonq import compiler, interp, parser
@@ -1048,9 +1044,30 @@ def test_udf_builtin_in_hof_body_routes(spark):
     cases = [
         ('map(delpaths([["a"]]))', '[{"a": 1, "c": 3}]'),
         ('map(strftime("%Y"))', "[0, 1425599507]"),
+        ("flatten", "[1, [2, [3, [4]]], 5]"),
+        ('setpath(["xs", 3]; 1)', '{"xs": [0]}'),
+        ("delpaths([[0],[2]])", "[10,20,30]"),
+        ('strftime("%Y-%m-%dT%H:%M:%SZ")', "1425599507"),
+        ('strptime("%Y-%m-%dT%H:%M:%SZ")', '"2015-03-05T23:51:47Z"'),
+        ('[match("a"; "g") | .offset]', '"banana"'),
+        ("until(. > 100; . * 2)", "3"),
+        ("[while(. < 20; . * 2)]", "3"),
+        ("[limit(4; repeat(. * 2))]", "3"),
+        ("..|.a?", '[[{"a":1},{"a":2}],{"a":3}]'),
+        ("[paths]", '{"a": {"b": 1}, "c": [2]}'),
+        ("[leaf_paths]", '{"a": {"b": 1}, "c": [2]}'),
+        ("del(.a[1])", '{"a": [1, 2, 3]}'),
+        ("a * b", '{"a": 3, "b": 4}'),
+        ('reduce .[] as $w ({}; . * {($w): 1})', '["a", "b", "a"]'),
+        ("reduce .a as $x (0; . + $x)", '{"a": 3}'),
+        ("foreach .a as $x (0; . + $x)", '{"a": 3}'),
     ]
-    for q, doc in cases:
-        sp = jq.run_texts(q, [doc])
-        assert compiler.last_tier() == "interp", q
-        it = interp.run(parser.parse(q), _json.loads(doc))
-        assert sp == it, (q, sp, it)
+    compiler.TIER_OVERRIDE = "staged"
+    try:
+        for q, doc in cases:
+            sp = jq.run_texts(q, [doc])
+            assert compiler.last_tier() == "interp", q
+            it = interp.run(parser.parse(q), _json.loads(doc))
+            assert sp == it, (q, sp, it)
+    finally:
+        compiler.TIER_OVERRIDE = None

@@ -163,7 +163,7 @@ def test_rowlocal_text_ops_no_exchange(spark, sf_dir):
         assert "Join" not in plan, fn.__name__
 
 
-def test_jq_regex_rowlocal_native(spark, sf_dir):
+def test_jq_regex_rowlocal_native(spark, sf_dir, python_eval_nodes):
     """The regex/string builtin batch (sub/gsub/scan/splits/capture/
     explode/implode) compiles to native Java-regex Catalyst
     expressions: no shuffle, no Python UDF anywhere in the plan."""
@@ -202,7 +202,7 @@ def test_jq_regex_rowlocal_native(spark, sf_dir):
     assert "hashpartitioning(" not in plan
     assert "rangepartitioning(" not in plan
     assert "Join" not in plan and "Generate" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert python_eval_nodes(out) == []
 
 
 def test_pivot_explicit_values_two_phase(spark, sf_dir):
@@ -371,7 +371,7 @@ def test_bench_force_evaluates_every_column(spark):
     bench._force(df)
 
 
-def test_literal_path_program_all_native(spark, sf_dir):
+def test_literal_path_program_all_native(spark, sf_dir, python_eval_nodes):
     """setpath/getpath/del with LITERAL all-string paths (the common
     case, incl. the jq_paths gate's own setpath(["k2"]; ...)) compile
     to native variant navigation + native object assembly: no Python
@@ -400,7 +400,7 @@ def test_literal_path_program_all_native(spark, sf_dir):
         plan = _plan(out)
     finally:
         compiler.TIER_OVERRIDE = None
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert python_eval_nodes(out) == []
     assert "MapInPandas" not in plan and "mapInPandas" not in plan
     assert "Join" not in plan
     assert "hashpartitioning(" not in plan
@@ -411,10 +411,11 @@ def test_vexpr_primitives_are_udf_arg_safe(spark):
     conditional inside a nested lambda referencing an OUTER lambda's
     variable is silently skipped by ExtractPythonUDFs and dies at
     runtime with INTERNAL_ERROR 'Cannot evaluate expression'. The
-    vexpr primitives (vtype/vjson) are let-bound via vlet lambdas and
-    routinely feed pandas UDFs (_SETPATH_UDF, _paths_udf, _DELPATH_
-    UDF), so they must stay extraction-safe: assert the UDF lands in
-    an ArrowEvalPython/BatchEvalPython node and executes."""
+    vexpr primitives (vtype/vjson) are let-bound via vlet lambdas.
+    The staged jq tier no longer calls Python, but they are the
+    engine's public variant helpers (jsonq.pointer uses them too), so
+    any pandas UDF fed with them must still work: assert the UDF
+    lands in an ArrowEvalPython/BatchEvalPython node and executes."""
     from pyspark.sql import functions as F
 
     from bd_spark.jsonq import vexpr as V

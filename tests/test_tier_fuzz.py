@@ -8,11 +8,15 @@ reproduce; not hypothesis-driven because each example costs a Spark
 job, so programs are generated once and each runs ALL docs in one
 batched run_texts call (8 in flight, the corpus fixture pattern).
 
-Programs applying a HOF builtin (map/any/all, sort/unique, the
-sort_by family) have no staged lane: the routed run takes the interp
-tier, so for them this checks the mapInPandas wrapper (ord
-bookkeeping, error rows, the tagged-float round trip) against the
-direct interp.
+The runs are pinned to the staged tier (TIER_OVERRIDE="staged"), so
+every program the staged compiler can run is compared staged against
+interp, whatever the cost router would pick. Programs with a
+construct that has no staged lane (a HOF builtin such as map/any/all,
+sort/unique or the sort_by family; a `*` whose operands may both be
+objects) run on the interp tier even so: for them this checks the
+mapInPandas wrapper (ord bookkeeping, error rows, the tagged-float
+round trip) against the direct interp. Each run's tier is recorded in
+its worker and checked against compiler.choose_tier.
 
 Comparison contract (corpus convention): same output count, same
 error PRESENCE per entry, equal values on non-error entries. Error
@@ -107,24 +111,33 @@ def fuzz_results(spark):
 
     from concurrent.futures import ThreadPoolExecutor
 
-    def run(q):
-        try:
-            return jq.run_texts(q, docs)
-        except Exception as e:  # noqa: BLE001 — asserted per-case
-            return ("__raised__", f"{type(e).__name__}: {e}")
+    from bd_spark.jsonq import compiler
 
-    with ThreadPoolExecutor(max_workers=8) as ex:
-        return programs, docs, list(ex.map(run, programs))
+    def run(q):
+        # last_tier is per thread: read it in the worker
+        try:
+            out = jq.run_texts(q, docs)
+        except Exception as e:  # noqa: BLE001 — asserted per-case
+            out = ("__raised__", f"{type(e).__name__}: {e}")
+        return out, compiler.last_tier()
+
+    compiler.TIER_OVERRIDE = "staged"
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            return programs, docs, list(ex.map(run, programs))
+    finally:
+        compiler.TIER_OVERRIDE = None
 
 
 @pytest.mark.parametrize("idx", range(N_PROGRAMS))
 def test_tier_fuzz(fuzz_results, idx):
-    from bd_spark.jsonq import interp, parser
+    from bd_spark.jsonq import compiler, interp, parser
 
     programs, docs, results = fuzz_results
     q = programs[idx]
-    sp = results[idx]
+    sp, tier = results[idx]
     assert not (isinstance(sp, tuple) and sp[0] == "__raised__"), (q, sp)
+    assert tier == compiler.choose_tier(parser.parse(q), "staged")[0], q
     it = [
         e for d in docs for e in interp.run(parser.parse(q), _json.loads(d))
     ]

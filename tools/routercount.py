@@ -6,7 +6,8 @@ Usage: python tools/routercount.py
 Extracts each `jq.run('<program>', ...)` literal from
 bd_spark/queries/jsonq_queries.py (one per registry jq row), parses
 it with the production parser, and prints the _walk_heavy_score
-tuple plus the tier compile_query would choose. Diagnostic only —
+tuple plus compiler.choose_tier's (tier, reason) — the choice
+compile_query makes for the program. Diagnostic only —
 this is the calibration audit trail for the router thresholds
 (ADVICE r11 #1/#3: keep the counts auditable)."""
 
@@ -46,24 +47,6 @@ def extract_programs(path: str) -> dict[str, list[str]]:
     return out
 
 
-def tier_for(node: jast.Node) -> str:
-    if isinstance(node, jast.InterpOnly):
-        return "interp(InterpOnly)"
-    if compiler._node_count(node) > compiler._INTERP_TIER_NODES:
-        return "interp(nodes)"
-    e, r, h, c, s = compiler._walk_heavy_score(node)
-    if h >= 1:
-        return "interp (no staged lane)"
-    if (
-        (e >= 1 and e + r >= 2)
-        or r >= 2
-        or c >= 2
-        or s >= compiler._SCALAR_DISPATCH_THRESHOLD
-    ):
-        return "interp"
-    return "staged"
-
-
 def main() -> None:
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     src = os.path.join(here, "bd_spark", "queries", "jsonq_queries.py")
@@ -71,11 +54,12 @@ def main() -> None:
         for i, prog in enumerate(progs):
             node = parser.parse(prog)
             inner = node.expr if isinstance(node, jast.InterpOnly) else node
-            e, r, h, c, s = compiler._walk_heavy_score(inner)
+            r, c, s = compiler._walk_heavy_score(inner)
             suffix = f"[{i}]" if len(progs) > 1 else ""
+            tier, reason = compiler.choose_tier(node)
             print(
-                f"{name + suffix:24s} enums={e} rebuilds={r} hofs={h} "
-                f"collects={c} scalars={s:3d} -> {tier_for(node)}"
+                f"{name + suffix:24s} rebuilds={r} collects={c} "
+                f"scalars={s:3d} -> {tier} ({reason})"
             )
 
 

@@ -7,8 +7,9 @@ For each query name (or raw jq PROGRAM run over the standard
 documents stream), times min-warm exec (fresh DataFrame per rep,
 clearCache per rep, build excluded) under two tier overrides and
 compares row counts. TIER is staged|interp|auto (auto = cost model).
-A program with no staged lane (a HOF builtin, InterpOnly) is refused
-under the staged tier with a one-line message.
+A target whose program compiler.choose_tier will not stage (InterpOnly,
+or a construct with no staged lane) is refused under the staged tier
+with a one-line message naming the reason.
 Flags may appear in any order and are validated (r11 ADVICE #2: the
 old positional parse silently treated '-t' as a query name and blew
 up on a single tier). Diagnostic only — feeds the compile_query
@@ -23,9 +24,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import _force  # noqa: E402
-from bd_spark.jsonq import compiler  # noqa: E402
+from bd_spark.jsonq import compiler, parser  # noqa: E402
 from bd_spark.queries.registry import all_queries, extra_queries  # noqa: E402
 from bd_spark.session import get_spark  # noqa: E402
+from routercount import extract_programs  # noqa: E402
 
 _USAGE = (
     "usage: tierprobe.py [-n RUNS] [-t TIER,TIER] "
@@ -73,12 +75,26 @@ def _parse_args(argv: list[str]):
     return runs, tiers, targets
 
 
+def _staged_refusal(programs: list[str]) -> str | None:
+    """choose_tier's reason when any of `programs` runs on the interp
+    tier under the staged pin, else None."""
+    for prog in programs:
+        tier, reason = compiler.choose_tier(parser.parse(prog), "staged")
+        if tier != "staged":
+            return reason
+    return None
+
+
 def main() -> None:
     runs, tiers, targets = _parse_args(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("tierprobe")
     spark.sparkContext.setLogLevel("ERROR")
     qs = {**all_queries(), **extra_queries()}
+    registry_programs = extract_programs(
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
+            __file__))), "bd_spark", "queries", "jsonq_queries.py")
+    )
     print(f"load={os.getloadavg()[0]:.2f} sf={sf_dir} runs={runs}")
 
     def program_fn(prog: str):
@@ -108,9 +124,14 @@ def main() -> None:
                 continue
             fn = qs[target]
             label = target
+            refusal = _staged_refusal(registry_programs.get(target, []))
         else:
             fn = program_fn(target)
             label = target if len(target) <= 18 else target[:15] + "..."
+            refusal = _staged_refusal([target])
+        if "staged" in tiers and refusal is not None:
+            print(f"{label}: not staged ({refusal}), skipped")
+            continue
         row = {}
         for tier in tiers:
             compiler.TIER_OVERRIDE = tier
@@ -122,23 +143,15 @@ def main() -> None:
                     t0 = time.perf_counter()
                     df = fn(spark, sf_dir)
                     t1 = time.perf_counter()
-                    if tier and compiler.last_tier() != tier:
-                        break
                     _force(df)
                     times.append(time.perf_counter() - t1)
                     build = t1 - t0
-                if not times:
-                    print(f"{label}: no {tier} lane (HOF builtin or "
-                          "InterpOnly), skipped")
-                    break
                 rows = fn(spark, sf_dir).count()
                 row[tier or "auto"] = (
                     build, times[0], min(times[1:] or times), rows
                 )
             finally:
                 compiler.TIER_OVERRIDE = None
-        if len(row) < len(tiers):
-            continue
         la, lb = (t or "auto" for t in tiers)
         a, b = row[la], row[lb]
         flag = "" if a[3] == b[3] else "  ROWS-MISMATCH"
