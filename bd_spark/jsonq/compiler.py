@@ -5,18 +5,29 @@ from the program alone: the staged Catalyst compilation below, or the
 whole-query Arrow-batched interp tier (`_interp_tier`, one
 mapInPandas over bd_spark.jsonq.interp).
 
-The staged tier is pure JVM: its plans contain no Python UDF. A
-construct whose only staged form would call Python has no staged lane
-(`_unstaged_construct`): the higher-order builtins (HOF_BUILTINS),
-the unbounded-recursion and Python-library builtins (PY_BUILTINS),
-`..`, `del` on a path with an int segment, `*` unless one operand is
-provably not an object (the deep merge), and a `reduce` or `foreach`
-the staged fold cannot render (a source that is not a row-local
-generator, or a multi-valued init/update). A program containing one
-runs whole on the interp tier, whatever the tier pin, and such a node
-handed to the staged compiler raises instead of emitting Python.
+The staged tier is row-local and pure JVM: its plan is Project and
+Filter over the source stream (at most one row per input row, no
+shuffle, no Python UDF). A program runs whole on the interp tier,
+whatever the tier pin, when it breaks that rule (_unstaged_construct):
 
-Staged compilation strategy (three tiers):
+- a construct whose only staged form would call Python
+  (_unstaged_here): the higher-order builtins (HOF_BUILTINS), the
+  unbounded-recursion and Python-library builtins (PY_BUILTINS), `..`,
+  `del` on a path with an int segment, `*` unless one operand is
+  provably not an object (the deep merge), and a `reduce` or
+  `foreach` the staged fold cannot render (a source that is not a
+  row-local generator, or a multi-valued init/update);
+- a node that fans out (_rowlocal_breach): `.[]`, `.[a,b]` and `,`,
+  the generator builtins and `foreach`, anywhere but inside a
+  collect's payload or a reduce's source, where the row-local
+  renderers (_col_list, _elems_colfn, _col_reduce) turn the burst
+  into one array within the row; and a collect whose payload those
+  renderers cannot render, which would regroup a stream.
+
+Such a node handed to the staged compiler raises instead of emitting
+Python or a shuffle.
+
+Staged compilation strategy (two forms):
 
 1. **Staged projections** (default): every operator stage materializes
    its result as a temp column via `withColumn` over *leaf* column
@@ -29,15 +40,13 @@ Staged compilation strategy (three tiers):
 
 2. **Pure column expressions**: used inside lambda bodies (the
    `reduce`/`foreach` F.aggregate folds, list splices) where only a
-   single expression is possible, and for leaf ops.
+   single expression is possible, and for leaf ops. A generator
+   inside a collect or a fold becomes its whole burst as one
+   ARRAY<VARIANT> column (_elems_colfn).
 
-3. **Stream transforms**: the jq sequence monad — `.[]`, `.[a,b]`,
-   `[...]`/`{...}` with multi-valued parts, zip-paired binary
-   operands — as DataFrame ops over
-   ``(seq BIGINT, ord ARRAY<BIGINT>, v VARIANT, err STRING)``.
-   ``ord`` is the lexicographic burst-position path (replaces the
-   reference's IterPosition tracking, entry.rs:50-86); fan-out is DAG
-   reuse instead of the reference's rescan `Repeater` (db.rs:17-19).
+Rows are ``(seq BIGINT, ord ARRAY<BIGINT>, v VARIANT, err STRING)``;
+the staged tier keeps each input's ``ord`` (burst positions are
+appended only by the interp tier, runtime.py).
 
 Errors are data, not exceptions (entry.rs:30-32): a failing operator
 sets v to JSON null and fills `err`; downstream ops pass error rows
@@ -53,7 +62,7 @@ import json as _json
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bd_spark.jsonq import ast
@@ -69,7 +78,8 @@ ARG1_VALUE_BUILTINS = (
     "error", "index", "rindex", "indices",
 )
 
-# generator builtins: multi-valued output, stream fan-out only
+# generator builtins: several outputs per input, so staged only inside
+# a collect's payload or a fold's source (_elems_colfn)
 GENERATOR_BUILTINS = ("range", "paths", "leaf_paths", "scan", "splits",
                       "limit", "match", "while", "repeat")
 
@@ -137,24 +147,60 @@ def _never_object(node: ast.Node) -> bool:
     return _kind_not_object(_static_kind(node))
 
 
-def _unstaged_construct(node: object) -> str | None:
+def _rowlocal_breach(node: ast.Node) -> str | None:
+    """How THIS node breaks the staged tier's one-row-per-input rule,
+    if it does: it emits several outputs per input (`.[]`, `.[a,b]`
+    and `,`, a generator builtin, `foreach`), or it is a collect whose
+    payload the row-local renderers (_col_list) cannot render within
+    the row."""
+    if isinstance(node, ast.IterValues):
+        return ".[] (fans out)"
+    if isinstance(node, ast.Iter):
+        return ".[a,b] (fans out)"
+    if isinstance(node, ast.Foreach):
+        return "foreach (fans out)"
+    if isinstance(node, ast.Builtin) and node.name in GENERATOR_BUILTINS:
+        return f"{node.name} (fans out)"
+    if isinstance(node, ast.ListCons) and _col_list(node) is None:
+        return "[...] (regroups a stream)"
+    return None
+
+
+# (node type, field) slots whose stream a staged renderer consumes
+# within the row: a collect's payload (_col_list) and a reduce's
+# source (_col_reduce)
+_BURST_SLOTS = frozenset(((ast.ListCons, "expr"), (ast.Reduce, "source")))
+
+
+def _unstaged_construct(node: object, in_burst: bool = False) -> str | None:
     """The first construct in the program with no staged lane (see
     the module docstring), or None when the staged tier can run it.
-    Children are checked before their parent, so _unstaged_here never
-    asks the staged compiler about a subtree it would refuse."""
+    Outside a burst slot (`in_burst` False) a node must also be
+    row-local (_rowlocal_breach): the staged plan is Project and
+    Filter over the source, at most one row per input row. Children
+    are checked before their parent, so _unstaged_here never asks the
+    staged compiler about a subtree it would refuse."""
     import dataclasses
 
     if dataclasses.is_dataclass(node):
-        children = (getattr(node, f.name) for f in dataclasses.fields(node))
+        children = (
+            (getattr(node, f.name), (type(node), f.name) in _BURST_SLOTS)
+            for f in dataclasses.fields(node)
+        )
     elif isinstance(node, tuple):
-        children = iter(node)
+        children = ((c, False) for c in node)
     else:
         return None
-    for child in children:
-        found = _unstaged_construct(child)
+    for child, slot in children:
+        found = _unstaged_construct(child, in_burst or slot)
         if found is not None:
             return found
-    return _unstaged_here(node) if isinstance(node, ast.Node) else None
+    if not isinstance(node, ast.Node):
+        return None
+    found = _unstaged_here(node)
+    if found is None and not in_burst:
+        found = _rowlocal_breach(node)
+    return found
 
 
 def _refuse_unstaged(node: ast.Node) -> None:
@@ -380,7 +426,7 @@ def compile_col(node: ast.Node) -> ColFn | None:
             if segs:
                 return lambda v: _col_getpath_static(v, segs)
         if node.name in GENERATOR_BUILTINS:
-            return None  # generators need stream fan-out
+            return None  # a burst: only _elems_colfn renders it
         if node.name == "capture":
             return _compile_capture(node)
         argfns = [compile_col(a) for a in node.args]
@@ -1945,8 +1991,9 @@ def _col_list(node: ast.ListCons) -> ColFn | None:
     one element. An item that is itself a row-local generator (one
     `_elems_colfn` can render — `[scan(re)]`, `[.xs.[]]`, `[range(n)]`
     and scalar pipes into those) splices its whole burst in place, so
-    the collect stays a single projection instead of falling to the
-    stream tier's posexplode → collect_list → join round-trip."""
+    the collect stays a single projection. None when an item is
+    neither: such a collect would regroup a stream, so choose_tier
+    runs the program on the interp tier (_rowlocal_breach)."""
     if node.expr is None:
         return lambda v: CV(F.parse_json(F.lit("[]")))
     items = list(node.expr.items) if isinstance(node.expr, ast.Iter) else [node.expr]
@@ -1991,9 +2038,7 @@ def _col_list(node: ast.ListCons) -> ColFn | None:
         # native variant assembly (r6)
         out = V.varray(F.flatten(F.array(*segs)))
         if err is not None:
-            # value is jq null under an in-band error (stream-tier /
-            # interp parity — r7: the genpipe splice surfaced a burst
-            # whose error previously rode a stream error ENTRY)
+            # value is jq null under an in-band error (interp parity)
             out = F.when(err.isNotNull(), V.vnull()).otherwise(out)
         return CV(out, err, drop)
 
@@ -2189,31 +2234,6 @@ def _col_interp(node: ast.StrInterp) -> ColFn | None:
     return fn
 
 
-def _entries_colfn(node: ast.Node):
-    """Row-local generator -> ENTRIES array (the _fanout input shape:
-    array<struct<x: variant, er: string>>), value-column in. Foreach
-    keeps its emitted-states-then-error shape; every other
-    _elems_colfn-renderable generator yields value entries, with a
-    burst-level error collapsing to ONE error entry (the stream
-    tier's contract for a failed generator source)."""
-    if isinstance(node, ast.Foreach):
-        return _foreach_entries_col(node)
-    ef = _elems_colfn(node)
-    if ef is None:
-        return None
-
-    def fn(v: Column) -> Column:
-        cv = ef(v)
-        ents = F.transform(cv.v, lambda x: _entry(x, _null_str()))
-        if cv.err is not None:
-            ents = F.when(
-                cv.err.isNotNull(), F.array(_entry(V.vnull(), cv.err))
-            ).otherwise(ents)
-        return ents
-
-    return fn
-
-
 def _has_heavy_gen(node: ast.Node) -> bool:
     """True when the subtree contains a generator whose burst
     expression is HEAVY — a foreach fold. Splicing it inline
@@ -2381,7 +2401,8 @@ def _elems_colfn(node: ast.Node) -> ColFn | None:
         # the burst-CV contract — a mid-burst error voids the whole
         # burst (jq parity: an error escapes the enclosing collect /
         # reduce; the prior-values-then-error shape only matters for
-        # a TOP-LEVEL foreach, which _stream_foreach still renders)
+        # a TOP-LEVEL foreach, which fans out and runs on the interp
+        # tier)
         fe = _foreach_entries_col(node)
         if fe is None:
             return None
@@ -2751,8 +2772,8 @@ def compile_packed(node: ast.Node) -> PFn | None:  # noqa: PLR0911, PLR0912
         if any(is_multivalued(i) for i in items):
             # a row-local generator payload ([scan(re)], [.xs.[]],
             # [range(n)]) still collects in ONE projection via
-            # _col_list's burst splice — only generators _elems_colfn
-            # can't render fall through to the stream tier
+            # _col_list's burst splice (None when _elems_colfn can't
+            # render the generator)
             cf = _col_list(node)
             return (lambda p: _pk_chain(p, cf)) if cf is not None else None
         fns = [compile_packed(i) for i in items]
@@ -3364,12 +3385,6 @@ def _col_reduce(node: ast.Reduce) -> ColFn | None:
     return fn
 
 
-def _stream_reduce(node: ast.Reduce) -> StreamFn:
-    """Reduce stage: the native F.aggregate compile (fully
-    codegen-able for scalar folds)."""
-    return lift(_col_reduce(node))  # not None: _refuse_unstaged
-
-
 def _entry(x: Column, er: Column) -> Column:
     """A burst entry: value + optional in-band error."""
     return F.struct(x.alias("x"), er.alias("er"))
@@ -3381,46 +3396,12 @@ def _no_entries() -> Column:
     )
 
 
-def _fanout(df: DataFrame, entries: Column) -> DataFrame:
-    """Explode a per-row burst of (value, err) entries with `.[]`-style
-    ord bookkeeping. Upstream error rows pass through as one row; rows
-    whose burst is empty disappear."""
-    base = df.withColumn(
-        "__fent",
-        F.when(F.col("err").isNull(), entries),
-    )
-    carries = _carries(df)
-    ex = base.select(
-        "seq", "ord", "v", "err", *carries,
-        F.posexplode_outer("__fent").alias("__pos", "__fe"),
-    )
-    ex = ex.where(F.col("err").isNotNull() | F.col("__pos").isNotNull())
-    newv = (
-        F.when(F.col("err").isNotNull(), F.col("v"))
-        .when(F.col("__fe")["er"].isNotNull(), V.vnull())
-        .otherwise(F.col("__fe")["x"])
-    )
-    newerr = F.when(F.col("err").isNotNull(), F.col("err")).otherwise(
-        F.col("__fe")["er"]
-    )
-    neword = F.concat(
-        "ord", F.array(F.coalesce(F.col("__pos").cast("long"), F.lit(0)))
-    )
-    return ex.select(
-        "seq", neword.alias("ord"), newv.alias("v"),
-        newerr.alias("err"), *carries,
-    )
-
-
 def _foreach_entries_col(node: ast.Foreach):
     """Row-local `foreach` burst builder: value-column -> ENTRIES
-    array (the _fanout input shape — emitted states, then one error
-    entry if E/I/U errored, matching the interp). None when source/
-    init/update aren't row-local renderable. Shared by the stream
-    tier (_stream_foreach posexplodes it) and the single-burst dict
-    fast path / `[foreach ...]` collects (r8: jq_paths previously
-    paid a fan-out + burst-position window for a burst that is a
-    plain projection)."""
+    array (emitted states, then one error entry if E/I/U errored,
+    matching the interp), which _elems_colfn folds into a burst for
+    `[foreach ...]` collects and reduce sources. None when source/
+    init/update aren't row-local renderable."""
     elems = _elems_colfn(node.source)
     inf = None if is_multivalued(node.init) else compile_col(node.init)
     upf = None if is_multivalued(node.update) else compile_packed(node.update)
@@ -3495,22 +3476,12 @@ def _foreach_entries_col(node: ast.Foreach):
     return entries_fn
 
 
-def _stream_foreach(node: ast.Foreach) -> StreamFn:
-    """`foreach E as $x (I; U)`: one F.aggregate builds the per-row
-    array of emitted states (appending each update's result), then a
-    posexplode fan-out with `.[]`-style ord bookkeeping emits them as
-    a burst. An error in E/I/U yields the states already emitted
-    followed by one error entry, matching the interp."""
-    entries_fn = _foreach_entries_col(node)  # not None: _refuse_unstaged
-    return lambda df: _fanout(df, entries_fn(F.col("v")))
-
-
 def _stream_bind(node: ast.BindAs) -> StreamFn:
-    """`E as $x | B` with multi-valued E (or stream-needing B): run
-    E's stream (fan-out), stash each output in a fresh carried
-    column, restore the ORIGINAL input value, then run B per binding
-    with $x resolving to the carried column. Bindings ride the
-    existing carry mechanism, so every stream stage preserves them."""
+    """`E as $x | B` (E single-valued: choose_tier's row-local rule):
+    run E's stages, stash its value in a fresh carried column, restore
+    the ORIGINAL input value, then run B with $x resolving to the
+    carried column. The binding rides the carry mechanism, so every
+    stage of B preserves it."""
     sf = compile_stream(node.source)
     name, body = node.name, node.body
 
@@ -3849,18 +3820,16 @@ def _plan_direct_raw(
             except NotImplementedError:
                 return None
             return _pemit(plan, cf(inp.v), inp.err, name, in_depth)
-        if node.name in GENERATOR_BUILTINS:
-            return None  # generators need stream fan-out
         if node.args:
-            return None  # other multi-arg builtins stage fully
+            return None  # other builtins with arguments stage fully
         cv = _col_builtin(node.name, inp.v, [])
         return _pemit(plan, cv, inp.err, name, in_depth)
     if isinstance(node, ast.ListCons):
         # row-local collect — including LIGHT generator payloads
         # _col_list can splice ([scan(re)], [.xs.[]], [range(n)]);
-        # heavy payloads (foreach) and payloads _elems_colfn
-        # can't render stage through the stream tier, which binds the
-        # burst to a real column (one evaluation per row)
+        # heavy payloads (foreach) stage through compile_stream's
+        # _stream_list_spliced, which binds the burst to a real column
+        # (one evaluation per row)
         if _has_heavy_gen(node):
             return None
         cf = _col_list(node)
@@ -3873,17 +3842,11 @@ def _plan_direct_raw(
 def _stage_cv_many(
     df: DataFrame,
     items: list[tuple[ast.Node, str]],
-    force_land: bool = False,
 ) -> tuple[DataFrame, list[CV]]:
     """Stage several independent single-valued nodes against the same
     input v/err. Direct-stageable items share ONE layered plan (a wide
     dict's values land in ~3 withColumns instead of ~3 per value);
-    constants inline; everything else falls back to full _stage.
-
-    force_land: every item ends up in REAL columns {name}_v/{name}_e
-    (consumers that read the columns after v/err have been replaced —
-    the single-burst dict assembly — need that; plain CV consumers
-    don't and skip the extra columns for constants/identity)."""
+    constants inline; everything else falls back to full _stage."""
     out: dict[int, CV] = {}
     plan = _Plan()
     fallback: list[tuple[int, ast.Node, str]] = []
@@ -3892,10 +3855,6 @@ def _stage_cv_many(
     for i, (node, name) in enumerate(items):
         cv = _inline_cv(node)
         if cv is not None:
-            if force_land:
-                scratch = _Plan()
-                cv, _, _ = _pemit(scratch, cv, None, name, -1)
-                plan.merge(scratch)
             out[i] = cv
             continue
         # plan into a private scratch first: a mid-chain failure must
@@ -3918,8 +3877,8 @@ def _stage_cv_many(
         # FINAL columns — re-land those into {name}_v/{name}_e here.
         # Bare Identity/Literal items reference only the root v/err
         # (never dropped) and skip the extra column.
-        if landed is None and (
-            force_land or not isinstance(node, (ast.Identity, ast.Literal))
+        if landed is None and not isinstance(
+            node, (ast.Identity, ast.Literal)
         ):
             cv, depth, landed = _pemit(scratch, cv, None, name, depth)
         plan.merge(scratch)
@@ -3974,8 +3933,6 @@ def compile_stream(node: ast.Node) -> StreamFn:
         return run_unary
 
     if isinstance(node, ast.Binary):
-        if is_multivalued(node.left) or is_multivalued(node.right):
-            return _stream_binary_zip(node)
         op = node.op
         left, right = node.left, node.right
 
@@ -3990,17 +3947,8 @@ def compile_stream(node: ast.Node) -> StreamFn:
         return run_binary
 
     if isinstance(node, ast.Assign):
-        af = _compile_assign(node)
-        if af is None:
-            raise NotImplementedError(
-                "assignment RHS must be a single-valued scalar expression"
-            )
-        return lift(af)
+        return lift(_compile_assign(node))
     if isinstance(node, ast.Try):
-        if is_multivalued(node.expr):
-            raise NotImplementedError(
-                "try on a multi-valued expression; use the `?` form (.[]?)"
-            )
         texpr = node.expr
 
         def run_try(df: DataFrame) -> DataFrame:
@@ -4010,11 +3958,6 @@ def compile_stream(node: ast.Node) -> StreamFn:
 
         return run_try
     if isinstance(node, ast.If):
-        parts = [n for c, b in node.branches for n in (c, b)] + [node.orelse]
-        if any(is_multivalued(p) for p in parts):
-            raise NotImplementedError(
-                "if/then/else branches must be single-valued"
-            )
         branches, orelse = node.branches, node.orelse
 
         def run_ifstream(df: DataFrame) -> DataFrame:
@@ -4031,7 +3974,7 @@ def compile_stream(node: ast.Node) -> StreamFn:
             return _finish(df, cur, drop_cols=dead)
 
         return run_ifstream
-    if isinstance(node, ast.Builtin):
+    if isinstance(node, ast.Builtin) and node.name not in GENERATOR_BUILTINS:
         if node.name == "select":
             sarg = node.args[0]
 
@@ -4070,108 +4013,6 @@ def compile_stream(node: ast.Node) -> StreamFn:
                 )
 
             return run_arg2
-        if node.name in ("scan", "splits", "limit") or (
-            node.name == "range" and len(node.args) == 3
-        ):
-            ef = _elems_colfn(node)
-            if ef is None:
-                if node.name == "limit":
-                    # inner stream isn't row-local renderable (piped
-                    # generators, nested fan-out): generic take-n
-                    return _stream_limit(node.args[0], node.args[1])
-                raise NotImplementedError(
-                    f"{node.name}: arguments must be row-local"
-                )
-
-            def run_regex_gen(df: DataFrame) -> DataFrame:
-                """One burst fan-out: matches (scan) / pieces (splits)
-                of the value string, `.[]`-style ord bookkeeping."""
-                cv = ef(F.col("v"))
-                gerr = cv.err if cv.err is not None else _null_str()
-                base = df.withColumns({
-                    "__gent": F.when(
-                        F.col("err").isNull() & gerr.isNull(),
-                        F.transform(cv.v, lambda x: _entry(x, _null_str())),
-                    ),
-                    "err": F.coalesce(F.col("err"), gerr),
-                })
-                base = base.withColumn(
-                    "v",
-                    F.when(F.col("err").isNotNull() & F.col("__gent").isNull(),
-                           V.vnull()).otherwise(F.col("v")),
-                )
-                return _fanout(base, F.col("__gent")).drop("__gent")
-
-            return run_regex_gen
-        if node.name == "range":
-            rarg = node.args[0]
-
-            def run_range(df: DataFrame) -> DataFrame:
-                """range(n): emit longs 0,1,... while < n (empty for
-                n <= 0, jq semantics incl. fractional bounds); one
-                posexplode fan-out, same ord bookkeeping as `.[]`."""
-                an = _fresh("r")
-                df, acv = _stage_cv(df, rarg, an)
-                t = V.vtype(acv.v)
-                nb = V.as_double(acv.v)
-                cnt = F.ceil(nb).cast("long")
-                aerr = (
-                    acv.err
-                    if acv.err is not None
-                    else F.lit(None).cast("string")
-                )
-                # no fan-out for rows already errored upstream
-                seqarr = F.when(
-                    F.col("err").isNull()
-                    & aerr.isNull()
-                    & V.is_number(t)
-                    & (cnt > 0),
-                    F.sequence(F.lit(0), cnt - 1),
-                )
-                base = (
-                    df.withColumn("__rt", t)
-                    .withColumn("__rerr", aerr)
-                    .withColumn("__rnum", V.is_number(t))
-                    .withColumn("__relems", seqarr)
-                )
-                carries = [
-                    c for c in _carries(df)
-                    if c not in (f"{an}_v", f"{an}_e")
-                ]
-                ex = base.select(
-                    "seq", "ord", "v", "err", *carries,
-                    "__rt", "__rerr", "__rnum",
-                    F.posexplode_outer("__relems").alias("__pos", "__rv"),
-                )
-                bad = F.col("__rerr").isNotNull() | ~F.col("__rnum")
-                keep = (
-                    F.col("err").isNotNull()
-                    | F.col("__pos").isNotNull()
-                    | bad
-                )
-                ex = ex.where(keep)
-                newv = F.when(
-                    F.col("err").isNull() & F.col("__pos").isNotNull(),
-                    V.vlong(F.col("__rv")),
-                ).otherwise(V.vnull())
-                newerr = (
-                    F.when(F.col("err").isNotNull(), F.col("err"))
-                    .when(F.col("__rerr").isNotNull(), F.col("__rerr"))
-                    .when(
-                        ~F.col("__rnum"),
-                        F.concat(F.lit("range on "), F.col("__rt")),
-                    )
-                )
-                neword = F.concat(
-                    "ord",
-                    F.array(F.coalesce(F.col("__pos").cast("long"), F.lit(0))),
-                )
-                return ex.select(
-                    "seq", neword.alias("ord"), newv.alias("v"),
-                    newerr.alias("err"), *carries,
-                )
-
-            return run_range
         return lift(lambda v: _col_builtin(node.name, v, []))
 
     if isinstance(node, ast.Var):
@@ -4184,36 +4025,24 @@ def compile_stream(node: ast.Node) -> StreamFn:
             )
         return lift(cf)
     if isinstance(node, ast.Reduce):
-        return _stream_reduce(node)
-    if isinstance(node, ast.Foreach):
-        return _stream_foreach(node)
+        return lift(_col_reduce(node))  # not None: _refuse_unstaged
     if isinstance(node, ast.BindAs):
         # always the staged form: the carried binding column is a LEAF
         # for every $var reference in the body, where the pure-column
         # form would substitute the source's whole expression tree at
         # each reference (jq_fold cold plan build: 31 s -> ~2 s)
         return _stream_bind(node)
-
-    if isinstance(node, ast.IterValues):
-        return _stream_itervalues(node.opt)
-    if isinstance(node, ast.Iter):
-        return _stream_iter(node.items)
     if isinstance(node, ast.ListCons):
         # heavy generator payloads stage their burst as a column
         # (one evaluation per row); light payloads splice row-locally
-        # via _col_list; posexplode fan-out only for payloads
-        # _elems_colfn can't render
-        sf = _stream_list_spliced(node)
-        if sf is not None:
-            return sf
-        cf = _col_list(node)
-        if cf is not None:
-            return lift(cf)
-        return _stream_list(node.expr)
+        # via _col_list (not None: choose_tier's row-local rule)
+        return _stream_list_spliced(node) or lift(_col_list(node))
     if isinstance(node, ast.DictCons):
         return _stream_dict(node.pairs)
 
-    raise NotImplementedError(f"cannot compile {node!r}")
+    # `.[]`, `.[a,b]`, generators and foreach fan out: choose_tier
+    # runs such programs on the interp tier (_rowlocal_breach)
+    raise NotImplementedError(f"no staged lane for {node!r}")
 
 
 def _finish(df: DataFrame, cv: CV, drop_cols: list[str]) -> DataFrame:
@@ -4233,166 +4062,6 @@ def _finish(df: DataFrame, cv: CV, drop_cols: list[str]) -> DataFrame:
 
 
 # ------------------------------------------------------------ streams
-def _stream_itervalues(opt: bool) -> StreamFn:
-    """`.[]` — array elements / object values in key order
-    (ops.rs:414-477); scalar -> error entry (or dropped with `?`)."""
-
-    def run(df: DataFrame) -> DataFrame:
-        t = V.vtype(F.col("v"))
-        elems = (
-            F.when(t == "array", V.as_array(F.col("v")))
-            .when(t == "object", F.map_values(V.as_map(F.col("v"))))
-            .otherwise(F.lit(None))
-        )
-        base = df.withColumn("__t", t).withColumn("__elems", elems)
-        ex = base.select(
-            "seq", "ord", "v", "err", *_carries(df), "__t",
-            F.posexplode_outer("__elems").alias("__pos", "__ev"),
-            F.col("__elems").isNotNull().alias("__iterable"),
-        )
-        keep = (
-            F.col("err").isNotNull()
-            | F.col("__pos").isNotNull()
-            | (~F.col("__iterable") & F.lit(not opt))
-        )
-        ex = ex.where(keep)
-        newv = (
-            F.when(F.col("err").isNotNull(), F.col("v"))
-            .when(F.col("__pos").isNotNull(), F.col("__ev"))
-            .otherwise(V.vnull())
-        )
-        newerr = F.when(F.col("err").isNotNull(), F.col("err")).when(
-            F.col("__pos").isNull() & ~F.col("__iterable"),
-            F.concat(F.lit("cannot iterate "), F.col("__t")),
-        )
-        neword = F.concat("ord", F.array(F.coalesce(F.col("__pos").cast("long"), F.lit(0))))
-        return ex.select(
-            "seq", neword.alias("ord"), newv.alias("v"), newerr.alias("err"),
-            *_carries(df),
-        )
-
-    return run
-
-
-def _burst_pos(df: DataFrame, g: str) -> DataFrame:
-    w = Window.partitionBy(g).orderBy("ord")
-    return df.withColumn("__pos", (F.row_number().over(w) - 1).cast("long"))
-
-
-def _stream_limit(narg: ast.Node, fexpr: ast.Node) -> StreamFn:
-    """Generic stream-tier `limit(n; f)` (jq `def first(f): limit(1; f)`;
-    reference burst-position machinery entry.rs:50-86): evaluate `n`
-    row-locally against the input, run `f` through the stream tier,
-    then keep the first n burst rows per input entry — one row_number
-    over the lexicographic `ord` path, partitioned by the entry
-    identity captured BEFORE `f` fans out. Interp parity: error
-    entries emitted by `f` count toward the limit; an error evaluating
-    `n` yields one error row; n <= 0 is an empty stream (the row
-    disappears)."""
-    if is_multivalued(narg):
-        raise NotImplementedError("limit: count must be single-valued")
-    ff = compile_stream(fexpr)
-
-    def run(df: DataFrame) -> DataFrame:
-        g, nn = _fresh("g"), _fresh("ln")
-        cnt, pre, rn = _fresh("lc"), _fresh("lp"), _fresh("lr")
-        base = df.withColumn(g, F.struct("seq", "ord"))
-        base, ncv = _stage_cv(base, narg, nn)
-        tn = V.vtype(ncv.v)
-        nerr = _merge_err(
-            ncv.err,
-            F.when(tn != "int", F.concat(F.lit("limit count on "), tn)),
-        )
-        base = base.withColumns({
-            cnt: F.when(
-                F.col("err").isNull()
-                & (nerr.isNull() if nerr is not None else F.lit(True)),
-                F.greatest(V.as_long(ncv.v), F.lit(0).cast("long")),
-            ),
-            "err": F.coalesce(F.col("err"), nerr)
-            if nerr is not None else F.col("err"),
-        })
-        # pre-existing errors (incl. a bad count) pass through f as one
-        # row and must survive the take-n filter
-        base = base.withColumn(pre, F.col("err").isNotNull())
-        base = base.drop(f"{nn}_v", f"{nn}_e")
-        out = ff(base)
-        w = Window.partitionBy(g).orderBy("ord")
-        out = out.withColumn(rn, F.row_number().over(w))
-        out = out.where(F.col(pre) | (F.col(rn) <= F.col(cnt)))
-        return out.drop(g, cnt, pre, rn)
-
-    return run
-
-
-def _stream_iter(items: tuple[ast.Node, ...]) -> StreamFn:
-    """`.[e1,e2,...]` — one burst per branch, output order (cycle,
-    branch) reproducing the corpus order (query.rs:579-591)."""
-
-    def run(df: DataFrame) -> DataFrame:
-        g = _fresh("g")
-        base = df.withColumn(g, F.struct("seq", "ord"))
-        outs = []
-        for bi, item in enumerate(items):
-            s = compile_stream(item)(base)
-            s = _burst_pos(s, g)
-            outs.append(
-                s.select(
-                    F.col(g)["seq"].alias("seq"),
-                    F.concat(
-                        F.col(g)["ord"],
-                        F.array(F.col("__pos"), F.lit(bi).cast("long")),
-                    ).alias("ord"),
-                    "v",
-                    "err",
-                    *[c for c in _carries(df)],
-                )
-            )
-        out = outs[0]
-        for o in outs[1:]:
-            out = out.unionByName(o)
-        return out
-
-    return run
-
-
-def _stream_binary_zip(node: ast.Binary) -> StreamFn:
-    """Binary op with multi-valued operand(s): the reference zips the
-    two bursts pairwise, stopping at the shorter (ops.rs:827-833) —
-    an inner join on (input, burst position)."""
-
-    def run(df: DataFrame) -> DataFrame:
-        g = _fresh("g")
-        base = df.withColumn(g, F.struct("seq", "ord"))
-        sides = []
-        for side_node in (node.left, node.right):
-            s = compile_stream(side_node)(base)
-            s = _burst_pos(s, g)
-            sides.append(s)
-        l = sides[0].select(
-            F.col(g), F.col("__pos"), F.col("v").alias("__lv"), F.col("err").alias("__le"),
-            *_carries(df),
-        )
-        r = sides[1].select(
-            F.col(g), F.col("__pos"), F.col("v").alias("__rv"), F.col("err").alias("__re")
-        )
-        j = l.join(r, on=[g, "__pos"])
-        cv = _col_binary(
-            node.op, CV(F.col("__lv"), F.col("__le")), CV(F.col("__rv"), F.col("__re")),
-            _static_kind(node.left), _static_kind(node.right),
-        )
-        err = cv.err if cv.err is not None else F.lit(None).cast("string")
-        return j.select(
-            F.col(g)["seq"].alias("seq"),
-            F.concat(F.col(g)["ord"], F.array(F.col("__pos"))).alias("ord"),
-            cv.v.alias("v"),
-            err.alias("err"),
-            *_carries(df),
-        )
-
-    return run
-
-
 def _stage_burst(
     df: DataFrame, node: ast.Node
 ) -> tuple[DataFrame, str, str | None] | None:
@@ -4517,267 +4186,40 @@ def _stream_list_spliced(node: ast.ListCons) -> StreamFn | None:
     return run
 
 
-def _stream_list(expr: ast.Node | None) -> StreamFn:
-    """`[expr]` — collect each input's burst into one array
-    (ops.rs:543-597); left join back preserves empty bursts as []."""
-    if expr is None:
-        return lift(lambda v: CV(F.parse_json(F.lit("[]"))))
-
-    def run(df: DataFrame) -> DataFrame:
-        g = _fresh("g")
-        base = df.withColumn(g, F.struct("seq", "ord"))
-        s = compile_stream(expr)(base)
-        collected = s.groupBy(g).agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("ord"), F.col("err"), V.vjson(F.col("v")).alias("j")))
-            ).alias("__items")
-        )
-        joined = base.select("seq", "ord", "err", g, *_carries(df)).join(
-            collected, on=g, how="left"
-        )
-        items = F.coalesce(F.col("__items"), F.array())
-        errs = F.filter(items, lambda x: x["err"].isNotNull())
-        burst_err = F.when(F.size(errs) > 0, F.element_at(errs, 1)["err"])
-        arr_json = F.concat(
-            F.lit("["), F.concat_ws(",", F.transform(items, lambda x: x["j"])), F.lit("]")
-        )
-        newv = (
-            F.when(F.col("err").isNotNull(), V.vnull())
-            .when(burst_err.isNotNull(), V.vnull())
-            .otherwise(F.parse_json(arr_json))
-        )
-        newerr = F.coalesce(F.col("err"), burst_err)
-        return joined.select(
-            "seq", "ord", newv.alias("v"), newerr.alias("err"), *_carries(df)
-        )
-
-    return run
-
-
 def _stream_dict(pairs: tuple[ast.DictPair, ...]) -> StreamFn:
-    """`{...}` — cartesian product across every key/value burst
-    (ops.rs:665-681), non-string keys skipped, dup keys last-wins
-    (json.rs:501-507).
+    """`{...}` with single-valued keys and values (a multi-valued part
+    makes the dict a cartesian product, ops.rs:665-681, which fans out
+    and runs on the interp tier): staged projections, non-string keys
+    skipped, dup keys last-wins (json.rs:501-507)."""
+    skeys = [static_dict_key(p.key) for p in pairs]
+    if all(k is not None for k in skeys):
 
-    Scalar parts (the common case) stay in staged projections — no
-    joins; only multi-valued parts pay the burst-join."""
-    scalar = all(
-        not is_multivalued(p.key) and not is_multivalued(p.value) for p in pairs
-    )
-    if scalar:
-        skeys = [static_dict_key(p.key) for p in pairs]
-        if all(k is not None for k in skeys):
-
-            def run_scalar_static(df: DataFrame) -> DataFrame:
-                # static keys never stage: only the values enter the
-                # shared layered plan (half the stages of the general
-                # path), and the dict body is the cheap static concat
-                names = [_fresh("dv") for _ in pairs]
-                drops = [f"{n}_v" for n in names] + [f"{n}_e" for n in names]
-                df, flat = _stage_cv_many(
-                    df, [(p.value, n) for p, n in zip(pairs, names)]
-                )
-                cv = _col_dict_static(list(zip(skeys, flat)))
-                return _finish(df, cv, drop_cols=drops)
-
-            return run_scalar_static
-
-        def run_scalar(df: DataFrame) -> DataFrame:
-            items: list[tuple[ast.Node, str]] = []
-            drops = []
-            for pair in pairs:
-                kn, vn = _fresh("dk"), _fresh("dv")
-                items += [(pair.key, kn), (pair.value, vn)]
-                drops += [f"{kn}_v", f"{kn}_e", f"{vn}_v", f"{vn}_e"]
-            # one shared layered plan across every key and value: the
-            # whole dict lands in O(max chain depth) withColumns
-            df, flat = _stage_cv_many(df, items)
-            cvs = [(flat[2 * i], flat[2 * i + 1]) for i in range(len(pairs))]
-            cv = _col_dict(cvs)
+        def run_static(df: DataFrame) -> DataFrame:
+            # static keys never stage: only the values enter the
+            # shared layered plan (half the stages of the general
+            # path), and the dict body is the cheap static concat
+            names = [_fresh("dv") for _ in pairs]
+            drops = [f"{n}_v" for n in names] + [f"{n}_e" for n in names]
+            df, flat = _stage_cv_many(
+                df, [(p.value, n) for p, n in zip(pairs, names)]
+            )
+            cv = _col_dict_static(list(zip(skeys, flat)))
             return _finish(df, cv, drop_cols=drops)
 
-        return run_scalar
-
-    # static-keyed pairs skip their key stream entirely (a literal key
-    # is single-valued with burst position 0 for every row — joining
-    # its stream in adds a join and an ord component that carry no
-    # information); dup static keys are rare and fall back to the
-    # fully-runtime path so burst-wise last-wins stays exact
-    skeys_all = [static_dict_key(p.key) for p in pairs]
-    statics = [k for k in skeys_all if k is not None]
-    if len(set(statics)) != len(statics):
-        skeys_all = [None] * len(pairs)
-
-    # Single-burst fast path (r8): all keys static, exactly ONE
-    # multi-valued value, and that value's burst renders row-locally
-    # (iterator / generator builtin / foreach). The cartesian product
-    # with one generator IS that generator's burst with the scalar
-    # pairs spliced into every element — one projection + one
-    # posexplode, no per-pair stream, no burst-position WINDOW, no
-    # join. (jq_paths' dict previously paid _burst_pos's row_number
-    # shuffle for a one-element burst.) Error parity with the join
-    # path: per product row, the first error in PAIR order wins; a
-    # failed generator SOURCE is one error entry.
-    multi = [i for i, p in enumerate(pairs) if is_multivalued(p.value)]
-    if (
-        all(k is not None for k in skeys_all)
-        and not any(is_multivalued(p.key) for p in pairs)
-        and len(multi) == 1
-    ):
-        mi = multi[0]
-        gen_entries = _entries_colfn(pairs[mi].value)
-        if gen_entries is not None:
-
-            def run_single_burst(df: DataFrame) -> DataFrame:
-                # ONE shared layered plan for every scalar pair
-                # (force_land: the assembly below reads the
-                # {n}_v/{n}_e columns AFTER the fan-out replaced
-                # v/err); non-direct pairs fall back to _stage inside
-                # the same call
-                staged: dict[int, str] = {}
-                sitems: list[tuple[ast.Node, str]] = []
-                for pi, pair in enumerate(pairs):
-                    if pi == mi:
-                        continue
-                    staged[pi] = _fresh("dsc")
-                    sitems.append((pair.value, staged[pi]))
-                work, _ = _stage_cv_many(df, sitems, force_land=True)
-                # stage the generator's ENTRIES burst as a real
-                # column and assemble the dict AFTER the fan-out: the
-                # Generate is a CollapseProject barrier, so the heavy
-                # staged trees (scalar pairs + the burst) never merge
-                # into one projection — building the dict per-entry
-                # BEFORE the explode let the optimizer inline every
-                # staged pair into the entries lambda and re-split
-                # struct fields to a 2.4 MB projection with ~26x
-                # duplicated subtrees (measured)
-                gb, pre = _fresh("gb"), _fresh("pre")
-                work = work.withColumns({
-                    gb: gen_entries(F.col("v")),
-                    pre: F.col("err").isNotNull(),
-                })
-                ex = _fanout(work, F.col(gb))
-                # post-explode: v = the generator entry's value (or
-                # null), err = pre-error or the entry's error
-                kv = F.array(*[
-                    F.struct(
-                        F.lit(skeys_all[i]).alias("k"),
-                        (
-                            F.col("v")
-                            if i == mi
-                            else F.col(f"{staged[i]}_v")
-                        ).alias("v"),
-                    )
-                    for i in range(len(pairs))
-                ])
-                valid = F.filter(
-                    kv, lambda t: t["k"].isNotNull() & t["v"].isNotNull()
-                )
-                obj = F.to_variant_object(F.map_from_entries(valid))
-                # first error in PAIR order, the generator's at its
-                # own position (join-path parity)
-                err = F.coalesce(*[
-                    F.col("err") if i == mi else F.col(f"{staged[i]}_e")
-                    for i in range(len(pairs))
-                ])
-                newv = (
-                    F.when(F.col(pre), F.col("v"))
-                    .when(err.isNotNull(), V.vnull())
-                    .otherwise(obj)
-                )
-                newerr = F.when(F.col(pre), F.col("err")).otherwise(err)
-                return ex.withColumns(
-                    {"v": newv, "err": newerr}
-                ).drop(gb, pre, *[
-                    c for n in staged.values()
-                    for c in (f"{n}_v", f"{n}_e")
-                ])
-
-            return run_single_burst
+        return run_static
 
     def run(df: DataFrame) -> DataFrame:
-        # r7: SINGLE-VALUED static-keyed pairs stage as carried
-        # columns on the input — no per-pair stream, no join; only
-        # genuinely multi-valued parts pay the burst-join cartesian.
-        # (jq_paths' dict previously joined 4 streams for its 1
-        # multi-valued pair: 3 row-key shuffle joins for values that
-        # are plain projections. A staged single-valued pair is
-        # burst-position 0 in every product anyway, so dropping its
-        # ord component changes nothing observable.)
-        staged: dict[int, str] = {}
-        work = df
-        for pi, pair in enumerate(pairs):
-            if skeys_all[pi] is not None and not is_multivalued(pair.value):
-                n = _fresh("dsc")
-                work = _stage(work, pair.value, n)
-                staged[pi] = n
-        g = _fresh("g")
-        base = work.withColumn(g, F.struct("seq", "ord"))
-        pair_cols: list[dict[str, tuple[str, str, str]]] = []
-        joined: DataFrame | None = None
-        for pi, pair in enumerate(pairs):
-            if pi in staged:
-                pair_cols.append({})
-                continue
-            roles = (("k", pair.key), ("v", pair.value))
-            if skeys_all[pi] is not None:
-                roles = (("v", pair.value),)
-            cols: dict[str, tuple[str, str, str]] = {}
-            for role, expr in roles:
-                s = compile_stream(expr)(base)
-                s = _burst_pos(s, g)
-                pc, vc, ec = f"__p{pi}{role}", f"__v{pi}{role}", f"__e{pi}{role}"
-                sel = s.select(
-                    F.col(g),
-                    F.col("__pos").alias(pc),
-                    F.col("v").alias(vc),
-                    F.col("err").alias(ec),
-                    *([] if joined is not None else _carries(work)),
-                )
-                cols[role] = (pc, vc, ec)
-                joined = sel if joined is None else joined.join(sel, on=g)
-            pair_cols.append(cols)
-        if joined is None:  # defensive: all pairs staged
-            joined = base
-        flat = [t for cols in pair_cols for t in cols.values()]
-        ordcol = F.concat(F.col(g)["ord"], F.array(*[F.col(pc) for pc, _, _ in flat]))
-        entries = F.array(
-            *[
-                F.struct(
-                    (
-                        F.lit(skeys_all[i])
-                        if skeys_all[i] is not None
-                        else V.as_string(F.col(pair_cols[i]["k"][1]))
-                    ).alias("k"),
-                    (
-                        F.col(f"{staged[i]}_v")
-                        if i in staged
-                        else F.col(pair_cols[i]["v"][1])
-                    ).alias("v"),
-                )
-                for i in range(len(pairs))
-            ]
-        )
-        valid = F.filter(
-            entries, lambda e: e["k"].isNotNull() & e["v"].isNotNull()
-        )
-        # native assembly (r6); map_from_entries dedups LAST_WIN
-        obj = F.to_variant_object(F.map_from_entries(valid))
-        errs: list[Column] = []
-        for i in range(len(pairs)):
-            if i in staged:
-                errs.append(F.col(f"{staged[i]}_e"))
-            else:
-                errs.extend(F.col(ec) for _, _, ec in pair_cols[i].values())
-        err = F.coalesce(*errs) if errs else F.lit(None).cast("string")
-        newv = F.when(err.isNotNull(), V.vnull()).otherwise(obj)
-        return joined.select(
-            F.col(g)["seq"].alias("seq"),
-            ordcol.alias("ord"),
-            newv.alias("v"),
-            err.alias("err"),
-            *_carries(df),
-        )
+        items: list[tuple[ast.Node, str]] = []
+        drops = []
+        for pair in pairs:
+            kn, vn = _fresh("dk"), _fresh("dv")
+            items += [(pair.key, kn), (pair.value, vn)]
+            drops += [f"{kn}_v", f"{kn}_e", f"{vn}_v", f"{vn}_e"]
+        # one shared layered plan across every key and value: the
+        # whole dict lands in O(max chain depth) withColumns
+        df, flat = _stage_cv_many(df, items)
+        cvs = [(flat[2 * i], flat[2 * i + 1]) for i in range(len(pairs))]
+        return _finish(df, _col_dict(cvs), drop_cols=drops)
 
     return run
 
@@ -4857,8 +4299,8 @@ def _walk_heavy_score(node: object) -> tuple[int, int, int]:
     interpreted work that drive choose_tier's cost routing:
       rebuilds — `del` builtins and `|=`/`=` assignment nodes
                  (whole-document rewrites);
-      collects — list/dict constructions collecting a MULTIVALUED
-                 burst (stream fan-out + reassembly);
+      collects — list constructions collecting a MULTIVALUED burst
+                 (a row-local splice of the whole burst);
       scalars  — Binary/Unary/Slice nodes and
                  _SCALAR_DISPATCH_BUILTINS applications, each an
                  interpreted variant type-dispatch tower per row on
@@ -4878,10 +4320,6 @@ def _walk_heavy_score(node: object) -> tuple[int, int, int]:
     elif isinstance(node, ast.ListCons):
         if node.expr is not None and is_multivalued(node.expr):
             collects += 1
-    elif isinstance(node, ast.DictCons):
-        collects += sum(
-            1 for p in node.pairs if is_multivalued(p.value)
-        )
     if dataclasses.is_dataclass(node):
         children = [getattr(node, f.name) for f in dataclasses.fields(node)]
     elif isinstance(node, tuple):

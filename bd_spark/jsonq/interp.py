@@ -269,14 +269,25 @@ def _e_try(node: ast.Try, v: object) -> list[Entry]:
 
 
 def _e_if(node: ast.If, v: object) -> list[Entry]:
-    for c, b in node.branches:
-        couts = _eval(c, v)
-        cv, ce = couts[0] if couts else (None, "empty condition")
+    return _if_from(node, 0, v)
+
+
+def _if_from(node: ast.If, i: int, v: object) -> list[Entry]:
+    """`if` from branch i on (jq): one result per output of the
+    condition, so an empty condition yields nothing; a condition
+    error is an error entry, and an `elif` is the else of its `if`."""
+    if i == len(node.branches):
+        return _eval(node.orelse, v)
+    c, b = node.branches[i]
+    outs: list[Entry] = []
+    for cv, ce in _eval(c, v):
         if ce is not None:
-            return [(None, ce)]
-        if _truthy(cv):
-            return _eval(b, v)
-    return _eval(node.orelse, v)
+            outs.append((None, ce))
+        elif _truthy(cv):
+            outs.extend(_eval(b, v))
+        else:
+            outs.extend(_if_from(node, i + 1, v))
+    return outs
 
 
 def _e_builtin(node: ast.Builtin, v: object) -> list[Entry]:

@@ -8,10 +8,10 @@ rows are unordered, so order is data), `ord` the burst-position path,
 
 `ord` is an order key within one `seq`, not a value to compare across
 tiers: sorting by `(seq, ord)` gives jq output order on either tier,
-but its depth differs by tier. The interp tier appends one position
-per program run, the staged tier one per fan-out stage, and an
-upstream error row keeps the depth its tier gave it (under `.[]` the
-staged tier appends a 0, the interp tier appends nothing).
+but its depth differs by tier. The staged tier emits at most one row
+per input row and keeps the input's `ord`; only the interp tier
+appends a position (one per program run), and an upstream error row
+keeps its `ord` on both tiers.
 """
 
 from __future__ import annotations

@@ -50,10 +50,6 @@ def vstring(s: Column) -> Column:
     return F.coalesce(s.cast("variant"), vnull())
 
 
-def vparse(text: Column) -> Column:
-    return F.try_parse_json(text)
-
-
 # ---------------------------------------------------------------- types
 def vlet(x: Column, fn) -> Column:
     """Expression-level `let`: bind x ONCE, fn sees a leaf lambda
@@ -322,17 +318,6 @@ def json_quote(s: Column) -> Column:
     return F.substring(j, F.lit(2), F.length(j) - F.lit(2))
 
 
-def json_of_array(arr: Column) -> Column:
-    """JSON text of an ARRAY<VARIANT> (to_json rejects array<variant>
-    directly, so assemble element-wise; vjson keeps DOUBLE elements
-    in the float tower through the re-parse)."""
-    return F.concat(
-        F.lit("["),
-        F.concat_ws(",", F.transform(arr, lambda x: vjson(x))),
-        F.lit("]"),
-    )
-
-
 def varray(arr: Column) -> Column:
     """Variant array from ARRAY<VARIANT> — native to_variant_object
     (r6): elements pass through as variant binaries, no per-element
@@ -374,9 +359,6 @@ def vobject(entries: Column) -> Column:
 
 
 # ------------------------------------------------------------- compare
-_TYPE_RANK = "CASE {t} WHEN 'null' THEN 0 WHEN 'bool' THEN 1 WHEN 'int' THEN 2 WHEN 'float' THEN 2 WHEN 'string' THEN 3 WHEN 'array' THEN 4 ELSE 5 END"
-
-
 def type_rank(t: Column) -> Column:
     """jq total order: null < bool < number < string < array < object.
     (Intended semantics; the reference's enum-variant order

@@ -628,6 +628,12 @@ CORPUS = [
     # literal-path setpath in a map body: the parser's Assign desugar
     # keeps it native (no UDF ever enters the lambda)
     ('map(setpath(["b"]; 2))', '[{"a": 1}]', [[{"a": 1, "b": 2}]]),
+    # jq `if`: one result per condition output, none for an empty
+    # condition; an assignment yields one document per RHS output
+    ("if .[] then 1 else 2 end", "[true, false]", [1, 2]),
+    ("if empty then 1 else 2 end", "null", []),
+    (".a = (.b[])", '{"a":0,"b":[1,2]}',
+     [{"a": 1, "b": [1, 2]}, {"a": 2, "b": [1, 2]}]),
 ]
 
 
@@ -637,7 +643,7 @@ def jq(spark):
 
 
 @pytest.fixture(scope="module")
-def corpus_results(jq, python_eval_nodes):
+def corpus_results(jq, plan_node_names):
     """Evaluate every corpus case ONCE, 8 plan-builds in flight
     (plan assembly is Py4J + driver-JVM work that releases the GIL;
     compiler._ENV is thread-local). The parametrized tests below
@@ -652,9 +658,12 @@ def corpus_results(jq, python_eval_nodes):
     compiler cannot run (InterpOnly: walk/tostream; a construct with
     no staged lane) take the interp tier regardless of the pin; each
     case records the tier it took (last_tier is per thread, so it is
-    read in the worker) and, when staged, the Python eval nodes in
-    its optimized plan; test_corpus checks both."""
+    read in the worker) and, when staged, the optimized-plan nodes
+    the program added to its source stream's plan other than Project
+    and Filter (the staged tier is row-local); test_corpus checks
+    both."""
     import json
+    from collections import Counter
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import functions as F
@@ -663,13 +672,22 @@ def corpus_results(jq, python_eval_nodes):
 
     def run(case):
         query, doc, _ = case
-        py: list[str] = []
+        extra: list[str] = []
         try:
-            df = jq.run(query, jq.stream_from_texts([doc]))
+            stream = jq.stream_from_texts([doc])
+            df = jq.run(query, stream, ordered=False)
             tier = compiler.last_tier()
             if tier == "staged":
-                py = python_eval_nodes(df)
-            rows = df.select(F.to_json("v").alias("j"), "err").collect()
+                added = Counter(plan_node_names(df)) - Counter(
+                    plan_node_names(stream)
+                )
+                extra = sorted(
+                    n for n in added.elements()
+                    if n not in ("Project", "Filter")
+                )
+            rows = df.orderBy("seq", "ord").select(
+                F.to_json("v").alias("j"), "err"
+            ).collect()
             got = [
                 json.loads(r.j) if r.j is not None else None
                 for r in rows if r.err is None
@@ -677,7 +695,7 @@ def corpus_results(jq, python_eval_nodes):
         except Exception as e:  # noqa: BLE001 — asserted per-case
             got = ("__raised__", f"{type(e).__name__}: {e}")
             tier = compiler.last_tier()
-        return got, tier, py
+        return got, tier, extra
 
     compiler.TIER_OVERRIDE = "staged"
     try:
@@ -730,21 +748,88 @@ def _not_object(node) -> bool:
     return False
 
 
-def _yields_many(node) -> bool:
+def _children(node) -> list:
+    import dataclasses
+
+    if dataclasses.is_dataclass(node):
+        return [getattr(node, f.name) for f in dataclasses.fields(node)]
+    if isinstance(node, tuple):
+        return list(node)
+    return []
+
+
+def _fan_out_node(node) -> bool:
+    """The node itself emits several outputs per input."""
     from bd_spark.jsonq import ast
 
     if isinstance(node, (ast.IterValues, ast.Iter, ast.Recurse, ast.Foreach)):
         return True
+    return isinstance(node, ast.Builtin) and node.name in (
+        "range", "scan", "splits", "limit",
+    )
+
+
+def _yields_many(node) -> bool:
+    """A fan-out node anywhere in the subtree, except inside a nested
+    collect or fold, which yield one value."""
+    from bd_spark.jsonq import ast
+
+    if _fan_out_node(node):
+        return True
+    if isinstance(node, ast.ListCons):
+        return False
+    if isinstance(node, ast.Reduce):
+        return _yields_many(node.init) or _yields_many(node.update)
+    return any(_yields_many(c) for c in _children(node))
+
+
+def _splices(node) -> bool:
+    """The staged collect renders this payload item within the row: a
+    single-valued item, or one generator with single-valued
+    arguments, piped from or into single-valued stages."""
+    from bd_spark.jsonq import ast
+
+    if not _yields_many(node):
+        return _row_local(node)
+    if isinstance(node, (ast.IterValues, ast.Foreach)):
+        return True
+    if isinstance(node, ast.Iter):
+        return not any(_yields_many(i) for i in node.items)
+    if isinstance(node, ast.Builtin) and node.name == "limit":
+        return (
+            not _yields_many(node.args[0])
+            and _yields_many(node.args[1])
+            and _splices(node.args[1])
+        )
     if isinstance(node, ast.Builtin):
-        return node.name in ("range", "scan", "splits", "limit")
+        return not any(_yields_many(a) for a in node.args)
     if isinstance(node, ast.Pipe):
-        return _yields_many(node.left) or _yields_many(node.right)
+        if _yields_many(node.left):
+            return not _yields_many(node.right) and _splices(node.left)
+        return _row_local(node.left) and _splices(node.right)
     return False
 
 
-def _has_unstaged(node) -> bool:
-    import dataclasses
+def _row_local(node) -> bool:
+    """At most one output per input: no fan-out node outside collect
+    payloads and fold sources, and every collect's payload splices."""
+    from bd_spark.jsonq import ast
 
+    if isinstance(node, ast.ListCons):
+        if node.expr is None:
+            return True
+        items = (
+            node.expr.items if isinstance(node.expr, ast.Iter) else (node.expr,)
+        )
+        return all(_splices(i) for i in items)
+    if _fan_out_node(node):
+        return False
+    if isinstance(node, ast.Reduce):
+        return _row_local(node.init) and _row_local(node.update)
+    return all(_row_local(c) for c in _children(node))
+
+
+def _has_unstaged(node) -> bool:
     from bd_spark.jsonq import ast, parser
 
     if isinstance(node, ast.Recurse):
@@ -768,19 +853,14 @@ def _has_unstaged(node) -> bool:
         _not_object(node.left) or _not_object(node.right)
     ):
         return True
-    if dataclasses.is_dataclass(node):
-        return any(
-            _has_unstaged(getattr(node, f.name))
-            for f in dataclasses.fields(node)
-        )
-    if isinstance(node, tuple):
-        return any(_has_unstaged(x) for x in node)
-    return False
+    return any(_has_unstaged(c) for c in _children(node))
 
 
 def _pinned_tier(query: str) -> str:
     """The tier a case must take under the staged pin: interp only
-    for programs the staged compiler cannot run."""
+    for programs the staged compiler cannot run, including programs
+    that are not row-local (the staged tier emits at most one row per
+    input row)."""
     from bd_spark.jsonq import ast, compiler, parser
 
     node = parser.parse(query)
@@ -788,6 +868,7 @@ def _pinned_tier(query: str) -> str:
         isinstance(node, ast.InterpOnly)
         or compiler._node_count(node) > compiler._INTERP_TIER_NODES
         or _has_unstaged(node)
+        or not _row_local(node)
     ):
         return "interp"
     return "staged"
@@ -798,10 +879,10 @@ def _pinned_tier(query: str) -> str:
 )
 def test_corpus(corpus_results, idx):
     query, doc, expected = CORPUS[idx]
-    got, tier, py = corpus_results[idx]
+    got, tier, extra = corpus_results[idx]
     assert got == expected, f"{query} on {doc}: {got} != {expected}"
     assert tier == _pinned_tier(query), query
-    assert py == [], f"{query}: Python eval nodes in the staged plan: {py}"
+    assert extra == [], f"{query}: staged plan nodes beyond Project/Filter: {extra}"
 
 
 @pytest.mark.parametrize("fmt", ["jsonl", "parquet"])

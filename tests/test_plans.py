@@ -50,22 +50,36 @@ def test_q5_all_dims_broadcast(spark, sf_dir, queries):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_ann_topk_no_corpus_shuffle(spark, sf_dir, queries):
+def _streamed_side(join: dict) -> list[dict]:
+    """The shuffles under a broadcast join's streamed (non-build)
+    child."""
+    return join["sides"][0 if join["build"] == "BuildRight" else 1]
+
+
+def _hash_shuffles(facts: dict) -> list[dict]:
+    return [
+        s for s in facts["shuffles"] if s["partitioning"] == "HashPartitioning"
+    ]
+
+
+def test_ann_topk_no_corpus_shuffle(spark, sf_dir, queries, plan_facts):
     """Brute-force ANN must stream the corpus map-side: the only
     exchanges are the broadcast of queries and the final ranking."""
-    plan = _plan(queries["pipe_ann_topk"](spark, sf_dir))
-    # corpus side feeds the nested-loop join directly from the scan —
-    # no Exchange between Scan and the join
-    scan_to_join = plan.split("BroadcastNestedLoopJoin")[0]
-    assert "Exchange hashpartitioning" not in scan_to_join
+    facts = plan_facts(queries["pipe_ann_topk"](spark, sf_dir))
+    (join,) = facts["joins"]
+    assert join["node"] == "BroadcastNestedLoopJoinExec", join
+    # the corpus side feeds the nested-loop join straight from its scan
+    assert _streamed_side(join) == [], join
+    # the one shuffle is the per-query ranking
+    assert [s["keys"] for s in facts["shuffles"]] == [["query_id"]], facts
 
 
-def test_asof_single_shuffle(spark, sf_dir, queries):
+def test_asof_single_shuffle(spark, sf_dir, queries, plan_facts):
     """The as-of join shuffles once on the key (window exchange); no
     join-produced row explosion appears in the plan."""
-    plan = _plan(queries["q_asof_last_order"](spark, sf_dir))
-    assert plan.count("Exchange hashpartitioning(user_id") <= 2
-    assert "CartesianProduct" not in plan
+    facts = plan_facts(queries["q_asof_last_order"](spark, sf_dir))
+    assert [s["keys"] for s in _hash_shuffles(facts)] == [["user_id"]], facts
+    assert facts["joins"] == [], facts
 
 
 def test_semi_anti_plans(spark, sf_dir, queries):
@@ -73,9 +87,12 @@ def test_semi_anti_plans(spark, sf_dir, queries):
     assert "LeftSemi" in plan or "LeftAnti" in plan
 
 
-def test_stream_enrich_broadcasts_dim(spark, sf_dir):
+def test_stream_enrich_broadcasts_dim(spark, sf_dir, plan_facts):
     """The stream-static enrichment join must broadcast the dimension:
-    the streaming side never shuffles for the join."""
+    the streaming side never shuffles for the join. Checked on the
+    plan a micro-batch actually executed."""
+    import uuid
+
     from bd_spark.catalog import table
     from bd_spark.streaming.ops import read_events_stream, stream_static_enrich
     from pyspark.sql import functions as F
@@ -84,13 +101,24 @@ def test_stream_enrich_broadcasts_dim(spark, sf_dir):
         F.col("c_custkey").alias("user_id"), "c_nationkey"
     )
     stream = stream_static_enrich(read_events_stream(spark, sf_dir), dim, "user_id")
-    plan = _plan(stream)
-    assert "BroadcastHashJoin" in plan
-    join_side = plan.split("BroadcastHashJoin")[0]
-    assert "Exchange hashpartitioning" not in join_side
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(f"enrich_{uuid.uuid4().hex[:8]}")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan()
+        facts = plan_facts(plan)
+    finally:
+        q.stop()
+    (join,) = facts["joins"]
+    assert join["node"] == "BroadcastHashJoinExec", join
+    assert _streamed_side(join) == [], join
 
 
-def test_decontaminate_broadcasts_eval_set(spark, sf_dir):
+def test_decontaminate_broadcasts_eval_set(spark, sf_dir, plan_facts):
     """The eval gram set must reach the train scan as a broadcast —
     the train corpus is scanned exactly once, map-side, with no
     train-side exchange before the flagging projection."""
@@ -104,11 +132,12 @@ def test_decontaminate_broadcasts_eval_set(spark, sf_dir):
         docs.where(F.col("doc_id") % 10 == 0),
         "doc_id", "text", n=13,
     )
-    plan = _plan(out)
-    assert "Broadcast" in plan
-    # the train side feeds the broadcast join straight from its scan
-    train_side = plan.split("BroadcastNestedLoopJoin")[0]
-    assert "Exchange hashpartitioning" not in train_side
+    facts = plan_facts(out)
+    broadcast = [j for j in facts["joins"] if "Broadcast" in j["node"]]
+    assert broadcast, facts["joins"]
+    # the train side feeds each broadcast join straight from its scan
+    for join in broadcast:
+        assert _streamed_side(join) == [], join
 
 
 def test_sample_by_hash_no_shuffle(spark, sf_dir):
@@ -163,7 +192,9 @@ def test_rowlocal_text_ops_no_exchange(spark, sf_dir):
         assert "Join" not in plan, fn.__name__
 
 
-def test_jq_regex_rowlocal_native(spark, sf_dir, python_eval_nodes):
+def test_jq_regex_rowlocal_native(
+    spark, sf_dir, python_eval_nodes, plan_facts, plan_node_names
+):
     """The regex/string builtin batch (sub/gsub/scan/splits/capture/
     explode/implode) compiles to native Java-regex Catalyst
     expressions: no shuffle, no Python UDF anywhere in the plan."""
@@ -194,14 +225,16 @@ def test_jq_regex_rowlocal_native(spark, sf_dir, python_eval_nodes):
         assert compiler.last_tier() == "staged"
     finally:
         compiler.TIER_OVERRIDE = None
-    plan = _plan(out)
+    facts = plan_facts(out)
     # the only allowed exchange is the deliberate round-robin input
-    # rebalance (spreads the 1-file parquet scan across cores); any
-    # hash/range exchange / join / generate means a list collect fell
-    # back to the stream tier's posexplode -> collect_list -> join
-    assert "hashpartitioning(" not in plan
-    assert "rangepartitioning(" not in plan
-    assert "Join" not in plan and "Generate" not in plan
+    # rebalance (spreads the 1-file parquet scan across cores); the
+    # staged tier is row-local, so no hash/range exchange, join or
+    # generate appears
+    assert {s["partitioning"] for s in facts["shuffles"]} <= {
+        "RoundRobinPartitioning"
+    }, facts["shuffles"]
+    assert facts["joins"] == []
+    assert "Generate" not in plan_node_names(out)
     assert python_eval_nodes(out) == []
 
 
@@ -253,28 +286,26 @@ def test_dedup_lines_shuffles_on_line_hash(spark, sf_dir):
     assert "md5" in plan
 
 
-def test_embed_neardup_candidates_shuffle_ids_only(spark, sf_dir, queries):
+def test_embed_neardup_candidates_shuffle_ids_only(
+    spark, sf_dir, queries, plan_facts
+):
     """The banded-LSH candidate distinct must not carry the 64-dim
-    vectors: every hash exchange before the verify joins ships only
-    (id, band, bucket) longs (shuffling vectors through the pair
-    distinct was measured 4x the whole operator)."""
-    plan = _plan(queries["pipe_embed_neardup"](spark, sf_dir))
-    for frag in plan.split("Exchange hashpartitioning")[1:]:
-        keyspec = frag.split(")")[0]
-        assert "vec" not in keyspec
+    vectors: every hash exchange ships only (id, band, bucket) longs
+    (shuffling vectors through the pair distinct was measured 4x the
+    whole operator)."""
+    facts = plan_facts(queries["pipe_embed_neardup"](spark, sf_dir))
+    hashed = _hash_shuffles(facts)
+    assert hashed, facts
+    for s in hashed:
+        assert not any("vec" in c for c in s["keys"] + s["output"]), s
     # r12: the candidate pairs are explicitly re-spread before the
     # CPU-dense cosine verify (byte-based AQE coalescing collapsed
     # that stage to one task; REPARTITION_BY_NUM is exempt) — pin the
     # spread so a refactor can't silently drop it
     assert any(
-        "hashpartitioning(id_a" in line and "REPARTITION_BY_NUM" in line
-        for line in plan.splitlines()
-    )
-    # (formatted explain renders partitioning on Arguments: lines, so
-    # also sweep those for vectors leaking into a hash exchange)
-    for line in plan.splitlines():
-        if "Arguments: hashpartitioning" in line:
-            assert "vec#" not in line.split(")")[0]
+        s["origin"] == "REPARTITION_BY_NUM" and s["keys"] == ["id_a", "id_b"]
+        for s in hashed
+    ), hashed
 
 
 def test_lm_score_no_window_no_cartesian_blowup(spark, sf_dir):
@@ -291,20 +322,25 @@ def test_lm_score_no_window_no_cartesian_blowup(spark, sf_dir):
     assert "HashAggregate" in plan
 
 
-def test_q21_all_joins_on_orderkey(spark, sf_dir):
+def test_q21_all_joins_on_orderkey(spark, sf_dir, plan_facts):
     """Q21's EXISTS / NOT EXISTS become left-semi / left-anti joins
     that must all shuffle on the SAME key (l_orderkey) so the
     exchange is reusable and AQE can skew-split hot orders; the
     supplier dimension broadcasts."""
     from bd_spark.queries.relational5 import q21_waiting_supplier
 
-    plan = _plan(q21_waiting_supplier(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    for frag in plan.split("Exchange hashpartitioning(")[1:]:
-        keyspec = frag.split(")")[0]
-        # every hash exchange is on an orderkey (fact side) — never on
-        # suppkey (that join broadcasts) and never on a wide tuple
-        assert "orderkey" in keyspec or "s_name" in keyspec, keyspec
+    facts = plan_facts(q21_waiting_supplier(spark, sf_dir))
+    assert {"LeftSemi", "LeftAnti"} <= {j["type"] for j in facts["joins"]}
+    assert not any(
+        j["node"] == "CartesianProductExec" for j in facts["joins"]
+    )
+    keys = [s["keys"] for s in _hash_shuffles(facts)]
+    # every hash exchange is on one orderkey (fact side) or the final
+    # s_name grouping — never on suppkey (that join broadcasts) and
+    # never on a wide tuple
+    assert sum(len(k) == 1 and "orderkey" in k[0] for k in keys) >= 2, keys
+    for k in keys:
+        assert len(k) == 1 and ("orderkey" in k[0] or k[0] == "s_name"), k
 
 
 def test_q2_window_over_aggregated_costs(spark, sf_dir):

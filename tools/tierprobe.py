@@ -9,7 +9,9 @@ clearCache per rep, build excluded) under two tier overrides and
 compares row counts. TIER is staged|interp|auto (auto = cost model).
 A target whose program compiler.choose_tier will not stage (InterpOnly,
 or a construct with no staged lane) is refused under the staged tier
-with a one-line message naming the reason.
+with a one-line message naming the reason. A target whose build or
+run raises prints one line naming it and the error, and the sweep goes
+on to the next target.
 Flags may appear in any order and are validated (r11 ADVICE #2: the
 old positional parse silently treated '-t' as a query name and blew
 up on a single tier). Diagnostic only — feeds the compile_query
@@ -85,6 +87,27 @@ def _staged_refusal(programs: list[str]) -> str | None:
     return None
 
 
+def _time_tier(fn, spark, sf_dir: str, tier: str | None, runs: int):
+    """(build s, first exec s, min warm exec s, rows) of one target
+    under one tier pin."""
+    compiler.TIER_OVERRIDE = tier
+    try:
+        times = []
+        build = 0.0
+        for _ in range(runs):
+            spark.catalog.clearCache()
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            _force(df)
+            times.append(time.perf_counter() - t1)
+            build = t1 - t0
+        rows = fn(spark, sf_dir).count()
+        return build, times[0], min(times[1:] or times), rows
+    finally:
+        compiler.TIER_OVERRIDE = None
+
+
 def main() -> None:
     runs, tiers, targets = _parse_args(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -133,25 +156,16 @@ def main() -> None:
             print(f"{label}: not staged ({refusal}), skipped")
             continue
         row = {}
-        for tier in tiers:
-            compiler.TIER_OVERRIDE = tier
-            try:
-                times = []
-                build = 0.0
-                for _ in range(runs):
-                    spark.catalog.clearCache()
-                    t0 = time.perf_counter()
-                    df = fn(spark, sf_dir)
-                    t1 = time.perf_counter()
-                    _force(df)
-                    times.append(time.perf_counter() - t1)
-                    build = t1 - t0
-                rows = fn(spark, sf_dir).count()
-                row[tier or "auto"] = (
-                    build, times[0], min(times[1:] or times), rows
-                )
-            finally:
-                compiler.TIER_OVERRIDE = None
+        try:
+            for tier in tiers:
+                row[tier or "auto"] = _time_tier(fn, spark, sf_dir, tier, runs)
+        except Exception as e:  # noqa: BLE001 — one target, not the sweep
+            msg = (str(e).strip().splitlines() or [""])[0][:120]
+            print(
+                f"{label}: failed under {tier or 'auto'} "
+                f"({type(e).__name__}: {msg})"
+            )
+            continue
         la, lb = (t or "auto" for t in tiers)
         a, b = row[la], row[lb]
         flag = "" if a[3] == b[3] else "  ROWS-MISMATCH"
