@@ -24,14 +24,15 @@ whatever the tier pin, when it breaks that rule (_unstaged_construct):
   into one array within the row; and a collect whose payload those
   renderers cannot render, which would regroup a stream.
 
-Such a node handed to the staged compiler raises instead of emitting
-Python or a shuffle.
+Such a program handed to the staged compiler (compile_stream) raises
+instead of emitting Python or a shuffle.
 
-Staged compilation strategy (two forms):
+Staged compilation has one planner (_plan_direct) and two forms:
 
-1. **Staged projections** (default): every operator stage materializes
-   its result as a temp column via `withColumn` over *leaf* column
-   references. This keeps each Catalyst expression small — pure
+1. **Landed columns**: the planner walks the whole program once and
+   lands every operator's result in temp columns over *leaf* column
+   references, grouped into depth layers (_Plan) that apply as a few
+   projections. This keeps each Catalyst expression small — pure
    expression substitution would duplicate the whole input subtree at
    every pipe stage (type dispatch alone references its input ~8
    times, so nesting is exponential). Spark's CollapseProject rule
@@ -50,9 +51,16 @@ appended only by the interp tier, runtime.py).
 
 Errors are data, not exceptions (entry.rs:30-32): a failing operator
 sets v to JSON null and fills `err`; downstream ops pass error rows
-through untouched (ops.rs:296). The `?` suffix drops the rows an op
-failed on (parsed but unimplemented in the reference, query_nom.rs:18;
-intended behavior implemented here).
+through untouched (ops.rs:296). Drops are data too: `empty`, a failed
+`.k?` (the `?` suffix, parsed but unimplemented in the reference,
+query_nom.rs:18) and a false `select` yield no output, which the
+planner carries as a drop column (CV.drop) rather than filtering where
+it is planned. A dropped row stays dropped and no later error
+surfaces from it; the constructs that consume an empty stream resolve
+it as jq does (`if` takes the chosen branch's drop, `//` falls through
+to its right operand, a collect item adds no element, `try` turns an
+error into a drop), and only the program's final drop becomes a row
+filter, applied once at the end.
 """
 
 from __future__ import annotations
@@ -70,21 +78,10 @@ from bd_spark.jsonq import vexpr as V
 
 CORE_COLS = ("seq", "ord", "v", "err")
 
-# arity-1 builtins whose argument is a VALUE expression (not a lambda
-# body like map/any/all, not row-dropping like select)
-ARG1_VALUE_BUILTINS = (
-    "has", "in", "ltrimstr", "rtrimstr", "startswith", "endswith",
-    "contains", "test", "join", "split", "getpath",
-    "error", "index", "rindex", "indices",
-)
-
 # generator builtins: several outputs per input, so staged only inside
 # a collect's payload or a fold's source (_elems_colfn)
 GENERATOR_BUILTINS = ("range", "paths", "leaf_paths", "scan", "splits",
                       "limit", "match", "while", "repeat")
-
-# arity-2 builtins whose arguments are both VALUE expressions
-ARG2_VALUE_BUILTINS = ("sub", "gsub", "pow")
 
 # higher-order builtins: a lambda body or a variant comparator applied
 # per element. They have no staged lane: compile_query runs every
@@ -203,17 +200,6 @@ def _unstaged_construct(node: object, in_burst: bool = False) -> str | None:
     return found
 
 
-def _refuse_unstaged(node: ast.Node) -> None:
-    """Raise when a node with no staged lane reaches the staged
-    compiler (compile_query never sends one)."""
-    name = _unstaged_here(node)
-    if name is not None:
-        raise RuntimeError(
-            f"{name}: no staged lane (compile_query runs such programs "
-            "on the interp tier)"
-        )
-
-
 _ids = itertools.count()
 
 
@@ -230,7 +216,9 @@ def _carries(df: DataFrame) -> list[str]:
 # ===================================================================
 @dataclass
 class CV:
-    """Column evaluation result: value + optional error/drop."""
+    """Column evaluation result: value + optional error/drop. Where
+    `drop` is true the expression yields nothing, whatever `err`
+    says (a dropped row stays dropped)."""
 
     v: Column
     err: Column | None = None
@@ -285,16 +273,22 @@ def _merge_drop(a: Column | None, b: Column | None) -> Column | None:
     return a | b
 
 
-def _chain(cin: CV, fn: ColFn) -> CV:
-    """Apply fn to cin's value with error passthrough (ops.rs:296).
-    Only used inside lambda bodies — substitution-based."""
-    out = fn(cin.v)
+def _then(cin: CV, out: CV) -> CV:
+    """`out`, evaluated where `cin` yields a value: cin's error and
+    drop pass through (ops.rs:296), and out's drop counts only where
+    cin has no error."""
     if cin.err is None:
         return CV(out.v, out.err, _merge_drop(cin.drop, out.drop))
     v = F.when(cin.err.isNotNull(), cin.v).otherwise(out.v)
     err = _merge_err(cin.err, out.err)
     drop = _merge_drop(cin.drop, None if out.drop is None else (cin.err.isNull() & out.drop))
     return CV(v, err, drop)
+
+
+def _chain(cin: CV, fn: ColFn) -> CV:
+    """Apply fn to cin's value with error passthrough. Only used
+    inside lambda bodies — substitution-based."""
+    return _then(cin, fn(cin.v))
 
 
 def _guarded(cond: Column, ok: Column, msg: Column | str, opt: bool) -> CV:
@@ -311,7 +305,7 @@ def _guarded(cond: Column, ok: Column, msg: Column | str, opt: bool) -> CV:
 # ===================================================================
 def is_multivalued(node: ast.Node) -> bool:
     """Can this expression emit a number of outputs != 1 per input
-    (ignoring `?` drops, which staging handles by row removal)?"""
+    (ignoring drops, which the staged tier carries as data)?"""
     if isinstance(node, (ast.IterValues, ast.Iter, ast.Recurse)):
         return True
     if isinstance(node, ast.Pipe):
@@ -342,9 +336,9 @@ def is_multivalued(node: ast.Node) -> bool:
 # Pure column expressions (leaf ops + lambda bodies)
 # ===================================================================
 def compile_col(node: ast.Node) -> ColFn | None:
-    """Pure-expression compile; None when stream machinery is needed.
-    Used for leaf ops and inside higher-order-function lambdas."""
-    _refuse_unstaged(node)
+    """Pure-expression compile; None when the node fans out (only a
+    burst renderer, _elems_colfn, takes it). Used for leaf ops and
+    inside lambda bodies."""
     if isinstance(node, ast.Identity):
         return lambda v: CV(v)
     if isinstance(node, ast.Literal):
@@ -591,46 +585,12 @@ def _path_ok(v: Column, segs: tuple) -> Column:
     return ok
 
 
-def _rebuilt_entries(m: Column, k: str, inner_json: Column) -> Column:
-    """JSON text of object-map ``m`` with key ``k`` bound to
-    ``inner_json`` (other entries re-serialized via vjson)."""
-    others = F.filter(F.map_entries(m), lambda e: e["key"] != F.lit(k))
-    structs = F.transform(
-        others,
-        lambda e: F.struct(
-            e["key"].alias("k"), V.vjson(e["value"]).alias("j")
-        ),
-    )
-    tail = F.array(F.struct(F.lit(k).alias("k"), inner_json.alias("j")))
-    return V.json_of_entries(F.concat(structs, tail))
-
-
-def _set_json(v: Column, segs: tuple, leaf_json: Column) -> Column:
-    """JSON text of v with v[segs] replaced by leaf_json; missing
-    intermediates become fresh objects (jq setpath)."""
-    if not segs:
-        return leaf_json
-    k = segs[0]
-    m = V.as_map(v)
-    inner = _set_json(F.element_at(m, F.lit(k)), segs[1:], leaf_json)
-    import json as _j
-
-    fresh = F.concat(
-        F.lit("{" + _j.dumps(k) + ":"), inner, F.lit("}")
-    )
-    # object-ness only: one O(1) map try-cast (r10; the full vtype
-    # dispatch paid schema_of_variant per row on the dominant branch)
-    return F.when(
-        V.as_map(v).isNotNull(), _rebuilt_entries(m, k, inner)
-    ).otherwise(fresh)
-
-
 def _set_variant(v: Column, segs: tuple, leaf: Column) -> Column:
     """VARIANT of v with v[segs] replaced by variant ``leaf``; missing
     intermediates become fresh objects (jq setpath). Native object
     assembly — to_variant_object over map_from_entries copies sibling
     entries as variants (keys re-sorted by construction), where the
-    textual _set_json re-serialized every sibling via vjson and paid
+    former textual form re-serialized every sibling via vjson and paid
     a parse_json of the whole doc (r7: at sf0.1 the text form lost to
     the Arrow setpath UDF 23 s vs 10 s; this form replaces both)."""
     if not segs:
@@ -727,27 +687,29 @@ def _try_cv(cv: CV) -> CV:
 
 
 def _col_if(c: CV, a: CV, b: CV) -> CV:
-    """One `if c then a else b` layer: condition errors propagate,
-    the un-selected branch's errors/drops are ignored (jq laziness —
-    CASE evaluates per row, so only codegen laziness is needed)."""
+    """One `if c then a else b` layer: condition errors and drops
+    propagate, the chosen branch's error or drop is the result's, and
+    the un-selected branch's are ignored (jq laziness — CASE evaluates
+    per row, so only codegen laziness is needed)."""
     t = V.truthy(c.v)
     v = F.when(t, a.v).otherwise(b.v)
     e_branch = None
     if a.err is not None or b.err is not None:
-        ae = a.err if a.err is not None else F.lit(None).cast("string")
-        be = b.err if b.err is not None else F.lit(None).cast("string")
+        ae = a.err if a.err is not None else _null_str()
+        be = b.err if b.err is not None else _null_str()
         e_branch = F.when(t, ae).otherwise(be)
+    d_branch = None
+    if a.drop is not None or b.drop is not None:
+        ad = F.coalesce(a.drop, F.lit(False)) if a.drop is not None else F.lit(False)
+        bd = F.coalesce(b.drop, F.lit(False)) if b.drop is not None else F.lit(False)
+        d_branch = F.when(t, ad).otherwise(bd)
     if c.err is not None:
         v = F.when(c.err.isNotNull(), V.vnull()).otherwise(v)
         if e_branch is not None:
             e_branch = F.when(c.err.isNull(), e_branch)
-    err = _merge_err(c.err, e_branch)
-    drop = None
-    if a.drop is not None or b.drop is not None:
-        ad = F.coalesce(a.drop, F.lit(False)) if a.drop is not None else F.lit(False)
-        bd = F.coalesce(b.drop, F.lit(False)) if b.drop is not None else F.lit(False)
-        drop = F.when(t, ad).otherwise(bd)
-    return CV(v, err, _merge_drop(c.drop, drop))
+        if d_branch is not None:
+            d_branch = c.err.isNull() & d_branch
+    return CV(v, _merge_err(c.err, e_branch), _merge_drop(c.drop, d_branch))
 
 
 _KIND_NUM_BUILTINS = (
@@ -826,16 +788,17 @@ def _col_binary(
     op: str, l: CV, r: CV, lk: str | None = None, rk: str | None = None
 ) -> CV:
     if op == "//":
-        # jq alternative: rhs when lhs errored OR is falsy; lhs
-        # errors are SUPPRESSED (beyond-reference jq usability)
-        lhs_bad = (
-            ~V.truthy(l.v)
-            if l.err is None
-            else (l.err.isNotNull() | ~V.truthy(l.v))
-        )
+        # jq alternative: rhs when lhs errored, dropped OR is falsy;
+        # lhs errors are SUPPRESSED (beyond-reference jq usability)
+        lhs_bad = ~V.truthy(l.v)
+        if l.err is not None:
+            lhs_bad = l.err.isNotNull() | lhs_bad
+        if l.drop is not None:
+            lhs_bad = F.coalesce(l.drop, F.lit(False)) | lhs_bad
         v = F.when(lhs_bad, r.v).otherwise(l.v)
         err = None if r.err is None else F.when(lhs_bad, r.err)
-        return CV(v, err, _merge_drop(l.drop, r.drop))
+        drop = None if r.drop is None else (lhs_bad & r.drop)
+        return CV(v, err, drop)
     err = _merge_err(l.err, r.err)
     drop = _merge_drop(l.drop, r.drop)
     a, b = l.v, r.v
@@ -1142,7 +1105,7 @@ def _col_getpath(v: Column, p: CV) -> CV:
             res["e"],
         ),
     )
-    return CV(F.when(err.isNotNull(), V.vnull()).otherwise(res["a"]), err)
+    return CV(F.when(err.isNotNull(), V.vnull()).otherwise(res["a"]), err, p.drop)
 
 
 def _named_groups(pat: str) -> list[tuple[str, int]]:
@@ -1767,7 +1730,7 @@ def _col_builtin(name: str, v: Column, args: list[CV]) -> CV:
         msg = F.when(tm == "string", V.as_string(m.v)).otherwise(
             F.to_json(m.v)
         )
-        return CV(V.vnull(), F.coalesce(m.err, msg), m.drop)
+        return CV(V.vnull(), _merge_err(m.err, msg), m.drop)
 
     if name in ("index", "rindex"):
         k = args[0]
@@ -1987,7 +1950,7 @@ def _col_builtin(name: str, v: Column, args: list[CV]) -> CV:
 
 
 def _col_list(node: ast.ListCons) -> ColFn | None:
-    """`[...]` with scalar payload: each comma item contributes exactly
+    """`[...]` with scalar payload: each comma item contributes at most
     one element. An item that is itself a row-local generator (one
     `_elems_colfn` can render — `[scan(re)]`, `[.xs.[]]`, `[range(n)]`
     and scalar pipes into those) splices its whole burst in place, so
@@ -2007,42 +1970,37 @@ def _col_list(node: ast.ListCons) -> ColFn | None:
         if ef is None:
             return None
         fns.append((True, ef))
+    return lambda v: _collect([(many, f(v)) for many, f in fns])
 
-    if not any(many for many, _ in fns):
 
-        def fn(v: Column) -> CV:
-            cvs = [f(v) for _, f in fns]
-            err = None
-            drop = None
-            for cv in cvs:
-                err = _merge_err(err, cv.err)
-                drop = _merge_drop(drop, cv.drop)
-            # native variant assembly (r6): no vjson/parse_json
-            return CV(V.varray(F.array(*[cv.v for cv in cvs])), err, drop)
-
-        return fn
-
-    def fn_burst(v: Column) -> CV:
-        err = None
-        drop = None
-        segs: list[Column] = []
-        for many, f in fns:
-            cv = f(v)
-            err = _merge_err(err, cv.err)
-            if many:
-                # burst CVs encode `?`-drop as an empty array already
-                segs.append(cv.v)
-            else:
-                drop = _merge_drop(drop, cv.drop)
-                segs.append(F.array(cv.v))
-        # native variant assembly (r6)
+def _collect(parts: list[tuple[bool, CV]]) -> CV:
+    """A collect's value from its items, in order. A burst item
+    (`many`) splices its whole array, whose `?`-dropped elements are
+    already absent; a single item adds its value, or no element where
+    it drops (its error then does not count). The first error in item
+    order voids the collect; a collect itself never drops. Native
+    variant assembly (r6): no vjson/parse_json."""
+    err = None
+    segs: list[Column] = []
+    for many, cv in parts:
+        e = cv.err
+        if many:
+            segs.append(cv.v)
+        elif cv.drop is None:
+            segs.append(F.array(cv.v))
+        else:
+            kept = ~F.coalesce(cv.drop, F.lit(False))
+            segs.append(F.when(kept, F.array(cv.v)).otherwise(_empty_varr()))
+            e = None if e is None else F.when(kept, e)
+        err = _merge_err(err, e)
+    if all(not many and cv.drop is None for many, cv in parts):
+        out = V.varray(F.array(*[cv.v for _, cv in parts]))
+    else:
         out = V.varray(F.flatten(F.array(*segs)))
-        if err is not None:
-            # value is jq null under an in-band error (interp parity)
-            out = F.when(err.isNotNull(), V.vnull()).otherwise(out)
-        return CV(out, err, drop)
-
-    return fn_burst
+    if err is not None:
+        # value is jq null under an in-band error (interp parity)
+        out = F.when(err.isNotNull(), V.vnull()).otherwise(out)
+    return CV(out, err)
 
 
 def _col_dict(parts: list[tuple[CV, CV]]) -> CV:
@@ -2107,8 +2065,8 @@ def _col_dict_static(parts: list[tuple[str, CV]]) -> CV:
 # ===================================================================
 # Variables / reduce / string interpolation (beyond-reference, jq)
 # ===================================================================
-# Binding environment consulted at PLAN-BUILD time: ColFns/StreamFns
-# execute synchronously while the DataFrame plan is being assembled,
+# Binding environment consulted at PLAN-BUILD time: ColFns and the
+# planner run synchronously while the DataFrame plan is being assembled,
 # so a push/pop stack gives correct lexical scoping (incl. shadowing)
 # with zero per-row cost — a bound variable is just a Column ref.
 # THREAD-LOCAL: concurrent plan builds (threaded test harness, any
@@ -2119,10 +2077,9 @@ import threading as _threading
 
 class _EnvStack(_threading.local):
     """Entries are (name, column, meta); meta is an optional dict of
-    build-time static facts about the bound value (currently only
-    "elem": the statically-proven element kind of an array value,
-    feeding the typed fold lane). 2-tuple appends are normalized so
-    push sites that have no facts stay unchanged."""
+    build-time static facts about the bound value (_env_meta). 2-tuple
+    appends are normalized so push sites that have no facts stay
+    unchanged."""
 
     def __init__(self) -> None:
         self.items: list[tuple[str, Column, dict | None]] = []
@@ -2152,13 +2109,16 @@ def _env_lookup(name: str) -> Column:
     raise ValueError(f"${name} is not defined")
 
 
-def _env_elem_kind(name: str) -> str | None:
-    """Statically-proven element kind of the array bound to $name,
-    if its `as`-binding recorded one (None otherwise)."""
+def _env_meta(name: str) -> dict:
+    """Build-time facts recorded with $name's binding: "elem", the
+    statically-proven element kind of an array value (feeding the
+    typed fold lane); and, for a binding the planner landed
+    (_plan_direct), "depth", the layer of its column, and "bind", a
+    token naming that binding."""
     for n, _c, m in reversed(_ENV):
         if n == name:
-            return (m or {}).get("elem")
-    return None
+            return m or {}
+    return {}
 
 
 def _empty_varr() -> Column:
@@ -2182,16 +2142,9 @@ def _col_bind(node: ast.BindAs) -> ColFn | None:
         # etc.) so folds over $name can take the typed lane
         _ENV.append((name, ecv.v, {"elem": _static_elem_kind(node.source)}))
         try:
-            bcv = bf(v)
+            return _then(ecv, bf(v))
         finally:
             _ENV.pop()
-        if ecv.err is None:
-            return CV(bcv.v, bcv.err, _merge_drop(ecv.drop, bcv.drop))
-        out = F.when(ecv.err.isNotNull(), V.vnull()).otherwise(bcv.v)
-        drop = _merge_drop(
-            ecv.drop, None if bcv.drop is None else (ecv.err.isNull() & bcv.drop)
-        )
-        return CV(out, _merge_err(ecv.err, bcv.err), drop)
 
     return fn
 
@@ -2211,36 +2164,41 @@ def _col_interp(node: ast.StrInterp) -> ColFn | None:
                 return None
             fns.append(f)
 
-    def fn(v: Column) -> CV:
-        pieces: list[Column] = []
-        err = None
-        drop = None
-        for f in fns:
-            if isinstance(f, str):
-                pieces.append(F.lit(f))
-                continue
-            cv = f(v)
-            err = _merge_err(err, cv.err)
-            drop = _merge_drop(drop, cv.drop)
-            t = V.vtype(cv.v)
-            pieces.append(
-                F.when(t == "string", V.as_string(cv.v)).otherwise(F.to_json(cv.v))
-            )
-        out = V.vstring(F.concat(*pieces))
-        if err is not None:
-            out = F.when(err.isNotNull(), V.vnull()).otherwise(out)
-        return CV(out, err, drop)
+    return lambda v: _interp_cv(
+        [f if isinstance(f, str) else f(v) for f in fns]
+    )
 
-    return fn
+
+def _interp_cv(parts: list) -> CV:
+    """An interpolated string from its literal fragments (str) and
+    its expression results (CV, `tostring`-rendered)."""
+    pieces: list[Column] = []
+    err = None
+    drop = None
+    for p in parts:
+        if isinstance(p, str):
+            pieces.append(F.lit(p))
+            continue
+        err = _merge_err(err, p.err)
+        drop = _merge_drop(drop, p.drop)
+        t = V.vtype(p.v)
+        pieces.append(
+            F.when(t == "string", V.as_string(p.v)).otherwise(F.to_json(p.v))
+        )
+    out = V.vstring(F.concat(*pieces))
+    if err is not None:
+        out = F.when(err.isNotNull(), V.vnull()).otherwise(out)
+    return CV(out, err, drop)
 
 
 def _has_heavy_gen(node: ast.Node) -> bool:
     """True when the subtree contains a generator whose burst
     expression is HEAVY — a foreach fold. Splicing it inline
     duplicates the fold once per reference (HOF trees never enter
-    codegen, so every copy re-evaluates interpreted); stream-level
-    staging binds the burst to a real column first — CollapseProject
-    keeps non-cheap multi-referenced producers materialized."""
+    codegen, so every copy re-evaluates interpreted); the planner
+    lands the burst in a real column first (_plan_heavy_list) —
+    CollapseProject keeps non-cheap multi-referenced producers
+    materialized."""
     stack: list[ast.Node] = [node]
     while stack:
         n = stack.pop()
@@ -2264,7 +2222,6 @@ def _elems_colfn(node: ast.Node) -> ColFn | None:
     ARRAY<VARIANT> column (for folds). Supported: `.path.[]`,
     `.[a,b]`, `range(n)`, `scan`/`splits`, `limit`, `foreach`, scalar
     pipes into those, and generator|scalar pipes (the r8 splice)."""
-    _refuse_unstaged(node)
     if isinstance(node, ast.IterValues):
         opt = node.opt
 
@@ -2633,7 +2590,6 @@ def compile_packed(node: ast.Node) -> PFn | None:  # noqa: PLR0911, PLR0912
     needs stream machinery (multi-valued) or an unported feature.
     Invariant: the returned fn may assume its input is LEAF-cheap and
     must hand leaf-cheap inputs to its children (via _let_p)."""
-    _refuse_unstaged(node)
     if isinstance(node, ast.Identity):
         return lambda p: p
     if isinstance(node, ast.Literal):
@@ -2652,12 +2608,12 @@ def compile_packed(node: ast.Node) -> PFn | None:  # noqa: PLR0911, PLR0912
         cf = compile_col(node)
         return (lambda p: _pk_chain(p, cf)) if cf is not None else None
     if isinstance(node, ast.Assign):
-        # static-path assignment is pure-native (_set_json); the
+        # static-path assignment is pure-native (_set_variant); the
         # DEDICATED packed form below let-binds the rhs result and the
         # serialized leaf so each appears once — `map(.value =
         # (.value * 2))` on ONE row measured minutes of Catalyst
         # analysis under substitution (vjson re-reads its input ~8×,
-        # _set_json duplicates the leaf, and the err column repeats
+        # the set duplicates the leaf, and the err column repeats
         # the whole tree) vs ~1 s bound
         return _packed_assign(node)
     if isinstance(node, ast.Pipe):
@@ -2678,10 +2634,14 @@ def compile_packed(node: ast.Node) -> PFn | None:  # noqa: PLR0911, PLR0912
 
         def run_try(p: Column) -> Column:
             def fin(t: Column) -> Column:
-                return F.struct(
-                    F.when(t["e"].isNull(), t["v"]).otherwise(V.vnull()).alias("v"),
-                    _null_str().alias("e"),
-                    (t["d"] | t["e"].isNotNull()).alias("d"),
+                # an error or drop the input carries passes through:
+                # `try` covers only its own expression
+                return F.when(p["e"].isNotNull() | p["d"], p).otherwise(
+                    F.struct(
+                        F.when(t["e"].isNull(), t["v"]).otherwise(V.vnull()).alias("v"),
+                        _null_str().alias("e"),
+                        (t["d"] | t["e"].isNotNull()).alias("d"),
+                    )
                 )
 
             return _let_p(ef(p), fin)
@@ -2789,17 +2749,21 @@ def compile_packed(node: ast.Node) -> PFn | None:  # noqa: PLR0911, PLR0912
                 )
 
             def build(arr: Column) -> Column:
-                parts = F.transform(arr, lambda t: V.vjson(t["v"]))
+                # a dropped item adds no element (and no error); the
+                # collect keeps the input's own error and drop
+                kept = F.filter(arr, lambda t: ~t["d"])
+                parts = F.transform(kept, lambda t: V.vjson(t["v"]))
                 av = F.parse_json(
                     F.concat(F.lit("["), F.concat_ws(",", parts), F.lit("]"))
                 )
-                firste = F.filter(arr, lambda t: t["e"].isNotNull())
-                anyd = F.exists(arr, lambda t: t["d"])
-                e = F.when(F.size(firste) > 0, firste[0]["e"])
+                firste = F.filter(kept, lambda t: t["e"].isNotNull())
+                e = F.coalesce(
+                    p["e"], F.when(F.size(firste) > 0, firste[0]["e"])
+                )
                 return F.struct(
                     F.when(e.isNull(), av).otherwise(V.vnull()).alias("v"),
                     e.alias("e"),
-                    anyd.alias("d"),
+                    p["d"].alias("d"),
                 )
 
             # one array holds every item's packed result exactly once
@@ -3016,7 +2980,7 @@ def _static_elem_kind(node: ast.Node) -> str | None:
             return "string"
         return None
     if isinstance(node, ast.Var):
-        return _env_elem_kind(node.name)
+        return _env_meta(node.name).get("elem")
     return None
 
 
@@ -3476,121 +3440,33 @@ def _foreach_entries_col(node: ast.Foreach):
     return entries_fn
 
 
-def _stream_bind(node: ast.BindAs) -> StreamFn:
-    """`E as $x | B` (E single-valued: choose_tier's row-local rule):
-    run E's stages, stash its value in a fresh carried column, restore
-    the ORIGINAL input value, then run B with $x resolving to the
-    carried column. The binding rides the carry mechanism, so every
-    stage of B preserves it."""
-    sf = compile_stream(node.source)
-    name, body = node.name, node.body
-
-    def run(df: DataFrame) -> DataFrame:
-        keep = _fresh("bindin")
-        mid = sf(df.withColumn(keep, F.col("v")))
-        var_col = _fresh("var")
-        mid = mid.withColumns(
-            {var_col: F.col("v"), "v": F.col(keep)}
-        ).drop(keep)
-        _ENV.append(
-            (name, F.col(var_col), {"elem": _static_elem_kind(node.source)})
-        )
-        try:
-            out = compile_stream(body)(mid)
-        finally:
-            _ENV.pop()
-        return out.drop(var_col)
-
-    return run
-
-
 # ===================================================================
-# Staged stream compilation
+# Staged planning: one planner for the whole program
 # ===================================================================
 StreamFn = Callable[[DataFrame], DataFrame]
 
 
-def lift(colfn: ColFn) -> StreamFn:
-    """One projection stage: apply a column fn to `v` with error
-    passthrough and `?`-drop filtering."""
-
-    def run(df: DataFrame) -> DataFrame:
-        # one atomic withColumns (all expressions resolve against the
-        # incoming plan): each analyzed DataFrame op re-walks the whole
-        # accumulated plan, so stage machinery batches ops — build time
-        # for long pipelines is O(stages × plan), not O(stages² ops)
-        cv = colfn(F.col("v"))
-        cols = {
-            "v": F.when(F.col("err").isNotNull(), F.col("v")).otherwise(cv.v),
-            "err": F.col("err")
-            if cv.err is None
-            else F.coalesce(F.col("err"), cv.err),
-        }
-        if cv.drop is not None:
-            cols["__dropf"] = F.col("err").isNull() & _drop_flag(cv.drop)
-        out = df.withColumns(cols)
-        if cv.drop is not None:
-            out = _keep_rows(out, "__dropf").drop("__dropf")
-        return out
-
-    return run
-
-
-def _inline_cv(node: ast.Node) -> CV | None:
-    """Constant expressions (literals) need no stage: their CV is
-    v-independent and error-free, so inlining it skips ~8 analyzed
-    DataFrame ops. Plan-build time is driver-side O(stages × plan
-    size), so stage count is the lever that matters for wide dicts.
-    (Fusing NON-constant subtrees was tried and reverted — twice:
-    whole-query fusion took a 14-key dict from 16 s build / 3 s exec
-    to 168 s / 70 s, and even per-stage fusion measured 24 s / 2.7 s
-    vs 15 s / 0.3 s staged — attribute references across stage
-    boundaries are what gives Catalyst subtree sharing.)"""
-    if isinstance(node, ast.Literal):
-        return compile_col(node)(F.lit(None))
-    return None
-
-
-def _stage_cv(df: DataFrame, node: ast.Node, name: str) -> tuple[DataFrame, CV]:
-    """_stage, returning the staged CV — or an inline CV (no DataFrame
-    ops) when the node is a constant, or a direct-stage chain (layered
-    withColumns, no v/err save-restore) when the node is a
-    single-valued column-compilable tree."""
-    df, cvs = _stage_cv_many(df, [(node, name)])
-    return df, cvs[0]
-
-
 class _Plan:
-    """Deferred direct-stage emissions, grouped into depth layers.
+    """Deferred landings of one staged program, grouped into depth
+    layers.
 
     Driver-side analysis cost is O(withColumns calls x plan size), so
     the lever is the CALL count: independent chains (e.g. the 9-14
     values of a wide dict) merge layer-wise and land in
     O(max chain depth) withColumns total, not O(sum of ops). A column
     emitted at layer d only references columns from layers < d (or the
-    base v/err at depth -1), so each merged layer is one valid
-    withColumns. `?` drop filters are deferred to the end: column
-    emissions never change row count and are null-safe, so filtering
-    after all layers keeps exactly the same rows as filtering between
-    stages."""
+    input's v/err at depth -1), so each layer is one valid withColumns.
+    Drops are data (the `_d` columns), so no layer changes the row
+    count: apply filters once, on the program's final drop."""
 
     def __init__(self) -> None:
         self.layers: list[dict[str, Column]] = []
-        self.filters: list[str] = []
-        self.temps: list[str] = []
+        self.drops = False  # some drop column is carried
 
     def emit(self, depth: int, cols: dict[str, Column]) -> None:
         while len(self.layers) <= depth:
             self.layers.append({})
         self.layers[depth].update(cols)
-
-    def merge(self, other: "_Plan") -> None:
-        """Fold another item's plan in layer-wise (names are _fresh
-        unique, so updates never collide)."""
-        for depth, layer in enumerate(other.layers):
-            self.emit(depth, layer)
-        self.filters += other.filters
-        self.temps += other.temps
 
     # Below this many total emissions, all layers fold into ONE select
     # via lateral column aliases (Spark 3.4+: an expression may
@@ -3602,195 +3478,221 @@ class _Plan:
     # withColumns.
     LATERAL_FOLD_MAX = 16
 
-    def apply(self, df: DataFrame) -> DataFrame:
+    def apply(self, df: DataFrame, out: CV) -> DataFrame:
+        """Land every layer, set v/err from `out` (an upstream error
+        row keeps its value) and keep the rows `out` does not drop."""
         flat = [
             (name, col)
             for layer in self.layers
             for name, col in layer.items()
         ]
-        # lateral fold ONLY when no drop filters: lateral column
-        # aliases are substituted INLINE at analysis (no multi-use
-        # cost veto, unlike CollapseProject), so a `select()`/`?`
-        # flag referencing a staged operand ~9x via truthy() blows
-        # the collapsed expression to MBs (observed 2.1 MB Filter ->
-        # repeated janino failures + interpreted fallback, ~70 s for
-        # 500 rows). Per-layer withColumns keeps real column
-        # boundaries that the optimizer's cost veto respects.
-        if (
-            flat
-            and len(flat) <= self.LATERAL_FOLD_MAX
-            and not self.filters
-        ):
+        # lateral fold ONLY when no drop column is carried: lateral
+        # column aliases are substituted INLINE at analysis (no
+        # multi-use cost veto, unlike CollapseProject), so a
+        # `select()`/`?` drop referencing a staged operand ~9x via
+        # truthy() blows the collapsed expression to MBs (observed
+        # 2.1 MB Filter -> repeated janino failures + interpreted
+        # fallback, ~70 s for 500 rows). Per-layer withColumns keeps
+        # real column boundaries that the optimizer's cost veto
+        # respects.
+        if flat and len(flat) <= self.LATERAL_FOLD_MAX and not self.drops:
             df = df.select("*", *[c.alias(n) for n, c in flat])
         else:
             for layer in self.layers:
                 if layer:
                     df = df.withColumns(layer)
-        for flag in self.filters:
+        cols = {
+            "v": F.when(F.col("err").isNotNull(), F.col("v")).otherwise(out.v),
+            "err": out.err,
+        }
+        dead = [n for n, _ in flat]
+        if out.drop is not None:
+            flag = _fresh("dropf")
+            cols[flag] = _drop_flag(out.drop)
+            dead.append(flag)
+        df = df.withColumns(cols)
+        if out.drop is not None:
             df = _keep_rows(df, flag)
-        dead = [c for t in self.temps for c in (f"{t}_v", f"{t}_e")]
-        dead += self.filters
-        if dead:
-            df = df.drop(*dead)
-        return df
+        return df.drop(*dead) if dead else df
 
 
-def _pemit(
-    plan: _Plan,
-    cv: CV,
-    in_err: Column | None,
-    base: str | None,
-    in_depth: int,
-) -> tuple[CV, int, str]:
-    """Plan landing a raw CV into {base}_v/{base}_e one layer below its
-    inputs (error passthrough from in_err; `?` drops remove rows, only
-    when no pre-existing error — same semantics as lift()). base=None
-    means an intermediate stage: a fresh name, recorded in temps."""
-    final = base is not None
-    if base is None:
-        base = _fresh("d")
-    v = cv.v if in_err is None else F.when(in_err.isNotNull(), F.lit(None)).otherwise(cv.v)
-    e = _merge_err(in_err, cv.err)
-    if e is None:
-        e = F.lit(None).cast("string")
-    dropg = cv.drop if in_err is None else (
-        None if cv.drop is None else (in_err.isNull() & cv.drop)
-    )
-    depth = in_depth + 1
-    cols = {f"{base}_v": v, f"{base}_e": e}
-    if dropg is not None:
-        flag = f"__dropf_{base}"
-        cols[flag] = _drop_flag(dropg)
-        plan.filters.append(flag)
-    plan.emit(depth, cols)
-    if not final:
-        plan.temps.append(base)
-    return CV(F.col(f"{base}_v"), F.col(f"{base}_e")), depth, base
+def _pass(cv: CV, inp: CV) -> CV:
+    """`cv` with inp's error and drop passed through: where inp has an
+    error cv is not looked at, and a row inp dropped stays dropped."""
+    v, e, d = cv.v, cv.err, cv.drop
+    if inp.err is not None:
+        v = F.when(inp.err.isNotNull(), F.lit(None)).otherwise(v)
+        e = _merge_err(inp.err, e)
+        d = None if d is None else (inp.err.isNull() & d)
+    if d is not None:
+        d = _merge_drop(inp.drop, F.coalesce(d, F.lit(False)))
+    return CV(v, e, inp.drop if d is None else d)
+
+
+def _pemit(plan: _Plan, cv: CV, inp: CV, depth: int) -> tuple[CV, int]:
+    """Plan landing _pass(cv, inp) in fresh columns one layer below
+    `depth`: `_v` and `_e`, and `_d` when cv can drop (inp's own drop
+    column is referenced, not copied)."""
+    out = _pass(cv, inp)
+    base = _fresh("d")
+    cols = {
+        f"{base}_v": out.v,
+        f"{base}_e": out.err if out.err is not None else _null_str(),
+    }
+    drop = inp.drop
+    if cv.drop is not None:
+        cols[f"{base}_d"] = out.drop
+        drop = F.col(f"{base}_d")
+        plan.drops = True
+    plan.emit(depth + 1, cols)
+    return CV(F.col(f"{base}_v"), F.col(f"{base}_e"), drop), depth + 1
 
 
 class _CSE:
     """Common-subexpression cache for chains planned from the shared
     root input: repeated subtrees (e.g. `.text / " "` feeding four
     different dict values) plan once and later occurrences reuse the
-    staged columns by attribute reference. Keyed by AST node equality
-    (nodes are frozen dataclasses); consulted only when the input IS
-    the root, where equal subtrees provably compute equal columns.
-    Re-using a `?`-dropping subtree is row-equivalent: each
-    registration would drop the same rows again."""
+    landed columns by attribute reference. Keyed by AST node equality
+    (nodes are frozen dataclasses) and the `as` bindings in scope;
+    consulted only when the input IS the root, where equal subtrees
+    under the same bindings provably compute equal columns (drops
+    included: they are columns too)."""
 
     def __init__(self, root: CV) -> None:
         self.root = root
-        self.seen: dict[ast.Node, tuple[CV, int]] = {}
+        self.seen: dict[tuple, tuple[CV, int]] = {}
+
+    @staticmethod
+    def key(node: ast.Node) -> tuple:
+        return node, tuple((m or {}).get("bind") for _n, _c, m in _ENV.items)
 
 
 def _plan_direct(
     plan: _Plan,
     node: ast.Node,
-    name: str | None,
     inp: CV,
-    in_depth: int,
-    cse: _CSE | None = None,
-) -> tuple[CV, int, str | None] | None:
-    """Direct-stage planning recursion: every sub-operation lands in
-    its own projection slot, referenced downstream by ATTRIBUTE (the
-    sharing that makes staged compilation beat expression fusion — see
-    _inline_cv), but v/err are never saved/restored. Returns None when
-    the node needs full stream machinery (bursts/explodes/joins)."""
+    depth: int,
+    cse: _CSE,
+    final: bool = False,
+) -> tuple[CV, int]:
+    """Plan `node` over `inp` (landed at layer `depth`): every
+    sub-operation lands in its own projection slot, referenced
+    downstream by ATTRIBUTE — the sharing that makes staged
+    compilation beat expression fusion: fusing whole queries took a
+    14-key dict from 16 s build / 3 s exec to 168 s / 70 s, and even
+    per-stage fusion measured 24 s / 2.7 s vs 15 s / 0.3 s staged.
+    The program's last operation (`final`) does not land: _Plan.apply
+    sets v/err from it directly. Returns the node's CV and the layer
+    its columns land in."""
     cacheable = (
-        cse is not None
+        not final
         and inp is cse.root
-        and not isinstance(node, (ast.Identity, ast.Literal))
+        and not isinstance(node, (ast.Identity, ast.Literal, ast.Var))
     )
     if cacheable:
-        hit = cse.seen.get(node)
+        key = cse.key(node)
+        hit = cse.seen.get(key)
         if hit is not None:
-            return hit[0], hit[1], None
-    res = _plan_direct_raw(plan, node, name, inp, in_depth, cse)
-    if cacheable and res is not None:
-        cse.seen[node] = (res[0], res[1])
+            return hit
+    res = _plan_node(plan, node, inp, depth, cse, final)
+    if cacheable:
+        cse.seen[key] = res
     return res
 
 
-def _plan_direct_raw(
-    plan: _Plan,
-    node: ast.Node,
-    name: str | None,
-    inp: CV,
-    in_depth: int,
-    cse: _CSE | None,
-) -> tuple[CV, int, str | None] | None:
-    _refuse_unstaged(node)
+def _plan_node(
+    plan: _Plan, node: ast.Node, inp: CV, depth: int, cse: _CSE, final: bool
+) -> tuple[CV, int]:
+    def sub(n: ast.Node, i: CV = inp, d: int = depth) -> tuple[CV, int]:
+        return _plan_direct(plan, n, i, d, cse)
+
+    def land(cv: CV, d: int = depth, src: CV = inp) -> tuple[CV, int]:
+        return (_pass(cv, src), d) if final else _pemit(plan, cv, src, d)
+
     if isinstance(node, ast.Identity):
-        return inp, in_depth, None
+        return inp, depth
     if isinstance(node, ast.Literal):
-        # value replaced, incoming error still passes through
-        return CV(compile_col(node)(F.lit(None)).v, inp.err), in_depth, None
-    if isinstance(node, (ast.Index, ast.Identifier, ast.Slice)):
-        return _pemit(plan, compile_col(node)(inp.v), inp.err, name, in_depth)
-    if isinstance(node, ast.Pipe):
-        left = _plan_direct(plan, node.left, None, inp, in_depth, cse)
-        if left is None:
-            return None
-        mid, mid_depth, _ = left
-        return _plan_direct(plan, node.right, name, mid, mid_depth, cse)
-    if isinstance(node, ast.Unary):
-        inner = _plan_direct(plan, node.expr, None, inp, in_depth, cse)
-        if inner is None:
-            return None
-        icv, idepth, _ = inner
-        op = _col_neg if node.op == "-" else _col_not
-        return _pemit(plan, op(icv.v), icv.err, name, idepth)
-    if isinstance(node, ast.Binary):
-        left = _plan_direct(plan, node.left, None, inp, in_depth, cse)
-        if left is None:
-            return None
-        lcv, ld, _ = left
-        right = _plan_direct(plan, node.right, None, inp, in_depth, cse)
-        if right is None:
-            return None
-        rcv, rd, _ = right
-        cv = _col_binary(
-            node.op, lcv, rcv,
-            _static_kind(node.left), _static_kind(node.right),
+        # value replaced, incoming error and drop still pass through
+        return CV(F.parse_json(F.lit(node.text)), inp.err, inp.drop), depth
+    if isinstance(node, ast.Var):
+        meta = _env_meta(node.name)
+        return (
+            CV(_env_lookup(node.name), inp.err, inp.drop),
+            max(depth, meta.get("depth", -1)),
         )
-        return _pemit(plan, cv, inp.err, name, max(ld, rd))
-    if isinstance(node, ast.Assign):
-        af = _compile_assign(node)
-        if af is None:
-            return None
-        return _pemit(plan, af(inp.v), inp.err, name, in_depth)
+    if isinstance(node, (ast.Index, ast.Identifier, ast.Slice)):
+        return land(compile_col(node)(inp.v))
+    if isinstance(node, ast.Pipe):
+        mid, mid_depth = sub(node.left)
+        return _plan_direct(plan, node.right, mid, mid_depth, cse, final)
+    if isinstance(node, ast.Unary):
+        x, xd = sub(node.expr)
+        op = _col_neg if node.op == "-" else _col_not
+        return land(op(x.v), xd, x)
+    if isinstance(node, ast.Binary):
+        (l, ld), (r, rd) = sub(node.left), sub(node.right)
+        lk, rk = _static_kind(node.left), _static_kind(node.right)
+        return land(_col_binary(node.op, l, r, lk, rk), max(ld, rd))
     if isinstance(node, ast.Try):
-        r = _plan_direct(plan, node.expr, None, inp, in_depth, cse)
-        if r is None:
-            return None
-        rcv, rd, _ = r
-        return _pemit(plan, _try_cv(rcv), inp.err, name, rd)
+        x, xd = sub(node.expr)
+        return land(_try_cv(x), xd)
     if isinstance(node, ast.If):
-        staged = []
-        d = in_depth
-        for c, b in node.branches:
-            rc = _plan_direct(plan, c, None, inp, in_depth, cse)
-            rb = _plan_direct(plan, b, None, inp, in_depth, cse)
-            if rc is None or rb is None:
-                return None
-            staged.append((rc, rb))
-            d = max(d, rc[1], rb[1])
-        re_ = _plan_direct(plan, node.orelse, None, inp, in_depth, cse)
-        if re_ is None:
-            return None
-        d = max(d, re_[1])
-        cur = re_[0]
-        for (ccv, _cd, _cn), (bcv, _bd, _bn) in reversed(staged):
-            cur = _col_if(ccv, bcv, cur)
-        return _pemit(plan, cur, inp.err, name, d)
+        branches = [(sub(c), sub(b)) for c, b in node.branches]
+        cur, d = sub(node.orelse)
+        for (c, cd), (b, bd) in reversed(branches):
+            cur, d = _col_if(c, b, cur), max(d, cd, bd)
+        return land(cur, d)
+    if isinstance(node, ast.BindAs):
+        # the bound value is a landed column, so every $name reference
+        # in the body is a leaf (the body lands after it)
+        src, sd = sub(node.source)
+        _ENV.append((node.name, src.v, {
+            "elem": _static_elem_kind(node.source),
+            "depth": sd,
+            "bind": _fresh("bind"),
+        }))
+        try:
+            body, bd = sub(node.body, inp, sd)
+        finally:
+            _ENV.pop()
+        return land(_then(src, body), bd)
+    if isinstance(node, ast.DictCons):
+        vals = [sub(p.value) for p in node.pairs]
+        d = max([depth] + [x for _, x in vals])
+        skeys = [static_dict_key(p.key) for p in node.pairs]
+        if all(k is not None for k in skeys):
+            # static keys never land: only the values do, and the dict
+            # body is the cheap static assembly
+            return land(_col_dict_static(
+                [(k, cv) for k, (cv, _) in zip(skeys, vals)]
+            ), d)
+        keys = [sub(p.key) for p in node.pairs]
+        d = max([d] + [x for _, x in keys])
+        return land(_col_dict(
+            [(k, v) for (k, _), (v, _) in zip(keys, vals)]
+        ), d)
+    if isinstance(node, ast.StrInterp):
+        parts = [p if isinstance(p, str) else sub(p) for p in node.parts]
+        d = max([depth] + [p[1] for p in parts if not isinstance(p, str)])
+        return land(_interp_cv(
+            [p if isinstance(p, str) else p[0] for p in parts]
+        ), d)
+    if isinstance(node, ast.ListCons):
+        if _has_heavy_gen(node):
+            return _plan_heavy_list(plan, node, inp, depth, land)
+        return land(_col_list(node)(inp.v))
+    if isinstance(node, ast.Reduce):
+        return land(_col_reduce(node)(inp.v))
+    if isinstance(node, ast.Assign):
+        return land(_compile_assign(node)(inp.v))
     if isinstance(node, ast.Builtin):
         if node.name == "select":
-            arg = _plan_direct(plan, node.args[0], None, inp, in_depth, cse)
-            if arg is None:
-                return None
-            acv, ad, _ = arg
-            cv = _select_cv(inp.v, acv)
-            return _pemit(plan, cv, inp.err, name, max(ad, in_depth))
+            a, ad = sub(node.args[0])
+            return land(_select_cv(inp.v, a), ad)
+        if node.name == "del":
+            return land(_compile_del(node)(inp.v))
+        if node.name == "capture":
+            return land(_compile_capture(node)(inp.v))
         if node.name == "getpath" and len(node.args) == 1:
             # static-path fast lane (r7) — mirror of the compile_col
             # hook; a literal path needs no dynamic fold
@@ -3798,428 +3700,98 @@ def _plan_direct_raw(
 
             psegs = _literal_str_path(node.args[0])
             if psegs:
-                cv = _col_getpath_static(inp.v, psegs)
-                return _pemit(plan, cv, inp.err, name, in_depth)
-        if node.name in ARG1_VALUE_BUILTINS:
-            arg = _plan_direct(plan, node.args[0], None, inp, in_depth, cse)
-            if arg is None:
-                return None
-            acv, ad, _ = arg
-            cv = _col_builtin(node.name, inp.v, [acv])
-            return _pemit(plan, cv, inp.err, name, max(ad, in_depth))
-        if node.name in ARG2_VALUE_BUILTINS:
-            a0 = _plan_direct(plan, node.args[0], None, inp, in_depth, cse)
-            a1 = _plan_direct(plan, node.args[1], None, inp, in_depth, cse)
-            if a0 is None or a1 is None:
-                return None
-            cv = _col_builtin(node.name, inp.v, [a0[0], a1[0]])
-            return _pemit(plan, cv, inp.err, name, max(a0[1], a1[1], in_depth))
-        if node.name == "capture":
-            try:
-                cf = _compile_capture(node)
-            except NotImplementedError:
-                return None
-            return _pemit(plan, cf(inp.v), inp.err, name, in_depth)
-        if node.args:
-            return None  # other builtins with arguments stage fully
-        cv = _col_builtin(node.name, inp.v, [])
-        return _pemit(plan, cv, inp.err, name, in_depth)
-    if isinstance(node, ast.ListCons):
-        # row-local collect — including LIGHT generator payloads
-        # _col_list can splice ([scan(re)], [.xs.[]], [range(n)]);
-        # heavy payloads (foreach) stage through compile_stream's
-        # _stream_list_spliced, which binds the burst to a real column
-        # (one evaluation per row)
-        if _has_heavy_gen(node):
-            return None
-        cf = _col_list(node)
-        if cf is None:
-            return None
-        return _pemit(plan, cf(inp.v), inp.err, name, in_depth)
-    return None
-
-
-def _stage_cv_many(
-    df: DataFrame,
-    items: list[tuple[ast.Node, str]],
-) -> tuple[DataFrame, list[CV]]:
-    """Stage several independent single-valued nodes against the same
-    input v/err. Direct-stageable items share ONE layered plan (a wide
-    dict's values land in ~3 withColumns instead of ~3 per value);
-    constants inline; everything else falls back to full _stage."""
-    out: dict[int, CV] = {}
-    plan = _Plan()
-    fallback: list[tuple[int, ast.Node, str]] = []
-    root = CV(F.col("v"), F.col("err"))
-    cse = _CSE(root)
-    for i, (node, name) in enumerate(items):
-        cv = _inline_cv(node)
-        if cv is not None:
-            out[i] = cv
-            continue
-        # plan into a private scratch first: a mid-chain failure must
-        # not leave orphan emissions (or worse, `?` filters) behind —
-        # and must also roll back CSE entries pointing at discarded
-        # scratch columns
-        scratch = _Plan()
-        saved_cse = dict(cse.seen)
-        res = _plan_direct(scratch, node, name, root, -1, cse)
-        if res is None:
-            cse.seen = saved_cse
-            fallback.append((i, node, name))
-            continue
-        cv, depth, landed = res
-        # A top-level item can come back UN-landed (landed is None)
-        # referencing an intermediate `__d*` temp: a CSE hit on a
-        # previously staged subtree, or a Pipe whose tail is
-        # Identity/Literal returning its mid CV. apply() drops temps
-        # after the layers run, so a returned CV must only reference
-        # FINAL columns — re-land those into {name}_v/{name}_e here.
-        # Bare Identity/Literal items reference only the root v/err
-        # (never dropped) and skip the extra column.
-        if landed is None and not isinstance(
-            node, (ast.Identity, ast.Literal)
-        ):
-            cv, depth, landed = _pemit(scratch, cv, None, name, depth)
-        plan.merge(scratch)
-        out[i] = cv
-    df = plan.apply(df)
-    for i, node, name in fallback:
-        df = _stage(df, node, name)
-        out[i] = CV(F.col(f"{name}_v"), F.col(f"{name}_e"))
-    return df, [out[i] for i in range(len(items))]
-
-
-def _stage(df: DataFrame, node: ast.Node, name: str) -> DataFrame:
-    """Evaluate `node` against the current value, leaving the result in
-    columns `{name}_v` / `{name}_e` while restoring v/err. Row-count
-    preserving for single-valued nodes; `?` drops remove rows (which is
-    exactly the zip/product semantics for empty bursts)."""
-    sv, se = _fresh("sv"), _fresh("se")
-    pre = df.withColumns({sv: F.col("v"), se: F.col("err")})
-    s = compile_stream(node)(pre)
-    return s.withColumns(
-        {
-            f"{name}_v": F.col("v"),
-            f"{name}_e": F.col("err"),
-            "v": F.col(sv),
-            "err": F.col(se),
-        }
-    ).drop(sv, se)
-
-
-def compile_stream(node: ast.Node) -> StreamFn:
-    """Compile any node to a stream transform (staged by default)."""
-    _refuse_unstaged(node)
-    if isinstance(node, (ast.Identity,)):
-        return lambda df: df
-    if isinstance(node, (ast.Literal, ast.Index, ast.Identifier, ast.Slice)):
-        return lift(compile_col(node))  # leaf ops: small expressions
-
-    if isinstance(node, ast.Pipe):
-        lf, rf = compile_stream(node.left), compile_stream(node.right)
-        return lambda df: rf(lf(df))
-
-    if isinstance(node, ast.Unary):
-        inner = node.expr
-        op = _col_neg if node.op == "-" else _col_not
-
-        def run_unary(df: DataFrame) -> DataFrame:
-            nm = _fresh("u")
-            df = _stage(df, inner, nm)
-            cv = _chain(CV(F.col(f"{nm}_v"), F.col(f"{nm}_e")), op)
-            return _finish(df, cv, drop_cols=[f"{nm}_v", f"{nm}_e"])
-
-        return run_unary
-
-    if isinstance(node, ast.Binary):
-        op = node.op
-        left, right = node.left, node.right
-
-        lk, rk = _static_kind(left), _static_kind(right)
-
-        def run_binary(df: DataFrame) -> DataFrame:
-            ln, rn = _fresh("bl"), _fresh("br")
-            df, (lcv, rcv) = _stage_cv_many(df, [(left, ln), (right, rn)])
-            cv = _col_binary(op, lcv, rcv, lk, rk)
-            return _finish(df, cv, drop_cols=[f"{ln}_v", f"{ln}_e", f"{rn}_v", f"{rn}_e"])
-
-        return run_binary
-
-    if isinstance(node, ast.Assign):
-        return lift(_compile_assign(node))
-    if isinstance(node, ast.Try):
-        texpr = node.expr
-
-        def run_try(df: DataFrame) -> DataFrame:
-            an = _fresh("t")
-            df, tcv = _stage_cv(df, texpr, an)
-            return _finish(df, _try_cv(tcv), drop_cols=[f"{an}_v", f"{an}_e"])
-
-        return run_try
-    if isinstance(node, ast.If):
-        branches, orelse = node.branches, node.orelse
-
-        def run_ifstream(df: DataFrame) -> DataFrame:
-            items = []
-            for c, b in branches:
-                items.append((c, _fresh("ic")))
-                items.append((b, _fresh("ib")))
-            items.append((orelse, _fresh("ie")))
-            df, cvs = _stage_cv_many(df, items)
-            cur = cvs[-1]
-            for i in range(len(branches) - 1, -1, -1):
-                cur = _col_if(cvs[2 * i], cvs[2 * i + 1], cur)
-            dead = [f"{n}_v" for _, n in items] + [f"{n}_e" for _, n in items]
-            return _finish(df, cur, drop_cols=dead)
-
-        return run_ifstream
-    if isinstance(node, ast.Builtin) and node.name not in GENERATOR_BUILTINS:
-        if node.name == "select":
-            sarg = node.args[0]
-
-            def run_select(df: DataFrame) -> DataFrame:
-                an = _fresh("s")
-                df, acv = _stage_cv(df, sarg, an)
-                cv = _select_cv(F.col("v"), acv)
-                return _finish(df, cv, drop_cols=[f"{an}_v", f"{an}_e"])
-
-            return run_select
-        if node.name in ARG1_VALUE_BUILTINS:
-            arg = node.args[0]
-
-            def run_hasin(df: DataFrame) -> DataFrame:
-                an = _fresh("a")
-                df, acv = _stage_cv(df, arg, an)
-                cv = _col_builtin(node.name, F.col("v"), [acv])
-                return _finish(df, cv, drop_cols=[f"{an}_v", f"{an}_e"])
-
-            return run_hasin
-        if node.name == "del":
-            return lift(_compile_del(node))
-        if node.name == "capture":
-            return lift(_compile_capture(node))
-        if node.name in ARG2_VALUE_BUILTINS:
-            b0, b1 = node.args
-            bname = node.name
-
-            def run_arg2(df: DataFrame) -> DataFrame:
-                n0, n1 = _fresh("b"), _fresh("c")
-                df, (c0, c1) = _stage_cv_many(df, [(b0, n0), (b1, n1)])
-                cv = _col_builtin(bname, F.col("v"), [c0, c1])
-                return _finish(
-                    df, cv,
-                    drop_cols=[f"{n0}_v", f"{n0}_e", f"{n1}_v", f"{n1}_e"],
-                )
-
-            return run_arg2
-        return lift(lambda v: _col_builtin(node.name, v, []))
-
-    if isinstance(node, ast.Var):
-        return lift(compile_col(node))
-    if isinstance(node, ast.StrInterp):
-        cf = _col_interp(node)
-        if cf is None:
-            raise NotImplementedError(
-                "interpolated \\(...) expressions must be single-valued scalars"
-            )
-        return lift(cf)
-    if isinstance(node, ast.Reduce):
-        return lift(_col_reduce(node))  # not None: _refuse_unstaged
-    if isinstance(node, ast.BindAs):
-        # always the staged form: the carried binding column is a LEAF
-        # for every $var reference in the body, where the pure-column
-        # form would substitute the source's whole expression tree at
-        # each reference (jq_fold cold plan build: 31 s -> ~2 s)
-        return _stream_bind(node)
-    if isinstance(node, ast.ListCons):
-        # heavy generator payloads stage their burst as a column
-        # (one evaluation per row); light payloads splice row-locally
-        # via _col_list (not None: choose_tier's row-local rule)
-        return _stream_list_spliced(node) or lift(_col_list(node))
-    if isinstance(node, ast.DictCons):
-        return _stream_dict(node.pairs)
-
-    # `.[]`, `.[a,b]`, generators and foreach fan out: choose_tier
-    # runs such programs on the interp tier (_rowlocal_breach)
+                return land(_col_getpath_static(inp.v, psegs))
+        args = [sub(a) for a in node.args]
+        return land(
+            _col_builtin(node.name, inp.v, [a for a, _ in args]),
+            max([depth] + [d for _, d in args]),
+        )
+    # `.[]`, `.[a,b]`, generators and foreach fan out: compile_stream
+    # refuses such programs before planning (_unstaged_construct)
     raise NotImplementedError(f"no staged lane for {node!r}")
 
 
-def _finish(df: DataFrame, cv: CV, drop_cols: list[str]) -> DataFrame:
-    """Replace v/err from a staged CV (error passthrough + drops).
-    Batched like lift(): one withColumns + one drop, no _carries
-    (df.columns forces a full re-analysis of the accumulated plan)."""
-    cols = {
-        "v": F.when(F.col("err").isNotNull(), F.col("v")).otherwise(cv.v),
-        "err": F.col("err") if cv.err is None else F.coalesce(F.col("err"), cv.err),
-    }
-    if cv.drop is not None:
-        cols["__dropf"] = F.col("err").isNull() & _drop_flag(cv.drop)
-    out = df.withColumns(cols)
-    if cv.drop is not None:
-        out = _keep_rows(out, "__dropf").drop("__dropf")
-    return out.drop(*drop_cols)
-
-
-# ------------------------------------------------------------ streams
-def _stage_burst(
-    df: DataFrame, node: ast.Node
-) -> tuple[DataFrame, str, str | None] | None:
-    """Stage a row-local generator's burst as a FLAT array column;
-    returns (df, value_col, err_col_or_None), or None when
-    _elems_colfn cannot render the generator."""
-    ef = _elems_colfn(node)
-    if ef is None:
-        return None
-    cv = ef(F.col("v"))
-    n = _fresh("gsb")
-    cols = {n: cv.v}
-    en = None
-    if cv.err is not None:
-        en = f"{n}e"
-        cols[en] = cv.err
-    return df.withColumns(cols), n, en
-
-
-def _stream_list_spliced(node: ast.ListCons) -> StreamFn | None:
+def _plan_heavy_list(
+    plan: _Plan,
+    node: ast.ListCons,
+    inp: CV,
+    depth: int,
+    land: Callable[[CV, int], tuple[CV, int]],
+) -> tuple[CV, int]:
     """`[...]` whose payload contains a HEAVY row-local generator
-    (foreach — see _has_heavy_gen): stage each generator burst as ONE
-    flat column, then assemble the collect from column references.
-    The row-local _col_list splice would inline the heavy tree once
-    per reference (2-4 interpreted re-evaluations per row); a staged
-    column is evaluated once per row, and CollapseProject
+    (foreach — see _has_heavy_gen): each generator burst lands as ONE
+    flat array column, and the collect assembles from column
+    references. The row-local _col_list splice would inline the heavy
+    tree once per reference (2-4 interpreted re-evaluations per row);
+    a landed column is evaluated once per row, and CollapseProject
     keeps it materialized because the producer is non-cheap and
-    multi-referenced. Still zero joins, zero fan-out."""
-    if node.expr is None:
-        return None
+    multi-referenced. NEVER a struct: CollapseProject inlines
+    struct-landed producers through their field extractions and
+    re-splits them, duplicating the heavy tree once per field
+    reference — measured 2.4 MB / 927 map_entries in one collapsed
+    projection."""
     items = (
         list(node.expr.items)
         if isinstance(node.expr, ast.Iter)
         else [node.expr]
     )
-    if not any(_has_heavy_gen(i) for i in items):
-        return None
-
-    def stageable(n: ast.Node) -> bool:
-        return _elems_colfn(n) is not None
-
-    plans: list[tuple] = []
+    parts: list[tuple[bool, CV]] = []
+    d = depth
     for i in items:
         f = compile_col(i)
         if f is not None:
-            plans.append(("scalar", f))
+            parts.append((False, f(inp.v)))
             continue
+        gen, right = i, None
         if (
             isinstance(i, ast.Pipe)
             and is_multivalued(i.left)
             and not is_multivalued(i.right)
+            and _elems_colfn(i.left) is not None
         ):
-            # stage the LEFT burst; map the scalar right side over
-            # the staged column (cheap refs) instead of the genpipe
-            # splice's inlined tree
-            rpf = compile_packed(i.right)
-            if stageable(i.left) and rpf is not None:
-                plans.append(("genpipe", i.left, rpf))
-                continue
-        if not stageable(i):
-            return None
-        plans.append(("gen", i))
+            # land the LEFT burst; map the scalar right side over the
+            # landed column instead of the genpipe splice's inlined tree
+            right = compile_packed(i.right)
+            if right is not None:
+                gen = i.left
+        burst = _elems_colfn(gen)(inp.v)
+        n = _fresh("gsb")
+        cols = {n: burst.v}
+        if burst.err is not None:
+            cols[f"{n}e"] = burst.err
+        plan.emit(depth + 1, cols)
+        d = depth + 1
+        arr = F.col(n)
+        aerr = F.col(f"{n}e") if burst.err is not None else None
+        if right is not None:
+            mapped = F.transform(arr, lambda x: right(_pk(x)))
+            kept = F.filter(mapped, lambda t: ~t["d"])
+            first_err = F.get(
+                F.filter(kept, lambda t: t["e"].isNotNull()), 0
+            )["e"]
+            aerr = _merge_err(aerr, first_err)
+            arr = F.transform(kept, lambda t: t["v"])
+        parts.append((True, CV(arr, aerr)))
+    return land(_collect(parts), d)
+
+
+def compile_stream(node: ast.Node) -> StreamFn:
+    """The staged tier: plan the whole program over the input's v/err
+    (_plan_direct), apply the plan once and filter its final drop
+    once. Raises for a program with no staged lane (compile_query
+    never sends one)."""
+    construct = _unstaged_construct(node)
+    if construct is not None:
+        raise RuntimeError(
+            f"{construct}: no staged lane (compile_query runs such "
+            "programs on the interp tier)"
+        )
 
     def run(df: DataFrame) -> DataFrame:
-        # stage each burst as a FLAT array column (plus a separate
-        # error column only when the burst can error). NEVER a struct:
-        # CollapseProject inlines struct-staged producers through
-        # their field extractions and re-splits them, duplicating the
-        # heavy tree once per field reference — measured 2.4 MB / 927
-        # map_entries in one collapsed projection. A flat non-cheap
-        # column referenced more than once is kept materialized.
-        staged: dict[int, tuple[str, str | None]] = {}
-        drops: list[str] = []
-        for idx, pl in enumerate(plans):
-            if pl[0] == "scalar":
-                continue
-            sb = _stage_burst(df, pl[1])
-            if sb is None:  # defensive: stageable() said yes
-                raise NotImplementedError("burst staging failed")
-            df, n, en = sb
-            staged[idx] = (n, en)
-            drops += [n] + ([en] if en else [])
-        err = None
-        drop = None
-        segs: list[Column] = []
-        for idx, pl in enumerate(plans):
-            if pl[0] == "scalar":
-                cv = pl[1](F.col("v"))
-                err = _merge_err(err, cv.err)
-                drop = _merge_drop(drop, cv.drop)
-                segs.append(F.array(cv.v))
-                continue
-            n, en = staged[idx]
-            arr = F.col(n)
-            aerr = F.col(en) if en else _null_str()
-            if pl[0] == "genpipe":
-                # closure factory: a default arg would change the
-                # lambda's visible arity (transform introspects it)
-                def _mapper(rf):
-                    return lambda x: rf(
-                        F.struct(
-                            x.alias("v"),
-                            _null_str().alias("e"),
-                            F.lit(False).alias("d"),
-                        )
-                    )
-
-                mapped = F.transform(arr, _mapper(pl[2]))
-                kept = F.filter(mapped, lambda t: ~t["d"])
-                fe = F.get(
-                    F.filter(kept, lambda t: t["e"].isNotNull()), 0
-                )["e"]
-                aerr = F.coalesce(aerr, fe)
-                arr = F.transform(kept, lambda t: t["v"])
-            err = _merge_err(err, F.when(aerr.isNotNull(), aerr))
-            segs.append(arr)
-        out = V.varray(F.flatten(F.array(*segs)))
-        if err is not None:
-            out = F.when(err.isNotNull(), V.vnull()).otherwise(out)
-        return _finish(df, CV(out, err, drop), drop_cols=drops)
-
-    return run
-
-
-def _stream_dict(pairs: tuple[ast.DictPair, ...]) -> StreamFn:
-    """`{...}` with single-valued keys and values (a multi-valued part
-    makes the dict a cartesian product, ops.rs:665-681, which fans out
-    and runs on the interp tier): staged projections, non-string keys
-    skipped, dup keys last-wins (json.rs:501-507)."""
-    skeys = [static_dict_key(p.key) for p in pairs]
-    if all(k is not None for k in skeys):
-
-        def run_static(df: DataFrame) -> DataFrame:
-            # static keys never stage: only the values enter the
-            # shared layered plan (half the stages of the general
-            # path), and the dict body is the cheap static concat
-            names = [_fresh("dv") for _ in pairs]
-            drops = [f"{n}_v" for n in names] + [f"{n}_e" for n in names]
-            df, flat = _stage_cv_many(
-                df, [(p.value, n) for p, n in zip(pairs, names)]
-            )
-            cv = _col_dict_static(list(zip(skeys, flat)))
-            return _finish(df, cv, drop_cols=drops)
-
-        return run_static
-
-    def run(df: DataFrame) -> DataFrame:
-        items: list[tuple[ast.Node, str]] = []
-        drops = []
-        for pair in pairs:
-            kn, vn = _fresh("dk"), _fresh("dv")
-            items += [(pair.key, kn), (pair.value, vn)]
-            drops += [f"{kn}_v", f"{kn}_e", f"{vn}_v", f"{vn}_e"]
-        # one shared layered plan across every key and value: the
-        # whole dict lands in O(max chain depth) withColumns
-        df, flat = _stage_cv_many(df, items)
-        cvs = [(flat[2 * i], flat[2 * i + 1]) for i in range(len(pairs))]
-        return _finish(df, _col_dict(cvs), drop_cols=drops)
+        plan = _Plan()
+        root = CV(F.col("v"), F.col("err"))
+        out, _ = _plan_direct(plan, node, root, -1, _CSE(root), final=True)
+        return df if out is root else plan.apply(df, out)
 
     return run
 

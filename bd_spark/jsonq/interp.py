@@ -318,7 +318,9 @@ def _e_bindas(node: ast.BindAs, v: object) -> list[Entry]:
 
 def _e_reduce(node: ast.Reduce, v: object) -> list[Entry]:
     inits = _eval(node.init, v)
-    acc, aerr = inits[0] if inits else (None, "empty init")
+    if not inits:
+        return []  # jq: an empty init folds nothing
+    acc, aerr = inits[0]
     if aerr is not None:
         return [(None, aerr)]
     for ev, eerr in _eval(node.source, v):
@@ -339,7 +341,9 @@ def _e_reduce(node: ast.Reduce, v: object) -> list[Entry]:
 
 def _e_foreach(node: ast.Foreach, v: object) -> list[Entry]:
     inits = _eval(node.init, v)
-    acc, aerr = inits[0] if inits else (None, "empty init")
+    if not inits:
+        return []
+    acc, aerr = inits[0]
     if aerr is not None:
         return [(None, aerr)]
     outs: list[Entry] = []
@@ -363,22 +367,31 @@ def _e_foreach(node: ast.Foreach, v: object) -> list[Entry]:
 
 
 def _e_strinterp(node: ast.StrInterp, v: object) -> list[Entry]:
+    """One string per combination of the parts' outputs, in jq order
+    (`"\\(a)\\(b)"` is `(("" + a) + b)`, and jq's `+` varies its left
+    operand fastest, so the first part varies fastest); an empty part
+    yields nothing, and a combination with an error part is that
+    part's error."""
     import json as _j
 
-    pieces: list[str] = []
+    per_part: list[list[Entry]] = []
     for p in node.parts:
         if isinstance(p, str):
-            pieces.append(p)
+            per_part.append([(p, None)])
             continue
-        pouts = _eval(p, v)
-        pv, perr = pouts[0] if pouts else (None, "empty interpolation")
-        if perr is not None:
-            return [(None, perr)]
-        pieces.append(
-            pv if isinstance(pv, str)
-            else _j.dumps(pv, separators=(",", ":"), sort_keys=True)
-        )
-    return [("".join(pieces), None)]
+        per_part.append([
+            (pv if isinstance(pv, str)
+             else _j.dumps(pv, separators=(",", ":"), sort_keys=True), None)
+            if perr is None else (None, perr)
+            for pv, perr in _eval(p, v)
+        ])
+    out: list[Entry] = []
+    for combo in itertools.product(*reversed(per_part)):
+        combo = combo[::-1]
+        err = next((e for _, e in combo if e is not None), None)
+        out.append((None, err) if err is not None
+                   else ("".join(x for x, _ in combo), None))
+    return out
 
 
 _EVAL_DISPATCH: dict[type, object] = {
@@ -578,7 +591,9 @@ def _apply_binop(op: str, a: object, b: object) -> Entry:  # noqa: PLR0911, PLR0
         if _is_num(a) and _is_num(b):
             return (a / b, None) if b != 0 else (None, None)  # /0 -> null
         if isinstance(a, str) and isinstance(b, str):
-            return (a.split(b), None)
+            # an empty separator splits into characters (jq; the
+            # staged tier's regex split does the same)
+            return (a.split(b) if b else list(a), None)
         return (None, None)
     if op == "%":
         if _is_num(a) and _is_num(b):
@@ -1808,10 +1823,16 @@ def _builtin(name: str, args: tuple[ast.Node, ...], v: object) -> list[Entry]:  
         if isinstance(v, list):
             return [(list(range(len(v))), None)]
         return [_err(f"cannot keys {_tname(v)}")]
-    if name == "has":
-        return _membership(v, _arg_value(args[0], v))
-    if name == "in":
-        return _membership(_arg_value(args[0], v), v)
+    if name in ("has", "in"):
+        out = []
+        for a, ae in _eval(args[0], v):
+            if ae is not None:
+                out.append((None, ae))
+            else:
+                out.extend(
+                    _membership(v, a) if name == "has" else _membership(a, v)
+                )
+        return out
     if name == "map":
         # body errors PROPAGATE as the op's error (reference map is
         # `thunk(value)?` — ops.rs:1640/1648). r7 ADVICE fix: the old
@@ -1853,11 +1874,6 @@ def _builtin(name: str, args: tuple[ast.Node, ...], v: object) -> list[Entry]:  
         flags = [_truthy(_first_value(f, x)) for x in items]
         return [(any(flags) if name == "any" else all(flags), None)]
     raise ValueError(f"unknown builtin {name!r}")
-
-
-def _arg_value(node: ast.Node, v: object) -> object:
-    vals = [x for x, err in _eval(node, v) if err is None]
-    return vals[0] if vals else None
 
 
 def _first_value(node: ast.Node, v: object) -> object:

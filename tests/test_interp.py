@@ -10,14 +10,14 @@ import pytest
 
 from bd_spark.jsonq import interp, parser
 from bd_spark.sources.lenient_json import parse_one
-from tests.test_jsonq_corpus import CORPUS
+from tests.test_jsonq_corpus import CORPUS, answers
 
 
 @pytest.mark.parametrize(
     "query,doc,expected", CORPUS, ids=[c[0][:40] for c in CORPUS]
 )
 def test_interp_corpus(query, doc, expected):
-    got = interp.run_values(parser.parse(query), parse_one(doc))
+    got = answers(interp.run(parser.parse(query), parse_one(doc)))
     assert got == expected, f"{query} on {doc}"
 
 

@@ -2,9 +2,10 @@
 
 Re-expresses the reference's commented-out query test corpus
 (query.rs:274-1138 — the de-facto semantics spec per SURVEY.md §5)
-as (input doc, query, expected output values). Expected values encode
-the *intended* semantics: true `<=` (not the ops.rs:1272 bug), deep
-equality, `?` suppression.
+as (input doc, query, expected outputs). Expected outputs encode the
+*intended* semantics: true `<=` (not the ops.rs:1272 bug), deep
+equality, `?` suppression; an error entry is written ERR (its text is
+not compared).
 """
 
 from __future__ import annotations
@@ -13,7 +14,23 @@ import pytest
 
 from bd_spark.jsonq.runtime import JsonQ
 
-# (query, input_doc, expected_output_values)
+
+class _Err:
+    def __repr__(self) -> str:
+        return "ERR"
+
+
+# an error entry in an expected answer (error texts are not compared)
+ERR = _Err()
+
+
+def answers(entries) -> list:
+    """A program's outputs as the corpus states them: each value, and
+    ERR for each error entry, in output order."""
+    return [ERR if err is not None else v for v, err in entries]
+
+
+# (query, input_doc, expected_outputs)
 CORPUS = [
     # identity & literals (query.rs:280-370)
     (".", '{"foo": 10}', [{"foo": 10}]),
@@ -401,7 +418,7 @@ CORPUS = [
     ('gsub("o"; "0")', '"foo boo"', ["f00 b00"]),
     ('gsub("[aeiou]"; "$")', '"banana"', ["b$n$n$"]),  # $ escaped
     ('gsub("\\\\s+"; "-")', '"a  b\\tc"', ["a-b-c"]),
-    ('.s | sub(.p; "X")', '{"s": null}', []),  # non-string -> err entry
+    ('.s | sub(.p; "X")', '{"s": null}', [ERR]),  # non-string -> err entry
     ('scan("[a-z]+")', '"ab 12 cd"', ["ab", "cd"]),
     ('scan("q")', '"ab"', []),  # no matches -> empty stream
     ('[scan("[0-9]+")] | map(tonumber)', '"a1 b22 c333"', [[1, 22, 333]]),
@@ -427,22 +444,22 @@ CORPUS = [
     ("2.5 | round", "null", [3]),           # half away from zero
     ("-2.5 | round", "null", [-3]),
     (".x | round", '{"x": 7}', [7]),        # int passthrough
-    ('"q" | round', "null", []),            # non-number -> err
+    ('"q" | round', "null", [ERR]),         # non-number -> err
     ("100 | log10", "null", [2.0]),
     ("8 | log2", "null", [3.0]),
     ("1 | log", "null", [0.0]),
-    ("0 | log", "null", []),                # domain error -> err
+    ("0 | log", "null", [ERR]),             # domain error -> err
     ("0 | exp", "null", [1.0]),
     ("3 | exp2", "null", [8.0]),
     ("2 | exp10", "null", [100.0]),
-    ("1000 | exp", "null", []),             # overflow -> err
+    ("1000 | exp", "null", [ERR]),          # overflow -> err
     ("pow(2; 10)", "null", [1024.0]),       # always float tower
     ("pow(.b; 2)", '{"b": -3}', [9.0]),
-    ('pow("a"; 2)', "null", []),
+    ('pow("a"; 2)', "null", [ERR]),
     ("0 | todate", "null", ["1970-01-01T00:00:00Z"]),
     ("1438366800 | todate", "null", ["2015-07-31T18:20:00Z"]),
     ('"2015-03-05T23:51:47Z" | fromdate', "null", [1425599507]),
-    ('"not a date" | fromdate', "null", []),
+    ('"not a date" | fromdate', "null", [ERR]),
     ("todate | fromdate", "1425599507", [1425599507]),  # round-trip
     ('"  hi \\n" | trim', "null", ["hi"]),
     ('" x" | ltrim', "null", ["x"]),
@@ -452,11 +469,11 @@ CORPUS = [
     ('"hi" | @base64', "null", ["aGk="]),
     ("5 | @base64", "null", ["NQ=="]),      # tostring'd first
     ('"aGk=" | @base64d', "null", ["hi"]),
-    ('"!!" | @base64d', "null", []),        # invalid -> err
+    ('"!!" | @base64d', "null", [ERR]),     # invalid -> err
     ("@uri", '"a b/汉~"', ["a%20b%2F%E6%B1%89~"]),
     ("@html", '"a<b&\\"c\\""', ["a&lt;b&amp;&#34;c&#34;"]),
     ("@csv", '[1, "a,\\"b\\"", null]', ['1,"a,""b""",']),
-    ("@csv", "[true]", []),                 # bool invalid -> err
+    ("@csv", "[true]", [ERR]),              # bool invalid -> err
     ("@tsv", '["a\\tb", 2]', ["a\\tb\t2"]),
     ("@text", '{"a": 1}', ['{"a":1}']),     # == tostring
     ("@json", '"x"', ['"x"']),              # == tojson
@@ -494,7 +511,7 @@ CORPUS = [
     ("del(.a[-1])", '{"a": [1, 2, 3]}', [{"a": [1, 2]}]),
     ("del(.a[9])", '{"a": [1]}', [{"a": [1]}]),   # out of range: no-op
     ("del(.a[0].b)", '{"a": [{"b": 1, "c": 2}]}', [{"a": [{"c": 2}]}]),
-    ("del(.a[0])", '{"a": 5}', []),               # scalar: err
+    ("del(.a[0])", '{"a": 5}', [ERR]),            # scalar: err
     # jq `def` — parse-time macro expansion (beyond-reference)
     ("def double: . * 2; map(double)", "[1, 2, 3]", [[2, 4, 6]]),
     ("def addx($x): . + $x; .[] | addx(10)", "[1, 2]", [11, 12]),
@@ -524,19 +541,19 @@ CORPUS = [
     ('match("(?<w>[a-z]+)-(?<n>[0-9]+)?") | .captures | map(.name)',
      '"ab-"', [["w", "n"]]),
     ('match("(x)?(?<n>[0-9])") | .captures[0].offset', '"q7"', [-1]),
-    ('match("[")', '"x"', []),                   # bad regex -> err
+    ('match("[")', '"x"', [ERR]),                # bad regex -> err
     # multi-arity range + iteration builtins (until/while/repeat)
     ("[range(2; 8; 2)]", "null", [[2, 4, 6]]),
     ("range(1; 4)", "null", [1, 2, 3]),
     ("[range(5; 1; -2)]", "null", [[5, 3]]),
-    ("[range(0; 3; 0)]", "null", []),            # zero step -> err
+    ("[range(0; 3; 0)]", "null", [ERR]),         # zero step -> err
     ("[limit(3; range(0; 100; 7))]", "null", [[0, 7, 14]]),
     ("until(. > 100; . * 2)", "3", [192]),
     ("until(. >= 5; . + 1)", "0", [5]),
     ("[while(. < 20; . * 2)]", "3", [[3, 6, 12]]),
     ("[while(false; .)]", "1", [[]]),
     ("[limit(4; repeat(. * 2))]", "3", [[3, 6, 12, 24]]),
-    ("until(false; .)", "1", []),                # cap -> err
+    ("until(false; .)", "1", [ERR]),             # cap -> err
     ("first(.[] | select(. > 2))", "[1, 3, 5]", [3]),
     ('[first(scan("[a-z]+"))]', '"ab cd"', [["ab"]]),
     # generic stream-tier limit (r6): piped/nested generators
@@ -634,6 +651,30 @@ CORPUS = [
     ("if empty then 1 else 2 end", "null", []),
     (".a = (.b[])", '{"a":0,"b":[1,2]}',
      [{"a": 1, "b": [1, 2]}, {"a": 2, "b": [1, 2]}]),
+    # drops are data: `empty`, a failed `.k?` and a false `select`
+    # yield nothing, and whatever consumes that empty stream resolves
+    # it as jq does — an `if` takes its chosen branch's, `//` falls
+    # through, a collect item adds no element, a dict value or `as`
+    # source drops the whole output, and a later error never surfaces
+    ("if . > 3 then empty else . end", "3", [3]),
+    ("if . > 3 then .x? else . end", "3", [3]),
+    ("[.a?]", "5", [[]]),
+    ("[.a?] | length", "5", [0]),
+    ("[.a?, 1]", "5", [[1]]),
+    (".a? // 2", "5", [2]),
+    ("select(.x) // 0", '{"x": false}', [0]),
+    ("{k: (.a? // 0)}", "5", [{"k": 0}]),
+    (".x as $v | if $v then empty else 1 end", '{"x": false}', [1]),
+    ('.a? | error("x")', "5", []),
+    ("{a: 1} | if .b then empty else .a end", "null", [ERR]),
+    # an empty separator splits into characters on both tiers
+    ('. / ""', '"abc"', [["a", "b", "c"]]),
+    # a builtin argument and an interpolated part range over every
+    # output (jq): none gives no output, two give two
+    ("has(.ks[])", '{"ks": []}', []),
+    ('"\\(.xs[])"', '{"xs": [1, 2]}', ["1", "2"]),
+    # an empty init folds nothing (jq), on both tiers
+    ("reduce .xs[] as $x (empty; . + $x)", '{"xs": [1]}', []),
 ]
 
 
@@ -660,8 +701,10 @@ def corpus_results(jq, plan_node_names):
     case records the tier it took (last_tier is per thread, so it is
     read in the worker) and, when staged, the optimized-plan nodes
     the program added to its source stream's plan other than Project
-    and Filter (the staged tier is row-local); test_corpus checks
-    both."""
+    and Filter (the staged tier is row-local) and how many Filters it
+    added (at most one: the final drop filter); test_corpus checks
+    all three. Each case's answer keeps its error entries as ERR
+    (`answers`), so error presence is compared too."""
     import json
     from collections import Counter
     from concurrent.futures import ThreadPoolExecutor
@@ -673,6 +716,7 @@ def corpus_results(jq, plan_node_names):
     def run(case):
         query, doc, _ = case
         extra: list[str] = []
+        filters = 0
         try:
             stream = jq.stream_from_texts([doc])
             df = jq.run(query, stream, ordered=False)
@@ -685,17 +729,18 @@ def corpus_results(jq, plan_node_names):
                     n for n in added.elements()
                     if n not in ("Project", "Filter")
                 )
+                filters = added["Filter"]
             rows = df.orderBy("seq", "ord").select(
                 F.to_json("v").alias("j"), "err"
             ).collect()
-            got = [
-                json.loads(r.j) if r.j is not None else None
-                for r in rows if r.err is None
-            ]
+            got = answers(
+                (json.loads(r.j) if r.j is not None else None, r.err)
+                for r in rows
+            )
         except Exception as e:  # noqa: BLE001 — asserted per-case
             got = ("__raised__", f"{type(e).__name__}: {e}")
             tier = compiler.last_tier()
-        return got, tier, extra
+        return got, tier, extra, filters
 
     compiler.TIER_OVERRIDE = "staged"
     try:
@@ -879,10 +924,12 @@ def _pinned_tier(query: str) -> str:
 )
 def test_corpus(corpus_results, idx):
     query, doc, expected = CORPUS[idx]
-    got, tier, extra = corpus_results[idx]
+    got, tier, extra, filters = corpus_results[idx]
     assert got == expected, f"{query} on {doc}: {got} != {expected}"
     assert tier == _pinned_tier(query), query
     assert extra == [], f"{query}: staged plan nodes beyond Project/Filter: {extra}"
+    # drops are carried as data: only the program's final drop filters
+    assert filters <= 1, f"{query}: {filters} staged Filter nodes"
 
 
 @pytest.mark.parametrize("fmt", ["jsonl", "parquet"])

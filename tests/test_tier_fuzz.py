@@ -18,6 +18,10 @@ mapInPandas wrapper (ord bookkeeping, error rows, the tagged-float
 round trip) against the direct interp. Each run's tier is recorded in
 its worker and checked against compiler.choose_tier.
 
+Droppers (`.k?` on a non-object, `empty`, `select(...)`) appear where
+jq resolves their empty stream: `if` branches, `//` operands, collect
+items, dict values and `as` sources.
+
 Comparison contract (corpus convention): same output count, same
 error PRESENCE per entry, equal values on non-error entries. Error
 TEXTS may differ between tiers by design.
@@ -40,6 +44,20 @@ _WRAP = [
     '[{E}]', '{k: {E}}', '({E} | not)', '(try {E})', '({E})?',
     'if {E} then 1 else 2 end', 'if {E} then .a else .s end',
 ]
+# droppers yield nothing on some documents (`.k?` on a non-object or
+# a missing key, `empty`, a false `select`); _DROP_CTX puts one where
+# jq resolves the empty stream: an `if` branch, a `//` operand, a
+# collect item, a dict value, an `as` source, a `try` body
+_DROPPERS = ['.a?', '(.s | .k?)', '(.n | .k?)', 'empty', 'select(.n)',
+             'select(.a == null)', '(.xs | .[9]?)']
+_DROP_CTX = [
+    'if {C} then {D} else .n end', 'if {C} then .s else {D} end',
+    '({D} // {S})', '({S} // {D})', '[{D}]', '[{D}, {S}]', '[{S}, {D}]',
+    '({D} | length)', '{k: {D}}', '{k: ({D} // 0), j: {S}}',
+    '({D} as $v | [$v, {S}])', '({D} as $v | {S})', '(try {D})',
+    '({D} | error("e"))', 'if {D} then 1 else 2 end',
+]
+_CONDS = ['.n', '.a', '(.n > 2)', '(.s == "ab")', 'false']
 _ARRAY_SRC = ['.xs', '(.xs + [.n])', '(.xs | sort)', '(.xs | unique)',
               '(.xs | reverse)', '[.xs[]]', '(.xs | .[1:])']
 _ARRAY_OP = [
@@ -52,7 +70,7 @@ _ARRAY_OP = [
 
 
 def _gen_program(rng: random.Random) -> str:
-    kind = rng.randrange(4)
+    kind = rng.randrange(7)
     if kind == 0:  # scalar binary
         a, b = rng.choice(_SCALARS), rng.choice(_SCALARS)
         e = f'{a} {rng.choice(_OPS)} {b}'
@@ -60,10 +78,14 @@ def _gen_program(rng: random.Random) -> str:
         e = rng.choice(_WRAP).replace('{E}', rng.choice(_SCALARS))
     elif kind == 2:  # array pipeline
         e = rng.choice(_ARRAY_OP).replace('{A}', rng.choice(_ARRAY_SRC))
-    else:  # dict of two sub-expressions
+    elif kind == 3:  # dict of two sub-expressions
         e1 = rng.choice(_WRAP).replace('{E}', rng.choice(_SCALARS))
         e2 = rng.choice(_ARRAY_OP).replace('{A}', rng.choice(_ARRAY_SRC))
         e = f'{{p: {e1}, q: {e2}}}'
+    else:  # (3 kinds in 7) a dropper where jq resolves its empty stream
+        e = (rng.choice(_DROP_CTX).replace('{D}', rng.choice(_DROPPERS))
+             .replace('{C}', rng.choice(_CONDS))
+             .replace('{S}', rng.choice(_SCALARS)))
     if rng.random() < 0.3:  # nest once more
         e = rng.choice(_WRAP).replace('{E}', e)
     return e
@@ -98,7 +120,7 @@ def _gen_doc(rng: random.Random) -> str:
     return _json.dumps(doc)
 
 
-N_PROGRAMS = 24
+N_PROGRAMS = 40
 N_DOCS = 10
 
 
