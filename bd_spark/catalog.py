@@ -7,8 +7,6 @@ documents embeddings — one parquet file each under a scale-factor dir.
 from __future__ import annotations
 
 import os
-import uuid
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -83,66 +81,35 @@ def _fix_time_types(df: DataFrame) -> DataFrame:
     return df.withColumns(fixes) if fixes else df
 
 
-# rebalance() decision memo: the partition-count probe converts the
-# plan to an RDD (full physical planning, measured ~1.2 s driver-side
-# per call).  The decision is a pure function of the logical plan, so
-# cache it per (session, schema, Catalyst semanticHash) — rebuilt
-# queries (bench reruns, repeated operator calls over the same
-# source) skip the probe entirely.  Bounded FIFO.
-_REBALANCE_MEMO: dict[tuple, bool] = {}
-_REBALANCE_MEMO_MAX = 256
-
-# Session identity for cache keys: NOT id(session) — CPython can
-# reuse a dead session's id for a new one, resurrecting cache entries
-# bound to the stopped session (ADVICE r4). A WeakKeyDictionary hands
-# each live session a unique token; a GC'd session's token can never
-# be handed out again.
-_SESSION_TOKENS = weakref.WeakKeyDictionary()
-
-
-def session_token(spark: SparkSession) -> str:
-    tok = _SESSION_TOKENS.get(spark)
-    if tok is None:
-        tok = uuid.uuid4().hex
-        _SESSION_TOKENS[spark] = tok
-    return tok
-
-
 def rebalance(df: DataFrame) -> DataFrame:
-    """Ensure at least one partition per core before CPU-dense
-    row-local compute (minhash/simhash signatures, n-gram sets, jq
-    variant evaluation). Locally a small table is ONE parquet file =
-    ONE input split, which would serialize the whole operator on a
-    single core (measured 7 s single-core vs 0.4 s rebalanced for
-    minhash signatures at sf0.1). On a real cluster input splits
-    already exceed cores and this is a no-op — no shuffle added.
-    (AQE-coalesced post-shuffle frames also qualify: AQE sizes
-    partitions by shuffle bytes, not by the CPU density of what
-    follows, so a small-but-expensive frame still needs the spread.)
+    """The engine's one spread rule: a frame with fewer partitions than
+    cores (``defaultParallelism``) is round-robin repartitioned to one
+    partition per core before CPU-dense row-local compute
+    (minhash/simhash signatures, n-gram sets, jq evaluation, the
+    incremental dedup prefix probe). Locally a small table is ONE
+    parquet file = ONE input split, which would serialize the whole
+    operator on a single core (measured 7 s single-core vs 0.4 s
+    rebalanced for minhash signatures at sf0.1). On a real cluster
+    input splits already exceed cores and this is a no-op: no shuffle
+    is added.
+
+    Every call probes ``df.rdd.getNumPartitions()``, so the decision
+    always follows the files as they are now; nothing is cached. Over
+    a scan plus row-local projections the probe is driver-side
+    physical planning only (0.03-0.18 s at sf0.1, no Spark job). Over
+    a frame that already holds an exchange it is not free: AQE runs
+    the shuffle map stages to learn the coalesced partition count the
+    probe reads (1-3 jobs, ~0.4 s for a few-MB distinct at sf0.1).
+    Over a plain frame the next action runs those stages again; over a
+    persisted one the cache keeps them, so the work only moves into
+    query construction. Callers therefore apply it to scans. A
+    streaming frame has no RDD and comes back unchanged.
     """
-    try:
-        p = df.sparkSession.sparkContext.defaultParallelism
-        key = None
-        try:
-            key = (
-                session_token(df.sparkSession),
-                df.schema.simpleString(),
-                df._jdf.queryExecution().logical().semanticHash(),
-            )
-        except Exception:  # noqa: BLE001 — memo is best-effort
-            pass
-        if key is not None and key in _REBALANCE_MEMO:
-            needs = _REBALANCE_MEMO[key]
-        else:
-            needs = df.rdd.getNumPartitions() < p
-            if key is not None:
-                if len(_REBALANCE_MEMO) >= _REBALANCE_MEMO_MAX:
-                    _REBALANCE_MEMO.pop(next(iter(_REBALANCE_MEMO)))
-                _REBALANCE_MEMO[key] = needs
-        if needs:
-            return df.repartition(p)
-    except Exception:
-        pass
+    if df.isStreaming:
+        return df
+    p = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < p:
+        return df.repartition(p)
     return df
 
 

@@ -116,6 +116,9 @@ def _unstaged_here(node: ast.Node) -> str | None:
             segs = static_path(node.args[0])
             if segs and any(not isinstance(s, str) for s in segs):
                 return "del"
+        # the staged capture reads its group names at compile time
+        if node.name == "capture" and _capture_pattern(node) is None:
+            return "capture"
     if isinstance(node, ast.Binary) and node.op == "*" and not (
         _never_object(node.left) or _never_object(node.right)
     ):
@@ -1144,6 +1147,16 @@ def _named_groups(pat: str) -> list[tuple[str, int]]:
     return out
 
 
+def _capture_pattern(node: ast.Builtin) -> str | None:
+    """capture's pattern when it is a string literal, else None (the
+    program then has no staged lane, _unstaged_here)."""
+    arg = node.args[0]
+    if not isinstance(arg, ast.Literal):
+        return None
+    pat = _json.loads(arg.text)
+    return pat if isinstance(pat, str) else None
+
+
 def _compile_capture(node: ast.Builtin) -> ColFn:
     """capture(re): object of named captures from the FIRST match;
     no match drops the row (jq's match-based semantics: zero matches
@@ -1152,14 +1165,7 @@ def _compile_capture(node: ast.Builtin) -> ColFn:
     native regexp_extract. Dialect note (mirrored in the interp):
     unmatched optional groups yield \"\" — regexp_extract cannot
     distinguish them from an empty match."""
-    arg = node.args[0]
-    if not isinstance(arg, ast.Literal):
-        raise NotImplementedError("capture requires a literal pattern")
-    import json as _js
-
-    pat = _js.loads(arg.text)
-    if not isinstance(pat, str):
-        raise NotImplementedError("capture pattern must be a string")
+    pat = _capture_pattern(node)
     groups = _named_groups(pat)
 
     def fn(v: Column) -> CV:
@@ -2857,10 +2863,7 @@ def compile_packed(node: ast.Node) -> PFn | None:  # noqa: PLR0911, PLR0912
         if name in GENERATOR_BUILTINS:
             return None  # generators
         if name == "capture":
-            try:
-                cf = _compile_capture(node)
-            except NotImplementedError:
-                return None
+            cf = _compile_capture(node)
             return lambda p: _pk_chain(p, cf)
         if not node.args:
             return lambda p: _pk_chain(

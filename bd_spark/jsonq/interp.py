@@ -1293,22 +1293,24 @@ def _builtin(name: str, args: tuple[ast.Node, ...], v: object) -> list[Entry]:  
     if name == "capture":
         import re as _re
 
-        if not isinstance(args[0], ast.Literal):
-            return [_err("capture requires a literal pattern")]
-        import json as _j
-
-        pat = _j.loads(args[0].text)
-        if not isinstance(pat, str):
-            return [_err("capture pattern must be a string")]
-        if not isinstance(v, str):
-            return [_err(f"capture on {_tname(v)}")]
-        m = _re.search(_pyre(pat), v)
-        if m is None:
-            return []  # no match -> empty stream (jq match semantics)
-        # dialect: unmatched optional groups yield "" (the native
-        # engine's regexp_extract cannot distinguish them from null)
-        return [({k: (x if x is not None else "")
-                  for k, x in m.groupdict().items()}, None)]
+        outs = []
+        for pat, pe in _eval(args[0], v):
+            if pe is not None:
+                outs.append((None, pe))
+            elif not isinstance(v, str):
+                outs.append(_err(f"capture on {_tname(v)}"))
+            elif not isinstance(pat, str):
+                outs.append(_err(f"capture pattern {_tname(pat)}"))
+            else:
+                # no match -> no output (jq match semantics); dialect:
+                # unmatched optional groups yield "" (the native
+                # engine's regexp_extract cannot distinguish them from
+                # null)
+                m = _re.search(_pyre(pat), v)
+                if m is not None:
+                    outs.append(({k: (x if x is not None else "")
+                                  for k, x in m.groupdict().items()}, None))
+        return outs
     if name == "explode":
         if not isinstance(v, str):
             return [_err(f"explode on {_tname(v)}")]

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bd_spark.catalog import rebalance
 from bd_spark.jsonq import parser
 from bd_spark.jsonq.compiler import compile_query
 
@@ -35,13 +36,6 @@ class JsonQ:
         self.spark = spark
 
     # -- building document streams ------------------------------------
-    @staticmethod
-    def _widen(df: DataFrame) -> DataFrame:
-        """jq evaluation is CPU-dense (wide variant expressions): give
-        it at least one partition per core (catalog.rebalance)."""
-        from bd_spark.catalog import rebalance
-
-        return rebalance(df)
     def stream_from_texts(self, texts: list[str]) -> DataFrame:
         df = self.spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], "seq long, doc_text string"
@@ -63,7 +57,7 @@ class JsonQ:
         err = F.when(
             v.isNull() & F.col(col).isNotNull(), F.concat(F.lit("parse error: "), F.col(col))
         )
-        return self._widen(
+        return rebalance(
             df.select(
                 seq.cast("long").alias("seq"),
                 F.array().cast("array<long>").alias("ord"),
@@ -113,7 +107,7 @@ class JsonQ:
             doc = text_doc
         # seq is assigned BEFORE the (possible) rebalance shuffle, so
         # ids stay stable relative to the narrow source layout
-        return self._widen(
+        return rebalance(
             df.select(
                 F.monotonically_increasing_id().alias("seq"),
                 F.array().cast("array<long>").alias("ord"),

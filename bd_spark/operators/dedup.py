@@ -44,19 +44,6 @@ from bd_spark.operators.text import char_ngrams, let1, tokens, word_shingles
 _GRAM_HASH_SCHEME = "poly31"
 
 
-def _verify_parallelism(df: DataFrame) -> int:
-    """Partition count for CPU-heavy verify stages (exact Jaccard
-    over full gram sets). AQE coalesces the candidate exchange by
-    shuffle SIZE, but verify cost is CPU-per-row — a 124k-pair
-    candidate set coalesced to 4 partitions serialized the verify to
-    4 cores (measured 6.3 s -> 2.4 s at sf0.1 with an explicit
-    user-numbered repartition, which AQE never coalesces)."""
-    try:
-        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return df.sparkSession.sparkContext.defaultParallelism
-
-
 MINHASH_K = 32
 LSH_BANDS = 8
 LSH_ROWS = MINHASH_K // LSH_BANDS  # 4
@@ -745,10 +732,14 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
         pa.join(pb, cond)
         .select(F.col("pa.id").alias("id_a"), F.col("pb.id").alias("id_b"))
         .distinct()
-        # spread the CPU-heavy verify across cores (see
-        # _verify_parallelism); candidate pairs are output-sized, so
+        # spread the CPU-heavy verify (exact Jaccard over full gram
+        # sets) across cores: AQE coalesces the candidate exchange by
+        # shuffle SIZE, but verify cost is CPU per row (a 124k-pair
+        # candidate set coalesced to 4 partitions measured 6.3 s vs
+        # 2.4 s at sf0.1); an explicit numbered repartition is exempt
+        # from coalescing, and candidate pairs are output-sized, so
         # this extra exchange is trivially cheap at any scale
-        .repartition(_verify_parallelism(df))
+        .repartition(df.sparkSession.sparkContext.defaultParallelism)
     )
     # verify-join side: ONE canonical (id, ghash) projection probed
     # twice (id_a fetch, id_b fetch) so the exchange-reuse rule
@@ -1147,9 +1138,9 @@ def incremental_dedup(new_df: DataFrame, index: DataFrame, id_col: str,
         pa.join(pb, cond)
         .select(F.col("pa.id").alias("id"), F.col("pb.id").alias("src"))
         .distinct()
-        # spread the CPU-heavy verify across cores (see
-        # _verify_parallelism); candidate pairs are output-sized
-        .repartition(_verify_parallelism(new_df))
+        # spread the CPU-heavy verify across cores (as in
+        # ngram_jaccard_pairs); candidate pairs are output-sized
+        .repartition(new_df.sparkSession.sparkContext.defaultParallelism)
     )
     ga = newi.select(F.col("id"), F.col("ghash").alias("grams_a"))
     if shard_fits:
@@ -1210,9 +1201,10 @@ def incremental_dedup(new_df: DataFrame, index: DataFrame, id_col: str,
 @dataclass
 class DedupIndexState:
     """One consistent, versioned snapshot of the dedup index and its
-    batch-time derived state (all three from the SAME commit).
-    ``prefix_bytes`` is the prefix table's on-disk size (for the
-    small-data parallelism guard in dedup_batch)."""
+    batch-time derived state (all three from the SAME commit). The
+    frames are plain reads of the committed files: how wide a batch
+    scans them is decided at use (dedup_batch), from the files
+    themselves, not stored here."""
     index: DataFrame
     freq: DataFrame
     prefix: DataFrame
@@ -1220,7 +1212,6 @@ class DedupIndexState:
     threshold: float
     block_cols: list[str]
     version: int
-    prefix_bytes: int = 0
 
 
 class DedupIndexStore:
@@ -1343,7 +1334,6 @@ class DedupIndexStore:
             threshold=entry["threshold"],
             block_cols=list(entry["block_cols"]),
             version=v,
-            prefix_bytes=self._prefix.data_bytes(entry["prefix_v"]),
         )
 
     def dedup_batch(self, new_df: DataFrame, id_col: str, text_col: str,
@@ -1351,7 +1341,16 @@ class DedupIndexStore:
                     version: int | None = None) -> DataFrame:
         """O(shard + candidates) incremental dedup of a batch against
         a committed snapshot — the per-ingestion hot path. Persists
-        nothing index-sized (only the shard fingerprint)."""
+        nothing index-sized (only the shard fingerprint).
+
+        The candidate join streams the prefix scan, the batch's
+        heaviest stage, so the prefix goes through the engine's spread
+        rule (catalog.rebalance): file-source bin-packing gives a small
+        prefix fewer splits than cores (measured 11-16 s vs 6.9 s
+        batch exec at sf0.1 on 32 cores), and one round-robin
+        reshuffle of it restores full width. At corpus scale the scan
+        already yields thousands of splits, nothing is added, and the
+        batch plan stays free of index-proportional exchanges."""
         st = self.read(version)
         t = st.threshold if threshold is None else threshold
         if t < st.threshold:
@@ -1360,26 +1359,10 @@ class DedupIndexStore:
                 "the stored prefix is too short to be lossless — "
                 "rebuild the index state at the lower threshold"
             )
-        prefix = st.prefix
-        # small-data parallelism guard: the candidate join STREAMS the
-        # prefix scan, and file-source bin-packing gives a tiny prefix
-        # fewer splits than cores (10 splits for 748 KB at sf0.1 —
-        # measured 11-16 s vs 6.9 s batch exec), serializing the
-        # heaviest stage. Under ~8 MB/core, one trivially-cheap
-        # round-robin reshuffle restores full parallelism; at corpus
-        # scale the prefix is TB-sized, the scan already yields
-        # thousands of splits, and the guard never fires — the batch
-        # plan stays free of index-proportional exchanges.
-        sc = self.spark.sparkContext
-        if st.prefix_bytes < sc.defaultParallelism * (8 << 20):
-            try:
-                nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            except (TypeError, ValueError):
-                nparts = sc.defaultParallelism
-            prefix = prefix.repartition(nparts)
         return incremental_dedup(
             new_df, st.index, id_col, text_col, st.block_cols,
-            n=st.n, threshold=t, freq=st.freq, index_prefix=prefix,
+            n=st.n, threshold=t, freq=st.freq,
+            index_prefix=rebalance(st.prefix),
         )
 
     def vacuum(self, keep: int = 2) -> list[int]:

@@ -859,12 +859,14 @@ def embedding_near_dupes(df: DataFrame, dim: int, threshold: float = 0.95,
     # few MB of long pairs, so byte-based AQE coalescing collapses the
     # post-distinct stage (vector joins + 64-dim cosine per pair —
     # CPU-dense, ~5 us/pair) to ONE task (stageprof r12: 0.52 s
-    # single-task stage; the r11 minPartitionNum floor is inert in
-    # Spark 4 — removed upstream). Hash-repartitioning the tiny pair
-    # table by its key restores one-partition-per-core before the
-    # expensive work, the same floor rebalance() applies to scans
-    # (guide §2.2); explicit REPARTITION_BY_NUM is exempt from AQE
-    # coalescing. A/B at sf0.1: warm 2.6-3.2 -> 2.1-2.2 s.
+    # single-task stage). AQE's partition-count floor cannot help: it
+    # already defaults to defaultParallelism, and shuffles under its
+    # 1 MB minPartitionSize still coalesce to one partition.
+    # Hash-repartitioning the tiny pair table by its key restores
+    # one-partition-per-core before the expensive work, the same count
+    # rebalance() gives scans (guide §2.2); explicit REPARTITION_BY_NUM
+    # is exempt from AQE coalescing. A/B at sf0.1: warm 2.6-3.2 ->
+    # 2.1-2.2 s.
     cand = cand.repartition(
         df.sparkSession.sparkContext.defaultParallelism, "id_a", "id_b"
     )

@@ -66,14 +66,6 @@ def get_spark(app_name: str = "bd_spark", master: str | None = None) -> SparkSes
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # r11: AQE coalesces by SHUFFLE BYTES, which under-provisions
-        # CPU-dense small shuffles (a few-MB distinct/agg merge of
-        # computed strings collapsed to ONE 0.9 s task — stageprof).
-        # Floor the post-shuffle partition count at the core count:
-        # scale-adaptive (derived from cpus, not a constant), and on
-        # a cluster "at least one partition per core" is the same
-        # sane floor. Coalescing above the floor is unchanged.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", cpus)
         .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

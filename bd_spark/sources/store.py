@@ -130,22 +130,6 @@ class VersionedStore:
             return self.spark.read.schema(schema).parquet(self._data_dir(v))
         return self.spark.read.parquet(self._data_dir(v))
 
-    def data_bytes(self, version: int | None = None) -> int:
-        """On-disk bytes of one version's data directory (driver-side
-        file stat, no Spark job) — cheap input for small-data
-        parallelism guards."""
-        m = self._load_manifest()
-        v = m["current"] if version is None else version
-        total = 0
-        d = self._data_dir(v)
-        for root, _dirs, files in os.walk(d):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-        return total
-
     def history(self) -> list[dict]:
         return list(self._load_manifest()["versions"])
 

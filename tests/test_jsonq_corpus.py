@@ -429,6 +429,9 @@ CORPUS = [
      [{"y": "2024", "m": "07"}]),
     ('capture("(?<d>[0-9]+)")', '"abc"', []),  # no match -> empty
     ('capture("([a-z])(?<n>[0-9])")', '"q7"', [{"n": "7"}]),  # numbering
+    # a pattern that is not a string literal: no staged lane
+    ('. as $d | $d.s | capture($d.p)', '{"s": "ab", "p": "(?<x>a)"}',
+     [{"x": "a"}]),
     ("explode", '"AB"', [[65, 66]]),
     ("implode", "[72, 105, 128021]", ["Hi\U0001f415"]),  # surrogate pair
     ("explode | implode", '"汉语ab"', ["汉语ab"]),
@@ -892,6 +895,11 @@ def _has_unstaged(node) -> bool:
             return True
         if node.name == "del" and any(
             isinstance(s, int) for s in parser.static_path(node.args[0]) or ()
+        ):
+            return True
+        if node.name == "capture" and not (
+            isinstance(node.args[0], ast.Literal)
+            and node.args[0].text.startswith('"')
         ):
             return True
     if isinstance(node, ast.Binary) and node.op == "*" and not (

@@ -515,3 +515,35 @@ def test_incremental_dedup_batch_no_index_shuffle(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, out.collect())) == \
         sorted(map(tuple, inline.collect()))
     spark.catalog.clearCache()
+
+
+def test_rebalance_follows_the_files_as_they_are_now(spark, tmp_path):
+    """catalog.rebalance decides on the partitions the frame has at the
+    call, not on an earlier decision for the same path: a one-file
+    directory is spread across the cores, and the same directory read
+    again after it has been rewritten with one file per core is not."""
+    from bd_spark.catalog import rebalance
+
+    path = str(tmp_path / "t")
+    p = spark.sparkContext.defaultParallelism
+    spark.range(100).coalesce(1).write.parquet(path)
+    first = spark.read.parquet(path)
+    spread = rebalance(first)
+    assert spread is not first
+    assert spread.rdd.getNumPartitions() == p
+    spark.range(100).repartition(p).write.mode("overwrite").parquet(path)
+    second = spark.read.parquet(path)
+    assert second.rdd.getNumPartitions() >= p
+    assert rebalance(second) is second
+
+
+def test_rebalance_leaves_a_streaming_frame_alone(spark, tmp_path):
+    """A streaming frame has no RDD to probe: it comes back unchanged
+    (JsonQ.stream_from_text_column accepts one)."""
+    from bd_spark.catalog import rebalance
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.json").write_text('{"k": 1}\n')
+    stream = spark.readStream.schema("k long").json(str(src))
+    assert rebalance(stream) is stream
