@@ -61,10 +61,6 @@ def ensure_session_confs(spark: SparkSession) -> None:
             pass  # conf made static in this build; best-effort
 
 
-# Back-compat alias (older call sites / tests)
-_ensure_nanos_conf = ensure_session_confs
-
-
 def _fix_time_types(df: DataFrame) -> DataFrame:
     """Normalize time columns to session-TZ TIMESTAMP regardless of how
     the testdata stored them. The driver's parquet stores

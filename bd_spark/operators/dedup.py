@@ -307,110 +307,6 @@ def hamming_near_dupes(hashed: DataFrame, id_col: str, hash_col: str,
     ).where(F.col("hamming") <= max_hamming)
 
 
-def connected_components(ids: DataFrame, pairs: DataFrame,
-                         id_col: str = "id", max_iter: int = 20) -> DataFrame:
-    """Duplicate-cluster assignment: connected components of the
-    near-dup pair graph by iterative min-label propagation.
-
-    Each node starts labeled with its own id; every round each node
-    takes the min of its label and its neighbors' labels; at the fixed
-    point every component carries its minimum id as the cluster label
-    (singletons label themselves).  The result is
-    iteration-order-independent, so a DuckDB recursive CTE reproduces
-    it exactly.
-
-    Scale notes: each round combines neighbor-min (HashMin) with
-    POINTER JUMPING (adopt label(label(x))), so rounds needed are
-    O(log diameter), not O(diameter) — adversarial path graphs
-    converge comfortably inside max_iter (see the 300-node-chain
-    test), while the quasi-clique graphs LSH banding produces still
-    finish in 2-3 rounds.  ``localCheckpoint`` truncates plan lineage
-    each round (iterative joins otherwise stack plans exponentially).
-    The same family of ideas at larger scale is star contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond").
-    """
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .persist()
-    )
-    # Early exit: no edges -> every node is its own singleton cluster.
-    # One limit-1 job on the (persisted) edge set replaces a whole
-    # label-propagation round over |ids| rows — at high thresholds the
-    # pair set is routinely empty and the loop never earns its cost.
-    if edges.isEmpty():
-        edges.unpersist()
-        return ids.select(
-            F.col(id_col).alias("id"), F.col(id_col).alias("cluster")
-        )
-    # Propagate over the edge-touched subgraph only: min-label rounds
-    # can only ever change labels of nodes with at least one edge, so
-    # the iteration state is O(|edge nodes|), not O(|ids|) — at 100 TB
-    # near-dup rates of a few percent that is a 10-100x smaller
-    # per-round shuffle.  Untouched ids rejoin as singletons at the
-    # end.  checkpoint the seed so the (possibly expensive) pairs
-    # subtree is computed exactly once, not re-evaluated per round.
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("label"))
-        .localCheckpoint()
-    )
-    for round_idx in range(max_iter):
-        nbr = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        stepped = labels.join(nbr, labels.id == nbr.src, "left").select(
-            labels.id.alias("id"),
-            F.least(
-                labels.label, F.coalesce(nbr.nbr_label, labels.label)
-            ).alias("label"),
-            labels.label.alias("old"),
-        )
-        if round_idx >= 3:
-            # Pointer jumping: additionally adopt label(label(x)) — the
-            # remaining propagation distance halves per round, so long
-            # chains converge in O(log diameter) rounds instead of
-            # O(diameter) (plain HashMin would silently exceed
-            # max_iter on adversarial path graphs; see
-            # test_connected_components_long_chain). label(x) is a
-            # node id and labels only decrease, so the jump preserves
-            # the min-reachable-id fixed point exactly. Engaged only
-            # after round 3: LSH near-dup graphs are quasi-cliques
-            # that converge by then, and each jump join costs a
-            # per-round plan compile the common case shouldn't pay.
-            a, b = stepped.alias("a"), stepped.alias("b")
-            stepped = a.join(
-                b, F.col("a.label") == F.col("b.id"), "left"
-            ).select(
-                F.col("a.id").alias("id"),
-                F.least(
-                    F.col("a.label"),
-                    F.coalesce(F.col("b.label"), F.col("a.label")),
-                ).alias("label"),
-                F.col("a.old").alias("old"),
-            )
-        # the convergence flag rides along in the checkpointed frame:
-        # one job materializes labels AND the change count
-        new_labels = stepped.select(
-            "id",
-            "label",
-            (F.col("label") < F.col("old")).alias("chg"),
-        ).localCheckpoint()
-        changed = new_labels.where("chg").count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
-            break
-    edges.unpersist()
-    return (
-        ids.select(F.col(id_col).alias("id"))
-        .join(labels, "id", "left")
-        .select("id", F.coalesce("label", F.col("id")).alias("cluster"))
-    )
-
-
 # Edge sets at or under this size short-circuit the distributed star
 # loop into one driver-side union-find (see connected_components_star):
 # ~16 bytes/edge keeps the collect a few MB, far below any driver
@@ -431,9 +327,10 @@ def connected_components_star(ids: DataFrame, pairs: DataFrame,
                               ) -> DataFrame:
     """Connected components by ALTERNATING STAR CONTRACTION
     (large-star / small-star, Kiveris et al., "Connected Components
-    in MapReduce and Beyond") — same fixed point as
-    :func:`connected_components` (every node labeled with its
-    component's min id), fewer jobs per round.
+    in MapReduce and Beyond"): every node is labeled with its
+    component's min id (singletons label themselves), the fixed point
+    of min-label propagation, so the iteration order does not matter
+    and a DuckDB recursive CTE reproduces it exactly.
 
     State is ONE edge set (no separate labels frame):
 
@@ -444,11 +341,11 @@ def connected_components_star(ids: DataFrame, pairs: DataFrame,
       m = min of u's smaller neighbors; re-attach them and u to m.
 
     Both steps are ONE window shuffle + a distinct each (2 shuffles,
-    1 job per round via a combined signature agg), versus HashMin +
-    pointer-jumping's agg + 2 joins + count.  Round count is
+    1 job per round via a combined signature agg).  Round count is
     O(log n) regardless of graph shape (the paper's Thm 2), so no
     data-dependent diameter term.  ``localCheckpoint`` per round
-    truncates the iterative lineage exactly like the HashMin path.
+    truncates the iterative lineage (iterative joins otherwise stack
+    plans exponentially).
 
     Convergence check: the edge set is a fixed point of both steps
     iff it is a set of min-centered stars; detected by an order-

@@ -72,6 +72,31 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(da, db) / (l2norm(da) * l2norm(db))
 
 
+def _cids_by_cosine(cents) -> Column:
+    """Centroid ids ranked by (round(cos, 9) desc, cid asc) against the
+    row's ``_dv`` vector and its ``_nv`` norm: the deterministic argmax
+    of k-means assignment and IVF probing. ``cents`` is (cid, vector)
+    pairs. All centroid cosines come from ONE transform over a literal
+    centroid matrix: a separate dot-expression tree per centroid, each
+    re-deriving the cast vector, made plan build the dominant cost."""
+    cents = list(cents)
+    cents_mat = _lit_mat(cv for _, cv in cents)
+    cnorms = _lit_vec(sum(x * x for x in cv) ** 0.5 for _, cv in cents)
+    cids_lit = F.expr("array(" + ",".join(f"{int(c)}L" for c, _ in cents) + ")")
+    scored = F.transform(
+        cents_mat,
+        lambda cv, i: F.struct(
+            (-F.round(
+                dot(F.col("_dv"), cv)
+                / (F.col("_nv") * F.element_at(cnorms, i + 1)),
+                9,
+            )).alias("negcos"),
+            F.element_at(cids_lit, i + 1).alias("cid"),
+        ),
+    )
+    return F.transform(F.array_sort(scored), lambda s: s.getField("cid"))
+
+
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      query_id_col: str = "query_id") -> DataFrame:
@@ -337,25 +362,7 @@ def kmeans_fit(corpus: DataFrame, k: int, iters: int = 2,
         .select("_dv", "_nv")
     )
     for _ in range(iters):
-        cents_mat = _lit_mat(cents)
-        cnorms = _lit_vec(sum(x * x for x in cv) ** 0.5 for cv in cents)
-        cids_lit = F.expr(
-            "array(" + ",".join(f"{c}L" for c in range(k)) + ")"
-        )
-        scored = F.transform(
-            cents_mat,
-            lambda cv, i: F.struct(
-                (-F.round(
-                    dot(F.col("_dv"), cv)
-                    / (F.col("_nv") * F.element_at(cnorms, i + 1)),
-                    9,
-                )).alias("negcos"),
-                F.element_at(cids_lit, i + 1).alias("cid"),
-            ),
-        )
-        cid = F.element_at(
-            F.transform(F.array_sort(scored), lambda s: s.getField("cid")), 1
-        )
+        cid = F.element_at(_cids_by_cosine(enumerate(cents)), 1)
         # the posexplode lives in its OWN select: a generator in the
         # same projection as the HOF-struct argmax makes Catalyst's
         # generator extraction re-analyze the struct with canonical
@@ -424,40 +431,14 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int,
                 f"corpus has {len(cents)} rows; need >= nlist={nlist} centroids"
             )
 
-    # all nlist centroid cosines in ONE transform over a literal
-    # centroid matrix (vector and its norm staged once as columns) —
-    # nlist separate dot-expression trees each re-deriving the cast
-    # vector made plan build the dominant cost (the banding lesson)
-    cents_mat = _lit_mat(cv for _, cv in cents)
-    cnorms = _lit_vec(sum(x * x for x in cv) ** 0.5 for _, cv in cents)
-    cids_lit = F.expr(
-        "array(" + ",".join(f"{int(cid)}L" for cid, _ in cents) + ")"
-    )
-
-    def best_cids(dv: Column, nv: Column, top: int) -> Column:
-        """array of the `top` centroid ids by (round(cos,9) desc, cid asc)."""
-        scored = F.transform(
-            cents_mat,
-            lambda cv, i: F.struct(
-                (-F.round(
-                    dot(dv, cv) / (nv * F.element_at(cnorms, i + 1)), 9
-                )).alias("negcos"),
-                F.element_at(cids_lit, i + 1).alias("cid"),
-            ),
-        )
-        return F.slice(
-            F.transform(F.array_sort(scored), lambda s: s.getField("cid")), 1, top
-        )
-
+    ranked = _cids_by_cosine(cents)
     assigned = (
         corpus.withColumn("_dv", _dvec(F.col(vec_col)))
         .withColumn("_nv", l2norm(F.col("_dv")))
         .select(
             F.col(id_col),
             F.col(vec_col),
-            F.element_at(
-                best_cids(F.col("_dv"), F.col("_nv"), 1), 1
-            ).alias("cid"),
+            F.element_at(ranked, 1).alias("cid"),
         )
     )
     probes = F.broadcast(
@@ -466,9 +447,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int,
         .select(
             F.col(query_id_col),
             F.col(vec_col).alias("_qvec"),
-            F.explode(
-                best_cids(F.col("_dv"), F.col("_nv"), nprobe)
-            ).alias("cid"),
+            F.explode(F.slice(ranked, 1, nprobe)).alias("cid"),
         )
     )
     scored = assigned.join(probes, "cid").select(
@@ -535,25 +514,7 @@ def _assign_cids(corpus: DataFrame, cents: list[list[float]],
                  id_col: str, vec_col: str) -> DataFrame:
     """(id, vec, cid): zero-shuffle map-side cosine argmax against
     literal centroids (round-9, ties -> lowest cid)."""
-    cents_mat = _lit_mat(cents)
-    cnorms = _lit_vec(sum(x * x for x in cv) ** 0.5 for cv in cents)
-    cids_lit = F.expr(
-        "array(" + ",".join(f"{c}L" for c in range(len(cents))) + ")"
-    )
-    scored = F.transform(
-        cents_mat,
-        lambda cv, i: F.struct(
-            (-F.round(
-                dot(F.col("_dv"), cv)
-                / (F.col("_nv") * F.element_at(cnorms, i + 1)),
-                9,
-            )).alias("negcos"),
-            F.element_at(cids_lit, i + 1).alias("cid"),
-        ),
-    )
-    cid = F.element_at(
-        F.transform(F.array_sort(scored), lambda s: s.getField("cid")), 1
-    )
+    cid = F.element_at(_cids_by_cosine(enumerate(cents)), 1)
     return (
         corpus.withColumn("_dv", _dvec(F.col(vec_col)))
         .withColumn("_nv", l2norm(F.col("_dv")))
@@ -681,24 +642,7 @@ def ivf_index_topk(spark, path: str, queries: DataFrame, k: int,
         (int(r["cid"]), [float(x) for x in r["centroid"]])
         for r in spark.read.parquet(path + ".centroids").collect()
     )
-    cents_mat = _lit_mat(cv for _, cv in crows)
-    cnorms = _lit_vec(sum(x * x for x in cv) ** 0.5 for _, cv in crows)
-    cids_lit = F.expr("array(" + ",".join(f"{c}L" for c, _ in crows) + ")")
-    scored = F.transform(
-        cents_mat,
-        lambda cv, i: F.struct(
-            (-F.round(
-                dot(F.col("_dv"), cv)
-                / (F.col("_nv") * F.element_at(cnorms, i + 1)),
-                9,
-            )).alias("negcos"),
-            F.element_at(cids_lit, i + 1).alias("cid"),
-        ),
-    )
-    top = F.slice(
-        F.transform(F.array_sort(scored), lambda s: s.getField("cid")),
-        1, nprobe,
-    )
+    top = F.slice(_cids_by_cosine(crows), 1, nprobe)
     probes = (
         queries.withColumn("_dv", _dvec(F.col(vec_col)))
         .withColumn("_nv", l2norm(F.col("_dv")))

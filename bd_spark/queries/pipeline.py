@@ -314,9 +314,10 @@ def pipe_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster assignment: connected components by
     alternating star contraction (Kiveris et al.) over the
     MinHash-LSH pair graph; every doc gets its component's min doc_id
-    as cluster label (same fixed point as min-label propagation, so
-    the recursive-CTE oracle is unchanged — equivalence is asserted
-    in test_star_contraction_matches_hashmin)."""
+    as cluster label (the fixed point of min-label propagation, which
+    the recursive-CTE oracle computes; both star lanes are pinned
+    against a union-find ground truth in
+    test_star_contraction_adversarial_shapes)."""
     docs = table(spark, "documents", sf_dir)
     pairs = dedup.minhash_lsh_dedup(docs, "doc_id", "text", threshold=0.7)
     return dedup.connected_components_star(

@@ -95,8 +95,8 @@ def get_spark(app_name: str = "bd_spark", master: str | None = None) -> SparkSes
         .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=2g")
         .config("spark.log.level", "WARN")
     )
-    # measurement plumbing (tools/stageprof.py): "k=v;k=v" extra confs,
-    # e.g. the event log — never set in the bench/driver path
+    # measurement plumbing (perfbench, tools/prof.py): "k=v;k=v" extra
+    # confs, e.g. the event log — never set in the bench/driver path
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "")
     for kv in filter(None, extra.split(";")):
         k, _, v = kv.partition("=")

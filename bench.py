@@ -26,7 +26,10 @@ optimized plan keeps all columns).
 Noise isolation (VERDICT r3 #5): each query runs
 $SPARK_GRAFT_BENCH_RUNS times (default 2) and reports the per-query
 MINIMUM. Cold visibility (VERDICT r4 wrong #3a): each query's FIRST
-run is recorded separately as its cold time.
+run is recorded separately as its cold time. No timing is checked
+against fixed bands: a record is compared only with records from
+interleaved runs on the same host at the same core count, and
+``tools/prof.py`` splits any one row into its layers.
 """
 
 from __future__ import annotations
@@ -46,7 +49,7 @@ from bd_spark.queries.registry import bench_only_queries, extra_queries  # noqa:
 from bd_spark.session import get_spark  # noqa: E402
 
 
-def _force(df: DataFrame) -> None:
+def _force(df: DataFrame) -> DataFrame:
     """Evaluate EVERY output column of df with one aggregate action.
 
     cast-to-string covers all output types the queries produce
@@ -58,37 +61,13 @@ def _force(df: DataFrame) -> None:
     driver-side long, so nothing but the aggregate crosses the JVM
     boundary. Referencing every column defeats Catalyst's column
     pruning — this is the "materialize the result" cost a user
-    actually pays.
+    actually pays. Returns the executed aggregate frame, whose
+    QueryExecution holds the action's Catalyst phase times.
     """
     cols = [F.col(c).cast("string") for c in df.columns]
-    df.select(F.max(F.xxhash64(*cols)).alias("__force")).collect()
-
-
-# Sentinel bands (sf0.1 warm, sec): cheap queries whose code rarely
-# changes; a warm time out of band means the window was CONTAMINATED
-# (concurrent CPU load) and the record must not be cited as the
-# round's truth (VERDICT r8 wrong #1 — a noisy-window record was
-# committed claiming a 37% improvement that was actually negative).
-_SENTINELS_SF01 = {
-    # early / mid / late positions in registry order: interference on
-    # this box arrives in BURSTS (observed 3-7x row inflation in one
-    # stretch of an otherwise-quiet run), so the sentinels must
-    # sample the whole run, not just its start
-    "q1_pricing_summary": 1.0,      # first row
-    "q6_forecast_revenue": 0.8,     # early
-    "pipe_dedup_exact": 0.8,        # mid (GATE pipeline block)
-    "pipe_embed_centroids": 0.8,    # mid-late
-    # r10 (VERDICT r9 wrong #3): a burst hit GATE positions 44-48 —
-    # the streaming block — and stamped a clean record because no
-    # sentinel sat between pipe_embed_centroids (~32) and
-    # q_asof_last_order (49); and the whole EXTRA stretch (51-115)
-    # had none. One sentinel inside the streaming block + two in the
-    # EXTRA stretch (mid + late) close the contiguous-burst holes.
-    "q_stream_windowed": 1.6,       # GATE streaming block (44-48)
-    "q_asof_last_order": 1.2,       # final GATE rows
-    "q_rolling_revenue": 0.7,       # mid-EXTRA (relational, stable)
-    "q_pivot_daily": 0.6,           # late-EXTRA
-}
+    forced = df.select(F.max(F.xxhash64(*cols)).alias("__force"))
+    forced.collect()
+    return forced
 
 
 def main() -> None:
@@ -141,81 +120,7 @@ def main() -> None:
                 print(f"# bench error {name}: {e}", file=sys.stderr)
                 break
         timings[name] = round(best, 3)
-    # per-row burst bands (VERDICT r10 next #2): interference on this
-    # box arrives in bursts that inflate a STRETCH of rows 3-7x, and 8
-    # sentinels cannot bracket 114 rows. bench_bands.json carries a
-    # warm floor per query (from the committed sentinel-clean records);
-    # any row whose min-of-reps exceeds factor*floor+slack re-runs
-    # ONCE in place, and rows still out of band are recorded as
-    # explicit burst_flags — a clean stamp now means every row is in
-    # band, not just the sentinels.
-    #
-    # Floors AND sentinel bounds are calibrated on local[32]: at any
-    # other core count (the driver re-runs this bench at fewer cores
-    # to measure per-query scaling) every row is legitimately slower,
-    # and applying the 32-core bounds would falsely stamp that record
-    # contaminated and waste up to 16 re-runs. Guards apply only at
-    # the calibration count; other counts carry their timings with an
-    # explicit bands_inapplicable note instead of a fake verdict.
-    _BAND_CALIBRATION_CPUS = 32
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    calibrated = cpus == _BAND_CALIBRATION_CPUS
-    burst_flags: dict[str, dict] = {}
-    if sf == "0.1" and calibrated:
-        try:
-            here0 = os.path.dirname(os.path.abspath(__file__))
-            with open(os.path.join(here0, "bench_bands.json")) as fh:
-                bands = json.load(fh)
-            factor, slack = bands["factor"], bands["slack"]
-            floors = bands["floors_sf01"]
-        except Exception:  # noqa: BLE001 — bands are best-effort
-            floors = {}
-        flagged = [
-            n for n, t in timings.items()
-            if n in floors and t > factor * floors[n] + slack
-        ]
-        # more than ~1/8 of the suite out of band = systemic
-        # contamination; re-running row by row would just measure the
-        # same burst again
-        if len(flagged) <= 16:
-            for n in flagged:
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                try:
-                    _force(qs[n](spark, sf_dir))
-                    dt = time.perf_counter() - t0
-                except Exception:  # noqa: BLE001
-                    continue
-                if dt < timings[n]:
-                    timings[n] = round(dt, 3)
-                if timings[n] > factor * floors[n] + slack:
-                    burst_flags[n] = {
-                        "warm": timings[n],
-                        "floor": floors[n],
-                        "band": round(factor * floors[n] + slack, 3),
-                    }
-        else:
-            for n in flagged:
-                burst_flags[n] = {
-                    "warm": timings[n],
-                    "floor": floors[n],
-                    "band": round(factor * floors[n] + slack, 3),
-                }
     total = round(sum(t for t in timings.values() if t >= 0), 3)
-
-    # contamination check: sentinel warm floors out of band mean the
-    # whole record is suspect — mark it rather than ship it as truth
-    contaminated = False
-    sentinels: dict[str, dict] = {}
-    if sf == "0.1" and calibrated:
-        for n, bound in _SENTINELS_SF01.items():
-            got = timings.get(n, -1.0)
-            ok = 0 <= got <= bound
-            sentinels[n] = {"warm": got, "max": bound, "ok": ok}
-            contaminated = contaminated or not ok
-        # a burst stretch wide enough to defeat per-row re-runs is
-        # window contamination even when no sentinel caught it
-        contaminated = contaminated or len(burst_flags) > 16
 
     full = {
         "metric": "headline_queries_total",
@@ -227,15 +132,7 @@ def main() -> None:
         "runs": runs,
         "load_start": round(load_start, 2),
         "load_end": round(os.getloadavg()[0], 2),
-        "sentinels": sentinels,
-        "burst_flags": burst_flags,
-        "contaminated": contaminated,
     }
-    if sf == "0.1" and not calibrated:
-        full["bands_inapplicable"] = (
-            f"cpus={cpus} != calibration {_BAND_CALIBRATION_CPUS}; "
-            "floors/sentinels not checked (timings still valid)"
-        )
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "bench_results.json"), "w") as fh:
         json.dump(full, fh, indent=1, sort_keys=True)
@@ -248,12 +145,6 @@ def main() -> None:
     print(json.dumps({"queries_extra": extra_warm}, **compact))
     # LAST line: the driver-parsed record — gate warm timings only,
     # 2-decimal, compact — must stay well under the ~2000-char tail
-    if contaminated:
-        print(
-            f"# WARNING: sentinel(s) out of band {sentinels} — window "
-            "contaminated; do not cite this record",
-            file=sys.stderr,
-        )
     last = {
         "metric": "headline_queries_total",
         "value": total,
@@ -262,8 +153,6 @@ def main() -> None:
         "sf": sf,
         "file": "bench_results.json",
     }
-    if contaminated:
-        last["contaminated"] = True
     line = json.dumps(last, **compact)
     if len(line) > 1900:  # hard driver-contract guard
         line = json.dumps({

@@ -554,16 +554,50 @@ def test_mm_resize_and_frames(spark, sf_dir):
     assert first and first[0].frame_sum == expect
 
 
-def test_connected_components(spark):
-    from bd_spark.operators.dedup import connected_components
+def _union_find_labels(nodes, edges) -> dict:
+    """Ground truth for connected components: node -> its component's
+    min id, by a plain union-find (singletons label themselves)."""
+    parent = {x: x for x in nodes}
 
-    ids = spark.createDataFrame([(i,) for i in range(8)], "id long")
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in nodes}
+
+
+def _star_lanes(spark, nodes, edges) -> dict[str, dict]:
+    """connected_components_star labels on both lanes: the default
+    (small graphs take the driver union-find) and the distributed star
+    loop forced by small_graph_limit=0."""
+    ids = spark.createDataFrame([(i,) for i in nodes], "id long")
+    pairs = spark.createDataFrame(edges or [(0, 0)], "id_a long, id_b long")
+    if not edges:
+        pairs = pairs.where("id_a != id_a")  # empty frame, same schema
+    return {
+        lane: {
+            r.id: r.cluster
+            for r in dedup.connected_components_star(
+                ids, pairs, small_graph_limit=limit
+            ).collect()
+        }
+        for lane, limit in (("driver", None), ("distributed", 0))
+    }
+
+
+def test_connected_components(spark):
     # components: {0,1,2,3} (chain), {5,6}, singletons 4 and 7
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (5, 6)], "id_a long, id_b long"
-    )
-    got = {r.id: r.cluster for r in connected_components(ids, pairs).collect()}
-    assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 5, 6: 5, 7: 7}
+    edges = [(0, 1), (1, 2), (2, 3), (5, 6)]
+    want = {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 5, 6: 5, 7: 7}
+    assert _union_find_labels(range(8), edges) == want
+    for lane, got in _star_lanes(spark, list(range(8)), edges).items():
+        assert got == want, lane
 
 
 def test_curate_composite_invariants(spark, sf_dir):
@@ -596,26 +630,28 @@ def test_curate_composite_invariants(spark, sf_dir):
 
 def test_connected_components_long_chain(spark):
     """Adversarial path graph: a 300-node chain has diameter 299, far
-    past max_iter=20 rounds of plain min-label propagation — pointer
-    jumping must still converge it to one component, plus keep an
-    isolated node and a separate triangle correct."""
+    past the star loop's max_iter=30 rounds if rounds grew with the
+    diameter — star contraction's O(log n) rounds must still converge
+    it to one component, plus keep an isolated node and a separate
+    triangle correct."""
     n = 300
-    ids = spark.createDataFrame([(i,) for i in range(n + 4)], "id long")
     chain = [(i, i + 1) for i in range(n - 1)]
     triangle = [(n, n + 1), (n + 1, n + 2), (n, n + 2)]
-    pairs = spark.createDataFrame(chain + triangle, "id_a long, id_b long")
-    out = dedup.connected_components(ids, pairs, max_iter=20)
-    got = {r.id: r.cluster for r in out.collect()}
-    assert all(got[i] == 0 for i in range(n))          # whole chain -> 0
-    assert all(got[i] == n for i in (n, n + 1, n + 2))  # triangle -> n
-    assert got[n + 3] == n + 3                          # singleton
+    nodes = list(range(n + 4))
+    want = _union_find_labels(nodes, chain + triangle)
+    assert all(want[i] == 0 for i in range(n))          # whole chain -> 0
+    assert all(want[i] == n for i in (n, n + 1, n + 2))  # triangle -> n
+    assert want[n + 3] == n + 3                          # singleton
+    for lane, got in _star_lanes(spark, nodes, chain + triangle).items():
+        assert got == want, lane
 
 
-def test_star_contraction_matches_hashmin(spark):
-    """connected_components_star must produce EXACTLY the labels of
-    the HashMin+jumping implementation on adversarial shapes: chain
-    (high diameter), quasi-cliques (the LSH near-dup shape), a random
-    sparse graph, and an empty edge set."""
+def test_star_contraction_adversarial_shapes(spark):
+    """connected_components_star must equal the union-find ground truth
+    on adversarial shapes: chain (high diameter), quasi-cliques (the
+    LSH near-dup shape), a random sparse graph, and an empty edge set
+    — on both lanes: the size guard may only pick a plan, never change
+    labels."""
     import random
 
     rnd = random.Random(42)
@@ -636,31 +672,9 @@ def test_star_contraction_matches_hashmin(spark):
         nodes = sorted(
             {x for e in edges for x in e} | {400, 401}
         )  # plus guaranteed singletons
-        ids = spark.createDataFrame([(i,) for i in nodes], "id long")
-        pairs = spark.createDataFrame(
-            edges or [(0, 0)], "id_a long, id_b long"
-        )
-        if not edges:
-            pairs = pairs.where("id_a != id_a")  # empty frame, same schema
-        a = {
-            r.id: r.cluster
-            for r in dedup.connected_components(ids, pairs, max_iter=25).collect()
-        }
-        # default lane (small graphs take the driver union-find) AND
-        # the distributed star loop forced via small_graph_limit=0:
-        # the size guard may only pick a plan, never change labels
-        b = {
-            r.id: r.cluster
-            for r in dedup.connected_components_star(ids, pairs).collect()
-        }
-        c = {
-            r.id: r.cluster
-            for r in dedup.connected_components_star(
-                ids, pairs, small_graph_limit=0
-            ).collect()
-        }
-        assert a == b, f"label mismatch on {name} (driver lane)"
-        assert a == c, f"label mismatch on {name} (distributed lane)"
+        want = _union_find_labels(nodes, edges)
+        for lane, got in _star_lanes(spark, nodes, edges).items():
+            assert got == want, f"label mismatch on {name} ({lane} lane)"
 
 
 def test_decontaminate_broadcast_and_shuffle_paths_agree(spark):
@@ -731,36 +745,9 @@ def test_star_contraction_random_graphs_vs_union_find(spark):
         n = rnd.randrange(5, 60)
         m = rnd.randrange(0, 2 * n)
         edges = [(rnd.randrange(n), rnd.randrange(n)) for _ in range(m)]
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        want = {i: find(i) for i in range(n)}
-
-        ids = spark.createDataFrame([(i,) for i in range(n)], "id long")
-        pairs = spark.createDataFrame(
-            edges or [(0, 0)], "id_a long, id_b long"
-        )
-        got = {
-            r.id: r.cluster
-            for r in dedup.connected_components_star(ids, pairs).collect()
-        }
-        assert got == want, f"seed {seed}: mismatch"
-        got_dist = {
-            r.id: r.cluster
-            for r in dedup.connected_components_star(
-                ids, pairs, small_graph_limit=0
-            ).collect()
-        }
-        assert got_dist == want, f"seed {seed}: mismatch (distributed)"
+        want = _union_find_labels(range(n), edges)
+        for lane, got in _star_lanes(spark, list(range(n)), edges).items():
+            assert got == want, f"seed {seed}: mismatch ({lane})"
 
 
 def test_token_budget_semantics(spark):

@@ -12,11 +12,13 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# this checkout's engine, wherever the script is run or imported from
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bd_spark.catalog import TABLES  # noqa: E402
@@ -28,8 +30,6 @@ def driver_like_spark():
     harness builds its own session like this, so running the gate on
     one proves the catalog shim sets everything it needs at runtime
     (VERDICT r01 items 1-2 were exactly this class of bug)."""
-    import os
-
     from pyspark.sql import SparkSession
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
