@@ -5,24 +5,27 @@ from the program alone: the staged Catalyst compilation below, or the
 whole-query Arrow-batched interp tier (`_interp_tier`, one
 mapInPandas over bd_spark.jsonq.interp).
 
-The staged tier is row-local and pure JVM: its plan is Project and
-Filter over the source stream (at most one row per input row, no
-shuffle, no Python UDF). A program runs whole on the interp tier,
-whatever the tier pin, when it breaks that rule (_unstaged_construct):
+The staged tier runs row-local scalar programs as pure JVM
+expressions: its plan is Project and Filter over the source stream
+(at most one row per input row, no shuffle, no Python UDF). A program
+runs whole on the interp tier, whatever the tier pin, when it uses a
+construct outside that set (_unstaged_here):
 
-- a construct whose only staged form would call Python
-  (_unstaged_here): the higher-order builtins (HOF_BUILTINS), the
-  unbounded-recursion and Python-library builtins (PY_BUILTINS), `..`,
-  `del` on a path with an int segment, `*` unless one operand is
-  provably not an object (the deep merge), and a `reduce` or
-  `foreach` the staged fold cannot render (a source that is not a
-  row-local generator, or a multi-valued init/update);
-- a node that fans out (_rowlocal_breach): `.[]`, `.[a,b]` and `,`,
-  the generator builtins and `foreach`, anywhere but inside a
-  collect's payload or a reduce's source, where the row-local
-  renderers (_col_list, _elems_colfn, _col_reduce) turn the burst
-  into one array within the row; and a collect whose payload those
-  renderers cannot render, which would regroup a stream.
+- a node that fans out: `.[]`, `.[a,b]` and `,`, the generator
+  builtins, `..` and `foreach`. A collect's comma items (`[a, b]`)
+  are not a fan-out, and neither is the `.[]` of a reduce source the
+  typed fold renders;
+- a document rewrite: `=`, `|=` and the other update-assignments,
+  `del`, `setpath` and `delpaths`;
+- a `reduce` the typed fold (_typed_fold) cannot render: its source
+  must be `X | .[]` with X's element kind proven string or int
+  (_static_elem_kind), and its init and update must fall in the typed
+  subset (_typed_expr);
+- a construct whose only staged form would call Python: the
+  higher-order builtins (HOF_BUILTINS), the unbounded-recursion and
+  Python-library builtins (PY_BUILTINS), `*` unless one operand is
+  provably not an object (the deep merge), and `capture` with a
+  non-literal pattern.
 
 Such a program handed to the staged compiler (compile_stream) raises
 instead of emitting Python or a shuffle.
@@ -39,11 +42,9 @@ Staged compilation has one planner (_plan_direct) and two forms:
    keeps non-cheap duplicated refs in separate projects, so the plan
    stays linear while whole-stage codegen still fuses the stages.
 
-2. **Pure column expressions**: used inside lambda bodies (the
-   `reduce`/`foreach` F.aggregate folds, list splices) where only a
-   single expression is possible, and for leaf ops. A generator
-   inside a collect or a fold becomes its whole burst as one
-   ARRAY<VARIANT> column (_elems_colfn).
+2. **Pure column expressions** (compile_col): used where only a
+   single expression is possible — leaf ops, collect items and the
+   typed fold's source.
 
 Rows are ``(seq BIGINT, ord ARRAY<BIGINT>, v VARIANT, err STRING)``;
 the staged tier keeps each input's ``ord`` (burst positions are
@@ -65,6 +66,7 @@ filter, applied once at the end.
 
 from __future__ import annotations
 
+import dataclasses
 import itertools
 import json as _json
 from collections.abc import Callable
@@ -78,8 +80,7 @@ from bd_spark.jsonq import vexpr as V
 
 CORE_COLS = ("seq", "ord", "v", "err")
 
-# generator builtins: several outputs per input, so staged only inside
-# a collect's payload or a fold's source (_elems_colfn)
+# generator builtins: several outputs per input, so no staged lane
 GENERATOR_BUILTINS = ("range", "paths", "leaf_paths", "scan", "splits",
                       "limit", "match", "while", "repeat")
 
@@ -92,30 +93,41 @@ HOF_BUILTINS = frozenset((
 ))
 
 # builtins that need unbounded recursion or iteration (flatten,
-# dynamic setpath/delpaths, until/while/repeat, paths/leaf_paths) or
-# Python's regex/time libraries (match, strftime/strptime): no
-# Catalyst expression computes them, so they have no staged lane
-# either. (A literal all-string setpath path is parsed to a native
-# Assign and never reaches this set.)
+# until/while/repeat, paths/leaf_paths) or Python's regex/time
+# libraries (match, strftime/strptime): no Catalyst expression
+# computes them, so they have no staged lane either
 PY_BUILTINS = frozenset((
-    "flatten", "setpath", "delpaths", "strftime", "strptime", "match",
+    "flatten", "strftime", "strptime", "match",
     "until", "while", "repeat", "paths", "leaf_paths",
 ))
 
+# builtins that rewrite the document (as `=`/`|=` assignments do): the
+# staged tier renders no document rewrites
+REWRITE_BUILTINS = frozenset(("del", "setpath", "delpaths"))
+
 
 def _unstaged_here(node: ast.Node) -> str | None:
-    """The construct at THIS node that has no staged lane, if any."""
+    """The construct at THIS node that has no staged lane, if any (see
+    the module docstring). Reads the `as`-binding element kinds on
+    _ENV (through _typed_fold), so it runs inside _unstaged_construct's
+    walk."""
     if isinstance(node, ast.Recurse):
         return ".."
+    if isinstance(node, ast.IterValues):
+        return ".[] (fans out)"
+    if isinstance(node, ast.Iter):
+        return ".[a,b] (fans out)"
+    if isinstance(node, ast.Foreach):
+        return "foreach (fans out)"
+    if isinstance(node, ast.Assign):
+        return "assignment (rewrites the document)"
     if isinstance(node, ast.Builtin):
         if node.name in HOF_BUILTINS or node.name in PY_BUILTINS:
             return node.name
-        if node.name == "del":
-            from bd_spark.jsonq.parser import static_path
-
-            segs = static_path(node.args[0])
-            if segs and any(not isinstance(s, str) for s in segs):
-                return "del"
+        if node.name in GENERATOR_BUILTINS:
+            return f"{node.name} (fans out)"
+        if node.name in REWRITE_BUILTINS:
+            return f"{node.name} (rewrites the document)"
         # the staged capture reads its group names at compile time
         if node.name == "capture" and _capture_pattern(node) is None:
             return "capture"
@@ -123,12 +135,8 @@ def _unstaged_here(node: ast.Node) -> str | None:
         _never_object(node.left) or _never_object(node.right)
     ):
         return "*"
-    # the staged folds render row-local generator sources with
-    # single-valued init/update only
-    if isinstance(node, ast.Reduce) and _col_reduce(node) is None:
-        return "reduce"
-    if isinstance(node, ast.Foreach) and _foreach_entries_col(node) is None:
-        return "foreach"
+    if isinstance(node, ast.Reduce) and _typed_fold(node) is None:
+        return "reduce (not a typed fold)"
     return None
 
 
@@ -147,60 +155,39 @@ def _never_object(node: ast.Node) -> bool:
     return _kind_not_object(_static_kind(node))
 
 
-def _rowlocal_breach(node: ast.Node) -> str | None:
-    """How THIS node breaks the staged tier's one-row-per-input rule,
-    if it does: it emits several outputs per input (`.[]`, `.[a,b]`
-    and `,`, a generator builtin, `foreach`), or it is a collect whose
-    payload the row-local renderers (_col_list) cannot render within
-    the row."""
-    if isinstance(node, ast.IterValues):
-        return ".[] (fans out)"
-    if isinstance(node, ast.Iter):
-        return ".[a,b] (fans out)"
-    if isinstance(node, ast.Foreach):
-        return "foreach (fans out)"
-    if isinstance(node, ast.Builtin) and node.name in GENERATOR_BUILTINS:
-        return f"{node.name} (fans out)"
-    if isinstance(node, ast.ListCons) and _col_list(node) is None:
-        return "[...] (regroups a stream)"
-    return None
-
-
-# (node type, field) slots whose stream a staged renderer consumes
-# within the row: a collect's payload (_col_list) and a reduce's
-# source (_col_reduce)
-_BURST_SLOTS = frozenset(((ast.ListCons, "expr"), (ast.Reduce, "source")))
-
-
-def _unstaged_construct(node: object, in_burst: bool = False) -> str | None:
+def _unstaged_construct(node: object) -> str | None:
     """The first construct in the program with no staged lane (see
     the module docstring), or None when the staged tier can run it.
-    Outside a burst slot (`in_burst` False) a node must also be
-    row-local (_rowlocal_breach): the staged plan is Project and
-    Filter over the source, at most one row per input row. Children
-    are checked before their parent, so _unstaged_here never asks the
-    staged compiler about a subtree it would refuse."""
-    import dataclasses
-
-    if dataclasses.is_dataclass(node):
-        children = (
-            (getattr(node, f.name), (type(node), f.name) in _BURST_SLOTS)
-            for f in dataclasses.fields(node)
-        )
-    elif isinstance(node, tuple):
-        children = ((c, False) for c in node)
-    else:
-        return None
-    for child, slot in children:
-        found = _unstaged_construct(child, in_burst or slot)
+    A node is checked before its children. The walk skips the two
+    places a multi-valued node is allowed: a collect's comma (its
+    items are checked one by one) and the `.[]` of a typed fold's
+    source. It pushes each `as` binding's element kind on _ENV as the
+    planner does, so a reduce counts as a typed fold here exactly when
+    the planner renders it as one."""
+    if isinstance(node, ast.Node):
+        found = _unstaged_here(node)
         if found is not None:
             return found
-    if not isinstance(node, ast.Node):
-        return None
-    found = _unstaged_here(node)
-    if found is None and not in_burst:
-        found = _rowlocal_breach(node)
-    return found
+    if isinstance(node, ast.BindAs):
+        found = _unstaged_construct(node.source)
+        if found is not None:
+            return found
+        _ENV.append((node.name, None, {"elem": _static_elem_kind(node.source)}))
+        try:
+            return _unstaged_construct(node.body)
+        finally:
+            _ENV.pop()
+    if isinstance(node, ast.ListCons) and isinstance(node.expr, ast.Iter):
+        children = node.expr.items
+    elif isinstance(node, ast.Reduce):  # a typed fold: _unstaged_here
+        children = (node.source.left, node.init, node.update)
+    else:
+        children = _children(node)
+    for child in children:
+        found = _unstaged_construct(child)
+        if found is not None:
+            return found
+    return None
 
 
 _ids = itertools.count()
@@ -289,8 +276,8 @@ def _then(cin: CV, out: CV) -> CV:
 
 
 def _chain(cin: CV, fn: ColFn) -> CV:
-    """Apply fn to cin's value with error passthrough. Only used
-    inside lambda bodies — substitution-based."""
+    """Apply fn to cin's value with error passthrough. Used by
+    compile_col, whose result is one expression (substitution-based)."""
     return _then(cin, fn(cin.v))
 
 
@@ -304,44 +291,12 @@ def _guarded(cond: Column, ok: Column, msg: Column | str, opt: bool) -> CV:
 
 
 # ===================================================================
-# Multi-valuedness analysis
+# Pure column expressions (leaf ops, collect items, fold sources)
 # ===================================================================
-def is_multivalued(node: ast.Node) -> bool:
-    """Can this expression emit a number of outputs != 1 per input
-    (ignoring drops, which the staged tier carries as data)?"""
-    if isinstance(node, (ast.IterValues, ast.Iter, ast.Recurse)):
-        return True
-    if isinstance(node, ast.Pipe):
-        return is_multivalued(node.left) or is_multivalued(node.right)
-    if isinstance(node, ast.Unary):
-        return is_multivalued(node.expr)
-    if isinstance(node, ast.Try):
-        return is_multivalued(node.expr)
-    if isinstance(node, ast.Binary):
-        return is_multivalued(node.left) or is_multivalued(node.right)
-    if isinstance(node, ast.DictCons):
-        return any(
-            is_multivalued(p.key) or is_multivalued(p.value) for p in node.pairs
-        )
-    if isinstance(node, ast.Builtin) and node.name in GENERATOR_BUILTINS:
-        return True  # generators: 0..n outputs per input
-    if isinstance(node, ast.BindAs):
-        return is_multivalued(node.source) or is_multivalued(node.body)
-    if isinstance(node, ast.Foreach):
-        return True  # emits one state per source element
-    # ListCons collects its burst -> exactly one output
-    # Reduce folds its burst -> exactly one output
-    # Builtin args are zipped per-input scalars in practice
-    return False
-
-
-# ===================================================================
-# Pure column expressions (leaf ops + lambda bodies)
-# ===================================================================
-def compile_col(node: ast.Node) -> ColFn | None:
-    """Pure-expression compile; None when the node fans out (only a
-    burst renderer, _elems_colfn, takes it). Used for leaf ops and
-    inside lambda bodies."""
+def compile_col(node: ast.Node) -> ColFn:
+    """Pure-expression compile of a staged node (one the router lets
+    through, _unstaged_construct). Used for leaf ops, collect items
+    and the typed fold's source."""
     if isinstance(node, ast.Identity):
         return lambda v: CV(v)
     if isinstance(node, ast.Literal):
@@ -354,47 +309,35 @@ def compile_col(node: ast.Node) -> ColFn | None:
     if isinstance(node, ast.Slice):
         return _col_slice(node)
     if isinstance(node, ast.Pipe):
-        lf = compile_col(node.left)
-        if lf is None:
-            return None
-        rf = compile_col(node.right)
-        if rf is None:
-            return None
+        lf, rf = compile_col(node.left), compile_col(node.right)
         return lambda v: _chain(lf(v), rf)
     if isinstance(node, ast.Unary):
         ef = compile_col(node.expr)
-        if ef is None:
-            return None
         op = _col_neg if node.op == "-" else _col_not
         return lambda v: _chain(ef(v), op)
     if isinstance(node, ast.Binary):
         lf, rf = compile_col(node.left), compile_col(node.right)
-        if lf is None or rf is None:
-            return None
         op = node.op
         lk, rk = _static_kind(node.left), _static_kind(node.right)
         return lambda v: _col_binary(op, lf(v), rf(v), lk, rk)
-    if isinstance(node, ast.Assign):
-        return _compile_assign(node)
     if isinstance(node, ast.Var):
         name = node.name
         return lambda v: CV(_env_lookup(name))
     if isinstance(node, ast.BindAs):
         return _col_bind(node)
     if isinstance(node, ast.Reduce):
-        return _col_reduce(node)
+        return lambda v: _typed_reduce_cv(node, v)
     if isinstance(node, ast.StrInterp):
-        return _col_interp(node)
+        fns = [p if isinstance(p, str) else compile_col(p) for p in node.parts]
+        return lambda v: _interp_cv(
+            [f if isinstance(f, str) else f(v) for f in fns]
+        )
     if isinstance(node, ast.Try):
         ef = compile_col(node.expr)
-        if ef is None:
-            return None
         return lambda v: _try_cv(ef(v))
     if isinstance(node, ast.If):
         pairs = [(compile_col(c), compile_col(b)) for c, b in node.branches]
         ef = compile_col(node.orelse)
-        if ef is None or any(x is None for p in pairs for x in p):
-            return None
 
         def run_if(v: Column) -> CV:
             cur = ef(v)
@@ -406,11 +349,7 @@ def compile_col(node: ast.Node) -> ColFn | None:
     if isinstance(node, ast.Builtin):
         if node.name == "select":
             argfn = compile_col(node.args[0])
-            if argfn is None:
-                return None
             return lambda v: _select_cv(v, argfn(v))
-        if node.name == "del":
-            return _compile_del(node)
         if node.name == "getpath" and len(node.args) == 1:
             # static-path fast lane (r6 VERDICT wrong #1): a literal
             # all-string path compiles to a chain of element_at
@@ -422,32 +361,24 @@ def compile_col(node: ast.Node) -> ColFn | None:
             segs = _literal_str_path(node.args[0])
             if segs:
                 return lambda v: _col_getpath_static(v, segs)
-        if node.name in GENERATOR_BUILTINS:
-            return None  # a burst: only _elems_colfn renders it
         if node.name == "capture":
             return _compile_capture(node)
         argfns = [compile_col(a) for a in node.args]
-        if any(f is None for f in argfns):
-            return None
         return lambda v: _col_builtin(node.name, v, [f(v) for f in argfns])
     if isinstance(node, ast.ListCons):
         return _col_list(node)
     if isinstance(node, ast.DictCons):
         vfs = [compile_col(p.value) for p in node.pairs]
-        if any(f is None for f in vfs):
-            return None
         skeys = [static_dict_key(p.key) for p in node.pairs]
         if all(k is not None for k in skeys):
             return lambda v: _col_dict_static(
                 [(k, vf(v)) for k, vf in zip(skeys, vfs)]
             )
         kfs = [compile_col(p.key) for p in node.pairs]
-        if any(f is None for f in kfs):
-            return None
         return lambda v: _col_dict(
             [(kf(v), vf(v)) for kf, vf in zip(kfs, vfs)]
         )
-    return None
+    raise NotImplementedError(f"no staged lane for {node!r}")
 
 
 def static_dict_key(node: ast.Node) -> str | None:
@@ -563,122 +494,6 @@ def _select_cv(v_in: Column, arg: CV) -> CV:
     t = V.truthy(arg.v)
     drop = (~t) if arg.err is None else (arg.err.isNull() & ~t)
     return CV(v_in, arg.err, _merge_drop(arg.drop, drop))
-
-
-def _path_get(v: Column, segs: tuple) -> Column:
-    """Variant at a static object-key path; NULL when missing."""
-    cur = v
-    for k in segs:
-        cur = F.element_at(V.as_map(cur), F.lit(k))
-    return cur
-
-
-def _path_ok(v: Column, segs: tuple) -> Column:
-    """True when every node along the path is an object, null, or
-    missing — the values jq setpath/del can traverse (a scalar
-    intermediate is a 'cannot index' error)."""
-    ok = F.lit(True)
-    cur = v
-    for k in segs:
-        # container-first dispatch: the walked nodes are objects on
-        # every non-error row (r10, wiring vexpr's shape="container")
-        t = V.vtype(cur, shape="container")
-        ok = ok & (t.isNull() | t.isin("object", "null"))
-        cur = F.element_at(V.as_map(cur), F.lit(k))
-    return ok
-
-
-def _set_variant(v: Column, segs: tuple, leaf: Column) -> Column:
-    """VARIANT of v with v[segs] replaced by variant ``leaf``; missing
-    intermediates become fresh objects (jq setpath). Native object
-    assembly — to_variant_object over map_from_entries copies sibling
-    entries as variants (keys re-sorted by construction), where the
-    former textual form re-serialized every sibling via vjson and paid
-    a parse_json of the whole doc (r7: at sf0.1 the text form lost to
-    the Arrow setpath UDF 23 s vs 10 s; this form replaces both)."""
-    if not segs:
-        return leaf
-    k = segs[0]
-    m = V.as_map(v)
-    inner = _set_variant(F.element_at(m, F.lit(k)), segs[1:], leaf)
-    others = F.filter(F.map_entries(m), lambda e: e["key"] != F.lit(k))
-    entries = F.concat(
-        F.transform(
-            others,
-            lambda e: F.struct(e["key"].alias("k"), e["value"].alias("v")),
-        ),
-        F.array(F.struct(F.lit(k).alias("k"), inner.alias("v"))),
-    )
-    fresh = F.array(F.struct(F.lit(k).alias("k"), inner.alias("v")))
-    # object-ness only: one O(1) map try-cast (r10)
-    return F.to_variant_object(F.map_from_entries(
-        F.when(V.as_map(v).isNotNull(), entries).otherwise(fresh)
-    ))
-
-
-def _del_variant(v: Column, segs: tuple) -> Column:
-    """VARIANT of v with the field at segs removed; a missing key
-    anywhere on the path leaves v unchanged. Native object assembly,
-    same rationale as _set_variant (r7: the textual predecessor
-    re-serialized every sibling via vjson + a whole-doc parse_json)."""
-    k = segs[0]
-    m = V.as_map(v)
-    others = F.filter(F.map_entries(m), lambda e: e["key"] != F.lit(k))
-    other_structs = F.transform(
-        others,
-        lambda e: F.struct(e["key"].alias("k"), e["value"].alias("v")),
-    )
-    if len(segs) == 1:
-        entries = other_structs
-    else:
-        inner = _del_variant(F.element_at(m, F.lit(k)), segs[1:])
-        entries = F.concat(
-            other_structs,
-            F.array(F.struct(F.lit(k).alias("k"), inner.alias("v"))),
-        )
-    rebuilt = F.to_variant_object(F.map_from_entries(entries))
-    # object-ness only: one O(1) map try-cast (r10)
-    return F.when(
-        V.as_map(v).isNotNull() & F.map_contains_key(m, F.lit(k)), rebuilt
-    ).otherwise(v)
-
-
-def _compile_assign(node: ast.Assign) -> ColFn | None:
-    """Thin unpack over the packed-tier assign (_packed_assign): the
-    rhs tree and serialized leaf stay let-bound, so plan size is
-    linear in the rhs — the old substitution form multiplied rhs ×
-    vjson(≈8) × set_json(2) × the err repeat (`.n += 1` cold plan
-    build measured 14.6 s substituted vs ~1 s packed)."""
-    pf = _packed_assign(node)
-    if pf is None:
-        return None
-
-    def fn(v: Column) -> CV:
-        out = pf(_pk(v))
-        return CV(out["v"], F.when(out["e"].isNotNull(), out["e"]), out["d"])
-
-    return fn
-
-
-def _compile_del(node: ast.Builtin) -> ColFn:
-    from bd_spark.jsonq.parser import static_path
-
-    segs = static_path(node.args[0])
-    if segs is None or not segs:
-        raise NotImplementedError(
-            "del requires a static path (del(.a.b), del(.a[1]))"
-        )
-    # all-string: an int segment has no staged lane (_unstaged_here)
-
-    def fn(v: Column) -> CV:
-        return _guarded(
-            _path_ok(v, segs),
-            _del_variant(v, segs),
-            F.lit("cannot delete path ." + ".".join(segs)),
-            False,
-        )
-
-    return fn
 
 
 def _try_cv(cv: CV) -> CV:
@@ -866,10 +681,10 @@ def _binary_value_inline(
     # types behind opaque lambda vars, so Catalyst can no longer
     # constant-fold vtype(literal) and prune dead overload branches —
     # the probe plan GREW 21->26 KB / 16->29 schema_of_variant. The
-    # packed tier already hands leaf-cheap operands (compile_packed
-    # invariant), so the duplication this would fix is mostly gone.
-    # (The no-static-kind case IS bound now — via the cached-lambda
-    # wrapper above, where there is nothing to fold.)
+    # planner already hands landed (leaf-cheap) operands, so the
+    # duplication this would fix is mostly gone. (The no-static-kind
+    # case IS bound now — via the cached-lambda wrapper above, where
+    # there is nothing to fold.)
     ta, tb = V.vtype(a), V.vtype(b)
     bothint = (ta == "int") & (tb == "int")
     bothnum = V.is_number(ta) & V.is_number(tb)
@@ -1955,52 +1770,36 @@ def _col_builtin(name: str, v: Column, args: list[CV]) -> CV:
     raise ValueError(f"unknown builtin {name}")
 
 
-def _col_list(node: ast.ListCons) -> ColFn | None:
-    """`[...]` with scalar payload: each comma item contributes at most
-    one element. An item that is itself a row-local generator (one
-    `_elems_colfn` can render — `[scan(re)]`, `[.xs.[]]`, `[range(n)]`
-    and scalar pipes into those) splices its whole burst in place, so
-    the collect stays a single projection. None when an item is
-    neither: such a collect would regroup a stream, so choose_tier
-    runs the program on the interp tier (_rowlocal_breach)."""
+def _col_list(node: ast.ListCons) -> ColFn:
+    """`[...]` with single-valued items: each comma item contributes
+    at most one element (a payload that fans out has no staged lane,
+    _unstaged_construct)."""
     if node.expr is None:
         return lambda v: CV(F.parse_json(F.lit("[]")))
-    items = list(node.expr.items) if isinstance(node.expr, ast.Iter) else [node.expr]
-    fns: list[tuple[bool, ColFn]] = []
-    for i in items:
-        f = compile_col(i)
-        if f is not None:
-            fns.append((False, f))
-            continue
-        ef = _elems_colfn(i)
-        if ef is None:
-            return None
-        fns.append((True, ef))
-    return lambda v: _collect([(many, f(v)) for many, f in fns])
+    items = node.expr.items if isinstance(node.expr, ast.Iter) else (node.expr,)
+    fns = [compile_col(i) for i in items]
+    return lambda v: _collect([f(v) for f in fns])
 
 
-def _collect(parts: list[tuple[bool, CV]]) -> CV:
-    """A collect's value from its items, in order. A burst item
-    (`many`) splices its whole array, whose `?`-dropped elements are
-    already absent; a single item adds its value, or no element where
-    it drops (its error then does not count). The first error in item
-    order voids the collect; a collect itself never drops. Native
-    variant assembly (r6): no vjson/parse_json."""
+def _collect(parts: list[CV]) -> CV:
+    """A collect's value from its items, in order: each item adds its
+    value, or no element where it drops (its error then does not
+    count). The first error in item order voids the collect; a
+    collect itself never drops. Native variant assembly (r6): no
+    vjson/parse_json."""
     err = None
     segs: list[Column] = []
-    for many, cv in parts:
+    for cv in parts:
         e = cv.err
-        if many:
-            segs.append(cv.v)
-        elif cv.drop is None:
+        if cv.drop is None:
             segs.append(F.array(cv.v))
         else:
             kept = ~F.coalesce(cv.drop, F.lit(False))
             segs.append(F.when(kept, F.array(cv.v)).otherwise(_empty_varr()))
             e = None if e is None else F.when(kept, e)
         err = _merge_err(err, e)
-    if all(not many and cv.drop is None for many, cv in parts):
-        out = V.varray(F.array(*[cv.v for _, cv in parts]))
+    if all(cv.drop is None for cv in parts):
+        out = V.varray(F.array(*[cv.v for cv in parts]))
     else:
         out = V.varray(F.flatten(F.array(*segs)))
     if err is not None:
@@ -2082,17 +1881,14 @@ import threading as _threading
 
 
 class _EnvStack(_threading.local):
-    """Entries are (name, column, meta); meta is an optional dict of
-    build-time static facts about the bound value (_env_meta). 2-tuple
-    appends are normalized so push sites that have no facts stay
-    unchanged."""
+    """Entries are (name, column, meta); meta is a dict of build-time
+    static facts about the bound value (_env_meta). The router's walk
+    pushes facts only (column None)."""
 
     def __init__(self) -> None:
-        self.items: list[tuple[str, Column, dict | None]] = []
+        self.items: list[tuple[str, Column | None, dict]] = []
 
     def append(self, x: tuple) -> None:
-        if len(x) == 2:
-            x = (x[0], x[1], None)
         self.items.append(x)
 
     def pop(self) -> tuple:
@@ -2100,9 +1896,6 @@ class _EnvStack(_threading.local):
 
     def __reversed__(self):
         return reversed(self.items)
-
-    def __len__(self) -> int:
-        return len(self.items)
 
 
 _ENV = _EnvStack()
@@ -2123,7 +1916,7 @@ def _env_meta(name: str) -> dict:
     token naming that binding."""
     for n, _c, m in reversed(_ENV):
         if n == name:
-            return m or {}
+            return m
     return {}
 
 
@@ -2132,14 +1925,10 @@ def _empty_varr() -> Column:
     return F.filter(F.array(V.vnull()), lambda _: F.lit(False))
 
 
-def _col_bind(node: ast.BindAs) -> ColFn | None:
-    """`E as $x | B` with single-valued scalar E and B."""
-    if is_multivalued(node.source) or is_multivalued(node.body):
-        return None
+def _col_bind(node: ast.BindAs) -> ColFn:
+    """`E as $x | B` (single-valued, like every staged node)."""
     ef = compile_col(node.source)
     bf = compile_col(node.body)
-    if ef is None or bf is None:
-        return None
     name = node.name
 
     def fn(v: Column) -> CV:
@@ -2153,26 +1942,6 @@ def _col_bind(node: ast.BindAs) -> ColFn | None:
             _ENV.pop()
 
     return fn
-
-
-def _col_interp(node: ast.StrInterp) -> ColFn | None:
-    """String interpolation: literal fragments + `tostring`-rendered
-    expression results concatenated into one string."""
-    fns: list = []
-    for p in node.parts:
-        if isinstance(p, str):
-            fns.append(p)
-        else:
-            if is_multivalued(p):
-                return None
-            f = compile_col(p)
-            if f is None:
-                return None
-            fns.append(f)
-
-    return lambda v: _interp_cv(
-        [f if isinstance(f, str) else f(v) for f in fns]
-    )
 
 
 def _interp_cv(parts: list) -> CV:
@@ -2197,762 +1966,8 @@ def _interp_cv(parts: list) -> CV:
     return CV(out, err, drop)
 
 
-def _has_heavy_gen(node: ast.Node) -> bool:
-    """True when the subtree contains a generator whose burst
-    expression is HEAVY — a foreach fold. Splicing it inline
-    duplicates the fold once per reference (HOF trees never enter
-    codegen, so every copy re-evaluates interpreted); the planner
-    lands the burst in a real column first (_plan_heavy_list) —
-    CollapseProject keeps non-cheap multi-referenced producers
-    materialized."""
-    stack: list[ast.Node] = [node]
-    while stack:
-        n = stack.pop()
-        if isinstance(n, ast.Foreach):
-            return True
-        for f in getattr(n, "__dataclass_fields__", {}):
-            v = getattr(n, f)
-            items = v if isinstance(v, tuple) else (v,)
-            for it in items:
-                if isinstance(it, ast.Node):
-                    stack.append(it)
-                elif isinstance(it, ast.DictPair):
-                    stack += [it.key, it.value]
-                elif isinstance(it, tuple):
-                    stack += [s for s in it if isinstance(s, ast.Node)]
-    return False
-
-
-def _elems_colfn(node: ast.Node) -> ColFn | None:
-    """Compile a generator expression to its output burst as ONE
-    ARRAY<VARIANT> column (for folds). Supported: `.path.[]`,
-    `.[a,b]`, `range(n)`, `scan`/`splits`, `limit`, `foreach`, scalar
-    pipes into those, and generator|scalar pipes (the r8 splice)."""
-    if isinstance(node, ast.IterValues):
-        opt = node.opt
-
-        def fn_iter(v: Column) -> CV:
-            t = V.vtype(v)
-            arr = F.when(t == "array", V.as_array(v)).when(
-                t == "object", F.map_values(V.as_map(v))
-            )
-            if opt:
-                return CV(F.coalesce(arr, _empty_varr()))
-            err = F.when(arr.isNull(), F.concat(F.lit("cannot iterate "), t))
-            return CV(F.coalesce(arr, _empty_varr()), err)
-
-        return fn_iter
-    if isinstance(node, ast.Iter):
-        if any(is_multivalued(i) for i in node.items):
-            return None
-        fns = [compile_col(i) for i in node.items]
-        if any(f is None for f in fns):
-            return None
-
-        def fn_items(v: Column) -> CV:
-            cvs = [f(v) for f in fns]
-            err = None
-            for cv in cvs:
-                err = _merge_err(err, cv.err)
-            # `?`-dropped branches contribute no element (empty burst)
-            entries = [
-                F.struct(
-                    cv.v.alias("x"),
-                    (
-                        F.coalesce(cv.drop, F.lit(False))
-                        if cv.drop is not None
-                        else F.lit(False)
-                    ).alias("d"),
-                )
-                for cv in cvs
-            ]
-            arr = F.transform(
-                F.filter(F.array(*entries), lambda s: ~s["d"]),
-                lambda s: s["x"],
-            )
-            return CV(arr, err)
-
-        return fn_items
-    if isinstance(node, ast.Pipe):
-        if is_multivalued(node.left):
-            # GENERATOR | scalar-op splices row-locally: map the
-            # burst through the packed right side in ONE projection;
-            # the burst is let-bound so the generator tree appears at
-            # most twice in the output CV.
-            if is_multivalued(node.right):
-                return None
-            lef = _elems_colfn(node.left)
-            rpf = compile_packed(node.right) if lef is not None else None
-            if rpf is None:
-                return None
-
-            def fn_genpipe(v: Column) -> CV:
-                lcv = lef(v)
-                mapped = F.transform(
-                    lcv.v,
-                    lambda x: rpf(
-                        F.struct(
-                            x.alias("v"),
-                            _null_str().alias("e"),
-                            F.lit(False).alias("d"),
-                        )
-                    ),
-                )
-                # `?`-dropped elements contribute nothing; the FIRST
-                # in-band error (element order) voids the whole burst
-                # — jq parity: an error escapes the enclosing collect
-                kept = F.filter(mapped, lambda t: ~t["d"])
-
-                def build(b: Column) -> Column:
-                    ks = b["ks"]
-                    fe = F.get(
-                        F.filter(ks, lambda t: t["e"].isNotNull()), 0
-                    )["e"]
-                    e = F.coalesce(b["le"], fe)
-                    arr = F.when(e.isNotNull(), _empty_varr()).otherwise(
-                        F.transform(ks, lambda t: t["v"])
-                    )
-                    return F.struct(arr.alias("xs"), e.alias("e"))
-
-                out = _let_p(
-                    F.struct(
-                        kept.alias("ks"),
-                        (
-                            lcv.err
-                            if lcv.err is not None
-                            else _null_str()
-                        ).alias("le"),
-                    ),
-                    build,
-                )
-                return CV(
-                    out["xs"], F.when(out["e"].isNotNull(), out["e"])
-                )
-
-            return fn_genpipe
-        lpf = compile_packed(node.left)
-        inner = _elems_colfn(node.right)
-        if lpf is None or inner is None:
-            return None
-
-        def fn_pipe(v: Column) -> CV:
-            # let-bind the navigated value: `inner` references its
-            # input ~8× (type dispatch), which squares the tree if fed
-            # the raw left-side expression (measured 950 KB for
-            # `.text | split(" ")` before this binding)
-            def fin(t: Column) -> Column:
-                ecv = inner(t["v"])
-                e = F.coalesce(
-                    t["e"], ecv.err if ecv.err is not None else _null_str()
-                )
-                # a `?`-dropped source is an EMPTY stream (reduce then
-                # emits init, like the interp), never a row drop
-                d = (
-                    t["d"]
-                    if ecv.drop is None
-                    else (t["d"] | F.coalesce(ecv.drop, F.lit(False)))
-                )
-                arr = F.when(e.isNull() & ~d, ecv.v).otherwise(_empty_varr())
-                return F.struct(arr.alias("xs"), e.alias("e"))
-
-            out = _let_p(lpf(_pk(v)), fin)
-            return CV(out["xs"], F.when(out["e"].isNotNull(), out["e"]))
-
-        return fn_pipe
-    if isinstance(node, ast.Foreach):
-        # row-local foreach burst (r8): the ENTRIES array collapses to
-        # the burst-CV contract — a mid-burst error voids the whole
-        # burst (jq parity: an error escapes the enclosing collect /
-        # reduce; the prior-values-then-error shape only matters for
-        # a TOP-LEVEL foreach, which fans out and runs on the interp
-        # tier)
-        fe = _foreach_entries_col(node)
-        if fe is None:
-            return None
-
-        def fn_foreach(v: Column) -> CV:
-            def build(b: Column) -> Column:
-                ents = b["es"]
-                ferr = F.get(
-                    F.filter(ents, lambda t: t["er"].isNotNull()), 0
-                )["er"]
-                arr = F.when(ferr.isNotNull(), _empty_varr()).otherwise(
-                    F.transform(ents, lambda t: t["x"])
-                )
-                return F.struct(arr.alias("xs"), ferr.alias("e"))
-
-            out = _let_p(F.struct(fe(v).alias("es")), build)
-            return CV(out["xs"], F.when(out["e"].isNotNull(), out["e"]))
-
-        return fn_foreach
-    if isinstance(node, ast.Builtin) and node.name in ("scan", "splits"):
-        if is_multivalued(node.args[0]):
-            return None
-        sargf = compile_col(node.args[0])
-        if sargf is None:
-            return None
-        bname = node.name
-
-        def fn_regex_gen(v: Column) -> CV:
-            acv = sargf(v)
-            t, tk = V.vtype(v), V.vtype(acv.v)
-            s, p = V.as_string(v), V.as_string(acv.v)
-            matches = (
-                F.regexp_extract_all(s, p, F.lit(0))
-                if bname == "scan"
-                else F.call_function("split", s, p)
-            )
-            arr = F.transform(matches, V.vstring)
-            ok = (t == "string") & (tk == "string")
-            dropped = (
-                F.coalesce(acv.drop, F.lit(False))
-                if acv.drop is not None
-                else F.lit(False)
-            )
-            arrout = F.when(ok & ~dropped, arr).otherwise(_empty_varr())
-            err = _merge_err(
-                acv.err,
-                F.when(
-                    ~ok & ~dropped,
-                    F.concat(F.lit(bname + " on "), t, F.lit("/"), tk),
-                ),
-            )
-            return CV(arrout, err)
-
-        return fn_regex_gen
-    if isinstance(node, ast.Builtin) and node.name == "limit":
-        if is_multivalued(node.args[0]):
-            return None
-        nf = compile_col(node.args[0])
-        if nf is None:
-            return None
-        inner = _elems_colfn(node.args[1])
-        if inner is None:
-            return None
-
-        def fn_limit(v: Column) -> CV:
-            ncv = nf(v)
-            ecv = inner(v)
-            tn = V.vtype(ncv.v)
-            n = V.as_long(ncv.v)
-            ok = tn == "int"
-            arr = F.when(
-                ok,
-                F.slice(
-                    ecv.v, 1, F.greatest(n, F.lit(0)).cast("int")
-                ),
-            ).otherwise(_empty_varr())
-            err = _merge_err(
-                _merge_err(ncv.err, ecv.err),
-                F.when(~ok, F.concat(F.lit("limit count on "), tn)),
-            )
-            return CV(arr, err)
-
-        return fn_limit
-    if isinstance(node, ast.Builtin) and node.name == "range":
-        if any(is_multivalued(a) for a in node.args):
-            return None
-        if len(node.args) == 3:
-            fns = [compile_col(a) for a in node.args]
-            if any(f is None for f in fns):
-                return None
-            ff, tf, sf2 = fns
-
-            def fn_range3(v: Column) -> CV:
-                fc, tc, sc = ff(v), tf(v), sf2(v)
-                tF, tT, tS = V.vtype(fc.v), V.vtype(tc.v), V.vtype(sc.v)
-                frm = V.as_long(fc.v)
-                to = V.as_double(tc.v)
-                step = V.as_long(sc.v)
-                # dialect: int from/step (jq also ranges over floats)
-                ok = (
-                    (tF == "int") & V.is_number(tT) & (tS == "int")
-                    & (step != 0)
-                )
-                cnt = F.greatest(
-                    F.ceil((to - frm) / step.cast("double")).cast("long"),
-                    F.lit(0),
-                )
-                err = None
-                drop = None
-                for cv in (fc, tc, sc):
-                    err = _merge_err(err, cv.err)
-                    drop = _merge_drop(drop, cv.drop)
-                dropped = (
-                    F.coalesce(drop, F.lit(False))
-                    if drop is not None
-                    else F.lit(False)
-                )
-                arr = F.when(
-                    ok & (cnt > 0) & ~dropped,
-                    F.transform(
-                        F.sequence(F.lit(0), (cnt - 1).cast("int")),
-                        lambda i: V.vlong(frm + i * step),
-                    ),
-                ).otherwise(_empty_varr())
-                err = _merge_err(
-                    err,
-                    F.when(
-                        ~ok & ~dropped,
-                        F.concat(
-                            F.lit("range on "), tF, F.lit("/"), tT,
-                            F.lit("/"), tS,
-                        ),
-                    ),
-                )
-                return CV(arr, err)
-
-            return fn_range3
-        argf = compile_col(node.args[0])
-        if argf is None:
-            return None
-
-        def fn_range(v: Column) -> CV:
-            acv = argf(v)
-            t = V.vtype(acv.v)
-            cnt = F.ceil(V.as_double(acv.v)).cast("long")
-            ok = V.is_number(t)
-            dropped = (
-                F.coalesce(acv.drop, F.lit(False))
-                if acv.drop is not None
-                else F.lit(False)
-            )
-            arr = F.when(
-                ok & (cnt > 0) & ~dropped,
-                F.transform(F.sequence(F.lit(0), cnt - 1), V.vlong),
-            ).otherwise(_empty_varr())
-            err = _merge_err(
-                acv.err, F.when(~ok & ~dropped, F.concat(F.lit("range on "), t))
-            )
-            return CV(arr, err)
-
-        return fn_range
-    return None
-
-
-# -------------------------------------------------- packed (ANF) tier
-# Inside HOF lambdas there is no withColumn staging, so the default
-# pure-substitution compile duplicates each operand subtree at every
-# composition level (~8 references per type dispatch -> 8^depth
-# expression growth; a 3-op reduce update measured 14.8 MB of
-# expression text and 152 s of analysis). The packed tier is the
-# lambda-context analogue of staging: values travel as ONE
-# struct<v: VARIANT, e: STRING, d: BOOLEAN> column, and every
-# composite node binds its subresults as fresh lambda variables
-# (`transform(array(x), t -> ...)[0]` is expression-level `let`), so
-# the tree stays LINEAR in AST size.
-
-
 def _null_str() -> Column:
     return F.lit(None).cast("string")
-
-
-def _pk(v: Column, e: Column | None = None, d: Column | None = None) -> Column:
-    return F.struct(
-        v.alias("v"),
-        (e if e is not None else _null_str()).alias("e"),
-        (d if d is not None else F.lit(False)).alias("d"),
-    )
-
-
-def _pk_cv(cv: CV) -> Column:
-    return _pk(
-        cv.v,
-        cv.err,
-        None if cv.drop is None else F.coalesce(cv.drop, F.lit(False)),
-    )
-
-
-def _unpk(p: Column) -> CV:
-    return CV(p["v"], F.when(p["e"].isNotNull(), p["e"]), p["d"])
-
-
-def _let_p(x: Column, fn: Callable[[Column], Column]) -> Column:
-    """Expression-level `let`: bind x once, fn sees a leaf lambda var."""
-    return F.transform(F.array(x), fn)[0]
-
-
-def _pk_chain(p: Column, colfn: ColFn) -> Column:
-    """Apply a ColFn to the packed input's value with error/drop
-    passthrough. p MUST be a leaf (lambda var / cheap ref); colfn's
-    output is referenced a constant number of times against that
-    leaf, so expansion is bounded per node."""
-    out = _pk_cv(colfn(p["v"]))
-    keep = p["e"].isNotNull() | p["d"]
-    return F.when(keep, p).otherwise(
-        F.struct(
-            out["v"].alias("v"),
-            out["e"].alias("e"),
-            (p["d"] | out["d"]).alias("d"),
-        )
-    )
-
-
-PFn = Callable[[Column], Column]
-
-
-def compile_packed(node: ast.Node) -> PFn | None:  # noqa: PLR0911, PLR0912
-    """Compile to packed form (λ packed → packed); None when the node
-    needs stream machinery (multi-valued) or an unported feature.
-    Invariant: the returned fn may assume its input is LEAF-cheap and
-    must hand leaf-cheap inputs to its children (via _let_p)."""
-    if isinstance(node, ast.Identity):
-        return lambda p: p
-    if isinstance(node, ast.Literal):
-        text = node.text
-        return lambda p: F.struct(
-            F.parse_json(F.lit(text)).alias("v"),
-            p["e"].alias("e"),
-            p["d"].alias("d"),
-        )
-    if isinstance(node, ast.Var):
-        name = node.name
-        return lambda p: F.struct(
-            _env_lookup(name).alias("v"), p["e"].alias("e"), p["d"].alias("d")
-        )
-    if isinstance(node, (ast.Index, ast.Identifier, ast.Slice)):
-        cf = compile_col(node)
-        return (lambda p: _pk_chain(p, cf)) if cf is not None else None
-    if isinstance(node, ast.Assign):
-        # static-path assignment is pure-native (_set_variant); the
-        # DEDICATED packed form below let-binds the rhs result and the
-        # serialized leaf so each appears once — `map(.value =
-        # (.value * 2))` on ONE row measured minutes of Catalyst
-        # analysis under substitution (vjson re-reads its input ~8×,
-        # the set duplicates the leaf, and the err column repeats
-        # the whole tree) vs ~1 s bound
-        return _packed_assign(node)
-    if isinstance(node, ast.Pipe):
-        lf, rf = compile_packed(node.left), compile_packed(node.right)
-        if lf is None or rf is None:
-            return None
-        return lambda p: _let_p(lf(p), rf)
-    if isinstance(node, ast.Unary):
-        ef = compile_packed(node.expr)
-        if ef is None:
-            return None
-        op = _col_neg if node.op == "-" else _col_not
-        return lambda p: _let_p(ef(p), lambda t: _pk_chain(t, op))
-    if isinstance(node, ast.Try):
-        ef = compile_packed(node.expr)
-        if ef is None:
-            return None
-
-        def run_try(p: Column) -> Column:
-            def fin(t: Column) -> Column:
-                # an error or drop the input carries passes through:
-                # `try` covers only its own expression
-                return F.when(p["e"].isNotNull() | p["d"], p).otherwise(
-                    F.struct(
-                        F.when(t["e"].isNull(), t["v"]).otherwise(V.vnull()).alias("v"),
-                        _null_str().alias("e"),
-                        (t["d"] | t["e"].isNotNull()).alias("d"),
-                    )
-                )
-
-            return _let_p(ef(p), fin)
-
-        return run_try
-    if isinstance(node, ast.Binary):
-        lf, rf = compile_packed(node.left), compile_packed(node.right)
-        if lf is None or rf is None:
-            return None
-        op = node.op
-        lk, rk = _static_kind(node.left), _static_kind(node.right)
-
-        def run_bin(p: Column) -> Column:
-            def inner(x: Column, y: Column) -> Column:
-                return _pk_cv(_col_binary(op, _unpk(x), _unpk(y), lk, rk))
-
-            return F.zip_with(F.array(lf(p)), F.array(rf(p)), inner)[0]
-
-        return run_bin
-    if isinstance(node, ast.If):
-        pairs = [
-            (compile_packed(c), compile_packed(b)) for c, b in node.branches
-        ]
-        ef = compile_packed(node.orelse)
-        if ef is None or any(x is None for pr in pairs for x in pr):
-            return None
-
-        def run_if(p: Column) -> Column:
-            def step(i: int) -> Column:
-                if i == len(pairs):
-                    return ef(p)
-                cf, bf = pairs[i]
-
-                def decide(c: Column) -> Column:
-                    return (
-                        F.when(c["e"].isNotNull() | c["d"], c)
-                        .when(V.truthy(c["v"]), bf(p))
-                        .otherwise(step(i + 1))
-                    )
-
-                return _let_p(cf(p), decide)
-
-            return step(0)
-
-        return run_if
-    if isinstance(node, ast.BindAs):
-        if is_multivalued(node.source) or is_multivalued(node.body):
-            return None
-        sf = compile_packed(node.source)
-        bf = compile_packed(node.body)
-        if sf is None or bf is None:
-            return None
-        name = node.name
-
-        def run_bind(p: Column) -> Column:
-            def inner(t: Column) -> Column:
-                _ENV.append(
-                    (name, t["v"], {"elem": _static_elem_kind(node.source)})
-                )
-                try:
-                    out = bf(p)  # body input is the ORIGINAL value
-                finally:
-                    _ENV.pop()
-                return F.when(t["e"].isNotNull() | t["d"], t).otherwise(out)
-
-            return _let_p(sf(p), inner)
-
-        return run_bind
-    if isinstance(node, ast.Reduce):
-        cf = _col_reduce(node)
-        return (lambda p: _pk_chain(p, cf)) if cf is not None else None
-    if isinstance(node, ast.StrInterp):
-        cf = _col_interp(node)
-        return (lambda p: _pk_chain(p, cf)) if cf is not None else None
-    if isinstance(node, ast.Assign):
-        cf = _compile_assign(node)
-        return (lambda p: _pk_chain(p, cf)) if cf is not None else None
-    if isinstance(node, ast.ListCons):
-        items = (
-            []
-            if node.expr is None
-            else (
-                list(node.expr.items)
-                if isinstance(node.expr, ast.Iter)
-                else [node.expr]
-            )
-        )
-        if any(is_multivalued(i) for i in items):
-            # a row-local generator payload ([scan(re)], [.xs.[]],
-            # [range(n)]) still collects in ONE projection via
-            # _col_list's burst splice (None when _elems_colfn can't
-            # render the generator)
-            cf = _col_list(node)
-            return (lambda p: _pk_chain(p, cf)) if cf is not None else None
-        fns = [compile_packed(i) for i in items]
-        if any(f is None for f in fns):
-            return None
-
-        def run_list(p: Column) -> Column:
-            if not fns:
-                return F.struct(
-                    F.parse_json(F.lit("[]")).alias("v"),
-                    p["e"].alias("e"),
-                    p["d"].alias("d"),
-                )
-
-            def build(arr: Column) -> Column:
-                # a dropped item adds no element (and no error); the
-                # collect keeps the input's own error and drop
-                kept = F.filter(arr, lambda t: ~t["d"])
-                parts = F.transform(kept, lambda t: V.vjson(t["v"]))
-                av = F.parse_json(
-                    F.concat(F.lit("["), F.concat_ws(",", parts), F.lit("]"))
-                )
-                firste = F.filter(kept, lambda t: t["e"].isNotNull())
-                e = F.coalesce(
-                    p["e"], F.when(F.size(firste) > 0, firste[0]["e"])
-                )
-                return F.struct(
-                    F.when(e.isNull(), av).otherwise(V.vnull()).alias("v"),
-                    e.alias("e"),
-                    p["d"].alias("d"),
-                )
-
-            # one array holds every item's packed result exactly once
-            return _let_p(
-                F.struct(F.array(*[f(p) for f in fns]).alias("xs")),
-                lambda t: build(t["xs"]),
-            )
-
-        return run_list
-    if isinstance(node, ast.DictCons):
-        skeys = [static_dict_key(pr.key) for pr in node.pairs]
-        if any(k is None for k in skeys):
-            return None  # computed keys: rare inside lambdas
-        if any(is_multivalued(pr.value) for pr in node.pairs):
-            return None
-        fns = [compile_packed(pr.value) for pr in node.pairs]
-        if any(f is None for f in fns):
-            return None
-        # dup-key last-wins statically, like _col_dict_static
-        last: dict[str, int] = {}
-        for i, k in enumerate(skeys):
-            last[k] = i
-
-        def run_dict(p: Column) -> Column:
-            def build(arr: Column) -> Column:
-                # NATIVE variant assembly, like _col_dict_static
-                ents = F.array(*[
-                    F.struct(F.lit(k).alias("k"), arr[i]["v"].alias("v"))
-                    for k, i in last.items()
-                ])
-                dv = F.to_variant_object(F.map_from_entries(
-                    F.filter(ents, lambda e: e["v"].isNotNull())
-                ))
-                firste = F.filter(arr, lambda t: t["e"].isNotNull())
-                anyd = F.exists(arr, lambda t: t["d"])
-                e = F.when(F.size(firste) > 0, firste[0]["e"])
-                return F.struct(
-                    F.when(e.isNull(), dv).otherwise(V.vnull()).alias("v"),
-                    e.alias("e"),
-                    anyd.alias("d"),
-                )
-
-            return _let_p(
-                F.struct(F.array(*[f(p) for f in fns]).alias("xs")),
-                lambda t: build(t["xs"]),
-            )
-
-        return run_dict
-    if isinstance(node, ast.Builtin):
-        name = node.name
-        if name == "select":
-            af = compile_packed(node.args[0])
-            if af is None:
-                return None
-
-            def run_select(p: Column) -> Column:
-                def inner(t: Column, u: Column) -> Column:
-                    return (
-                        F.when(u["e"].isNotNull() | u["d"], F.struct(
-                            t["v"].alias("v"), u["e"].alias("e"), u["d"].alias("d")
-                        ))
-                        .when(
-                            V.truthy(u["v"]),
-                            F.struct(t["v"].alias("v"), t["e"].alias("e"), t["d"].alias("d")),
-                        )
-                        .otherwise(
-                            F.struct(
-                                t["v"].alias("v"),
-                                t["e"].alias("e"),
-                                F.lit(True).alias("d"),
-                            )
-                        )
-                    )
-
-                return F.zip_with(F.array(p), F.array(af(p)), inner)[0]
-
-            return run_select
-        if name == "del":
-            cf = _compile_del(node)
-            return lambda p: _pk_chain(p, cf)
-        if name == "getpath" and len(node.args) == 1:
-            # static-path fast lane (r7) — mirror of the compile_col
-            # hook; a literal path needs no dynamic fold
-            from bd_spark.jsonq.parser import _literal_str_path
-
-            segs = _literal_str_path(node.args[0])
-            if segs:
-                return lambda p: _pk_chain(
-                    p, lambda v: _col_getpath_static(v, segs)
-                )
-        if name in GENERATOR_BUILTINS:
-            return None  # generators
-        if name == "capture":
-            cf = _compile_capture(node)
-            return lambda p: _pk_chain(p, cf)
-        if not node.args:
-            return lambda p: _pk_chain(
-                p, lambda v: _col_builtin(name, v, [])
-            )
-        if len(node.args) != 1:
-            return None  # arity-2 (sub/gsub/pow): substitution fallback
-        if any(is_multivalued(a) for a in node.args):
-            return None
-        afns = [compile_packed(a) for a in node.args]
-        if any(f is None for f in afns):
-            return None
-
-        def run_b1(p: Column) -> Column:
-            def inner(t: Column, u: Column) -> Column:
-                return _pk_chain2(t, u, name)
-
-            return F.zip_with(F.array(p), F.array(afns[0](p)), inner)[0]
-
-        return run_b1
-    return None
-
-
-def _packed_assign(node: ast.Assign) -> PFn | None:
-    """Packed-tier static-path assignment. Everything multi-referenced
-    is a lambda variable: the input (t), the rhs packed result (r),
-    and the serialized leaf (lf) — so tree size stays linear in the
-    rhs, where the substitution form multiplies rhs × vjson(≈8) ×
-    set_json(2) × the err-column repeat."""
-    rhspf = compile_packed(node.value)
-    if rhspf is None:
-        cf0 = compile_col(node.value)
-        if cf0 is None:
-            return None
-        rhspf = lambda p: _pk_chain(p, cf0)  # noqa: E731
-    segs = node.path
-    update = node.update
-    msg = "cannot set path ." + ".".join(segs)
-
-    def run(p: Column) -> Column:
-        def body(t: Column) -> Column:
-            v = t["v"]
-            old = F.coalesce(_path_get(v, segs), V.vnull())
-            rp = rhspf(_pk(old if update else v))
-
-            def with_r(r: Column) -> Column:
-                leaf = F.when(r["e"].isNotNull(), V.vnull()).otherwise(
-                    # coalesce: a SQL-NULL map value would DROP the
-                    # entry in to_variant_object, not set jq null
-                    F.coalesce(r["v"], V.vnull())
-                )
-
-                def with_leaf(lf: Column) -> Column:
-                    ok = _path_ok(v, segs)
-                    resv = F.when(
-                        ok, _set_variant(v, segs, lf)
-                    ).otherwise(V.vnull())
-                    oute = F.coalesce(
-                        r["e"], F.when(~ok, F.lit(msg))
-                    )
-                    keep = t["e"].isNotNull() | t["d"]
-                    return F.when(keep, t).otherwise(
-                        F.struct(
-                            resv.alias("v"),
-                            oute.alias("e"),
-                            (t["d"] | r["d"]).alias("d"),
-                        )
-                    )
-
-                return _let_p(leaf, with_leaf)
-
-            return _let_p(rp, with_r)
-
-        return _let_p(p, body)
-
-    return run
-
-
-def _pk_chain2(t: Column, u: Column, name: str) -> Column:
-    """Arity-1 builtin over packed (input t, argument u), leaf-cheap."""
-    out = _pk_cv(_col_builtin(name, t["v"], [_unpk(u)]))
-    keep = t["e"].isNotNull() | t["d"]
-    return F.when(keep, t).otherwise(
-        F.struct(
-            out["v"].alias("v"),
-            out["e"].alias("e"),
-            (t["d"] | out["d"]).alias("d"),
-        )
-    )
 
 
 def _static_elem_kind(node: ast.Node) -> str | None:
@@ -2960,8 +1975,8 @@ def _static_elem_kind(node: ast.Node) -> str | None:
     provable. Feeds the typed fold lane (r6 VERDICT wrong #2): a
     `split` product is always array<string>, `chars`/`explode` always
     array<int>. Var lookups consult the live _ENV binding metadata,
-    so this must run at plan-BUILD time (inside a ColFn), not at
-    compile time."""
+    so this must run where the bindings are pushed: the router's walk
+    (_unstaged_construct) or the planner (inside a ColFn)."""
     if isinstance(node, ast.Pipe):
         return _static_elem_kind(node.right)
     if isinstance(node, ast.Try):
@@ -2977,8 +1992,8 @@ def _static_elem_kind(node: ast.Node) -> str | None:
         # statically-STRING RHS alone proves the claim: with a string
         # divisor every non-string LHS overload yields jq null (never
         # an array), so the only possible array output is the split
-        # product — downstream array guards treat the null identically
-        # in both lanes.
+        # product — the typed fold's array guard treats the null as
+        # the interp tier does.
         if _static_kind(node.right) == "string":
             return "string"
         return None
@@ -3063,8 +2078,6 @@ def _typed_expr(node: ast.Node, kinds: dict[str, str]):
 
         return (rk, build_pipe)
     if isinstance(node, ast.BindAs):
-        if is_multivalued(node.source):
-            return None
         st = _typed_expr(node.source, kinds)
         if st is None:
             return None
@@ -3211,19 +2224,16 @@ def _typed_expr(node: ast.Node, kinds: dict[str, str]):
     return None
 
 
-def _typed_reduce_cv(node: ast.Reduce, v: Column) -> CV | None:
-    """Typed fold lane (r6 VERDICT next #1): when the fold source's
-    element kind is statically proven and init/update compile in the
-    typed domain, run F.aggregate over a NATIVE array with a native
-    accumulator and re-tag once at the end. The variant lane pays
-    parse_json(cast(string)) boxing + a 7-way type dispatch PER STEP;
-    this lane pays one cast per element and one parse_json per fold.
-    Must be called at plan-BUILD time (reads _ENV metadata)."""
+def _typed_fold(node: ast.Reduce):
+    """``(elem kind, acc kind, init build, update build)`` when the
+    typed fold renders this reduce, else None (it then has no staged
+    lane): the source is `X | .[]` with X's element kind proven
+    string or int, and init/update compile in the typed domain
+    (_typed_expr) with matching numeric kinds. Reads the `as`-binding
+    element kinds on _ENV, so it runs where those are pushed: the
+    router's walk (_unstaged_construct) and the planner."""
     src = node.source
-    if not (
-        isinstance(src, ast.Pipe)
-        and isinstance(src.right, ast.IterValues)
-    ):
+    if not (isinstance(src, ast.Pipe) and isinstance(src.right, ast.IterValues)):
         return None
     ek = _static_elem_kind(src.left)
     if ek not in ("string", "int"):
@@ -3235,11 +2245,22 @@ def _typed_reduce_cv(node: ast.Reduce, v: Column) -> CV | None:
     ut = _typed_expr(node.update, {".": ik, node.name: ek})
     if ut is None or ut[0] != ik:
         return None
-    _uk, ub = ut
-    base = compile_col(src.left)
-    if base is None:
-        return None
-    bcv = base(v)
+    return ek, ik, ib, ut[1]
+
+
+def _typed_reduce_cv(node: ast.Reduce, v: Column) -> CV:
+    """Typed fold lane (r6 VERDICT next #1), the staged tier's one
+    `reduce`: F.aggregate over a NATIVE array with a native
+    accumulator, re-tagged once at the end — one cast per element and
+    one parse_json per fold, where a variant accumulator would pay
+    parse_json(cast(string)) boxing and a 7-way type dispatch PER
+    STEP. Must be called at plan-BUILD time (reads _ENV metadata)."""
+    fold = _typed_fold(node)
+    if fold is None:
+        raise NotImplementedError(f"no staged lane for {node!r}")
+    ek, ik, ib, ub = fold
+    src = node.source
+    bcv = compile_col(src.left)(v)
     arr = V.as_array(bcv.v)
     cast_elem = V.as_string if ek == "string" else V.as_dec
     native = F.transform(arr, cast_elem)
@@ -3253,9 +2274,9 @@ def _typed_reduce_cv(node: ast.Reduce, v: Column) -> CV | None:
     # _static_elem_kind proves the ELEMENT kind, not that the source
     # is an array at runtime — `.t / " "` over a missing/non-string
     # .t is jq null, and as_array(null) -> SQL NULL would fold to a
-    # silent NULL row. Mirror the generic lane: non-array source is
-    # an in-band "cannot iterate <t>" error (or, under `.[]?`, an
-    # EMPTY generator so the fold yields init).
+    # silent NULL row. Non-array source is an in-band "cannot iterate
+    # <t>" error (or, under `.[]?`, an EMPTY generator so the fold
+    # yields init), as on the interp tier.
     t = V.vtype(bcv.v)
     is_arr = t == F.lit("array")
     err = bcv.err
@@ -3269,178 +2290,6 @@ def _typed_reduce_cv(node: ast.Reduce, v: Column) -> CV | None:
     if bcv.err is not None:
         out = F.when(bcv.err.isNotNull(), V.vnull()).otherwise(out)
     return CV(out, err, bcv.drop)
-
-
-def _col_reduce(node: ast.Reduce) -> ColFn | None:
-    """`reduce E as $x (I; U)` via F.aggregate over E's burst array.
-    The accumulator is struct<a: VARIANT, e: STRING>: the first error
-    (from U) freezes the fold, matching jq's abort-on-error; elements
-    dropped by `?` inside U leave the accumulator unchanged."""
-    elems = _elems_colfn(node.source)
-    if elems is None:
-        return None
-    if is_multivalued(node.init) or is_multivalued(node.update):
-        return None
-    inf = compile_col(node.init)
-    upf = compile_packed(node.update)  # ANF: linear expression size
-    uf = None if upf is not None else compile_col(node.update)
-    if inf is None or (upf is None and uf is None):
-        return None
-    name = node.name
-
-    def fn(v: Column) -> CV:
-        tcv = _typed_reduce_cv(node, v)
-        if tcv is not None:
-            return tcv
-        ecv = elems(v)
-        icv = inf(v)
-        zero = F.struct(
-            icv.v.alias("a"), F.lit(None).cast("string").alias("e")
-        )
-
-        def merge(acc: Column, x: Column) -> Column:
-            _ENV.append((name, x))
-            try:
-                if upf is not None:
-                    pin = F.struct(
-                        acc["a"].alias("v"),
-                        _null_str().alias("e"),
-                        F.lit(False).alias("d"),
-                    )
-                    pout = upf(pin)
-
-                    def fin(t: Column) -> Column:
-                        return (
-                            F.when(t["d"], acc)  # `?`-dropped: keep acc
-                            .when(
-                                t["e"].isNotNull(),
-                                F.struct(
-                                    V.vnull().alias("a"), t["e"].alias("e")
-                                ),
-                            )
-                            .otherwise(
-                                F.struct(
-                                    t["v"].alias("a"), _null_str().alias("e")
-                                )
-                            )
-                        )
-
-                    stepped = _let_p(pout, fin)
-                    return F.when(acc["e"].isNotNull(), acc).otherwise(stepped)
-                ucv = uf(acc["a"])
-            finally:
-                _ENV.pop()
-            uerr = (
-                ucv.err if ucv.err is not None else F.lit(None).cast("string")
-            )
-            skip = acc["e"].isNotNull()
-            if ucv.drop is not None:
-                skip = skip | F.coalesce(ucv.drop, F.lit(False))
-            stepped = F.struct(
-                F.when(uerr.isNotNull(), V.vnull()).otherwise(ucv.v).alias("a"),
-                uerr.alias("e"),
-            )
-            return F.when(skip, acc).otherwise(stepped)
-
-        res = F.aggregate(ecv.v, zero, merge)
-        err = _merge_err(ecv.err, _merge_err(icv.err, res["e"]))
-        out = res["a"]
-        if err is not None:
-            out = F.when(err.isNotNull(), V.vnull()).otherwise(out)
-        return CV(out, err, _merge_drop(ecv.drop, icv.drop))
-
-    return fn
-
-
-def _entry(x: Column, er: Column) -> Column:
-    """A burst entry: value + optional in-band error."""
-    return F.struct(x.alias("x"), er.alias("er"))
-
-
-def _no_entries() -> Column:
-    return F.filter(
-        F.array(_entry(V.vnull(), _null_str())), lambda _: F.lit(False)
-    )
-
-
-def _foreach_entries_col(node: ast.Foreach):
-    """Row-local `foreach` burst builder: value-column -> ENTRIES
-    array (emitted states, then one error entry if E/I/U errored,
-    matching the interp), which _elems_colfn folds into a burst for
-    `[foreach ...]` collects and reduce sources. None when source/
-    init/update aren't row-local renderable."""
-    elems = _elems_colfn(node.source)
-    inf = None if is_multivalued(node.init) else compile_col(node.init)
-    upf = None if is_multivalued(node.update) else compile_packed(node.update)
-    if upf is None and not is_multivalued(node.update):
-        # fall back to substitution for nodes the packed tier lacks
-        # (e.g. computed dict keys)
-        cf = compile_col(node.update)
-        if cf is not None:
-            upf = lambda p: _pk_cv(_chain(_unpk(p), cf))  # noqa: E731
-    if elems is None or inf is None or upf is None:
-        return None
-    name = node.name
-
-    def entries_fn(v: Column) -> Column:
-        ecv = elems(v)
-        icv = inf(v)
-        zero = F.struct(
-            icv.v.alias("a"),
-            _null_str().alias("e"),
-            F.filter(F.array(V.vnull()), lambda _: F.lit(False)).alias("outs"),
-        )
-
-        def merge(acc: Column, x: Column) -> Column:
-            _ENV.append((name, x))
-            try:
-                pin = F.struct(
-                    acc["a"].alias("v"),
-                    _null_str().alias("e"),
-                    F.lit(False).alias("d"),
-                )
-                pout = upf(pin)
-            finally:
-                _ENV.pop()
-
-            def fin(t: Column) -> Column:
-                return (
-                    F.when(t["d"], acc)  # `?`-dropped: no emit
-                    .when(
-                        t["e"].isNotNull(),
-                        F.struct(
-                            acc["a"].alias("a"),
-                            t["e"].alias("e"),
-                            acc["outs"].alias("outs"),
-                        ),
-                    )
-                    .otherwise(
-                        F.struct(
-                            t["v"].alias("a"),
-                            _null_str().alias("e"),
-                            F.array_append(acc["outs"], t["v"]).alias("outs"),
-                        )
-                    )
-                )
-
-            stepped = _let_p(pout, fin)
-            return F.when(acc["e"].isNotNull(), acc).otherwise(stepped)
-
-        res = F.aggregate(ecv.v, zero, merge)
-        entries = F.concat(
-            F.transform(res["outs"], lambda o: _entry(o, _null_str())),
-            F.when(
-                res["e"].isNotNull(), F.array(_entry(V.vnull(), res["e"]))
-            ).otherwise(_no_entries()),
-        )
-        pre = _merge_err(ecv.err, icv.err)
-        if pre is not None:
-            entries = F.when(
-                pre.isNotNull(), F.array(_entry(V.vnull(), pre))
-            ).otherwise(entries)
-        return entries
-
-    return entries_fn
 
 
 # ===================================================================
@@ -3567,7 +2416,7 @@ class _CSE:
 
     @staticmethod
     def key(node: ast.Node) -> tuple:
-        return node, tuple((m or {}).get("bind") for _n, _c, m in _ENV.items)
+        return node, tuple(m.get("bind") for _n, _c, m in _ENV.items)
 
 
 def _plan_direct(
@@ -3681,19 +2530,13 @@ def _plan_node(
             [p if isinstance(p, str) else p[0] for p in parts]
         ), d)
     if isinstance(node, ast.ListCons):
-        if _has_heavy_gen(node):
-            return _plan_heavy_list(plan, node, inp, depth, land)
         return land(_col_list(node)(inp.v))
     if isinstance(node, ast.Reduce):
-        return land(_col_reduce(node)(inp.v))
-    if isinstance(node, ast.Assign):
-        return land(_compile_assign(node)(inp.v))
+        return land(_typed_reduce_cv(node, inp.v))
     if isinstance(node, ast.Builtin):
         if node.name == "select":
             a, ad = sub(node.args[0])
             return land(_select_cv(inp.v, a), ad)
-        if node.name == "del":
-            return land(_compile_del(node)(inp.v))
         if node.name == "capture":
             return land(_compile_capture(node)(inp.v))
         if node.name == "getpath" and len(node.args) == 1:
@@ -3709,73 +2552,9 @@ def _plan_node(
             _col_builtin(node.name, inp.v, [a for a, _ in args]),
             max([depth] + [d for _, d in args]),
         )
-    # `.[]`, `.[a,b]`, generators and foreach fan out: compile_stream
-    # refuses such programs before planning (_unstaged_construct)
+    # fan-outs and rewrites: compile_stream refuses such programs
+    # before planning (_unstaged_construct)
     raise NotImplementedError(f"no staged lane for {node!r}")
-
-
-def _plan_heavy_list(
-    plan: _Plan,
-    node: ast.ListCons,
-    inp: CV,
-    depth: int,
-    land: Callable[[CV, int], tuple[CV, int]],
-) -> tuple[CV, int]:
-    """`[...]` whose payload contains a HEAVY row-local generator
-    (foreach — see _has_heavy_gen): each generator burst lands as ONE
-    flat array column, and the collect assembles from column
-    references. The row-local _col_list splice would inline the heavy
-    tree once per reference (2-4 interpreted re-evaluations per row);
-    a landed column is evaluated once per row, and CollapseProject
-    keeps it materialized because the producer is non-cheap and
-    multi-referenced. NEVER a struct: CollapseProject inlines
-    struct-landed producers through their field extractions and
-    re-splits them, duplicating the heavy tree once per field
-    reference — measured 2.4 MB / 927 map_entries in one collapsed
-    projection."""
-    items = (
-        list(node.expr.items)
-        if isinstance(node.expr, ast.Iter)
-        else [node.expr]
-    )
-    parts: list[tuple[bool, CV]] = []
-    d = depth
-    for i in items:
-        f = compile_col(i)
-        if f is not None:
-            parts.append((False, f(inp.v)))
-            continue
-        gen, right = i, None
-        if (
-            isinstance(i, ast.Pipe)
-            and is_multivalued(i.left)
-            and not is_multivalued(i.right)
-            and _elems_colfn(i.left) is not None
-        ):
-            # land the LEFT burst; map the scalar right side over the
-            # landed column instead of the genpipe splice's inlined tree
-            right = compile_packed(i.right)
-            if right is not None:
-                gen = i.left
-        burst = _elems_colfn(gen)(inp.v)
-        n = _fresh("gsb")
-        cols = {n: burst.v}
-        if burst.err is not None:
-            cols[f"{n}e"] = burst.err
-        plan.emit(depth + 1, cols)
-        d = depth + 1
-        arr = F.col(n)
-        aerr = F.col(f"{n}e") if burst.err is not None else None
-        if right is not None:
-            mapped = F.transform(arr, lambda x: right(_pk(x)))
-            kept = F.filter(mapped, lambda t: ~t["d"])
-            first_err = F.get(
-                F.filter(kept, lambda t: t["e"].isNotNull()), 0
-            )["e"]
-            aerr = _merge_err(aerr, first_err)
-            arr = F.transform(kept, lambda t: t["v"])
-        parts.append((True, CV(arr, aerr)))
-    return land(_collect(parts), d)
 
 
 def compile_stream(node: ast.Node) -> StreamFn:
@@ -3799,19 +2578,18 @@ def compile_stream(node: ast.Node) -> StreamFn:
     return run
 
 
+def _children(node: object) -> list:
+    """The fields of an AST dataclass, or the items of a tuple field."""
+    if dataclasses.is_dataclass(node):
+        return [getattr(node, f.name) for f in dataclasses.fields(node)]
+    return list(node) if isinstance(node, tuple) else []
+
+
 def _node_count(node: object) -> int:
     """AST size (dataclass nodes, nested tuples included)."""
-    import dataclasses
-
-    n = 0
-    if dataclasses.is_dataclass(node):
-        n = 1
-        for f in dataclasses.fields(node):
-            n += _node_count(getattr(node, f.name))
-    elif isinstance(node, tuple):
-        for x in node:
-            n += _node_count(x)
-    return n
+    return int(dataclasses.is_dataclass(node)) + sum(
+        _node_count(c) for c in _children(node)
+    )
 
 
 # Above this AST size the staged compiler's Catalyst tree stops being
@@ -3869,44 +2647,17 @@ _SCALAR_DISPATCH_BUILTINS = (
 _SCALAR_DISPATCH_THRESHOLD = 8
 
 
-def _walk_heavy_score(node: object) -> tuple[int, int, int]:
-    """(rebuilds, collects, scalars) — the cost signals of per-row
-    interpreted work that drive choose_tier's cost routing:
-      rebuilds — `del` builtins and `|=`/`=` assignment nodes
-                 (whole-document rewrites);
-      collects — list constructions collecting a MULTIVALUED burst
-                 (a row-local splice of the whole burst);
-      scalars  — Binary/Unary/Slice nodes and
-                 _SCALAR_DISPATCH_BUILTINS applications, each an
-                 interpreted variant type-dispatch tower per row on
-                 the staged lane."""
-    import dataclasses
-
-    rebuilds = collects = scalars = 0
+def _scalar_dispatch_count(node: object) -> int:
+    """Binary/Unary/Slice nodes and _SCALAR_DISPATCH_BUILTINS
+    applications in the program: each is an interpreted variant
+    type-dispatch tower per row on the staged lane, the cost signal of
+    choose_tier's routing."""
+    n = 0
     if isinstance(node, ast.Builtin):
-        if node.name == "del":
-            rebuilds += 1
-        elif node.name in _SCALAR_DISPATCH_BUILTINS:
-            scalars += 1
-    elif isinstance(node, ast.Assign):
-        rebuilds += 1
+        n = int(node.name in _SCALAR_DISPATCH_BUILTINS)
     elif isinstance(node, (ast.Binary, ast.Unary, ast.Slice)):
-        scalars += 1
-    elif isinstance(node, ast.ListCons):
-        if node.expr is not None and is_multivalued(node.expr):
-            collects += 1
-    if dataclasses.is_dataclass(node):
-        children = [getattr(node, f.name) for f in dataclasses.fields(node)]
-    elif isinstance(node, tuple):
-        children = list(node)
-    else:
-        children = []
-    for child in children:
-        r, c, s = _walk_heavy_score(child)
-        rebuilds += r
-        collects += c
-        scalars += s
-    return rebuilds, collects, scalars
+        n = 1
+    return n + sum(_scalar_dispatch_count(c) for c in _children(node))
 
 
 def _interp_tier(node: ast.Node) -> StreamFn:
@@ -4019,8 +2770,9 @@ def choose_tier(
         may nest stream ops exponentially), trees over
         _INTERP_TIER_NODES, and programs with a construct that has no
         staged lane (_unstaged_construct) — whatever the pin says;
-      - else the interp tier when pinned there, or when the cost
-        signals say it is faster and the staged tier is not pinned;
+      - else the interp tier when pinned there, or when the program's
+        scalar-dispatch count says it is faster and the staged tier
+        is not pinned;
       - else the staged Catalyst compilation."""
     if isinstance(node, ast.InterpOnly):
         return "interp", "InterpOnly: bounded-recursion defs"
@@ -4034,34 +2786,18 @@ def choose_tier(
         return "interp", "override"
     if override == "staged":
         return "staged", "override"
-    # Cost-based routing (r11): a program doing MULTIPLE whole-document
-    # rewrites per row is measurably faster on the Arrow interp tier
-    # than on the staged Catalyst lane, because the variant trees those
-    # ops compile to evaluate as CodegenFallback (interpreted per row,
-    # JVM-side) while the interp walks plain Python dicts on Arrow
-    # batches ONCE per row for the whole program (SCALE.md r11): >=2
-    # whole-doc rebuilds or >=2 multivalued burst collects measured
-    # 1.8-5.7x faster interp. Pure scalar navigation measured 1.3-2.6x
-    # faster staged and stays there. The scalar-dispatch signal (r11
-    # close): a program stacking MANY scalar ops pays the variant
-    # dispatch tower per op per row — each an interpreted
-    # transform()/comparator HOF — so past _SCALAR_DISPATCH_THRESHOLD
-    # ops one Arrow interp walk is cheaper (tierprobe: jq_formats
-    # 6.02→2.41, jq_defs 0.81→0.42, jq_datetime 2.30→1.68 warm). Both
-    # tiers are row-local, shuffle-free and carry non-core columns, so
-    # the 100 TB story is unchanged — this picks the faster per-byte
-    # constant. (Path enumerations, the r11 signal that joined these,
-    # now have no staged lane at all.)
-    rebuilds, collects, scalars = _walk_heavy_score(node)
-    if (
-        rebuilds >= 2
-        or collects >= 2
-        or scalars >= _SCALAR_DISPATCH_THRESHOLD
-    ):
-        return "interp", (
-            f"cost: {rebuilds} rebuild + {collects} collect + "
-            f"{scalars} scalar-dispatch"
-        )
+    # Cost-based routing (r11 close): a program stacking MANY scalar
+    # ops pays the variant dispatch tower per op per row — each an
+    # interpreted transform()/comparator HOF — so past
+    # _SCALAR_DISPATCH_THRESHOLD ops one Arrow interp walk is cheaper
+    # (tierprobe: jq_formats 6.02→2.41, jq_defs 0.81→0.42, jq_datetime
+    # 2.30→1.68 warm). Pure scalar navigation measured 1.3-2.6x faster
+    # staged and stays there. Both tiers are row-local, shuffle-free
+    # and carry non-core columns, so the 100 TB story is unchanged —
+    # this picks the faster per-byte constant.
+    scalars = _scalar_dispatch_count(node)
+    if scalars >= _SCALAR_DISPATCH_THRESHOLD:
+        return "interp", f"cost: {scalars} scalar-dispatch"
     return "staged", "cost"
 
 

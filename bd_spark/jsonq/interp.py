@@ -21,6 +21,7 @@ operator untouched (ops.rs:296 behavior).
 from __future__ import annotations
 
 import itertools
+import json as _json
 import math
 from collections.abc import Iterable
 
@@ -43,10 +44,8 @@ def run_values(node: ast.Node, doc: object) -> list[object]:
 
 
 def _has_float(v: object) -> bool:
-    """True when any value in the tree is a Python float — the only
-    case dumps_tagged must leave C-speed json.dumps for the tagged
-    recursion (r12: float-free trees, the common case, dump in one
-    json.dumps call instead of one Python frame per element)."""
+    """True when any value in the tree is a Python float (stops at the
+    first one)."""
     if isinstance(v, float):
         return True
     if isinstance(v, list):
@@ -62,26 +61,47 @@ def dumps_tagged(v: object) -> str:
     normalizes into the INT tower (DECIMAL) — appending E0 keeps it
     DOUBLE (same trick as vexpr.vjson). Non-float values dump
     compactly; NaN/Inf cannot occur (dialect arithmetic yields null
-    for ÷0, json input has no literals for them)."""
-    import json as _j
-
-    if isinstance(v, (dict, list)) and not _has_float(v):
-        return _j.dumps(v, ensure_ascii=False, separators=(",", ":"))
+    for ÷0, json input has no literals for them). A float-free tree,
+    the common case, dumps in one C-speed json.dumps call (r12); a
+    float-bearing one takes one walk (_dumps_floats) that renders the
+    parts holding floats and json.dumps-es the rest."""
     if isinstance(v, float):
-        s = repr(v)
-        return s if ("e" in s or "E" in s) else s + "E0"
-    if isinstance(v, (dict, list)):
-        if isinstance(v, dict):
-            return (
-                "{"
-                + ",".join(
-                    f"{_j.dumps(k, ensure_ascii=False)}:{dumps_tagged(x)}"
-                    for k, x in v.items()
-                )
-                + "}"
-            )
-        return "[" + ",".join(dumps_tagged(x) for x in v) + "]"
-    return _j.dumps(v, ensure_ascii=False, separators=(",", ":"))
+        return _tag_float(v)
+    if isinstance(v, (dict, list)) and _has_float(v):
+        return _dumps_floats(v)
+    return _dumps_plain(v)
+
+
+def _dumps_plain(v: object) -> str:
+    return _json.dumps(v, ensure_ascii=False, separators=(",", ":"))
+
+
+def _tag_float(v: float) -> str:
+    s = repr(v)
+    return s if ("e" in s or "E" in s) else s + "E0"
+
+
+def _dumps_floats(v: object) -> str | None:
+    """Tagged text of `v` when it holds a float, else None (the
+    caller dumps it with json.dumps): one visit per value, where a
+    float search per container level would cost O(size x depth)."""
+    if isinstance(v, float):
+        return _tag_float(v)
+    if isinstance(v, dict):
+        vals = v.values()
+    elif isinstance(v, list):
+        vals = v
+    else:
+        return None
+    parts = [_dumps_floats(x) for x in vals]
+    if parts.count(None) == len(parts):
+        return None
+    parts = [_dumps_plain(x) if p is None else p for x, p in zip(vals, parts)]
+    if isinstance(v, list):
+        return "[" + ",".join(parts) + "]"
+    return "{" + ",".join(
+        f"{_json.dumps(k, ensure_ascii=False)}:{p}" for k, p in zip(v, parts)
+    ) + "}"
 
 
 def _eval_stream(node: ast.Node, entries: Iterable[Entry]) -> Iterable[Entry]:

@@ -1089,13 +1089,11 @@ class Parser:
             # jq: def first(f): limit(1; f);
             return ast.Builtin("limit", (ast.Literal("1"), args[0]))
         if name == "setpath" and len(args) == 2:
-            # static-path fast lane (r6 VERDICT wrong #1): a literal
-            # all-string path is exactly the native `.a.b = E` Assign
-            # (same create-missing-objects / scalar-intermediate-error
-            # / rhs-against-root semantics) — compiled as native
-            # variant navigation + dict assembly. Int segments /
-            # dynamic paths stay the setpath builtin, which has no
-            # staged lane (the program runs on the interp tier).
+            # a literal all-string path is exactly the `.a.b = E`
+            # Assign (same create-missing-objects / scalar-
+            # intermediate-error / rhs-against-root semantics), which
+            # the interp walks directly. Int segments / dynamic paths
+            # stay the setpath builtin. Neither has a staged lane.
             segs = _literal_str_path(args[0])
             if segs:
                 return ast.Assign(path=segs, value=args[1], update=False)

@@ -84,7 +84,7 @@ def _tag_of_schema(st: Column) -> Column:
 # - SQL scalar function (CREATE TEMPORARY FUNCTION): 14x faster to
 #   reference and analyzer-inlined to the identical plan, but
 #   inlining FAILS with MISSING_ATTRIBUTES when the argument
-#   contains a lambda variable — the packed tier's dominant case.
+#   contains a lambda variable (any vtype inside a fold or HOF body).
 #   Dead end.
 # - CACHED JVM LambdaFunction (below): pyspark's _create_lambda
 #   names every unary lambda var "x" and analysis uniquifies, so one

@@ -572,7 +572,9 @@ def jq_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Static-path assignment surface (beyond-reference jq): `del` a
     field, `|=` update another in place, `=` add a new one computed
     from the root — the document-rewrite idioms of a curation
-    pipeline, all compiled to one Catalyst projection."""
+    pipeline. Document rewrites have no staged lane, so the program
+    runs on the whole-query Arrow interp tier (row-local, no
+    shuffle)."""
     docs = table(spark, "documents", sf_dir)
     jq = JsonQ(spark)
     stream = jq.stream_from_table(docs)
@@ -639,12 +641,13 @@ def jq_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Path builtins + foreach (beyond-reference jq): flatten every
     leaf path of events.props with `leaf_paths`/`join`, navigate
     dynamically with `getpath`, rewrite with `setpath`, and running-
-    count keys with `foreach`. The r11 cost router sends this
-    walk-heavy program (2 enumerations + 1 rebuild per row) to the
+    count keys with `foreach`. Path enumerations, rewrites and
+    `foreach` have no staged lane, so the program runs on the
     whole-query Arrow interp tier — one mapInPandas, row-local, zero
-    shuffle — measured 1.4 s vs 6.9 s staged warm at sf0.1: the
-    staged lane's variant HOF trees evaluate as CodegenFallback,
-    while the interp walks plain dicts once per row (SCALE.md r11)."""
+    shuffle. When it still had a staged form, the interp measured
+    1.4 s vs 6.9 s staged warm at sf0.1: the staged variant HOF trees
+    evaluate as CodegenFallback, while the interp walks plain dicts
+    once per row (SCALE.md r11)."""
     ev = table(spark, "events", sf_dir).select("event_id", "props")
     jq = JsonQ(spark)
     stream = jq.stream_from_text_column(ev, "props", seq_col="event_id")
@@ -683,10 +686,10 @@ def jq_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-driven pattern), scan / splits generators collected into
     lists, capture with a named group, explode/implode round-trip,
     utf8bytelength, and with_entries over a built object. with_entries
-    desugars to map, a HOF, so the program runs on the interp tier;
-    without it the regex builtins compile to native Java-regex Catalyst
-    expressions (regexp_replace / regexp_extract_all / split /
-    regexp_extract), which test_plans pins."""
+    desugars to map, a HOF, and the scan / splits generators fan out,
+    so the program runs on the interp tier; without them the regex
+    builtins compile to native Java-regex Catalyst expressions
+    (regexp_replace / regexp_extract), which test_plans pins."""
     docs = table(spark, "documents", sf_dir)
     jq = JsonQ(spark)
     stream = jq.stream_from_table(docs)

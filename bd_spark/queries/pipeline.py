@@ -1118,7 +1118,9 @@ chunks AS (
   SELECT id, chunk_id, count(*) AS n_tokens
   FROM mem0 GROUP BY id, chunk_id
 ),
-kept AS (
+-- materialized: the recursive fold joins kept once per step, and an
+-- inlined kept re-ran the tokenize, unnest and window every step
+kept AS MATERIALIZED (
   SELECT id, chunk_id, n_tokens,
          row_number() OVER (ORDER BY id, chunk_id) - 1 AS rn
   FROM chunks WHERE chunk_id = 0 OR n_tokens > 4

@@ -73,24 +73,25 @@ def test_scalar_dispatch_routing():
     ops (Binary/Unary/Slice/scalar builtins — each an interpreted
     variant dispatch tower per row on the staged lane) routes to the
     interp tier past _SCALAR_DISPATCH_THRESHOLD; a few-scalar program
-    stays staged. Pinned at the _walk_heavy_score level (counts) and
-    at compile_query (tier marker), both sides of the threshold."""
+    stays staged. Pinned at the _scalar_dispatch_count level (counts)
+    and at compile_query (tier marker), both sides of the threshold."""
     from bd_spark.jsonq import compiler
 
     # 10 scalar binops, no other signal -> routes
     heavy = parser.parse(
         ".a + .b - .c * .d / .e % 2 + .f + .g + .h + .i + .j"
     )
-    scores = compiler._walk_heavy_score(heavy)
-    assert scores[:2] == (0, 0)
-    assert scores[2] >= compiler._SCALAR_DISPATCH_THRESHOLD
+    assert (
+        compiler._scalar_dispatch_count(heavy)
+        >= compiler._SCALAR_DISPATCH_THRESHOLD
+    )
     compiler.compile_query(heavy)
     assert compiler.last_tier() == "interp"
 
     # 2 scalar ops -> stays staged
     light = parser.parse(".a + .b | length")
     assert (
-        compiler._walk_heavy_score(light)[2]
+        compiler._scalar_dispatch_count(light)
         < compiler._SCALAR_DISPATCH_THRESHOLD
     )
     compiler.compile_query(light)
@@ -101,7 +102,7 @@ def test_scalar_dispatch_routing():
     fmt = parser.parse(
         "{a: (.x | todate), b: (.y | round), c: (.z | @base64)}"
     )
-    assert compiler._walk_heavy_score(fmt)[2] == 3
+    assert compiler._scalar_dispatch_count(fmt) == 3
     assert "map" not in compiler._SCALAR_DISPATCH_BUILTINS
     assert "sort_by" not in compiler._SCALAR_DISPATCH_BUILTINS
 
@@ -111,7 +112,8 @@ def test_hof_programs_have_no_staged_lane():
     runs on the interp tier even under the staged pin, and a HOF node
     handed to the staged compiler directly raises instead of falling
     through to some other lane. So does any other construct with no
-    staged lane: the staged compiler never emits Python for it."""
+    staged lane: the staged compiler never emits Python, a fan-out or
+    a document rewrite for it."""
     from bd_spark.jsonq import compiler
 
     for q in ("map(. + 1)", ".xs | sort", "{a: (.xs | unique_by(.k))}"):
@@ -124,7 +126,10 @@ def test_hof_programs_have_no_staged_lane():
     for q in ("map(. + 1)", ".xs | sort_by(.a)", "[.[] | select(any(. > 1))]",
               "reduce .[] as $x (0; . + ([$x] | max_by(.)))",
               "flatten", "[paths]", "..|.a?", "del(.a[0])", ".a * .b",
-              'match("a")', "reduce .a as $x (0; . + $x)"):
+              'match("a")', "reduce .a as $x (0; . + $x)",
+              ".a = 1", ".n |= . + 1", "del(.a)", 'setpath(["a"]; 1)',
+              "[.xs[]]", '[.t | splits(" ")]', "[range(3)]",
+              "reduce .xs[] as $x (0; . + $x)", "[foreach .[] as $n (0; . + $n)]"):
         with pytest.raises(RuntimeError, match="no staged lane"):
             compiler.compile_stream(parser.parse(q))
 
@@ -135,7 +140,8 @@ def test_interp_tier_carries_columns(spark):
     carries (upstream error rows too, zero-output rows none), for int,
     string, struct and VARIANT carries — and answers like the staged
     tier on the same carrying stream wherever the staged tier runs the
-    program (a fan-out such as `.xs[]` runs on the interp tier only)."""
+    program (a fan-out such as `.xs[]`, even inside a collect, runs on
+    the interp tier only)."""
     from collections import Counter
 
     from pyspark.sql import functions as F
@@ -172,7 +178,8 @@ def test_interp_tier_carries_columns(spark):
     for prog, want, staged in (
         (".xs[]", {0: 3, 2: 1, 3: 1}, False),
         ("empty", {2: 1}, True),
-        ("[.xs[] | . * 2]", {0: 1, 1: 1, 2: 1, 3: 1}, True),
+        ("[.xs[] | . * 2]", {0: 1, 1: 1, 2: 1, 3: 1}, False),
+        ("[.xs[0]?, (.xs | length)]", {0: 1, 1: 1, 2: 1, 3: 1}, True),
     ):
         got = rows(prog, "interp")
         assert Counter(r.seq for r in got) == want, prog

@@ -345,9 +345,9 @@ CORPUS = [
     ("reduce .[] as $x (0; if $x > . then $x else . end)", "[3, 9, 2]", [9]),
     ("{sum: reduce .xs.[] as $n (0; . + $n), t: .tag}",
      '{"xs": [1, 2], "tag": "t"}', [{"sum": 3, "t": "t"}]),
-    # typed fold lane (r7): split products prove array<string>, so
-    # these folds compile over native columns — values must match the
-    # generic variant lane exactly
+    # typed fold lane (r7), the staged tier's one reduce: split
+    # products prove array<string>, so these folds compile over native
+    # columns — values must match the interp tier's fold exactly
     ('(.t | split(" ")) as $ws | reduce $ws.[] as $w (0; . + ($w | length))',
      '{"t": "ab c defg"}', [7]),
     ('(.t | split(" ")) as $ws | reduce $ws.[] as $w'
@@ -439,7 +439,7 @@ CORPUS = [
     ("with_entries(.value = (.value * 2))", '{"a": 1, "b": 2}',
      [{"a": 2, "b": 4}]),
     ("with_entries(.value += 1)", '{"a": 1, "b": 9}', [{"a": 2, "b": 10}]),
-    # assignment inside HOF lambdas (packed-tier assign)
+    # assignment inside HOF lambdas
     ("map(.v = (.v * 2))", '[{"v": 1}, {"v": 3}]', [[{"v": 2}, {"v": 6}]]),
     ("map(.v |= (. + 1))", '[{"v": 1}, {"v": 2}]', [[{"v": 2}, {"v": 3}]]),
     # math / date / format batch (jq manual semantics; dialect notes
@@ -696,8 +696,8 @@ def corpus_results(jq, plan_node_names):
 
     TIER_OVERRIDE pins the STAGED engine (r11): this corpus is the
     staged machinery's conformance gate — without the pin the cost
-    router would send every collect/rebuild-heavy case to the interp
-    tier, silently shrinking staged coverage. test_interp.py runs the
+    router could send a scalar-heavy case to the interp tier,
+    silently shrinking staged coverage. test_interp.py runs the
     same corpus through the interp engine. Programs the staged
     compiler cannot run (InterpOnly: walk/tostream; a construct with
     no staged lane) take the interp tier regardless of the pin; each
@@ -753,17 +753,21 @@ def corpus_results(jq, plan_node_names):
         compiler.TIER_OVERRIDE = None
 
 
-# The construct rule, written out here apart from the compiler's own
-# (compiler._unstaged_construct) so the two check each other: these
-# constructs have no staged lane, because the only staged form would
-# call Python.
+# The routing rule, written out here apart from the compiler's own
+# (compiler._unstaged_construct) so the two check each other. The
+# staged tier runs row-local scalar programs only; these constructs
+# have no staged lane.
 _NO_STAGED_BUILTINS = frozenset((
     # higher-order builtins
     "map", "any", "all", "sort", "unique",
     "sort_by", "unique_by", "group_by", "min_by", "max_by",
     # unbounded recursion/iteration, Python regex/time libraries
-    "flatten", "setpath", "delpaths", "strftime", "strptime", "match",
+    "flatten", "strftime", "strptime", "match",
     "until", "while", "repeat", "paths", "leaf_paths",
+    # generators: several outputs per input
+    "range", "scan", "splits", "limit",
+    # document rewrites
+    "del", "setpath", "delpaths",
 ))
 # builtins whose result is never an object: a `*` operand of one of
 # these kinds (or a non-object literal, string, list, negation, or an
@@ -806,96 +810,68 @@ def _children(node) -> list:
     return []
 
 
-def _fan_out_node(node) -> bool:
-    """The node itself emits several outputs per input."""
+def _split_product(node, split_vars: frozenset) -> bool:
+    """An array of strings or ints by construction: a `split`,
+    `chars` or `explode` product, a string-literal `/`, or a variable
+    bound to one."""
     from bd_spark.jsonq import ast
 
-    if isinstance(node, (ast.IterValues, ast.Iter, ast.Recurse, ast.Foreach)):
-        return True
+    if isinstance(node, ast.Pipe):
+        return _split_product(node.right, split_vars)
+    if isinstance(node, ast.Var):
+        return node.name in split_vars
+    if isinstance(node, ast.Binary):
+        return node.op == "/" and isinstance(node.right, ast.Literal) \
+            and node.right.text.startswith('"')
     return isinstance(node, ast.Builtin) and node.name in (
-        "range", "scan", "splits", "limit",
+        "split", "chars", "explode",
     )
 
 
-def _yields_many(node) -> bool:
-    """A fan-out node anywhere in the subtree, except inside a nested
-    collect or fold, which yield one value."""
+def _typed_update(node) -> bool:
+    """Built from literals, `.`, variables, arithmetic, comparisons,
+    `length`, `if` and `as` only."""
     from bd_spark.jsonq import ast
 
-    if _fan_out_node(node):
-        return True
-    if isinstance(node, ast.ListCons):
-        return False
-    if isinstance(node, ast.Reduce):
-        return _yields_many(node.init) or _yields_many(node.update)
-    return any(_yields_many(c) for c in _children(node))
-
-
-def _splices(node) -> bool:
-    """The staged collect renders this payload item within the row: a
-    single-valued item, or one generator with single-valued
-    arguments, piped from or into single-valued stages."""
-    from bd_spark.jsonq import ast
-
-    if not _yields_many(node):
-        return _row_local(node)
-    if isinstance(node, (ast.IterValues, ast.Foreach)):
-        return True
-    if isinstance(node, ast.Iter):
-        return not any(_yields_many(i) for i in node.items)
-    if isinstance(node, ast.Builtin) and node.name == "limit":
-        return (
-            not _yields_many(node.args[0])
-            and _yields_many(node.args[1])
-            and _splices(node.args[1])
-        )
     if isinstance(node, ast.Builtin):
-        return not any(_yields_many(a) for a in node.args)
-    if isinstance(node, ast.Pipe):
-        if _yields_many(node.left):
-            return not _yields_many(node.right) and _splices(node.left)
-        return _row_local(node.left) and _splices(node.right)
-    return False
+        return node.name == "length" and not node.args
+    if not isinstance(node, (
+        ast.Literal, ast.Identity, ast.Var, ast.Pipe, ast.Binary,
+        ast.Unary, ast.If, ast.BindAs, tuple,
+    )):
+        return False
+    return all(
+        _typed_update(c) for c in _children(node)
+        if isinstance(c, (ast.Node, tuple))
+    )
 
 
-def _row_local(node) -> bool:
-    """At most one output per input: no fan-out node outside collect
-    payloads and fold sources, and every collect's payload splices."""
+def _typed_fold(node, split_vars: frozenset) -> bool:
+    """The staged tier's one reduce, approximated (the corpus has no
+    edge case): source `X | .[]` over a split product, a number
+    literal init and a typed update."""
     from bd_spark.jsonq import ast
 
-    if isinstance(node, ast.ListCons):
-        if node.expr is None:
-            return True
-        items = (
-            node.expr.items if isinstance(node.expr, ast.Iter) else (node.expr,)
-        )
-        return all(_splices(i) for i in items)
-    if _fan_out_node(node):
-        return False
-    if isinstance(node, ast.Reduce):
-        return _row_local(node.init) and _row_local(node.update)
-    return all(_row_local(c) for c in _children(node))
+    src = node.source
+    return (
+        isinstance(src, ast.Pipe)
+        and isinstance(src.right, ast.IterValues)
+        and _split_product(src.left, split_vars)
+        and isinstance(node.init, ast.Literal)
+        and node.init.text.lstrip()[:1] in set("-0123456789")
+        and _typed_update(node.update)
+    )
 
 
-def _has_unstaged(node) -> bool:
-    from bd_spark.jsonq import ast, parser
+def _has_unstaged(node, split_vars: frozenset = frozenset()) -> bool:
+    from bd_spark.jsonq import ast
 
-    if isinstance(node, ast.Recurse):
-        return True
-    if isinstance(node, (ast.Reduce, ast.Foreach)) and (
-        # the staged folds take a generator source and single-valued
-        # init/update (approximated: the corpus has no edge case)
-        not _yields_many(node.source)
-        or _yields_many(node.init)
-        or _yields_many(node.update)
-    ):
-        return True
+    if isinstance(node, (
+        ast.Recurse, ast.IterValues, ast.Iter, ast.Foreach, ast.Assign,
+    )):
+        return True  # fans out or rewrites the document
     if isinstance(node, ast.Builtin):
         if node.name in _NO_STAGED_BUILTINS:
-            return True
-        if node.name == "del" and any(
-            isinstance(s, int) for s in parser.static_path(node.args[0]) or ()
-        ):
             return True
         if node.name == "capture" and not (
             isinstance(node.args[0], ast.Literal)
@@ -906,14 +882,26 @@ def _has_unstaged(node) -> bool:
         _not_object(node.left) or _not_object(node.right)
     ):
         return True
-    return any(_has_unstaged(c) for c in _children(node))
+    children = _children(node)
+    if isinstance(node, ast.Reduce):
+        if not _typed_fold(node, split_vars):
+            return True
+        children = [node.source.left, node.init, node.update]
+    elif isinstance(node, ast.BindAs):
+        inner = split_vars - {node.name}
+        if _split_product(node.source, split_vars):
+            inner |= {node.name}
+        return _has_unstaged(node.source, split_vars) or _has_unstaged(
+            node.body, inner
+        )
+    elif isinstance(node, ast.ListCons) and isinstance(node.expr, ast.Iter):
+        children = list(node.expr.items)  # a collect's comma items
+    return any(_has_unstaged(c, split_vars) for c in children)
 
 
 def _pinned_tier(query: str) -> str:
     """The tier a case must take under the staged pin: interp only
-    for programs the staged compiler cannot run, including programs
-    that are not row-local (the staged tier emits at most one row per
-    input row)."""
+    for programs the staged compiler cannot run."""
     from bd_spark.jsonq import ast, compiler, parser
 
     node = parser.parse(query)
@@ -921,7 +909,6 @@ def _pinned_tier(query: str) -> str:
         isinstance(node, ast.InterpOnly)
         or compiler._node_count(node) > compiler._INTERP_TIER_NODES
         or _has_unstaged(node)
-        or not _row_local(node)
     ):
         return "interp"
     return "staged"
@@ -1085,9 +1072,11 @@ def test_byte_slice_parity_mode(jq):
 
 
 def test_typed_lanes_match_generic(spark):
-    """r7 typed fold lanes must be value-identical to the
-    generic variant lanes on randomized inputs (empty words, empty
-    docs, non-ASCII byte lengths, duplicate lengths, ties)."""
+    """The typed fold lane (the staged tier's one `reduce`) must agree
+    with the interp tier's generic fold on randomized inputs (empty
+    words, empty docs, non-ASCII byte lengths, duplicate lengths,
+    ties): same values, same error presence. Default routing stages
+    these programs."""
     import json as _json
     import random
 
@@ -1106,8 +1095,8 @@ def test_typed_lanes_match_generic(spark):
         docs.append(_json.dumps({"t": " ".join(words)}))
     # adversarial rows (r7 ADVICE #1): the `/`-overload elem-kind
     # proof holds even when .t is missing/non-string at runtime, where
-    # the source is jq NULL (never an array) — the typed lanes must
-    # produce the generic lanes' in-band errors, not silent NULLs
+    # the source is jq NULL (never an array) — the typed lane must
+    # produce the generic fold's in-band errors, not silent NULLs
     docs += ["{}", '{"t": 5}', '{"t": null}', '{"t": ["a","b"]}',
              '{"t": true}']
     queries = [
@@ -1118,31 +1107,27 @@ def test_typed_lanes_match_generic(spark):
         '(.t / " ") as $ws | reduce $ws.[]? as $w (0; . + ($w | length))',
     ]
     jq = JsonQ(spark)
-    # pin staged: the differential is typed-vs-generic STAGED lanes;
-    # the cost router could otherwise send a program to the interp
-    # tier on both sides, comparing it against itself
-    compiler.TIER_OVERRIDE = "staged"
-    try:
-        for q in queries:
-            typed = jq.run_texts(q, docs)
-            assert compiler.last_tier() == "staged", q
-            orig = compiler._static_elem_kind
-            compiler._static_elem_kind = lambda n: None  # force generic
-            try:
-                generic = jq.run_texts(q, docs)
-                assert compiler.last_tier() == "staged", q
-            finally:
-                compiler._static_elem_kind = orig
-            assert typed == generic, q
-    finally:
-        compiler.TIER_OVERRIDE = None
+    for q in queries:
+        typed = jq.run_texts(q, docs)
+        assert compiler.last_tier() == "staged", q
+        compiler.TIER_OVERRIDE = "interp"
+        try:
+            generic = jq.run_texts(q, docs)
+            assert compiler.last_tier() == "interp", q
+        finally:
+            compiler.TIER_OVERRIDE = None
+        assert len(typed) == len(generic), q
+        for (tv, te), (gv, ge) in zip(typed, generic):
+            assert (te is None) == (ge is None), (q, te, ge)
+            if te is None:
+                assert tv == gv, (q, tv, gv)
 
 
 def test_setpath_static_lane_matches_dynamic(spark):
-    """The literal-path setpath fast lane (parser desugar -> native
-    Assign, staged) must agree with the dynamic setpath (no staged
-    lane: interp) on values and error PRESENCE (texts differ by
-    design) across doc shapes."""
+    """The literal-path setpath desugar (parser -> Assign) must agree
+    with the dynamic setpath builtin on values and error PRESENCE
+    (texts differ by design) across doc shapes. Both rewrite the
+    document, so both run on the interp tier."""
     from bd_spark.jsonq import compiler
     from bd_spark.jsonq.runtime import JsonQ
 
@@ -1154,7 +1139,7 @@ def test_setpath_static_lane_matches_dynamic(spark):
     compiler.TIER_OVERRIDE = "staged"
     try:
         lit = jq.run_texts('setpath(["a","b"]; .b // 9)', docs)
-        assert compiler.last_tier() == "staged"
+        assert compiler.last_tier() == "interp"
         # the [0:2] slice makes the path non-literal -> setpath builtin
         dyn = jq.run_texts('setpath(["a","b"][0:2]; .b // 9)', docs)
         assert compiler.last_tier() == "interp"

@@ -103,3 +103,35 @@ def test_format_float_tie_case_prefers_shortest():
     """2^-24: probing emitted 5.9604644775390625e-8 (17 digits);
     Rust {:e} and repr agree on 5.960464477539063e-8 (16)."""
     assert format_float(2.0 ** -24) == "5.960464477539063e-8"
+
+
+def _dumps_tagged_per_level(v: object) -> str:
+    """dumps_tagged as it was before its float search ran once per
+    dumped value: a float search at every container level. The
+    byte-identity reference for test_dumps_tagged_matches_per_level."""
+    from bd_spark.jsonq.interp import _has_float
+
+    if isinstance(v, (dict, list)) and not _has_float(v):
+        return json.dumps(v, ensure_ascii=False, separators=(",", ":"))
+    if isinstance(v, float):
+        s = repr(v)
+        return s if ("e" in s or "E" in s) else s + "E0"
+    if isinstance(v, dict):
+        return "{" + ",".join(
+            f"{json.dumps(k, ensure_ascii=False)}:{_dumps_tagged_per_level(x)}"
+            for k, x in v.items()
+        ) + "}"
+    if isinstance(v, list):
+        return "[" + ",".join(_dumps_tagged_per_level(x) for x in v) + "]"
+    return json.dumps(v, ensure_ascii=False, separators=(",", ":"))
+
+
+@settings(max_examples=500)
+@given(json_values | st.lists(json_values, max_size=4))
+def test_dumps_tagged_matches_per_level(value):
+    """interp.dumps_tagged searches a tree for floats once, yet emits
+    the same bytes as the per-level search it replaced, on float-free
+    and float-bearing trees alike."""
+    from bd_spark.jsonq.interp import dumps_tagged
+
+    assert dumps_tagged(value) == _dumps_tagged_per_level(value)

@@ -13,7 +13,8 @@ every program the staged compiler can run is compared staged against
 interp, whatever the cost router would pick. Programs with a
 construct that has no staged lane (a HOF builtin such as map/any/all,
 sort/unique or the sort_by family; a `*` whose operands may both be
-objects) run on the interp tier even so: for them this checks the
+objects; a fan-out such as `.xs[]`, even inside a collect) run on the
+interp tier even so: for them this checks the
 mapInPandas wrapper (ord bookkeeping, error rows, the tagged-float
 round trip) against the direct interp. Each run's tier is recorded in
 its worker and checked against compiler.choose_tier.

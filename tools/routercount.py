@@ -5,11 +5,11 @@ Usage: python tools/routercount.py
 
 Extracts each `jq.run('<program>', ...)` literal from
 bd_spark/queries/jsonq_queries.py (one per registry jq row), parses
-it with the production parser, and prints the _walk_heavy_score
-tuple plus compiler.choose_tier's (tier, reason) — the choice
-compile_query makes for the program. Diagnostic only —
-this is the calibration audit trail for the router thresholds
-(ADVICE r11 #1/#3: keep the counts auditable)."""
+it with the production parser, and prints its scalar-dispatch count
+(the one cost signal choose_tier has) plus compiler.choose_tier's
+(tier, reason) — the choice compile_query makes for the program.
+Diagnostic only — this is the calibration audit trail for the router
+threshold (ADVICE r11 #1/#3: keep the counts auditable)."""
 
 from __future__ import annotations
 
@@ -54,13 +54,10 @@ def main() -> None:
         for i, prog in enumerate(progs):
             node = parser.parse(prog)
             inner = node.expr if isinstance(node, jast.InterpOnly) else node
-            r, c, s = compiler._walk_heavy_score(inner)
+            scalars = compiler._scalar_dispatch_count(inner)
             suffix = f"[{i}]" if len(progs) > 1 else ""
             tier, reason = compiler.choose_tier(node)
-            print(
-                f"{name + suffix:24s} rebuilds={r} collects={c} "
-                f"scalars={s:3d} -> {tier} ({reason})"
-            )
+            print(f"{name + suffix:24s} scalars={scalars:3d} -> {tier} ({reason})")
 
 
 if __name__ == "__main__":
